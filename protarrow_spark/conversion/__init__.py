@@ -10,7 +10,7 @@ Driver-side (small data / test harnesses):
 Distributed (the 100 TB path — binary proto columns on executors):
 
 * :func:`decode_proto_bytes` — binary column -> typed columns
-  (Kafka-shaped ingest; ``mapInPandas`` + the wire codec).
+  (Kafka-shaped ingest; ``mapInArrow`` + the wire codec).
 * :func:`encode_proto_bytes` — typed columns -> binary column
   (proto-bytes sink shape).
 

@@ -6,10 +6,10 @@ Re-expresses the reference's decode path (assigners
 (``message_extractor.py:13-162``) for Spark rows.
 
 Cell inputs are normalized so the same compiled converters run on
-driver-side ``Row`` objects (``df.collect()``) AND pandas/Arrow cells
-inside executors (``mapInPandas``): structs arrive as Row or dict,
-maps as dict or list-of-pairs, arrays as list or ndarray, timestamps
-as datetime or pd.Timestamp, binary as bytes or bytearray.
+driver-side ``Row`` objects (``df.collect()``) AND the pandas cells of
+Arrow columns inside executors (``mapInArrow``): structs arrive as Row
+or dict, maps as dict or list-of-pairs, arrays as list or ndarray,
+timestamps as datetime or pd.Timestamp, binary as bytes or bytearray.
 
 Semantics preserved:
 

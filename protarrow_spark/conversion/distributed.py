@@ -6,42 +6,124 @@ of serialized messages (the Kafka value shape, ``docs/faq.md:20-25``
 in the reference) decodes into typed columns on executors, and typed
 columns serialize back to proto bytes for a Kafka/file sink.
 
-Implementation: ``mapInPandas`` (Arrow-batched, one Python worker per
-partition) + the pure-Python wire codec (``proto/message.py``) + the
-compiled row/message converters (``conversion/encode.py`` /
-``conversion/decode.py``). Spark's built-in ``from_protobuf`` /
-``to_protobuf`` would be the zero-Python alternative but requires the
-external spark-protobuf jar and compiled descriptor sets; this path
-has no such dependency and supports the engine's config policies
+Implementation: ``mapInArrow`` (Arrow record batches, one Python
+worker per partition) + the vectorized batch codec
+(``conversion/vectorized*.py``) with the compiled row codec below as
+its fallback. Spark's built-in ``from_protobuf`` / ``to_protobuf``
+would be the zero-Python alternative but requires the external
+spark-protobuf jar and compiled descriptor sets; this path has no such
+dependency and supports the engine's config policies
 (uint64/timestamp/enum rendering) during decode itself.
 
 Scale notes:
 
 * no shuffle — both directions are narrow per-partition maps;
-* Arrow batching amortizes serialization (``mapInPandas``), and the
-  compiled converters are built once per partition, not per row;
+* kept columns pass through as the Arrow arrays Spark sent, and every
+  other column crosses the boundary once per batch: an int64 column
+  stays int64 whatever its nulls (a pandas boundary turns it into
+  float64 and rounds values past 2^53);
+* the codecs are compiled once per partition, not per row;
 * predicate/column pruning still applies to everything upstream of
   the binary column scan.
 """
 
 from __future__ import annotations
 
+import logging
 import struct
-from typing import Any, Iterable, Iterator
+from typing import Any, Callable, Iterator
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from protarrow_spark.config import ProtarrowSparkConfig
-from protarrow_spark.conversion.encode import row_builder
-from protarrow_spark.proto.message import Message, parse
+from protarrow_spark.conversion.vectorized import (
+    Unvectorizable,
+    compile_batch_to_wire,
+)
+from protarrow_spark.conversion.vectorized_decode import compile_wire_to_batch
+from protarrow_spark.proto.message import Message
 from protarrow_spark.proto.model import MessageType
 from protarrow_spark.schema import message_type_to_schema
 
-#: Consecutive Unvectorizable batches before the encoder stops
-#: retrying the vectorized path for the rest of the partition.
+_log = logging.getLogger(__name__)
+
+#: Consecutive Unvectorizable batches before a partition stops
+#: retrying the vectorized path and keeps the row codec.
 _VEC_MAX_STRIKES = 3
+
+#: What a contract-violating value raises in either codec.
+_VALUE_ERRORS = (ValueError, TypeError, OverflowError, struct.error)
+
+
+class _Vectorized:
+    """One partition's vectorized kernel, with the row codec as its
+    fallback.
+
+    Calling it returns the kernel's result, or None when the batch must
+    take the row codec: the message shape has no kernel, or the kernel
+    raised ``Unvectorizable``. Unvectorizable usually means a
+    partition-wide dtype shape (Arrow hands every batch of a partition
+    the same schema), but object columns can confine the offending
+    VALUE to one batch — so later batches retry the kernel, which is
+    dropped for the rest of the partition after
+    :data:`_VEC_MAX_STRIKES` consecutive failures. The first fallback
+    of a partition logs one warning with its reason."""
+
+    def __init__(self, kernel: Callable | None, what: str) -> None:
+        self.kernel, self.what = kernel, what
+        self.strikes, self.warned = 0, False
+        if kernel is None:
+            self._warn("the message shape has no vectorized kernel")
+
+    def _warn(self, reason: Any) -> None:
+        if not self.warned:
+            self.warned = True
+            _log.warning("%s: falling back to the row codec: %s", self.what, reason)
+
+    def __call__(self, arg):
+        if self.kernel is None:
+            return None
+        try:
+            out = self.kernel(arg)
+        except Unvectorizable as exc:
+            self._warn(exc)
+            self.strikes += 1
+            if self.strikes >= _VEC_MAX_STRIKES:
+                self.kernel = None
+            return None
+        self.strikes = 0
+        return out
+
+
+def _record_batch(cols: list, schema):
+    """Codec output columns (Arrow arrays, pandas Series, numpy arrays
+    or lists of cells) as one Arrow batch of ``schema``."""
+    import pandas as pd
+    import pyarrow as pa
+
+    arrays = []
+    for col, field in zip(cols, schema):
+        if isinstance(col, pa.Array):
+            arrays.append(col if col.type == field.type else col.cast(field.type))
+        elif isinstance(col, pd.Series):  # datetime/timedelta, NaT = null
+            arrays.append(pa.Array.from_pandas(col, type=field.type))
+        else:
+            arrays.append(pa.array(col, type=field.type))
+    return pa.RecordBatch.from_arrays(arrays, schema=schema)
+
+
+def _pandas_columns(batch, names: list[str]) -> list:
+    """The named columns of an Arrow batch in the cell forms the
+    encode kernels read; an int64 column with nulls becomes Python
+    ints, never float64."""
+    return [batch.column(n).to_pandas(integer_object_nulls=True) for n in names]
+
+
+def _row_columns(rows: list[tuple], width: int) -> list:
+    return list(zip(*rows)) if rows else [()] * width
 
 
 def decode_proto_bytes(
@@ -55,7 +137,9 @@ def decode_proto_bytes(
     """Binary proto column -> typed columns per ``mtype``'s schema.
 
     ``keep_cols`` are passed through unchanged (e.g. a Kafka key /
-    offset). Runs entirely on executors.
+    offset) ahead of the decoded columns; a kept name that is also a
+    decoded field name raises ``ValueError`` (rename it first). Runs
+    entirely on executors.
 
     ``on_error``: ``"raise"`` (default) aborts the task on a
     malformed record — the strict mode a backfill wants; ``"null"``
@@ -65,13 +149,16 @@ def decode_proto_bytes(
     100 TB ingest — count the nulls downstream and route them to a
     dead-letter sink.
     """
-    import pandas as pd
-
     if on_error not in ("raise", "null"):
         raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
     schema = message_type_to_schema(mtype, config)
     keep = list(keep_cols or [])
-    passthrough = [df.schema[c] for c in keep]
+    clash = [c for c in keep if c in schema.fieldNames()]
+    if clash:
+        raise ValueError(
+            f"keep_cols {clash} collide with decoded fields of "
+            f"{mtype.full_name}; rename them before decoding"
+        )
     decoded_fields = list(schema.fields)
     permissive = on_error == "null"
     if permissive:
@@ -81,66 +168,40 @@ def decode_proto_bytes(
             T.StructField(f.name, f.dataType, True, f.metadata)
             for f in decoded_fields
         ]
-    out_schema = T.StructType(passthrough + decoded_fields)
-    out_names = [f.name for f in out_schema.fields]
-    src = df.select(*keep, bytes_col)
-    null_row = (None,) * len(schema.fields)
+    out_schema = T.StructType([df.schema[c] for c in keep] + decoded_fields)
+    arrow_out = to_arrow_schema(out_schema)
+    null_row = (None,) * len(decoded_fields)
 
-    decoded_names = [f.name for f in schema.fields]
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from protarrow_spark.conversion.vectorized import Unvectorizable
-        from protarrow_spark.conversion.vectorized_decode import (
-            compile_wire_to_batch,
+    def decode(batches: Iterator) -> Iterator:
+        # Vectorized columnar fast path (conversion/vectorized_decode.py:
+        # the transposed numpy wire parser, value-identical by
+        # differential + corrupt-bytes fuzz test). The compiled row path
+        # stays the semantics oracle and the fallback.
+        decode_batch = _Vectorized(
+            compile_wire_to_batch(mtype, config, permissive=permissive),
+            f"decode_proto_bytes({mtype.full_name})",
         )
-
-        # Vectorized columnar fast path for flat messages
-        # (conversion/vectorized_decode.py: the transposed numpy wire
-        # parser, value-identical by differential + corrupt-bytes fuzz
-        # test). The compiled row path stays the semantics oracle and
-        # the fallback for unsupported shapes and runtime surprises.
-        decode_batch = compile_wire_to_batch(mtype, config, permissive=permissive)
         decode_wire = compile_wire_to_row(mtype, config)
 
-        def decode_rowwise(batch):
-            rows = []
-            raw = batch[bytes_col]
-            kept = [batch[c] for c in keep]
-            for i in range(len(batch)):
-                kept_vals = tuple(k.iloc[i] for k in kept)
-                cell = raw.iloc[i]
+        def decode_row(cell):
+            try:
+                return decode_wire(bytes(cell))  # bytes(None): TypeError
+            except (ValueError, TypeError, IndexError, struct.error):
                 if permissive:
-                    try:
-                        decoded = decode_wire(bytes(cell) if cell is not None else b"")
-                    except (ValueError, TypeError, IndexError, struct.error):
-                        decoded = null_row
-                    if cell is None:
-                        decoded = null_row
-                else:
-                    decoded = decode_wire(bytes(cell))
-                rows.append(kept_vals + decoded)
-            return pd.DataFrame.from_records(rows, columns=out_names)
+                    return null_row
+                raise
 
-        strikes = 0
         for batch in batches:
-            if decode_batch is not None:
-                try:
-                    cols, _bad = decode_batch(list(batch[bytes_col]))
-                except Unvectorizable:
-                    strikes += 1
-                    if strikes >= _VEC_MAX_STRIKES:
-                        decode_batch = None
-                    yield decode_rowwise(batch)
-                    continue
-                strikes = 0
-                out = {c: batch[c].reset_index(drop=True) for c in keep}
-                for name, col in zip(decoded_names, cols):
-                    out[name] = col
-                yield pd.DataFrame(out, columns=out_names)
-                continue
-            yield decode_rowwise(batch)
+            cells = batch.column(bytes_col).to_pylist()
+            out = decode_batch(cells)
+            if out is None:
+                cols = _row_columns([decode_row(c) for c in cells], len(null_row))
+            else:
+                cols = out[0]
+            yield _record_batch([batch.column(c) for c in keep] + cols, arrow_out)
 
-    return src.mapInPandas(decode, out_schema)
+    src = df.select(*dict.fromkeys([*keep, bytes_col]))
+    return src.mapInArrow(decode, out_schema)
 
 
 def encode_proto_bytes(
@@ -157,7 +218,9 @@ def encode_proto_bytes(
     ``binary`` column. Columns of ``df`` must match
     ``message_type_to_schema(mtype, config)`` (use
     :func:`protarrow_spark.conversion.cast_dataframe` first when they
-    don't). Runs entirely on executors.
+    don't). ``keep_cols`` pass through ahead of ``output_col`` and may
+    name message fields too (a Kafka key that is also in the value).
+    Runs entirely on executors.
 
     ``on_error``: ``"raise"`` (default) aborts the task on a row that
     violates the contract (e.g. uint32 out of range, wrong cell type);
@@ -166,129 +229,57 @@ def encode_proto_bytes(
     through — one contract-breaking row cannot kill a 100 TB export;
     count the nulls downstream and route them to a dead-letter sink.
     """
-    import pandas as pd
-
     if on_error not in ("raise", "null"):
         raise ValueError(f"on_error must be 'raise' or 'null', got {on_error!r}")
     permissive = on_error == "null"
     keep = list(keep_cols or [])
-    passthrough = [df.schema[c] for c in keep]
     out_schema = T.StructType(
-        passthrough + [T.StructField(output_col, T.BinaryType(), nullable=permissive)]
+        [df.schema[c] for c in keep]
+        + [T.StructField(output_col, T.BinaryType(), nullable=permissive)]
     )
-    out_names = [f.name for f in out_schema.fields]
-    field_names = [f.name for f in message_type_to_schema(mtype, config).fields]
-    src = df.select(*keep, *field_names)
+    arrow_out = to_arrow_schema(out_schema)
+    field_names = message_type_to_schema(mtype, config).fieldNames()
 
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from protarrow_spark.conversion.vectorized import (
-            Unvectorizable,
-            compile_batch_to_wire,
-        )
-
-        # Vectorized columnar fast path for flat messages (~10-20x the
-        # row path: numpy varints, masks, and Timestamp bodies —
-        # conversion/vectorized.py, byte-identical by differential
-        # test); the compiled row path stays the semantics oracle and
-        # the fallback for unsupported shapes, unexpected dtypes, and
-        # PERMISSIVE batches containing a contract-violating row
-        # (permissive batches compile with permissive=True: range
-        # violations null exactly the violating rows vectorized — no
-        # row-wise re-encode of the whole batch).
-        encode_batch = compile_batch_to_wire(
-            mtype, config, permissive=permissive
+    def encode(batches: Iterator) -> Iterator:
+        # Vectorized columnar fast path (~10-20x the row path: numpy
+        # varints, masks, and Timestamp bodies — conversion/vectorized.py,
+        # byte-identical by differential test); the compiled row path
+        # stays the semantics oracle and the fallback for unsupported
+        # shapes, unexpected dtypes, and PERMISSIVE batches containing
+        # a contract-violating row (permissive batches compile with
+        # permissive=True: range violations null exactly the violating
+        # rows vectorized — no row-wise re-encode of the whole batch).
+        encode_batch = _Vectorized(
+            compile_batch_to_wire(mtype, config, permissive=permissive),
+            f"encode_proto_bytes({mtype.full_name})",
         )
         encode_row = compile_row_to_wire(mtype, config)
 
-        def encode_rowwise(batch, kept):
-            records = zip(*(batch[c] for c in field_names))
-            rows = []
-            if permissive:
-                for i, rec in enumerate(records):
-                    try:
-                        cell = encode_row(rec)
-                    except (
-                        ValueError,
-                        TypeError,
-                        OverflowError,
-                        struct.error,
-                    ):
-                        # deliberately NOT AttributeError: a contract
-                        # violation is a bad VALUE (range/type/overflow);
-                        # an AttributeError is an encoder bug and must
-                        # fail the task, not hide as a dead letter
-                        cell = None
-                    rows.append(tuple(k.iloc[i] for k in kept) + (cell,))
-            else:
-                for i, rec in enumerate(records):
-                    rows.append(
-                        tuple(k.iloc[i] for k in kept) + (encode_row(rec),)
-                    )
-            return pd.DataFrame.from_records(rows, columns=out_names)
-
-        yield from _encode_stream(
-            batches,
-            encode_batch,
-            encode_rowwise,
-            field_names=field_names,
-            keep=keep,
-            out_names=out_names,
-            output_col=output_col,
-            permissive=permissive,
-        )
-
-    return src.mapInPandas(encode, out_schema)
-
-
-def _encode_stream(
-    batches,
-    encode_batch,
-    encode_rowwise,
-    *,
-    field_names,
-    keep,
-    out_names,
-    output_col,
-    permissive,
-):
-    """Per-partition encode loop: vectorized fast path with row-path
-    fallback.
-
-    Unvectorizable usually means a partition-wide dtype shape (Arrow
-    hands every batch of a partition the same schema), but object-dtype
-    columns can confine the offending VALUE to one batch — so retry the
-    vectorized path on subsequent batches and only disable it for the
-    rest of the partition after :data:`_VEC_MAX_STRIKES` consecutive
-    failures (bounding the wasted precompute at a constant, not
-    per-batch forever)."""
-    import pandas as pd
-
-    from protarrow_spark.conversion.vectorized import Unvectorizable
-
-    strikes = 0
-    for batch in batches:
-        kept = [batch[c] for c in keep]
-        if encode_batch is not None:
+        def encode_permissive(rec):
             try:
-                cells = encode_batch([batch[c] for c in field_names])
-            except Unvectorizable:
-                strikes += 1
-                if strikes >= _VEC_MAX_STRIKES:
-                    encode_batch = None
-                yield encode_rowwise(batch, kept)
-                continue
-            except (ValueError, TypeError, OverflowError, struct.error):
+                return encode_row(rec)
+            except _VALUE_ERRORS:
+                # deliberately NOT AttributeError: a contract violation
+                # is a bad VALUE (range/type/overflow); an AttributeError
+                # is an encoder bug and must fail the task, not hide as
+                # a dead letter
+                return None
+
+        encode_one = encode_permissive if permissive else encode_row
+        for batch in batches:
+            cols = _pandas_columns(batch, field_names)
+            try:
+                cells = encode_batch(cols)
+            except _VALUE_ERRORS:
                 if not permissive:
                     raise
-                yield encode_rowwise(batch, kept)
-                continue
-            else:
-                strikes = 0
-                out = {c: batch[c].reset_index(drop=True) for c in keep}
-                out[output_col] = cells
-                yield pd.DataFrame(out, columns=out_names)
-                continue
-        yield encode_rowwise(batch, kept)
+                cells = None
+            if cells is None:
+                cells = [encode_one(rec) for rec in zip(*cols)]
+            yield _record_batch([batch.column(c) for c in keep] + [cells], arrow_out)
+
+    src = df.select(*dict.fromkeys([*keep, *field_names]))
+    return src.mapInArrow(encode, out_schema)
 
 
 def proto_roundtrip(
@@ -300,65 +291,39 @@ def proto_roundtrip(
     self-check operator: output equals input modulo the config's
     documented lossiness (ns truncation etc.).
 
-    Fused into ONE ``mapInPandas`` hop: chaining the public
+    Fused into ONE ``mapInArrow`` hop: chaining the public
     ``encode_proto_bytes`` -> ``decode_proto_bytes`` plans two Python
     runners per task (double the Arrow JVM<->Python transfer and
     double the worker pool); the fused map exercises the identical
-    codec path (message build -> serialize -> parse -> row build) with
-    a single hop. In production the two directions are separate jobs
-    (produce vs consume), so the fused form is also the honest cost
-    model for each side."""
-    import pandas as pd
-
+    codec path with a single hop. In production the two directions are
+    separate jobs (produce vs consume), so the fused form is also the
+    honest cost model for each side."""
     schema = message_type_to_schema(mtype, config)
-    out_names = [f.name for f in schema.fields]
-    src = df.select(*out_names)
+    names = schema.fieldNames()
+    arrow_out = to_arrow_schema(schema)
 
-    def roundtrip(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # both halves compiled AND vectorized when the message shape
-        # supports it: columns -> wire bytes (conversion/vectorized.py,
-        # byte-identical by differential test) -> columns
-        # (conversion/vectorized_decode.py, value-identical by
-        # differential + corrupt-fuzz test). Row paths remain the
+    def roundtrip(batches: Iterator) -> Iterator:
+        # both halves vectorized when the message shape supports it:
+        # columns -> wire bytes -> columns; the row codecs remain the
         # semantics oracle and the fallback on either half.
-        from protarrow_spark.conversion.vectorized import (
-            Unvectorizable,
-            compile_batch_to_wire,
-        )
-        from protarrow_spark.conversion.vectorized_decode import (
-            compile_wire_to_batch,
-        )
-
-        encode_batch = compile_batch_to_wire(mtype, config)
+        what = f"proto_roundtrip({mtype.full_name})"
+        encode_batch = _Vectorized(compile_batch_to_wire(mtype, config), what)
+        decode_batch = _Vectorized(compile_wire_to_batch(mtype, config), what)
         encode_row = compile_row_to_wire(mtype, config)
-        decode_batch = compile_wire_to_batch(mtype, config)
         decode_wire = compile_wire_to_row(mtype, config)
         for batch in batches:
-            wires = None
-            if encode_batch is not None:
-                try:
-                    wires = encode_batch([batch[c] for c in out_names])
-                except Unvectorizable:
-                    encode_batch = None
+            cols = _pandas_columns(batch, names)
+            wires = encode_batch(cols)
             if wires is None:
-                wires = [
-                    encode_row(rec)
-                    for rec in zip(*(batch[c] for c in out_names))
-                ]
-            if decode_batch is not None:
-                try:
-                    cols, _bad = decode_batch(wires)
-                except Unvectorizable:
-                    decode_batch = None
-                else:
-                    yield pd.DataFrame(
-                        dict(zip(out_names, cols)), columns=out_names
-                    )
-                    continue
-            rows = [decode_wire(w) for w in wires]
-            yield pd.DataFrame.from_records(rows, columns=out_names)
+                wires = [encode_row(rec) for rec in zip(*cols)]
+            out = decode_batch(wires)
+            if out is None:
+                cols = _row_columns([decode_wire(w) for w in wires], len(names))
+            else:
+                cols = out[0]
+            yield _record_batch(cols, arrow_out)
 
-    return src.mapInPandas(roundtrip, schema)
+    return df.select(*names).mapInArrow(roundtrip, schema)
 
 
 # ---------------------------------------------------------------------------

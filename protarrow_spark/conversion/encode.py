@@ -33,6 +33,7 @@ import decimal
 from typing import Any, Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from protarrow_spark.config import ProtarrowSparkConfig
 from protarrow_spark.proto.message import Message
@@ -236,7 +237,6 @@ def messages_to_dataframe(
     messages: Iterable[Message],
     mtype: MessageType,
     config: ProtarrowSparkConfig = ProtarrowSparkConfig(),
-    verify_schema: bool = False,
 ) -> DataFrame:
     """Encode proto messages into a DataFrame (reference
     ``messages_to_table``, ``proto_to_arrow.py:705-713``).
@@ -247,20 +247,47 @@ def messages_to_dataframe(
     :func:`protarrow_spark.conversion.decode_proto_bytes` over a
     binary column.
 
-    ``verify_schema`` defaults to False: the rows come from this
-    module's compiled converters, which already produce exactly the
-    declared types — Spark's per-row re-validation is redundant work
-    (~1.5x on the 10k-message reference-harness micro), and the
-    round-trip/golden suites pin the values regardless. Pass
-    ``verify_schema=True`` to restore Spark's per-row type check as a
-    last line of defence when feeding messages from an untrusted
-    converter/config combination: a mismatch then raises a clear
-    ``createDataFrame`` error instead of surfacing as corrupt column
-    data downstream.
+    The rows become an Arrow table of the schema's Arrow types, so the
+    DataFrame is a local relation: collecting it back runs no Spark
+    job. Building the table type-checks every cell.
     """
     schema = message_type_to_schema(mtype, config)
-    return spark.createDataFrame(
-        messages_to_rows(messages, mtype, config),
+    return _local_relation(spark, messages_to_rows(messages, mtype, config), schema)
+
+
+def _local_relation(
+    spark: SparkSession, rows: list[tuple], schema: StructType
+) -> DataFrame:
+    """``rows`` as a local-relation DataFrame of ``schema``.
+
+    Mirrors PySpark 4.1.2's ``SparkSession._create_from_arrow_table``
+    (``pyspark/sql/pandas/conversion.py``), the tail of
+    ``spark.createDataFrame(table, schema)``, with the same Arrow
+    schema arguments and JVM hooks, minus its pass that localizes
+    naive timestamps: that pass rebuilds every nested column with
+    nullable children, and its cast back to ``schema``'s Arrow types
+    then fails on a struct that holds a nested non-null field. The
+    rows' timestamps are UTC-aware, so the pass has nothing to do
+    here. Recheck the private hooks on a PySpark upgrade."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.serializers import ArrowStreamSerializer
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(
         schema,
-        verifySchema=verify_schema,
+        error_on_duplicated_field_names_in_struct=True,
+        prefers_large_types=spark._jconf.arrowUseLargeVarTypes(),
     )
+    table = pa.Table.from_batches(
+        [pa.RecordBatch.from_struct_array(pa.array(rows, type=pa.struct(list(arrow_schema))))]
+    )
+    jvm = spark._jvm
+    batches = table.to_batches(max_chunksize=spark._jconf.arrowMaxRecordsPerBatch())
+    jiter = spark._sc._serialize_to_jvm(
+        batches,
+        ArrowStreamSerializer(),
+        jvm.PythonSQLUtils.readArrowStreamFromFile,
+        jvm.ArrowIteratorServer,
+    )
+    jdf = jvm.PythonSQLUtils.toDataFrame(jiter, schema.json(), spark._jsparkSession)
+    return DataFrame(jdf, spark)

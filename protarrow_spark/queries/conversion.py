@@ -71,7 +71,7 @@ def conv_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full distributed conversion round-trip on a fact table: typed
     columns -> proto wire bytes -> typed columns, all on executors.
 
-    Scale: two zero-shuffle mapInPandas stages (converters compiled
+    Scale: two zero-shuffle mapInArrow stages (converters compiled
     once per partition, Arrow-batched); the oracle's identity
     projection means any codec/converter bit-error fails the hash.
     """
@@ -118,7 +118,7 @@ def conv_descset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     proving a cluster where only the descriptor file ships (no
     compiled classes, no protobuf runtime) runs the identical
     conversion plan bit-for-bit. Same oracle, same zero-shuffle
-    two-stage mapInPandas topology as conv_roundtrip_events."""
+    two-stage mapInArrow topology as conv_roundtrip_events."""
     from protarrow_spark.proto.descriptor_set import (
         read_descriptor_set,
         write_descriptor_set,
@@ -195,7 +195,7 @@ def conv_roundtrip_repeated(spark: SparkSession, sf_dir: str) -> DataFrame:
     body, length prefix, or item payload fails the value hash.
 
     Scale: one groupBy shuffle to form the arrays, then two
-    zero-shuffle mapInPandas stages; sorted arrays make the collect
+    zero-shuffle mapInArrow stages; sorted arrays make the collect
     deterministic, and value-ties in the positional explode emit the
     same tuple multiset either way.
     """
@@ -263,7 +263,7 @@ def conv_roundtrip_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     mix-up fails the value hash.
 
     Scale: one groupBy to build the per-user maps, then two
-    zero-shuffle mapInPandas stages; map iteration order never reaches
+    zero-shuffle mapInArrow stages; map iteration order never reaches
     the result (the explode emits an order-free multiset)."""
     ev = table(spark, sf_dir, "events").select(
         "user_id",
@@ -335,7 +335,7 @@ def conv_oneof_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin value-exactly, and the serialized form carries only the one
     set member's tag.
 
-    Scale: same zero-shuffle fused mapInPandas hop as
+    Scale: same zero-shuffle fused mapInArrow hop as
     ``conv_roundtrip_events``.
     """
     mod = F.col("event_id") % 3
@@ -755,7 +755,7 @@ def conv_roundtrip_wkt(spark: SparkSession, sf_dir: str) -> DataFrame:
     converters: ``arrow_to_proto.py:165-175``). Duration rides the
     ``long_nanos`` config so both engines compare exact BIGINTs.
 
-    Scale: two zero-shuffle Arrow-batched mapInPandas stages over the
+    Scale: two zero-shuffle mapInArrow stages over the
     fact table — identical topology to conv_roundtrip_events.
     """
     from protarrow_spark.functions.time import epoch_micros
@@ -874,7 +874,7 @@ def conv_roundtrip_nested_repeated(spark: SparkSession, sf_dir: str) -> DataFram
     scramble, entry merge bug, or struct-field mix-up fails the hash.
 
     Scale: one groupBy shuffle to form the per-user messages, then two
-    zero-shuffle Arrow-batched mapInPandas stages.
+    zero-shuffle mapInArrow stages.
     """
     ev = table(spark, sf_dir, "events").select(
         "user_id",

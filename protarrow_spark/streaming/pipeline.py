@@ -9,7 +9,7 @@ convert, aggregate) expressed natively in Structured Streaming:
       -> withWatermark + window agg    (late data bounded)
       -> sink
 
-``decode_proto_bytes`` is a narrow ``mapInPandas`` so it is streaming-
+``decode_proto_bytes`` is a narrow ``mapInArrow`` so it is streaming-
 compatible unchanged — batch/stream parity of the conversion layer is
 tested by running the same transform both ways and diffing
 (``tests/test_streaming.py``).

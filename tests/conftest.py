@@ -4,7 +4,8 @@ import os
 
 import pytest
 
-# Keep local test runs snappy; override with TEST_SF_DIR / TEST_CPUS.
+# Keep local test runs snappy; override with TEST_SF_DIR / TEST_CPUS
+# (the core count defaults to get_spark's: SPARK_GRAFT_CPUS, else all).
 DEFAULT_SF_DIR = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
@@ -12,8 +13,8 @@ DEFAULT_SF_DIR = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from protarrow_spark.session import get_spark
 
-    cpus = int(os.environ.get("TEST_CPUS", "8"))
-    spark = get_spark("protarrow-spark-tests", cpus=cpus)
+    cpus = os.environ.get("TEST_CPUS")
+    spark = get_spark("protarrow-spark-tests", cpus=int(cpus) if cpus else None)
     yield spark
     spark.stop()
 

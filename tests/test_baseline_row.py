@@ -101,6 +101,17 @@ def test_out_path_guard_diverts_incomparable_runs(tmp_path, monkeypatch):
     assert bench._guarded_out_path(p, False, 1.0, 32) == "BENCH_RUN.json"
     # core-count mismatch vs the committed artifact diverts (the c8 clobber)
     assert bench._guarded_out_path(p, False, 0.1, 8) == "BENCH_RUN.json"
+    # the baseline row refreshes only from the path the run wrote: a
+    # diverted run lands in BENCH_RUN.json and leaves BASELINE.md alone
+    diverted = bench._guarded_out_path(p, False, 0.1, 8)
+    assert not bench._refreshes_row(diverted, False, 0.1)
+    assert bench._refreshes_row(bench._guarded_out_path(p, False, 0.1, 32), False, 0.1)
+    assert not bench._refreshes_row(p, True, 0.1)
+    assert not bench._refreshes_row(p, False, 1.0)
+    assert not bench._refreshes_row(None, False, 0.1)
+    # an explicit SPARK_GRAFT_BENCH_OUT=BENCH_LOCAL.json skips the guard
+    # and re-baselines at a new core count: artifact and row move together
+    assert bench._refreshes_row(p, False, 0.1)
     # no committed artifact yet: nothing to protect, keep the path
     official.unlink()
     assert bench._guarded_out_path(p, False, 0.1, 8) == p

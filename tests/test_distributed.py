@@ -1,5 +1,5 @@
 """Distributed conversion tests: binary proto columns encoded/decoded
-on executors via mapInPandas + the wire codec (no driver data path)."""
+on executors via mapInArrow + the wire codec (no driver data path)."""
 
 from __future__ import annotations
 
@@ -90,6 +90,10 @@ def test_distributed_roundtrip_matches_input(spark) -> None:
 
 
 def test_distributed_roundtrip_nested_types(spark) -> None:
+    """Full-range int64 values, nullable int64 columns with nulls in
+    every partition, repeated, nested and map cells."""
+    import random
+
     mt = MessageType(
         "t.Rich",
         (
@@ -97,21 +101,114 @@ def test_distributed_roundtrip_nested_types(spark) -> None:
             Field("tags", 2, Kind.STRING, repeated=True),
             Field("nested", 3, Kind.MESSAGE, message=fixtures.NESTED),
             map_field("attrs", 4, Kind.STRING, Kind.INT64),
+            Field("big", 5, Kind.INT64, optional=True),
+            Field("bigs", 6, Kind.SINT64, repeated=True),
         ),
     )
+    rng = random.Random(11)
+    big = lambda: rng.randint(-(2**63), 2**63 - 1)  # noqa: E731
     msgs = [
         Message(
             mt,
-            id=i,
+            id=big(),
             tags=[f"t{j}" for j in range(i % 4)],
             nested=Message(fixtures.NESTED, nested_int=i) if i % 2 else None,
-            attrs={f"a{j}": j for j in range(i % 3)},
+            attrs={f"a{j}": big() for j in range(i % 3)},
+            big=big() if i % 5 else None,
+            bigs=[big() for _ in range(i % 3)],
         )
-        for i in range(40)
+        for i in range(400)
     ]
     df = messages_to_dataframe(spark, msgs, mt, CFG).repartition(4)
     out = proto_roundtrip(df, mt, CFG)
-    assert sorted(dataframe_to_messages(out, mt, CFG), key=lambda m: m.id) == msgs
+    key = lambda m: m.id  # noqa: E731
+    assert sorted(dataframe_to_messages(out, mt, CFG), key=key) == sorted(msgs, key=key)
+
+
+def test_encode_random_messages_matches_kernel_bytes(spark) -> None:
+    """random_messages (full-range int64, every kind) through
+    encode_proto_bytes, with a null in every Arrow batch of every
+    nullable column: the Spark bytes equal the batch kernel's bytes
+    for the same rows. A pandas boundary turns a nullable int64
+    column into float64 and writes rounded values past 2^53."""
+    import pandas as pd
+
+    from protarrow_spark.conversion.distributed import compile_row_to_wire
+    from protarrow_spark.conversion.encode import messages_to_rows
+    from protarrow_spark.conversion.vectorized import compile_batch_to_wire
+    from tests.random_messages import random_messages
+
+    per_batch = 8
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    for mtype in (fixtures.EXAMPLE, fixtures.NESTED_EXAMPLE):
+        msgs = random_messages(mtype, 64, seed=5)
+        # an empty message heads every batch: it is null in every
+        # presence column (optional, wrapper, oneof, message)
+        msgs[::per_batch] = [Message(mtype)] * len(msgs[::per_batch])
+        rows = messages_to_rows(msgs, mtype, CFG)
+        kernel = compile_batch_to_wire(mtype, CFG)(
+            [pd.Series(c, dtype=object) for c in zip(*rows)]
+        )
+        assert kernel == [compile_row_to_wire(mtype, CFG)(r) for r in rows]
+        df = messages_to_dataframe(spark, msgs, mtype, CFG).coalesce(1)
+        spark.conf.set(conf, str(per_batch))
+        try:
+            got = [bytes(r.proto) for r in encode_proto_bytes(df, mtype, CFG).collect()]
+        finally:
+            spark.conf.unset(conf)
+        assert got == kernel, mtype.full_name
+
+
+def test_keep_cols_naming_a_message_field(spark) -> None:
+    """A kept key that is also a message field (a keyed Kafka sink):
+    encode selects it once and returns key + bytes; decode, whose
+    output would hold the name twice, refuses it up front."""
+    from protarrow_spark.conversion.distributed import compile_row_to_wire
+    from protarrow_spark.queries.conversion import EVENT_MT
+
+    src = spark.createDataFrame(
+        [(i, i % 3, f"e{i}", i * 0.5) for i in range(20)],
+        "event_id long, user_id long, event_type string, value double",
+    ).withColumn("ts", F.timestamp_micros(F.lit(1_700_000_000_000_000) + F.col("event_id")))
+    out = encode_proto_bytes(src, EVENT_MT, CFG, keep_cols=["event_id"])
+    assert out.columns == ["event_id", "proto"]
+    got = {r.event_id: bytes(r.proto) for r in out.collect()}
+    encode_row = compile_row_to_wire(EVENT_MT, CFG)
+    want = {r.event_id: encode_row(tuple(r)) for r in src.collect()}
+    assert got == want
+    with pytest.raises(ValueError, match="event_id"):
+        decode_proto_bytes(out, "proto", EVENT_MT, CFG, keep_cols=["event_id"])
+
+
+def test_messages_to_dataframe_runs_no_job(spark) -> None:
+    """messages_to_dataframe builds a local relation: collecting it
+    starts no Spark job, and its schema is the derived one."""
+    import time
+
+    from protarrow_spark.schema import message_type_to_schema
+    from tests.random_messages import expected_roundtrip, random_messages
+
+    msgs = random_messages(fixtures.EXAMPLE, 100, seed=3)
+    df = messages_to_dataframe(spark, msgs, fixtures.EXAMPLE, CFG)
+    assert df.schema == message_type_to_schema(fixtures.EXAMPLE, CFG)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"m2df-{time.time_ns()}"
+    sc.setJobGroup(group, "collect a message DataFrame")
+    try:
+        back = dataframe_to_messages(df, fixtures.EXAMPLE, CFG)
+        # a control job in a second group: once the status store shows
+        # it, it has seen every job started before it
+        sc.setJobGroup(group + "-control", "control job")
+        sc.parallelize([1], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(group + "-control"):
+        assert time.monotonic() < deadline, "control job never reached the status store"
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(group) == []
+    assert back == [expected_roundtrip(m, CFG) for m in msgs]
 
 
 def test_plan_has_no_shuffle(spark) -> None:

@@ -9,7 +9,7 @@ truncation model). Here:
 * a reduced matrix runs through real Spark DataFrames
   (createDataFrame -> collect);
 * one config runs the fully distributed executor-side round-trip
-  (wire bytes via mapInPandas).
+  (wire bytes via mapInArrow).
 """
 
 from __future__ import annotations

@@ -449,18 +449,21 @@ def test_string_non_str_cell_is_unvectorizable_not_repr():
         bp([pd.Series([b"bytes-not-str"], dtype=object)])
 
 
-def test_unvectorizable_retries_then_disables_after_strikes():
-    """_encode_stream retries the vectorized path after an
+def test_unvectorizable_retries_then_disables_after_strikes(caplog):
+    """A partition's vectorized kernel is retried after an
     Unvectorizable batch (object dtypes can confine the offending value
-    to one batch) and only disables it after _VEC_MAX_STRIKES
-    consecutive failures (ADVICE r8 low)."""
+    to one batch) and only dropped after _VEC_MAX_STRIKES consecutive
+    failures (ADVICE r8 low); the first fallback logs one warning with
+    its reason."""
+    import logging
+
     from protarrow_spark.conversion.distributed import (
         _VEC_MAX_STRIKES,
-        _encode_stream,
+        _Vectorized,
     )
     from protarrow_spark.conversion.vectorized import Unvectorizable
 
-    calls = {"vec": 0, "row": 0}
+    calls = {"vec": 0}
 
     def fake_batch(cols):
         calls["vec"] += 1
@@ -468,67 +471,28 @@ def test_unvectorizable_retries_then_disables_after_strikes():
             raise Unvectorizable("poison batch")
         return [b"v"] * len(cols[0])
 
-    def fake_rowwise(batch, kept):
-        calls["row"] += 1
-        return pd.DataFrame({"proto": [b"r"] * len(batch["s"])})
-
     def mk(tag):
-        return pd.DataFrame({"s": [tag, tag]})
+        return [pd.Series([tag, tag])]
 
-    # one poison batch mid-stream: vectorized resumes on the next batch
-    out = list(
-        _encode_stream(
-            iter([mk("a"), mk("poison"), mk("b")]),
-            fake_batch,
-            fake_rowwise,
-            field_names=["s"],
-            keep=[],
-            out_names=["proto"],
-            output_col="proto",
-            permissive=False,
-        )
-    )
-    assert [o["proto"].iloc[0] for o in out] == [b"v", b"r", b"v"]
-    assert calls == {"vec": 3, "row": 1}
+    # one poison batch mid-stream: None sends it to the row codec, and
+    # the kernel resumes on the next batch
+    vec = _Vectorized(fake_batch, "encode t.S")
+    with caplog.at_level(logging.WARNING):
+        out = [vec(mk(t)) for t in ("a", "poison", "b", "poison")]
+    assert out == [[b"v", b"v"], None, [b"v", b"v"], None]
+    assert calls == {"vec": 4}
+    warnings = [r.getMessage() for r in caplog.records]
+    assert len(warnings) == 1 and "encode t.S" in warnings[0]
+    assert "poison batch" in warnings[0]
 
-    # _VEC_MAX_STRIKES consecutive poisons: vectorized disabled for the
-    # rest of the partition — later healthy batches go row-wise without
-    # paying the failed precompute again
-    calls = {"vec": 0, "row": 0}
-    stream = [mk("poison")] * _VEC_MAX_STRIKES + [mk("c"), mk("d")]
-    out = list(
-        _encode_stream(
-            iter(stream),
-            fake_batch,
-            fake_rowwise,
-            field_names=["s"],
-            keep=[],
-            out_names=["proto"],
-            output_col="proto",
-            permissive=False,
-        )
-    )
-    assert all(o["proto"].iloc[0] == b"r" for o in out)
+    # _VEC_MAX_STRIKES consecutive poisons: the kernel is dropped for
+    # the rest of the partition — later healthy batches go row-wise
+    # without paying the failed precompute again
+    calls = {"vec": 0}
+    vec = _Vectorized(fake_batch, "encode t.S")
+    stream = ["poison"] * _VEC_MAX_STRIKES + ["c", "d"]
+    assert [vec(mk(t)) for t in stream] == [None] * len(stream)
     assert calls["vec"] == _VEC_MAX_STRIKES  # never retried post-disable
-    assert calls["row"] == len(stream)
-
-
-def test_messages_to_dataframe_verify_schema_hatch(spark):
-    """verify_schema=True restores Spark's per-row validation and
-    produces the same frame as the fast default (ADVICE r8 low)."""
-    from protarrow_spark.conversion.encode import messages_to_dataframe
-    from protarrow_spark.proto.message import Message
-
-    mt = MessageType(
-        "vec.V", (Field("i", 1, Kind.INT64), Field("s", 2, Kind.STRING))
-    )
-    msgs = [Message(mt, i=5, s="x"), Message(mt, i=-3, s="")]
-    fast = messages_to_dataframe(spark, msgs, mt, CFG)
-    checked = messages_to_dataframe(spark, msgs, mt, CFG, verify_schema=True)
-    assert checked.schema == fast.schema
-    assert sorted(map(tuple, checked.collect())) == sorted(
-        map(tuple, fast.collect())
-    )
 
 
 # --- repeated/packed fields (r9) -------------------------------------------
@@ -558,8 +522,8 @@ REPEATED_MT = MessageType(
 
 
 def _random_repeated_df(n, seed=42):
-    """Arrow-shaped cells: typed ndarrays for numerics (what
-    mapInPandas hands over for array<T> columns), lists for
+    """Arrow-shaped cells: typed ndarrays for numerics (what an Arrow
+    array<T> column's to_pandas hands over), lists for
     string/bytes, Decimal items in the default uint64 mode."""
     import decimal
 
