@@ -1,64 +1,87 @@
-"""Vectorized (numpy) wire DECODE for flat messages.
+"""Vectorized (numpy) wire DECODE: a batch of serialized messages ->
+per-field cell columns.
 
-The symmetric half of :mod:`protarrow_spark.conversion.vectorized`
-(the r8 batch encoder): ``compile_wire_to_row`` walks bytes per row in
-Python — a varint loop, a dict dispatch, and a handler call per field
-occurrence. At 100 TB the executor-side codec IS the conversion
-surface, so this module compiles a BATCH decoder that parses every row
-of an Arrow batch simultaneously, TRANSPOSED: one loop step advances
-every row's cursor past one field occurrence, with the per-step work
-(varint reads, fixed-width gathers, tag grouping, sign/zigzag
-mapping) done as numpy array ops. The only per-row Python left is one
-slice per string/bytes cell and the object-mode converters the row
-path also pays (Decimal, enum-name lookup).
+The symmetric half of :mod:`protarrow_spark.conversion.vectorized`:
+``compile_wire_to_row`` walks one row's bytes in Python — a varint
+loop, a dict dispatch and a handler call per record. This module
+compiles a BATCH decoder that walks every row of a batch at once as a
+RECORD LOOP (:func:`_tokenize`). Each step reads the next record of
+every row still inside its bytes:
 
-Wire streams of a flat message are highly regular — every row emits
-fields in number order, skipping defaults — so at each step almost all
-rows sit on the SAME tag and the per-step ``np.unique`` grouping
-degenerates to one or two groups. Step count ~= field count, not row
-count.
+* one vectorized tag read for all of them;
+* a field-number -> payload-class lookup in a table built at compile
+  time. The classes are varint, fixed64, LEN and fixed32, and the
+  class comes from the field's KIND, not the observed wire type,
+  because the row path reads that way. The exceptions: a repeated
+  numeric field's LEN-typed record is a packed body, and an unknown
+  field skips by its wire type;
+* one varint read for every varint payload and LEN length, and one
+  fixed-width read for every fixed64/fixed32 payload, whatever the
+  number of distinct tags;
+* ``(row, field, start, end, value)`` appended to a per-batch record
+  log.
+
+So the step count is the most records any one row holds, and rows may
+fall out of step freely (repeated and map fields of different lengths,
+shuffled field order, unknown fields).
+
+After the loop the log is sorted by (field, row) — stably, so each
+row's records keep their wire order — and every field's column is
+assembled once from its slice:
+
+* scalars take the last occurrence; oneof members compare occurrence
+  order, so the later member wins and clears its siblings;
+* repeated fields get their per-row element runs from the sorted log;
+  packed bodies decode as one batch per field (:func:`_packed`);
+* Timestamp bodies and map entries run through the same record loop,
+  one unit per body or entry;
+* nested messages, WKTs and repeated-message items decode as one batch
+  per field through the recursive sub-decoders. A row's body pieces
+  concatenate (wire concatenation == protobuf merge); when a row has
+  several, each piece is also parsed on its own, as the row path
+  parses each occurrence.
+
+Decoding has two phases, in the row path's order: ``parse`` finds
+every wire-level error (framing, UTF-8, nested parse errors) before
+``finish`` converts values (enum names, Decimal, datetime ranges,
+dates) in field order. A row the row path nulls for a malformed record
+therefore never reaches a conversion that would hard-raise.
 
 Value-compatibility contract: for every supported message shape the
-decoded cells are IDENTICAL to ``compile_wire_to_row`` (differential-
-tested in tests/test_vectorized_decode.py over the random matrix, the
-config modes, and a corrupt-bytes fuzz: rows where the row path raises
-must raise here in strict mode and null identically in permissive
-mode).
+decoded cells are IDENTICAL to ``compile_wire_to_row`` — differential-
+tested in tests/test_vectorized_decode*.py and
+tests/test_vectorized_full_matrix.py over the random matrix, the
+config modes, shuffled record order and a corrupt-bytes fuzz: rows
+where the row path raises must raise here in strict mode and null
+identically in permissive mode.
 
-Scope: scalar kinds (all config modes) + google.protobuf.Timestamp
-message fields + REPEATED scalars (packed and expanded, r9) + ONEOF
-groups of supported members (later-member-wins sibling clearing, r9)
-+ MAP fields with scalar keys/values (bounded entry-slice sub-loop,
-r9) + plain NESTED MESSAGE fields to any depth (r9: occurrences
-collect body slices, concatenation == parse_into merge, recursive
-batch decode; nested levels use parse_into's STRICT Timestamp-body
-slicing where the top level keeps h_ts's soft limit). r10 closes the
-final quarter: non-Timestamp WKTs (wrappers/Duration/Date/TimeOfDay/
-Empty — nested-style slice collection, then the sub-decoded columns
-combine into the scalar cell form), REPEATED MESSAGE fields (one
-standalone item slice per occurrence, decoded as a flat item batch),
-MESSAGE-VALUED MAPS (value slices merge per entry by concatenation),
-and RECURSIVE types under ``skip_recursive_messages`` (a late-bound
-strict validator parses the subtree for error parity, then prunes to
-``()`` like the row converter — repeated recursive items and
-recursive map values route through the same validator). With that,
-every shape the row path supports in skip mode decodes vectorized;
-only raise-mode recursion returns None (the row path raises at
-compile). Runtime surprises (wire values
-outside the shapes the numpy dtypes can mirror exactly, e.g. >=2^63
-varints in a uint32 field from corrupt bytes) raise
-:class:`Unvectorizable` and the caller falls back per batch — the row
-path stays the semantics oracle.
+Scope: every shape the row path supports in skip mode — scalars of all
+kinds and config modes, repeated scalars (packed and expanded), oneofs,
+maps, nested messages to any depth, every WKT, repeated messages, and
+recursive types under ``skip_recursive_messages`` (a late-bound strict
+validator parses the subtree for error parity, then the cell prunes to
+``()`` like the row converter). Raise-mode recursion returns None (the
+row path raises at compile). Nested levels parse Timestamp bodies
+strictly, like ``parse_into``; the top level keeps ``h_ts``'s soft
+limit (reads may run past the body up to the row end). Runtime
+surprises (wire values outside what the numpy dtypes can mirror
+exactly, e.g. >=2^63 varints in a uint32 field from corrupt bytes)
+raise :class:`Unvectorizable` and the caller falls back per batch —
+the row path stays the semantics oracle.
 
 Reference parity: the reference's decode direction is
 ``arrow_to_proto.py:608-656`` (columnar extraction from pyarrow
 buffers); this is the same columnar idea for the Spark distributed
-codec (wire bytes -> pandas columns).
+codec (wire bytes -> columns).
 """
 
 from __future__ import annotations
 
+import datetime as _datetime
+from collections import namedtuple
 from typing import Callable
+
+import numpy as np
 
 from protarrow_spark.config import ProtarrowSparkConfig
 from protarrow_spark.conversion.vectorized import Unvectorizable, _SPLITTABLE_WKTS
@@ -75,6 +98,9 @@ from protarrow_spark.proto.model import (
 )
 
 _WT_VARINT, _WT_I64, _WT_LEN, _WT_I32 = 0, 1, 2, 5
+#: payload class of a record that cannot be read: groups (wt 3/4),
+#: reserved wire types, unreadable tags — the row path raises
+_CLS_ERROR = 3
 
 #: datetime.datetime(1,1,1)..(9999,12,31 23:59:59.999999) as
 #: microseconds since epoch — the row path's datetime arithmetic
@@ -104,6 +130,32 @@ _FIXED_WIDTH = {
     Kind.SFIXED32: 4,
 }
 _LEN_KINDS = {Kind.STRING, Kind.BYTES}
+_SCALAR_KINDS = _VARINT_KINDS | set(_FIXED_WIDTH) | _LEN_KINDS
+
+#: which reader a payload class takes: 0 varint (also a LEN record's
+#: length), 1 fixed-width, 2 none (the record is unreadable)
+_READ_GROUP = np.array([0, 1, 0, 2, 2, 1, 2, 2])
+_EIGHT = np.arange(8)
+
+#: ``_Batch.err_seq`` of a row without a wire error, and of a row whose
+#: record loop failed (after every record the loop logged for it)
+_NO_ERROR = np.iinfo(np.int64).max
+_AFTER_RECORDS = _NO_ERROR - 1
+
+#: a declared length above this can only come from a corrupt 10-byte
+#: varint; capping keeps ``start + length`` in int64 and still an error
+_LEN_CAP = np.uint64(1 << 62)
+
+
+def _wire_class(kind: Kind) -> int:
+    """The payload class the row path reads for ``kind``: the wire type
+    its reader assumes, whatever the record's own wire type says."""
+    if kind in _VARINT_KINDS:
+        return _WT_VARINT
+    width = _FIXED_WIDTH.get(kind)
+    if width is not None:
+        return _WT_I64 if width == 8 else _WT_I32
+    return _WT_LEN
 
 
 def _is_timestamp_field(field: Field) -> bool:
@@ -116,101 +168,256 @@ def _is_timestamp_field(field: Field) -> bool:
     )
 
 
-def _read_varints_at(buf, cur, limit, active):
-    """Vectorized ``_read_varint`` for every ``active`` row: read the
-    varint at buf[cur[i]] bounded by limit[i]. Returns
-    ``(val uint64, newcur, err)`` where err marks rows that overran
-    their limit or exceeded 10 bytes (the row path's
-    'varint too long'). Non-active rows pass through untouched."""
-    import numpy as np
+# ---- readers ---------------------------------------------------------------
 
-    n = len(cur)
-    val = np.zeros(n, dtype=np.uint64)
-    p = cur.copy()
-    err = np.zeros(n, dtype=bool)
-    idx = np.flatnonzero(active)
-    shift = 0
-    while len(idx):
-        oob = p[idx] >= limit[idx]
-        if oob.any():
-            err[idx[oob]] = True
-            idx = idx[~oob]
-            if not len(idx):
-                break
-        b = buf[p[idx]].astype(np.uint64)
-        # shift <= 63 always (loop exits below); uint64 << drops
-        # overflow bits mod 2^64, matching the row path's & (2^64-1)
-        val[idx] |= (b & np.uint64(0x7F)) << np.uint64(shift)
-        p[idx] += 1
-        more = (b & np.uint64(0x80)) != 0
-        idx = idx[more]
+
+#: zero bytes after a batch's wire bytes: a varint read may run up to
+#: 10 bytes before its limit check without leaving the buffer
+_PAD = 16
+
+
+def _read_varints(buf, pos, limit):
+    """Vectorized ``_read_varint``: the varint at ``buf[pos[k]]`` bounded
+    by ``limit[k]``, for every k (``buf`` ends in ``_PAD`` zero bytes).
+    Returns ``(val uint64, newpos, err)``; err marks reads that overran
+    their limit or ran past 10 bytes (the row path's 'varint too
+    long'). uint64 shifts drop the bits past 2^64, like the row path's
+    mask."""
+    b = buf[pos]
+    val = (b & 0x7F).astype(np.uint64)
+    p = pos + 1
+    idx = np.flatnonzero(b >= 0x80)  # the varints that continue
+    shift = 7
+    while len(idx) and shift < 70:
+        q = p[idx]
+        b = buf[q]
+        val[idx] |= (b & 0x7F).astype(np.uint64) << np.uint64(shift)
+        p[idx] = q + 1
+        idx = idx[b >= 0x80]
         shift += 7
-        if shift > 63 and len(idx):
-            err[idx] = True  # varint too long
-            break
+    err = p > limit
+    err[idx] = True  # still continuing after 10 bytes: too long
     return val, p, err
 
 
-def _read_fixed_at(buf, cur, limit, active, width):
-    """Vectorized fixed-width little-endian read. Returns
-    ``(val uint64, newcur, err)``; err marks rows whose payload
-    overruns their limit (the row path's struct.unpack IndexError /
-    _check_bounds)."""
-    import numpy as np
+def _read_fixed(buf, pos, width):
+    """Little-endian fixed-width values at ``pos`` as uint64; the caller
+    has bounds-checked every read."""
+    if not len(pos):
+        return np.zeros(0, dtype=np.uint64)
+    raw = buf[pos[:, None] + np.arange(width)]
+    return raw.view("<u8" if width == 8 else "<u4").ravel().astype(np.uint64)
 
+
+def _ranks(counts):
+    """0..c-1 for each c in ``counts``, concatenated."""
+    return np.arange(int(counts.sum())) - np.repeat(np.cumsum(counts) - counts, counts)
+
+
+def _packed(buf, start, stop, limit, width):
+    """Packed bodies ``[start, stop)`` read the row path's way: element
+    by element while the cursor is before ``stop``, each read bounded
+    by ``limit`` — so the last element may run past ``stop``, and the
+    cursor ends where it ended. ``width`` is the element width, or -1
+    for varints. Returns ``(counts, values, ends, err)``: each body's
+    element count (0 for a malformed body), every element in body
+    order, each body's final cursor, and a malformed-body mask."""
+    ln = stop - start
+    if width > 0:
+        counts = -(-ln // width)
+        ends = start + counts * width
+        err = ends > limit
+        counts[err] = 0
+        pos = np.repeat(start, counts) + _ranks(counts) * width
+        return counts, _read_fixed(buf, pos, width), ends, err
+    # varints: an element ends at its first byte below 0x80, so elements
+    # start at the body start and after every such byte inside the body
+    nb = len(start)
+    byte = np.repeat(start, ln) + _ranks(ln)
+    first = np.ones(len(byte), dtype=bool)
+    first[1:] = buf[byte[:-1]] < 0x80
+    first[(np.cumsum(ln) - ln)[ln > 0]] = True
+    elem_body = np.repeat(np.arange(nb), ln)[first]
+    vals, after, eerr = _read_varints(buf, byte[first], limit[elem_body])
+    err = np.zeros(nb, dtype=bool)
+    err[elem_body[eerr]] = True
+    ends = start.copy()
+    if len(elem_body):
+        last = np.r_[elem_body[1:] != elem_body[:-1], True]
+        ends[elem_body[last]] = after[last]
+    keep = ~err[elem_body]
+    return np.bincount(elem_body[keep], minlength=nb), vals[keep], ends, err
+
+
+# ---- the record loop -------------------------------------------------------
+
+
+class _Table:
+    """One message level's field number -> (slot, payload class, packed
+    width) lookup, built at compile time. ``pw`` is 0 unless the
+    field's LEN-typed records are packed bodies: then it is the element
+    width of a fixed-width kind, or -1 for a varint kind."""
+
+    def __init__(self, rows):  # (number, slot, cls, pw)
+        rows = sorted(rows)
+        # sentinel: no tag >> 3 reaches 2^64-1, so a search past the
+        # last known number lands on a miss
+        self.nums = np.array([r[0] for r in rows] + [2**64 - 1], dtype=np.uint64)
+        self.slot = np.array([r[1] for r in rows] + [-1], dtype=np.int64)
+        self.cls = np.array([r[2] for r in rows] + [0], dtype=np.int64)
+        self.pw = np.array([r[3] for r in rows] + [0], dtype=np.int64)
+        self.packable = bool(self.pw.any())
+        self.n_slots = len(rows)
+
+
+#: the Timestamp body: seconds (int64) and nanos (int32), both varints
+_TS_TABLE = _Table([(1, 0, _WT_VARINT, 0), (2, 1, _WT_VARINT, 0)])
+
+
+class _Recs(namedtuple("_Recs", "unit start end seq")):
+    """One field's records: the unit (row, body or entry) each belongs
+    to; for a LEN record its payload bounds, for any other record its
+    raw value (in ``start``, as int64) and ``end`` -1; and the record's
+    position in wire (step) order."""
+
+    @property
+    def val(self):
+        return self.start.view(np.uint64)
+
+
+class _Log:
+    """The records of one tokenized batch, sorted by (slot, unit) with
+    each unit's records in wire order."""
+
+    def __init__(self, chunks, n_units, n_slots):
+        if chunks:
+            unit, slot, start, end = (np.concatenate(c) for c in zip(*chunks))
+        else:
+            unit = slot = start = end = np.zeros(0, dtype=np.int64)
+        key = slot * n_units + unit
+        if (key[1:] >= key[:-1]).all():
+            order = np.arange(len(key))  # rows in step: already sorted
+        else:
+            order = np.argsort(key, kind="stable")
+            unit, slot, start, end = unit[order], slot[order], start[order], end[order]
+        self.cols = (unit, start, end, order)
+        self.bounds = np.searchsorted(slot, np.arange(n_slots + 1))
+
+    def __getitem__(self, slot) -> _Recs:
+        a, b = self.bounds[slot], self.bounds[slot + 1]
+        return _Recs(*(c[a:b] for c in self.cols))
+
+
+def _tokenize(buf, cur, stop, limit, tab):
+    """The record loop. Walks every unit of a batch (a row, a Timestamp
+    body, a map entry) at once, one record per unit per step, until each
+    unit's cursor reaches ``stop``; reads are bounded by ``limit``.
+    Returns ``(log, err, steps)``: ``err`` marks the units whose wire is
+    malformed; each stops at its bad record."""
     n = len(cur)
-    val = np.zeros(n, dtype=np.uint64)
+    cur = cur.copy()
     err = np.zeros(n, dtype=bool)
-    p = cur.copy()
-    idx = np.flatnonzero(active)
-    oob = p[idx] + width > limit[idx]
-    if oob.any():
-        err[idx[oob]] = True
-        idx = idx[~oob]
-    if len(idx):
-        acc = np.zeros(len(idx), dtype=np.uint64)
-        base = p[idx]
-        for j in range(width):
-            acc |= buf[base + j].astype(np.uint64) << np.uint64(8 * j)
-        val[idx] = acc
-        p[idx] += width
-    return val, p, err
+    chunks = []
+    act = np.flatnonzero(cur < stop)
+    # every record takes >= 2 bytes, so a unit of L bytes needs <= L
+    # steps; the budget only guards against a logic bug looping forever
+    budget = int((stop - cur).max(initial=0)) + 2
+    steps = 0
+    while len(act):
+        steps += 1
+        if steps > budget:  # pragma: no cover - defensive
+            raise Unvectorizable("decode step budget exceeded")
+        m = len(act)
+        lim = limit[act]
+        tag, pos, e = _read_varints(buf, cur[act], lim)
+        fn = tag >> np.uint64(3)
+        k = np.searchsorted(tab.nums, fn)
+        hit = tab.nums[k] == fn
+        cls = tab.cls[k]
+        all_hit = hit.all()
+        if tab.packable or not all_hit:
+            wt = (tag & np.uint64(7)).astype(np.int64)
+            if not all_hit:  # unknown fields skip by their wire type
+                cls = np.where(hit, cls, wt)
+        pw = None
+        if tab.packable:
+            pw = np.where(hit & (wt == _WT_LEN) & ~e, tab.pw[k], 0)
+            packed = pw != 0
+            if packed.any():
+                cls[packed] = _WT_LEN
+            else:
+                pw = None
+        if e.any():
+            cls[e] = _CLS_ERROR
+        a = np.empty(m, dtype=np.int64)  # LEN payload start, or the value
+        nxt = np.empty(m, dtype=np.int64)  # the cursor after the record
+        group = _READ_GROUP[cls]
+        counts = np.bincount(group, minlength=3)
+        for g in np.flatnonzero(counts):
+            i = slice(None) if counts[g] == m else np.flatnonzero(group == g)
+            p, lm = pos[i], lim[i]
+            if g == 0:  # a varint, or a LEN record's length
+                v, q, ee = _read_varints(buf, p, lm)
+            elif g == 1:  # fixed64 / fixed32
+                q = p + np.where(cls[i] == _WT_I64, 8, 4)
+                v = buf[p[:, None] + _EIGHT].view("<u8").ravel()
+                v = np.where(q - p == 8, v, v & np.uint64(0xFFFFFFFF))
+                ee = q > lm
+            else:  # groups, reserved wire types, unreadable tags
+                v, q, ee = np.zeros(len(p), dtype=np.uint64), p, True
+            a[i] = v.view(np.int64)
+            nxt[i] = q
+            e[i] |= ee
+        i = np.flatnonzero(cls == _WT_LEN)
+        if len(i):  # the payload follows its length
+            q = nxt[i] + np.minimum(a[i].view(np.uint64), _LEN_CAP).astype(np.int64)
+            a[i] = nxt[i]
+            nxt[i] = q
+            e[i] |= q > lim[i]
+        end = np.where(cls == _WT_LEN, nxt, -1)
+        if pw is not None:
+            _packed_ends(buf, a, nxt, lim, np.where(e, 0, pw), e)
+        rec = hit & ~e
+        if rec.all():
+            chunks.append((act, tab.slot[k], a, end))
+        else:
+            chunks.append((act[rec], tab.slot[k[rec]], a[rec], end[rec]))
+        if e.any():
+            err[act[e]] = True
+            act, nxt = act[~e], nxt[~e]
+        cur[act] = nxt
+        act = act[nxt < stop[act]]
+    return _Log(chunks, n, tab.n_slots), err, steps
 
 
-def _skip_at(buf, cur, limit, active, wt):
-    """Vectorized ``_skip`` for one wire type. Returns (newcur, err).
-    Groups (wt 3/4) error like the row path raises."""
-    import numpy as np
+def _packed_ends(buf, start, end, lim, pw, err):
+    """Move each packed record's ``end`` to where the row path's element
+    loop leaves the cursor: a fixed-width body whose length is not a
+    multiple of the width reads its last element past the declared end,
+    and so does a varint body whose last byte continues the varint."""
+    fixed = np.flatnonzero(pw > 0)
+    if len(fixed):
+        w = pw[fixed]
+        end[fixed] = start[fixed] + -(-(end[fixed] - start[fixed]) // w) * w
+        err[fixed] |= end[fixed] > lim[fixed]
+    vi = np.flatnonzero(pw < 0)
+    if len(vi):
+        tail = buf[np.maximum(end[vi] - 1, 0)]
+        odd = vi[(end[vi] > start[vi]) & (tail >= 0x80)]
+        if len(odd):
+            _, _, end[odd], oerr = _packed(buf, start[odd], end[odd], lim[odd], -1)
+            err[odd] |= oerr
 
-    n = len(cur)
-    err = np.zeros(n, dtype=bool)
-    if wt == _WT_VARINT:
-        _, p, err = _read_varints_at(buf, cur, limit, active)
-        return p, err
-    if wt in (_WT_I64, _WT_I32):
-        width = 8 if wt == _WT_I64 else 4
-        p = cur.copy()
-        idx = np.flatnonzero(active)
-        oob = p[idx] + width > limit[idx]
-        err[idx[oob]] = True
-        ok = idx[~oob]
-        p[ok] += width
-        return p, err
-    if wt == _WT_LEN:
-        ln, p, verr = _read_varints_at(buf, cur, limit, active)
-        err |= verr
-        idx = np.flatnonzero(active & ~err)
-        # a declared length may exceed int64 only via a corrupt 10-byte
-        # varint; comparing in int64 after capping keeps it an error
-        lni = np.minimum(ln[idx], np.uint64(1 << 62)).astype(np.int64)
-        oob = p[idx] + lni > limit[idx]
-        err[idx[oob]] = True
-        ok = idx[~oob]
-        p[ok] += lni[~oob]
-        return p, err
-    # groups / reserved wire types: the row path raises
-    err[active] = True
-    return cur.copy(), err
+
+def _last(units):
+    """Index of each unit's last record in a (unit, wire order)-sorted
+    slice."""
+    if not len(units):
+        return np.zeros(0, dtype=np.int64)
+    return np.flatnonzero(np.r_[units[1:] != units[:-1], True])
+
+
+# ---- value conversion ------------------------------------------------------
 
 
 def _convert_numeric(kind, u, live, field, enum_name_mode, u64_decimal):
@@ -220,8 +427,6 @@ def _convert_numeric(kind, u, live, field, enum_name_mode, u64_decimal):
     (dead elements are nulled by the caller); a live value outside
     what the numpy formulation can mirror raises Unvectorizable so the
     row path decides."""
-    import numpy as np
-
     if kind is Kind.INT64:
         return u.view(np.int64)
     if kind is Kind.ENUM:
@@ -230,7 +435,7 @@ def _convert_numeric(kind, u, live, field, enum_name_mode, u64_decimal):
             by_number = field.enum.by_number
             fb = field.enum.fallback_name
             return np.array(
-                [by_number.get(int(x), fb) for x in signed], dtype=object
+                [by_number.get(x, fb) for x in signed.tolist()], dtype=object
             )
         return signed
     if kind is Kind.INT32:
@@ -247,7 +452,7 @@ def _convert_numeric(kind, u, live, field, enum_name_mode, u64_decimal):
             import decimal
 
             return np.array(
-                [decimal.Decimal(int(x)) for x in u], dtype=object
+                [decimal.Decimal(x) for x in u.tolist()], dtype=object
             )
         return u.view(np.int64)  # reinterpret wrap, like the row
         # path's v - 2^64 if v > I64_MAX
@@ -259,12 +464,15 @@ def _convert_numeric(kind, u, live, field, enum_name_mode, u64_decimal):
     if kind is Kind.DOUBLE:
         return u.view(np.float64)
     if kind is Kind.FLOAT:
-        return (
-            (u & np.uint64(0xFFFFFFFF))
-            .astype(np.uint32)
-            .view(np.float32)
-            .astype(np.float64)
-        )
+        # a signalling-NaN payload widens to NaN, as struct.unpack's does,
+        # without numpy's 'invalid value' warning
+        with np.errstate(invalid="ignore"):
+            return (
+                (u & np.uint64(0xFFFFFFFF))
+                .astype(np.uint32)
+                .view(np.float32)
+                .astype(np.float64)
+            )
     if kind is Kind.FIXED32:
         return u.astype(np.int64)
     if kind is Kind.SFIXED32:
@@ -277,8 +485,6 @@ def _convert_numeric(kind, u, live, field, enum_name_mode, u64_decimal):
 
 #: datetime.date(1,1,1) — the engine's unset-Date cell (encode.py
 #: DATE_SENTINEL); kept a local constant like vectorized.py's.
-import datetime as _datetime
-
 _DATE_SENTINEL = _datetime.date(1, 1, 1)
 
 #: |seconds| bound keeping sec*1e9 + nano inside int64 (long_nanos
@@ -294,7 +500,6 @@ def _int_col(col, n):
     """A sub-decoder int column (np.int64 array, or object array with
     None at permissive-nulled rows) -> plain int64 (nulls as 0 — their
     rows are dead and masked by the caller)."""
-    import numpy as np
     import pandas as pd
 
     if isinstance(col, np.ndarray) and col.dtype != object:
@@ -317,8 +522,6 @@ def _wkt_values(mtype, sub_cols, m, live, config):
     formulation cannot hold exactly raise :class:`Unvectorizable` (the
     row path decides); datetime-range violations raise OverflowError in
     BOTH modes like the row path's datetime arithmetic."""
-    import numpy as np
-
     name = mtype.full_name
     if name == TIMESTAMP.full_name:
         sec = _int_col(sub_cols[0], m)
@@ -328,14 +531,7 @@ def _wkt_values(mtype, sub_cols, m, live, config):
                 raise Unvectorizable("long_nanos overflow risk")
             return "obj", sec * 1_000_000_000 + nano
         us = sec * 1_000_000 + np.floor_divide(nano, 1_000)
-        over = live & (
-            (sec > 260_000_000_000)
-            | (sec < -260_000_000_000)
-            | (us < _DT_US_MIN)
-            | (us > _DT_US_MAX)
-        )
-        if over.any():
-            raise OverflowError("timestamp out of datetime range")
+        _check_datetime_range(sec, us, live)
         return "dt64us", us
     if name == DURATION.full_name:
         sec = _int_col(sub_cols[0], m)
@@ -387,6 +583,19 @@ def _wkt_values(mtype, sub_cols, m, live, config):
     raise Unvectorizable(f"unsupported WKT {name}")  # pragma: no cover
 
 
+def _check_datetime_range(sec, us, live):
+    """The row path's epoch + timedelta arithmetic raises OverflowError
+    outside datetime's range, uncaught in BOTH modes."""
+    over = live & (
+        (sec > 260_000_000_000)
+        | (sec < -260_000_000_000)
+        | (us < _DT_US_MIN)
+        | (us > _DT_US_MAX)
+    )
+    if over.any():
+        raise OverflowError("timestamp out of datetime range")
+
+
 class _WktCellError:
     """Sentinel marking a per-cell conversion failure inside a 'list'
     form (e.g. datetime.date ValueError) for the caller to attribute."""
@@ -401,9 +610,6 @@ def _wkt_item_cells(mtype, sub_cols, m, item_live, config):
     """Item-context WKT finalize: plain python cell per decoded item
     (repeated items / map values live inside list/dict cells, so the
     Series forms the singular path uses don't apply)."""
-    import numpy as np
-    import pandas as pd
-
     form, payload = _wkt_values(mtype, sub_cols, m, item_live, config)
     if form == "obj":
         return list(payload)
@@ -434,214 +640,41 @@ def _wkt_item_cells(mtype, sub_cols, m, item_live, config):
     return list(col)
 
 
-def compile_wire_to_batch(
-    mtype: MessageType,
-    config: ProtarrowSparkConfig = ProtarrowSparkConfig(),
-    permissive: bool = False,
-    _trace: tuple = (),
-    _registry: dict | None = None,
-) -> Callable[[list], tuple] | None:
-    """Compile ``[bytes-or-None per row] -> (columns, bad)`` for a
-    supported flat message, or return None.
+def _aslist(col) -> list:
+    """A sub-decoder column as a list of its cells (NaT read as None)."""
+    import pandas as pd
 
-    ``columns`` is a list of per-field cell arrays (numpy array or
-    Python list, length n) in ``mtype.fields`` order — value-identical
-    to ``compile_wire_to_row`` applied per row. ``bad`` is None in
-    strict mode; in permissive mode it is a bool mask of rows that
-    failed to parse (the caller nulls the whole row, the dead-letter
-    convention). Strict mode raises on the first malformed row like
-    the row path.
-    """
-    import numpy as np
+    if isinstance(col, pd.Series):
+        return [None if v is pd.NaT else v for v in col]
+    return list(col)
 
-    if mtype.full_name in _trace:
-        return None  # recursive shapes keep the row path
-    trace = _trace + (mtype.full_name,)
-    # NESTED levels mirror parse_into, which hands the Timestamp body a
-    # STRICT slice (reads raise at the slice end); only the TOP level's
-    # specialized h_ts reader has the soft row-end limit.
-    ts_strict = bool(_trace)
-    # Shared across the compile tree: (full_name) -> forward cell for
-    # the STRICT validator of a recursive type. The cell is registered
-    # BEFORE its decoder compiles so self/ancestor references late-bind
-    # instead of recursing forever; runtime recursion depth then follows
-    # the DATA, exactly like parse_into's nested parse.
-    registry: dict = {} if _registry is None else _registry
-    fields = list(mtype.fields)
-    index_of = {f.name: i for i, f in enumerate(fields)}
 
-    def _strict_validator(sub_mt: MessageType):
-        """Validation decoder for a recursive field's bodies: a strict
-        (parse_into-semantics) batch decode of ``sub_mt`` whose own
-        recursive references late-bind to itself. The decoded columns
-        are discarded — the row path's converter prunes the subtree to
-        ``()`` — but parse errors must null/abort identically."""
-        cell = registry.get(sub_mt.full_name)
-        if cell is None:
-            cell = registry[sub_mt.full_name] = {"in_progress": True}
-            # the sentinel ancestor keeps ts_strict True without
-            # tripping the top-of-compile recursion guard
-            cell["fn"] = compile_wire_to_batch(
-                sub_mt, config, permissive, ("<strict-root>",), registry
-            )
-            cell["in_progress"] = False
-            if cell["fn"] is None:
-                return None  # validator shape unsupported -> row path
-        elif not cell.get("in_progress") and cell.get("fn") is None:
-            return None
-        return lambda cells, _c=cell: _c["fn"](cells)
+def _null_rows(col, rows):
+    """``col`` with the cells of ``rows`` nulled (a row that turned bad
+    after its column was built)."""
+    import pandas as pd
 
-    def _sibs(field) -> tuple:
-        # oneof later-member-wins: setting one member clears its
-        # siblings' presence (same clearing the row handlers do)
-        if field.oneof is None:
-            return ()
-        return tuple(
-            index_of[s.name]
-            for s in fields
-            if s.oneof == field.oneof and s.name != field.name
-        )
+    if isinstance(col, list):
+        for i in rows.tolist():
+            col[i] = None
+        return col
+    if isinstance(col, pd.Series):
+        col = col.copy()
+        col.iloc[rows] = pd.NaT
+        return col
+    col = col.astype(object)
+    col[rows] = None
+    return col
 
-    plan: dict[int, tuple] = {}
-    sub_decoders: dict[int, Callable] = {}
-    # message-typed items/values: idx -> WKT full_name or None (plain)
-    item_wkt: dict[int, str | None] = {}
-    for idx, field in enumerate(fields):
-        if field.is_map:
-            # maps (r9): each occurrence is a bounded entry slice
-            # (key=1 / value=2) parsed in a transposed sub-loop; the
-            # per-row dict assembly (insert-order dedup, the row
-            # path's message-merge result) happens at finalize.
-            # Message VALUES (r10): value occurrences collect slices
-            # per entry (concatenation == the entry parse's merge),
-            # decoded at finalize by the recursive batch decoder.
-            entry = field.message
-            key_f = entry.fields_by_number[1]
-            val_f = entry.fields_by_number[2]
-            if key_f.kind not in (_VARINT_KINDS | set(_FIXED_WIDTH) | _LEN_KINDS):
-                return None
-            if val_f.kind is Kind.MESSAGE:
-                sub_name = val_f.message.full_name
-                if sub_name in trace:
-                    # recursive-typed values (r10): validate each entry
-                    # value via the strict validator, prune to ()
-                    if not config.skip_recursive_messages:
-                        return None
-                    validator = _strict_validator(val_f.message)
-                    if validator is None:
-                        return None
-                    sub_decoders[idx] = validator
-                    item_wkt[idx] = "rec"
-                    plan[field.number] = ("map", field, idx, ())
-                    continue
-                sub = compile_wire_to_batch(
-                    val_f.message, config, permissive, trace, registry
-                )
-                if sub is None:
-                    return None
-                sub_decoders[idx] = sub
-                item_wkt[idx] = (
-                    val_f.message if sub_name in _SPLITTABLE_WKTS else None
-                )
-            elif val_f.kind not in (
-                _VARINT_KINDS | set(_FIXED_WIDTH) | _LEN_KINDS
-            ):
-                return None
-            plan[field.number] = ("map", field, idx, ())
-            continue
-        if field.repeated:
-            # repeated scalars (r9): packed bodies parse in a
-            # transposed inner loop, expanded occurrences accumulate
-            # (row, value) chunks. Repeated MESSAGES (r10): each
-            # occurrence is one standalone item slice (NO merge across
-            # occurrences — h_rep_msg parses each into its own
-            # Message); recursive-typed items keep the row path.
-            if field.kind is Kind.MESSAGE:
-                sub_name = field.message.full_name
-                if sub_name in trace:
-                    # recursive-typed items (r10): each occurrence
-                    # validates via the strict validator, prunes to ()
-                    if not config.skip_recursive_messages:
-                        return None
-                    validator = _strict_validator(field.message)
-                    if validator is None:
-                        return None
-                    sub_decoders[idx] = validator
-                    item_wkt[idx] = "rec"
-                    plan[field.number] = ("rep_msg", field, idx, ())
-                    continue
-                sub = compile_wire_to_batch(
-                    field.message, config, permissive, trace, registry
-                )
-                if sub is None:
-                    return None
-                sub_decoders[idx] = sub
-                item_wkt[idx] = (
-                    field.message if sub_name in _SPLITTABLE_WKTS else None
-                )
-                plan[field.number] = ("rep_msg", field, idx, ())
-                continue
-            if field.kind not in (_VARINT_KINDS | set(_FIXED_WIDTH) | _LEN_KINDS):
-                return None
-            plan[field.number] = ("repeated", field, idx, ())
-            continue
-        if _is_timestamp_field(field):
-            if config.timestamp_type not in ("timestamp", "long_nanos"):
-                return None
-            plan[field.number] = ("timestamp", field, idx, _sibs(field))
-            continue
-        if field.kind is Kind.MESSAGE:
-            sub_name = field.message.full_name
-            # recursion (r10): under skip_recursive_messages the row
-            # path PARSES the body (h_msg -> parse_into, full
-            # validation) then prunes the converted subtree to ``()``.
-            # The strict validator decodes the joined bodies purely for
-            # error parity; raise-mode shapes keep the row path.
-            if sub_name in trace:
-                if not config.skip_recursive_messages:
-                    return None
-                validator = _strict_validator(field.message)
-                if validator is None:
-                    return None
-                sub_decoders[idx] = validator
-                plan[field.number] = ("rec", field, idx, _sibs(field))
-                continue
-            # non-Timestamp WKTs (r10): body slices collect exactly
-            # like nested messages (concatenation == merge), then the
-            # sub-decoded columns combine into the scalar cell form
-            # (wrapper value / timedelta / date / nanos-of-day / ()).
-            if sub_name in _SPLITTABLE_WKTS:
-                sub = compile_wire_to_batch(
-                    field.message, config, permissive, trace, registry
-                )
-                if sub is None:  # pragma: no cover — WKTs always compile
-                    return None
-                sub_decoders[idx] = sub
-                item_wkt[idx] = field.message
-                plan[field.number] = ("wkt", field, idx, _sibs(field))
-                continue
-            # plain nested messages (r9): occurrences collect body
-            # slices; concatenation == protobuf's message merge, so the
-            # joined bytes recursively batch-decode into the struct's
-            # sub-columns.
-            sub = compile_wire_to_batch(
-                field.message, config, permissive, trace, registry
-            )
-            if sub is None:
-                return None
-            sub_decoders[idx] = sub
-            plan[field.number] = ("nested", field, idx, _sibs(field))
-            continue
-        if field.kind not in (_VARINT_KINDS | set(_FIXED_WIDTH) | _LEN_KINDS):
-            return None
-        plan[field.number] = ("scalar", field, idx, _sibs(field))
 
-    enum_name_mode = config.enum_type != "int"
-    u64_decimal = config.uint64_type == "decimal"
-    ts_long_nanos = config.timestamp_type == "long_nanos"
-    map_as_list = config.map_as_list
+# ---- one batch mid-decode --------------------------------------------------
 
-    def decode_batch(cells: list) -> tuple:
+
+class _Batch:
+    """One batch between ``parse`` and ``finish``: the joined wire bytes,
+    each row's bounds, the bad-row mask and every field's parse."""
+
+    def __init__(self, cells: list, permissive: bool):
         n = len(cells)
         bad = np.zeros(n, dtype=bool)
         if permissive:
@@ -660,916 +693,606 @@ def compile_wire_to_batch(
                     bad[i] = True
         else:
             # strict: bytes(None) raises TypeError like the row path
-            norm = [bytes(c) for c in cells]
-
-        buf = np.frombuffer(b"".join(norm), dtype=np.uint8)
-        lens = np.fromiter((len(c) for c in norm), dtype=np.int64, count=n)
+            norm = list(map(bytes, cells))
+        self.raw = b"".join(norm)
+        self.buf = np.frombuffer(self.raw + bytes(_PAD), dtype=np.uint8)
         offsets = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(lens, out=offsets[1:])
-        cur = offsets[:-1].copy()
-        rowend = offsets[1:].copy()
+        np.cumsum(
+            np.fromiter(map(len, norm), dtype=np.int64, count=n),
+            out=offsets[1:],
+        )
+        self.start, self.rowend = offsets[:-1], offsets[1:]
+        self.n, self.bad, self.permissive = n, bad, permissive
+        # each row's first wire error, as the failing record's position
+        # in wire order (see fail)
+        self.err_seq = np.where(bad, -1, _NO_ERROR)
+        self.parsed: dict = {}
 
-        # per-field accumulators
-        raw_vals: dict[int, object] = {}
-        seen: dict[int, object] = {}
-        str_start: dict[int, object] = {}
-        str_len: dict[int, object] = {}
-        ts_sec: dict[int, object] = {}
-        ts_nano: dict[int, object] = {}
-        # repeated: (row_idx array, payload arrays) chunks in PARSE
-        # order — a stable per-row sort at finalize reassembles each
-        # row's element sequence exactly as the row path appended it
-        rep_chunks: dict[int, list] = {}
-        map_chunks: dict[int, list] = {}
-        msg_chunks: dict[int, list] = {}
-        repmsg_chunks: dict[int, list] = {}
-        for number, (klass, field, idx, sibs) in plan.items():
-            if klass in ("nested", "wkt", "rec"):
-                # same slice-collection mechanics: occurrences join by
-                # concatenation (== parse_into merge)
-                msg_chunks[idx] = []
-                seen[idx] = np.zeros(n, dtype=bool)
-                continue
-            if klass == "map":
-                map_chunks[idx] = []
-                continue
-            if klass == "rep_msg":
-                repmsg_chunks[idx] = []
-                continue
-            if klass == "repeated":
-                rep_chunks[idx] = []
-                continue
-            if klass == "timestamp":
-                ts_sec[idx] = np.zeros(n, dtype=np.int64)
-                ts_nano[idx] = np.zeros(n, dtype=np.int64)
-                seen[idx] = np.zeros(n, dtype=bool)
-            elif field.kind in _LEN_KINDS:
-                str_start[idx] = np.zeros(n, dtype=np.int64)
-                str_len[idx] = np.zeros(n, dtype=np.int64)
-                seen[idx] = np.zeros(n, dtype=bool)
-            else:
-                raw_vals[idx] = np.zeros(n, dtype=np.uint64)
-                seen[idx] = np.zeros(n, dtype=bool)
+    def fail(self, rows, message: str, seq=_AFTER_RECORDS) -> None:
+        """Row-local errors (``rows``: a mask or row indices; ``seq``: the
+        wire order position of each failing record, by default after all
+        of its row's records): permissive marks the rows bad and keeps
+        each row's earliest failure, strict raises like the row path."""
+        rows = np.asarray(rows)
+        if rows.dtype == bool:
+            rows = np.flatnonzero(rows)
+        if not len(rows):
+            return
+        if not self.permissive:
+            raise ValueError(message)
+        self.bad[rows] = True
+        np.minimum.at(self.err_seq, rows, seq)
 
-        def fail(mask, message):
-            """Translate row-local wire errors: permissive -> mark bad,
-            strict -> raise like the row path aborts the task."""
-            nonlocal bad
-            if not mask.any():
-                return
-            if not permissive:
-                raise ValueError(message)
-            bad |= mask
+    def slices(self, starts, ends, rows, seqs, kind) -> list:
+        """LEN payloads -> str/bytes cells. A STRING payload that is not
+        UTF-8 fails its row, as the row path's reader raises on it."""
+        raw, bounds = self.raw, zip(starts.tolist(), ends.tolist())
+        if kind is not Kind.STRING:
+            return [raw[s:e] for s, e in bounds]
+        try:
+            return [raw[s:e].decode("utf-8") for s, e in bounds]
+        except UnicodeDecodeError:
+            pass
+        out = []
+        for s, e, r, q in zip(starts.tolist(), ends.tolist(), rows.tolist(), seqs.tolist()):
+            try:
+                out.append(raw[s:e].decode("utf-8"))
+            except UnicodeDecodeError:
+                self.fail([r], "invalid UTF-8 in a string field", q)
+                out.append(None)
+        return out
 
-        steps = 0
-        # Upper bound on well-formed steps: every step consumes >= 2
-        # bytes (tag + payload) for at least one active row, so a
-        # stream of L bytes yields <= L steps; the cap below only
-        # guards against a logic bug looping forever.
-        max_steps = int(lens.max(initial=0)) + 2
-        active = (cur < rowend) & ~bad
-        while active.any():
-            steps += 1
-            if steps > max_steps:  # pragma: no cover - defensive
-                raise Unvectorizable("decode step budget exceeded")
-            tags, p, verr = _read_varints_at(buf, cur, rowend, active)
-            fail(active & verr, "truncated or over-long tag varint")
-            active &= ~verr
-            cur = np.where(active, p, cur)
-            for tag in np.unique(tags[active]) if active.any() else ():
-                m = active & (tags == tag)
-                fn = int(tag) >> 3
-                wt = int(tag) & 7
-                entry = plan.get(fn)
-                if entry is None or fn == 0:
-                    # field number 0 is invalid on the wire; the row
-                    # path's handlers dict has no 0 key so it skips by
-                    # wire type, same as any unknown field
-                    p2, serr = _skip_at(buf, cur, rowend, m, wt)
-                    fail(m & serr, f"cannot skip field {fn} wt {wt}")
-                    ok = m & ~serr
-                    cur = np.where(ok, p2, cur)
-                    continue
-                klass, field, idx, sibs = entry
-                kind = field.kind
-                if klass == "timestamp":
-                    ln, p2, verr = _read_varints_at(buf, cur, rowend, m)
-                    oob = np.zeros(n, dtype=bool)
-                    mok = m & ~verr
-                    lni = np.minimum(ln, np.uint64(1 << 62)).astype(np.int64)
-                    oob[mok] = p2[mok] + lni[mok] > rowend[mok]
-                    fail(m & (verr | oob), "truncated timestamp body")
-                    mok = mok & ~oob
-                    body_end = np.where(mok, p2 + lni, rowend)
-                    # first occurrence resets [0, 0] (the row path
-                    # allocates st = [0, 0]); later occurrences merge
-                    first = mok & ~seen[idx]
-                    ts_sec[idx][first] = 0
-                    ts_nano[idx][first] = 0
-                    seen[idx] |= mok
-                    # IMPORTANT: the TOP-level row path's h_ts loop
-                    # condition is ``pos < body_end`` but its reads/
-                    # skips are bounded by the ROW end, and it returns
-                    # body_end regardless — a corrupt subfield may
-                    # overrun the body into the next field's bytes
-                    # without erroring, then the cursor clamps back.
-                    # NESTED levels go through parse_into, which slices
-                    # the ts body STRICTLY. Mirror whichever applies.
-                    ts_limit = body_end if ts_strict else rowend
-                    tcur = np.where(mok, p2, cur)
-                    tact = mok & (tcur < body_end)
-                    while tact.any():
-                        ttags, tp, terr = _read_varints_at(
-                            buf, tcur, ts_limit, tact
-                        )
-                        fail(tact & terr, "truncated timestamp subfield")
-                        tact &= ~terr
-                        mok &= ~terr
-                        tcur = np.where(tact, tp, tcur)
-                        for ttag in (
-                            np.unique(ttags[tact]) if tact.any() else ()
-                        ):
-                            tm = tact & (ttags == ttag)
-                            tfn = int(ttag) >> 3
-                            twt = int(ttag) & 7
-                            if tfn in (1, 2):
-                                v, tp2, tverr = _read_varints_at(
-                                    buf, tcur, ts_limit, tm
-                                )
-                                fail(tm & tverr, "truncated timestamp value")
-                                tmok = tm & ~tverr
-                                mok &= ~tverr
-                                tcur = np.where(tmok, tp2, tcur)
-                                if tfn == 1:
-                                    ts_sec[idx][tmok] = v[tmok].view(np.int64)
-                                else:
-                                    low = (
-                                        v & np.uint64(0xFFFFFFFF)
-                                    ).astype(np.int64)
-                                    nano32 = np.where(
-                                        low >= (1 << 31), low - (1 << 32), low
-                                    )
-                                    ts_nano[idx][tmok] = nano32[tmok]
-                            else:
-                                tp2, tserr = _skip_at(
-                                    buf, tcur, ts_limit, tm, twt
-                                )
-                                fail(
-                                    tm & tserr,
-                                    "unskippable timestamp subfield",
-                                )
-                                tmok = tm & ~tserr
-                                mok &= ~tserr
-                                tcur = np.where(tmok, tp2, tcur)
-                        tact = mok & (tcur < body_end)
-                    for s_idx in sibs:
-                        seen[s_idx][mok] = False
-                    cur = np.where(mok, body_end, cur)
-                elif klass in ("nested", "wkt", "rec"):
-                    # LEN slice per occurrence; slices CONCATENATE at
-                    # finalize (wire concatenation == parse_into merge)
-                    ln, p2, verr = _read_varints_at(buf, cur, rowend, m)
-                    oob = np.zeros(n, dtype=bool)
-                    mok = m & ~verr
-                    lni = np.minimum(ln, np.uint64(1 << 62)).astype(np.int64)
-                    oob[mok] = p2[mok] + lni[mok] > rowend[mok]
-                    fail(m & (verr | oob), "truncated message body")
-                    mok = mok & ~oob
-                    idxs = np.flatnonzero(mok)
-                    msg_chunks[idx].append(
-                        (idxs, p2[idxs].copy(), lni[idxs].copy())
-                    )
-                    seen[idx] |= mok
-                    for s_idx in sibs:
-                        seen[s_idx][mok] = False
-                    cur = np.where(mok, p2 + lni, cur)
-                elif klass == "rep_msg":
-                    # one standalone ITEM slice per occurrence (no
-                    # merge — h_rep_msg parses each into its own
-                    # Message); stable per-row order restored at
-                    # finalize like the scalar repeated chunks
-                    ln, p2, verr = _read_varints_at(buf, cur, rowend, m)
-                    oob = np.zeros(n, dtype=bool)
-                    mok = m & ~verr
-                    lni = np.minimum(ln, np.uint64(1 << 62)).astype(np.int64)
-                    oob[mok] = p2[mok] + lni[mok] > rowend[mok]
-                    fail(m & (verr | oob), "truncated repeated message")
-                    mok = mok & ~oob
-                    idxs = np.flatnonzero(mok)
-                    repmsg_chunks[idx].append(
-                        (idxs, p2[idxs].copy(), lni[idxs].copy())
-                    )
-                    cur = np.where(mok, p2 + lni, cur)
-                elif klass == "map":
-                    # one entry per occurrence: a bounded LEN slice the
-                    # row path hands to parse_into (reads bounded by
-                    # the SLICE, unlike the Timestamp body's soft
-                    # limit), then dict-inserts (key, value)
-                    entry_mt = field.message
-                    key_f = entry_mt.fields_by_number[1]
-                    val_f = entry_mt.fields_by_number[2]
-                    val_is_msg = val_f.kind is Kind.MESSAGE
-                    # message values: per-entry slice PIECES in parse
-                    # order (concatenation == the entry parse's merge
-                    # across repeated value occurrences)
-                    v_pieces: list = []
-                    ln, p2, verr = _read_varints_at(buf, cur, rowend, m)
-                    oob = np.zeros(n, dtype=bool)
-                    mok = m & ~verr
-                    lni = np.minimum(ln, np.uint64(1 << 62)).astype(np.int64)
-                    oob[mok] = p2[mok] + lni[mok] > rowend[mok]
-                    fail(m & (verr | oob), "truncated map entry")
-                    mok = mok & ~oob
-                    body_end = np.where(mok, p2 + lni, cur)
-                    # per-occurrence entry state; absent subfields keep
-                    # zeros = the proto default (entry.key/.value reads)
-                    k_u = np.zeros(n, dtype=np.uint64)
-                    v_u = np.zeros(n, dtype=np.uint64)
-                    k_st = np.zeros(n, dtype=np.int64)
-                    k_ln = np.zeros(n, dtype=np.int64)
-                    v_st = np.zeros(n, dtype=np.int64)
-                    v_ln = np.zeros(n, dtype=np.int64)
 
-                    def _read_sub(fkind, tm, tcur):
-                        """one subfield payload bounded by the entry
-                        slice -> (u, st, ln2, newcur, err)"""
-                        if fkind in _LEN_KINDS:
-                            l2, q, e = _read_varints_at(
-                                buf, tcur, body_end, tm
-                            )
-                            o2 = np.zeros(n, dtype=bool)
-                            tmk = tm & ~e
-                            li = np.minimum(
-                                l2, np.uint64(1 << 62)
-                            ).astype(np.int64)
-                            o2[tmk] = q[tmk] + li[tmk] > body_end[tmk]
-                            return (
-                                None,
-                                q,
-                                li,
-                                np.where(tmk & ~o2, q + li, tcur),
-                                e | o2,
-                            )
-                        if fkind in _FIXED_WIDTH:
-                            v2, q, e = _read_fixed_at(
-                                buf, tcur, body_end, tm, _FIXED_WIDTH[fkind]
-                            )
-                            return v2, None, None, q, e
-                        v2, q, e = _read_varints_at(buf, tcur, body_end, tm)
-                        return v2, None, None, q, e
+def _join_pieces(raw, recs, eff, m):
+    """Per unit, its effective LEN pieces joined (wire concatenation ==
+    protobuf merge), and the wire order position of its first piece.
+    Also returns the pieces that must each parse on their own, as
+    ``(units, bodies, seqs)`` or None: every piece of a unit with
+    several, and pieces a oneof sibling cleared (the row path parses
+    every occurrence, so a corrupt one fails the row even when a later
+    one replaces it)."""
+    pieces = [raw[s:e] for s, e in zip(recs.start.tolist(), recs.end.tolist())]
+    units = recs.unit
+    if eff is None:
+        eff = np.ones(len(units), dtype=bool)
+    bodies = [b""] * m
+    for u, p, f in zip(units.tolist(), pieces, eff.tolist()):
+        if f:
+            bodies[u] = bodies[u] + p if bodies[u] else p
+    first = np.full(m, _AFTER_RECORDS)
+    eu = units[eff]
+    if len(eu):
+        head = np.r_[True, eu[1:] != eu[:-1]]
+        first[eu[head]] = recs.seq[eff][head]
+    extra = ~eff | (np.bincount(eu, minlength=m)[units] > 1)
+    if not extra.any():
+        return bodies, first, None
+    k = np.flatnonzero(extra)
+    return bodies, first, (units[k], [pieces[j] for j in k], recs.seq[k])
 
-                    tcur = np.where(mok, p2, cur)
-                    tact = mok & (tcur < body_end)
-                    while tact.any():
-                        ttags, tp, terr = _read_varints_at(
-                            buf, tcur, body_end, tact
-                        )
-                        fail(tact & terr, "truncated map entry tag")
-                        tact &= ~terr
-                        mok &= ~terr
-                        tcur = np.where(tact, tp, tcur)
-                        for ttag in (
-                            np.unique(ttags[tact]) if tact.any() else ()
-                        ):
-                            tm = tact & (ttags == ttag)
-                            tfn = int(ttag) >> 3
-                            twt = int(ttag) & 7
-                            if tfn == 2 and val_is_msg:
-                                # LEN slice mechanics via the string
-                                # reader; pieces accumulate per entry
-                                v2, st2, ln2, tp2, e2 = _read_sub(
-                                    Kind.STRING, tm, tcur
-                                )
-                                fail(tm & e2, "truncated map subfield")
-                                tmok = tm & ~e2
-                                mok &= ~e2
-                                tcur = np.where(tmok, tp2, tcur)
-                                pidx = np.flatnonzero(tmok)
-                                v_pieces.append(
-                                    (pidx, st2[pidx].copy(), ln2[pidx].copy())
-                                )
-                            elif tfn in (1, 2):
-                                fkind = key_f.kind if tfn == 1 else val_f.kind
-                                v2, st2, ln2, tp2, e2 = _read_sub(
-                                    fkind, tm, tcur
-                                )
-                                fail(tm & e2, "truncated map subfield")
-                                tmok = tm & ~e2
-                                mok &= ~e2
-                                tcur = np.where(tmok, tp2, tcur)
-                                if tfn == 1:
-                                    if st2 is not None:
-                                        k_st[tmok] = st2[tmok]
-                                        k_ln[tmok] = ln2[tmok]
-                                    else:
-                                        k_u[tmok] = v2[tmok]
-                                else:
-                                    if st2 is not None:
-                                        v_st[tmok] = st2[tmok]
-                                        v_ln[tmok] = ln2[tmok]
-                                    else:
-                                        v_u[tmok] = v2[tmok]
-                            else:
-                                tp2, tserr = _skip_at(
-                                    buf, tcur, body_end, tm, twt
-                                )
-                                fail(tm & tserr, "unskippable map subfield")
-                                tmok = tm & ~tserr
-                                mok &= ~tserr
-                                tcur = np.where(tmok, tp2, tcur)
-                        tact = mok & (tcur < body_end)
-                    idxs = np.flatnonzero(mok)
-                    map_chunks[idx].append(
-                        {
-                            "rows": idxs,
-                            "k_u": k_u[idxs],
-                            "v_u": v_u[idxs],
-                            "k_st": k_st[idxs],
-                            "k_ln": k_ln[idxs],
-                            "v_st": v_st[idxs],
-                            "v_ln": v_ln[idxs],
-                            "v_pieces": v_pieces,
-                        }
-                    )
-                    cur = np.where(mok, body_end, cur)
-                elif klass == "repeated":
-                    if kind in _LEN_KINDS:
-                        # expanded LEN occurrence (strings/bytes never
-                        # pack — the row path reads one item per tag
-                        # regardless of wt, so do we)
-                        ln, p2, verr = _read_varints_at(buf, cur, rowend, m)
-                        oob = np.zeros(n, dtype=bool)
-                        mok = m & ~verr
-                        lni = np.minimum(ln, np.uint64(1 << 62)).astype(
-                            np.int64
-                        )
-                        oob[mok] = p2[mok] + lni[mok] > rowend[mok]
-                        fail(m & (verr | oob), "truncated repeated LEN")
-                        mok = mok & ~oob
-                        idxs = np.flatnonzero(mok)
-                        rep_chunks[idx].append(
-                            (idxs, p2[idxs].copy(), lni[idxs].copy())
-                        )
-                        cur = np.where(mok, p2 + lni, cur)
-                    elif wt == _WT_LEN:
-                        # packed body: transposed inner loop, one
-                        # element per iteration per still-active row.
-                        # Reads are bounded by the ROW end (the row
-                        # path's reader can overrun the declared stop
-                        # mid-element and returns the ACTUAL final
-                        # position, not a clamp — mirror both).
-                        ln, p2, verr = _read_varints_at(buf, cur, rowend, m)
-                        oob = np.zeros(n, dtype=bool)
-                        mok = m & ~verr
-                        lni = np.minimum(ln, np.uint64(1 << 62)).astype(
-                            np.int64
-                        )
-                        oob[mok] = p2[mok] + lni[mok] > rowend[mok]
-                        fail(m & (verr | oob), "truncated packed body")
-                        mok = mok & ~oob
-                        body_end = np.where(mok, p2 + lni, cur)
-                        tcur = np.where(mok, p2, cur)
-                        width = _FIXED_WIDTH.get(kind)
-                        tact = mok & (tcur < body_end)
-                        while tact.any():
-                            if width is None:
-                                v, tp, terr = _read_varints_at(
-                                    buf, tcur, rowend, tact
-                                )
-                            else:
-                                v, tp, terr = _read_fixed_at(
-                                    buf, tcur, rowend, tact, width
-                                )
-                            fail(tact & terr, "truncated packed element")
-                            tact &= ~terr
-                            mok &= ~terr
-                            idxs = np.flatnonzero(tact)
-                            rep_chunks[idx].append((idxs, v[idxs].copy()))
-                            tcur = np.where(tact, tp, tcur)
-                            tact = mok & (tcur < body_end)
-                        cur = np.where(mok, tcur, cur)
-                    else:
-                        # expanded numeric occurrence: single element
-                        width = _FIXED_WIDTH.get(kind)
-                        if width is None:
-                            v, p2, verr = _read_varints_at(
-                                buf, cur, rowend, m
-                            )
-                        else:
-                            v, p2, verr = _read_fixed_at(
-                                buf, cur, rowend, m, width
-                            )
-                        fail(m & verr, "truncated repeated element")
-                        mok = m & ~verr
-                        idxs = np.flatnonzero(mok)
-                        rep_chunks[idx].append((idxs, v[idxs].copy()))
-                        cur = np.where(mok, p2, cur)
-                elif kind in _LEN_KINDS:
-                    ln, p2, verr = _read_varints_at(buf, cur, rowend, m)
-                    oob = np.zeros(n, dtype=bool)
-                    mok = m & ~verr
-                    lni = np.minimum(ln, np.uint64(1 << 62)).astype(np.int64)
-                    oob[mok] = p2[mok] + lni[mok] > rowend[mok]
-                    fail(m & (verr | oob), "truncated LEN payload")
-                    mok = mok & ~oob
-                    str_start[idx][mok] = p2[mok]
-                    str_len[idx][mok] = lni[mok]
-                    seen[idx] |= mok
-                    for s_idx in sibs:
-                        seen[s_idx][mok] = False
-                    cur = np.where(mok, p2 + lni, cur)
-                elif kind in _FIXED_WIDTH:
-                    v, p2, ferr = _read_fixed_at(
-                        buf, cur, rowend, m, _FIXED_WIDTH[kind]
-                    )
-                    fail(m & ferr, "truncated fixed-width payload")
-                    mok = m & ~ferr
-                    raw_vals[idx][mok] = v[mok]
-                    seen[idx] |= mok
-                    for s_idx in sibs:
-                        seen[s_idx][mok] = False
-                    cur = np.where(mok, p2, cur)
-                else:  # varint family (readers ignore the observed wt,
-                    # exactly like the row handlers)
-                    v, p2, verr = _read_varints_at(buf, cur, rowend, m)
-                    fail(m & verr, "truncated varint payload")
-                    mok = m & ~verr
-                    raw_vals[idx][mok] = v[mok]
-                    seen[idx] |= mok
-                    for s_idx in sibs:
-                        seen[s_idx][mok] = False
-                    cur = np.where(mok, p2, cur)
-            active = (cur < rowend) & ~bad
 
-        # ---- finalize columns (field order) -----------------------------
-        # Pass 1: strings decode first so UnicodeDecodeError can still
-        # grow ``bad`` before other columns apply their null masks.
+def _per_row(batch, rows, items) -> list:
+    """Items sorted by row -> one list cell per row ([] when none, None
+    for a bad row)."""
+    counts = np.bincount(rows, minlength=batch.n)
+    ends = np.cumsum(counts).tolist()
+    return [
+        None if b else items[e - c : e]
+        for b, c, e in zip(batch.bad.tolist(), counts.tolist(), ends)
+    ]
+
+
+class _Validator:
+    """A recursive type's strict decoder, bound late: registered before
+    it compiles, so self and ancestor references resolve without
+    recursing forever. Only its parse runs — the row converter prunes
+    a recursive subtree to ``()`` — and only on non-empty bodies, so
+    runtime recursion depth follows the DATA, like parse_into's."""
+
+    def __init__(self, cell: dict):
+        self.cell = cell
+
+    def validate(self, bodies: list):
+        if not any(bodies):
+            return np.zeros(len(bodies), dtype=bool)
+        return self.cell["fn"].parse(bodies).bad
+
+
+# ---- the compiled decoder ---------------------------------------------------
+
+
+class _Decoder:
+    """``[bytes per row] -> (columns, bad)`` for one message type; see
+    :func:`compile_wire_to_batch`."""
+
+    def __init__(self, plan, subs, item_wkt, entry_tables, config, permissive, nested):
+        self.plan = plan  # (klass, field, idx) in field order; slot == idx
+        self.subs = subs
+        self.item_wkt = item_wkt
+        self.entry_tables = entry_tables
+        self.config = config
+        self.permissive = permissive
+        self.nested = nested
+        # the top-level row path converts repeated-message items in its
+        # wire loop, before any other field's finalizer runs
+        self.finish_order = sorted(plan, key=lambda p: nested or p[0] != "rep_msg")
+        self.enum_name_mode = config.enum_type != "int"
+        self.u64_decimal = config.uint64_type == "decimal"
+        table, groups = [], {}
+        for klass, field, idx in plan:
+            scalar = klass in ("scalar", "repeated")
+            packable = klass == "repeated" and field.kind not in _LEN_KINDS
+            cls = _wire_class(field.kind) if scalar else _WT_LEN
+            pw = _FIXED_WIDTH.get(field.kind, -1) if packable else 0
+            table.append((field.number, idx, cls, pw))
+            if field.oneof is not None:
+                groups.setdefault(field.oneof, []).append(idx)
+        self.table = _Table(table)
+        self.oneofs = [g for g in groups.values() if len(g) > 1]
+
+    def __call__(self, cells: list) -> tuple:
+        batch = self.parse(cells)
+        columns = self.finish(batch)
+        return columns, (batch.bad if self.permissive else None)
+
+    # -- phase 1: the record loop and every wire-level check ------------
+
+    def parse(self, cells: list) -> _Batch:
+        b = _Batch(cells, self.permissive)
+        log, err, _ = _tokenize(b.buf, b.start, b.rowend, b.rowend, self.table)
+        b.fail(err, "truncated or malformed wire record")
+        cut = self._oneof_cuts(log, b.n)
+        for klass, field, idx in self.plan:
+            recs = log[idx]
+            eff = recs.seq > cut[idx][recs.unit] if idx in cut else None
+            b.parsed[idx] = getattr(self, "_parse_" + klass)(b, field, idx, recs, eff)
+        return b
+
+    def _oneof_cuts(self, log, n) -> dict:
+        """Per oneof member, each row's last sibling occurrence (-1 when
+        none): only the member's occurrences after it count, since
+        setting a sibling clears the member (later member wins)."""
+        cut = {}
+        for members in self.oneofs:
+            last = {}
+            for idx in members:
+                recs = log[idx]
+                ls = np.full(n, -1, dtype=np.int64)
+                li = _last(recs.unit)
+                ls[recs.unit[li]] = recs.seq[li]
+                last[idx] = ls
+            for idx in members:
+                cut[idx] = np.maximum.reduce([last[o] for o in members if o != idx])
+        return cut
+
+    def _parse_scalar(self, b, field, idx, recs, eff):
+        li = _last(recs.unit)
+        if eff is not None:
+            li = li[eff[li]]
+        rows = recs.unit[li]
+        seen = np.zeros(b.n, dtype=bool)
+        seen[rows] = True
+        if field.kind in _LEN_KINDS:
+            # every occurrence is read (and UTF-8 checked), even one a
+            # later occurrence or a oneof sibling replaces
+            every = b.slices(recs.start, recs.end, recs.unit, recs.seq, field.kind)
+            cells = np.empty(b.n, dtype=object)
+            cells[rows] = every if len(li) == len(every) else [every[k] for k in li.tolist()]
+            return cells, seen
+        raw = np.zeros(b.n, dtype=np.uint64)
+        raw[rows] = recs.val[li]
+        return raw, seen
+
+    def _parse_timestamp(self, b, field, idx, recs, eff):
+        # the TOP level's h_ts reads subfields bounded by the ROW end (a
+        # corrupt subfield may overrun the body without error, then the
+        # cursor clamps back to the body end); nested levels go through
+        # parse_into, which slices the body strictly
+        limit = recs.end if self.nested else b.rowend[recs.unit]
+        log, err, _ = _tokenize(b.buf, recs.start, recs.end, limit, _TS_TABLE)
+        b.fail(recs.unit[err], "truncated timestamp body", recs.seq[err])
+        seen = np.zeros(b.n, dtype=bool)
+        seen[recs.unit if eff is None else recs.unit[eff]] = True
+        raw = []
+        for slot in (0, 1):
+            sub = log[slot]
+            body = sub.unit if eff is None else sub.unit[eff[sub.unit]]
+            vals = sub.val if eff is None else sub.val[eff[sub.unit]]
+            # bodies are in (row, wire) order, so the last subfield of
+            # a row's effective bodies is the merged value
+            rows = recs.unit[body]
+            li = _last(rows)
+            out = np.zeros(b.n, dtype=np.uint64)
+            out[rows[li]] = vals[li]
+            raw.append(out)
+        low = (raw[1] & np.uint64(0xFFFFFFFF)).astype(np.int64)
+        nano = np.where(low >= (1 << 31), low - (1 << 32), low)
+        return raw[0].view(np.int64), nano, seen
+
+    def _parse_message(self, b, field, idx, recs, eff):
+        """nested / wkt / rec: one body per row, its pieces joined."""
+        bodies, first, extra = _join_pieces(b.raw, recs, eff, b.n)
+        seen = np.zeros(b.n, dtype=bool)
+        seen[recs.unit if eff is None else recs.unit[eff]] = True
+        if extra is not None:
+            units, pieces, seqs = extra
+            self._check_items(b, idx, pieces, units, seqs)
+        return self._check_items(b, idx, bodies, np.arange(b.n), first), seen
+
+    _parse_nested = _parse_wkt = _parse_rec = _parse_message
+
+    def _check_items(self, b, idx, bodies, rows, seqs):
+        """Parse message bodies as one batch, body k in row ``rows[k]`` at
+        wire position ``seqs[k]``; a malformed body fails its row.
+        Returns the parsed sub-batch, or None for a recursive type
+        (validated only)."""
+        sub = self.subs[idx]
+        if isinstance(sub, _Validator):
+            parsed, bad = None, sub.validate(bodies)
+        else:
+            parsed = sub.parse(bodies)
+            bad = parsed.bad
+        b.fail(rows[bad], "malformed nested message", seqs[bad])
+        return parsed
+
+    def _parse_rep_msg(self, b, field, idx, recs, eff):
+        # one standalone item per occurrence: no merge across them
+        bodies = b.slices(recs.start, recs.end, recs.unit, recs.seq, Kind.BYTES)
+        return recs.unit, recs.seq, self._check_items(b, idx, bodies, recs.unit, recs.seq)
+
+    def _parse_repeated(self, b, field, idx, recs, eff):
+        kind = field.kind
+        if kind in _LEN_KINDS:
+            # strings/bytes never pack: one item per record, whatever
+            # its wire type, like the row path
+            return recs.unit, b.slices(recs.start, recs.end, recs.unit, recs.seq, kind)
+        pk = recs.end >= 0  # packed bodies; the rest are single elements
+        if not pk.any():
+            return recs.unit, recs.val
+        # packed reads are bounded by the ROW end, like the row path's
+        # element reader
+        counts, pvals, _, perr = _packed(
+            b.buf,
+            recs.start[pk],
+            recs.end[pk],
+            b.rowend[recs.unit[pk]],
+            _FIXED_WIDTH.get(kind, -1),
+        )
+        b.fail(recs.unit[pk][perr], "truncated packed body", recs.seq[pk][perr])
+        n_elems = np.ones(len(recs.unit), dtype=np.int64)
+        n_elems[pk] = counts
+        off = np.cumsum(n_elems) - n_elems
+        vals = np.empty(int(n_elems.sum()), dtype=np.uint64)
+        vals[off[~pk]] = recs.val[~pk]
+        vals[np.repeat(off[pk], counts) + _ranks(counts)] = pvals
+        return np.repeat(recs.unit, n_elems), vals
+
+    def _parse_map(self, b, field, idx, recs, eff):
+        # one entry per occurrence, parsed like parse_into's entry
+        # slice (reads bounded by the slice); entries then dict-insert
+        key_f, val_f = field.message.fields_by_number[1], field.message.fields_by_number[2]
+        m = len(recs.unit)
+        log, err, _ = _tokenize(b.buf, recs.start, recs.end, recs.end, self.entry_tables[idx])
+        b.fail(recs.unit[err], "malformed map entry", recs.seq[err])
+        keys = self._entry_side(b, key_f, log[0], m, recs)
+        if val_f.kind is not Kind.MESSAGE:
+            return recs.unit, keys, self._entry_side(b, val_f, log[1], m, recs)
+        # message values: an entry's value pieces merge; an entry with
+        # none reads the default message, decoded from b""
+        bodies, _, extra = _join_pieces(b.raw, log[1], None, m)
+        if extra is not None:
+            ents, pieces, _ = extra
+            self._check_items(b, idx, pieces, recs.unit[ents], recs.seq[ents])
+        return recs.unit, keys, self._check_items(b, idx, bodies, recs.unit, recs.seq)
+
+    def _entry_side(self, b, fld, recs, m, entries):
+        """One entry subfield, last occurrence per entry; absent reads
+        the proto default, like ``entry.key`` / ``entry.value``."""
+        li = _last(recs.unit)
+        ents = recs.unit[li]
+        if fld.kind in _LEN_KINDS:
+            every = b.slices(
+                recs.start, recs.end, entries.unit[recs.unit], entries.seq[recs.unit], fld.kind
+            )
+            cells = ["" if fld.kind is Kind.STRING else b""] * m
+            for e, k in zip(ents.tolist(), li.tolist()):
+                cells[e] = every[k]
+            return cells
+        raw = np.zeros(m, dtype=np.uint64)
+        raw[ents] = recs.val[li]
+        return raw
+
+    # -- phase 2: value conversion, in field order ----------------------
+
+    def finish(self, b: _Batch) -> list:
+        bad_before = b.bad.copy()
+        done = {
+            idx: getattr(self, "_finish_" + klass)(b, field, idx, b.parsed[idx])
+            for klass, field, idx in self.finish_order
+        }
+        columns = [done[idx] for _, _, idx in self.plan]
+        late = np.flatnonzero(b.bad & ~bad_before)
+        if len(late):
+            # a conversion error nulls its whole row, also in the
+            # columns built before it
+            columns = [_null_rows(c, late) for c in columns]
+        return columns
+
+    def _numeric(self, field, u, live):
+        return _convert_numeric(
+            field.kind, u, live, field, self.enum_name_mode, self.u64_decimal
+        )
+
+    def _sub_finish(self, b, idx, parsed, rows, dead=None):
+        """Finish a sub-batch whose item k belongs to row ``rows[k]``: the
+        ``dead`` items (by default those of rows already bad) are
+        skipped, and an item's conversion error fails its row."""
+        parsed.bad |= b.bad[rows] if dead is None else dead
+        before = parsed.bad.copy()
+        cols = self.subs[idx].finish(parsed)
+        b.fail(rows[parsed.bad & ~before], "invalid nested value")
+        return cols
+
+    def _item_cells(self, b, idx, parsed, rows, dead=None) -> list:
+        """Parsed message items -> one cell per item: a tuple, or the
+        WKT's scalar form; ``()`` for a pruned recursive type."""
+        if parsed is None:
+            return [()] * len(rows)
+        cols = self._sub_finish(b, idx, parsed, rows, dead)
+        wmt = self.item_wkt.get(idx)
+        if wmt is None:
+            lists = [_aslist(c) for c in cols]
+            return list(zip(*lists)) if lists else [()] * len(rows)
+        live = ~parsed.bad
+        cells = _wkt_item_cells(wmt, cols, len(rows), live, self.config)
+        for k in np.flatnonzero(live):
+            if cells[k] is _WKT_CELL_ERROR:
+                # per-item conversion failure (datetime.date ValueError)
+                b.fail(rows[k : k + 1], "invalid date components")
+                cells[k] = None
+        return cells
+
+    def _finish_scalar(self, b, field, idx, parsed):
+        data, seen = parsed
+        bad = b.bad
+        if field.kind in _LEN_KINDS:
+            if not field.has_presence:
+                data[~seen & ~bad] = "" if field.kind is Kind.STRING else b""
+            data[bad] = None
+            return data
+        vals = self._numeric(field, data, seen & ~bad)
+        null = bad if not field.has_presence else (~seen | bad)
+        if not null.any():
+            # unseen no-presence rows already hold the kind's zero
+            return vals
+        col = vals.astype(object)
+        col[null] = None
+        return col
+
+    def _finish_timestamp(self, b, field, idx, parsed):
         import pandas as pd
 
-        raw_bytes = buf.tobytes()  # one copy; python-bytes slicing is
-        # far cheaper per cell than ndarray.tobytes()
+        sec, nano, seen = parsed
+        null = ~seen | b.bad
+        if self.config.timestamp_type == "long_nanos":
+            # the row path computes sec*1e9 + nano in unbounded Python
+            # ints; int64 would wrap past ~292 years of nanos, so hand
+            # those rows back to the row path
+            if (np.abs(sec[~null]) > _SEC_NANO_BOUND).any():
+                raise Unvectorizable("long_nanos overflow risk")
+            col = (sec * 1_000_000_000 + nano).astype(object)
+            col[null] = None
+            return col
+        us = sec * 1_000_000 + np.floor_divide(nano, 1_000)
+        _check_datetime_range(sec, us, ~null)
+        # stay a datetime64[us, UTC] Series (NaT = null): object-boxing
+        # 32k pd.Timestamps costs more than the whole wire parse. NaT
+        # goes into the numpy array BEFORE the Series wrap (assigning
+        # into a .dt-derived Series is silently discarded).
+        arr = us.astype("datetime64[us]")
+        arr[null] = np.datetime64("NaT")
+        return pd.Series(arr).dt.tz_localize("UTC")
 
-        def _subcell(col, i):
-            v = col.iloc[i] if isinstance(col, pd.Series) else col[i]
-            return None if v is pd.NaT else v
+    def _finish_nested(self, b, field, idx, parsed):
+        sub, seen = parsed
+        cols = self._sub_finish(b, idx, sub, np.arange(b.n))
+        lists = [_aslist(c) for c in cols]
+        tuples = zip(*lists) if lists else [()] * b.n
+        return [
+            None if (x or not s) else t
+            for s, x, t in zip(seen.tolist(), b.bad.tolist(), tuples)
+        ]
 
-        def _decode_msg_items(idx, bodies, item_rows):
-            """Flat message-item bodies -> python cell per item (tuple
-            for plain messages, scalar form for WKT items). A failed
-            item nulls its whole ROW — the row path's per-row
-            try/except wraps the full repeated/map handler."""
-            m = len(bodies)
-            if m == 0:
-                return []
-            sub_cols, sub_bad = sub_decoders[idx](bodies)
-            dead = np.zeros(m, dtype=bool)
-            if sub_bad is not None and sub_bad.any():
-                dead = sub_bad.astype(bool)
-                bad[item_rows[dead]] = True
-            wmt = item_wkt.get(idx)
-            if wmt == "rec":
-                # validated then pruned: the row converter maps every
-                # parsed recursive item/value to the empty struct
-                return [None if dead[k] else () for k in range(m)]
-            if wmt is None:
-                return [
-                    None
-                    if dead[k]
-                    else tuple(_subcell(c, k) for c in sub_cols)
-                    for k in range(m)
-                ]
-            cells = _wkt_item_cells(wmt, sub_cols, m, ~dead, config)
-            out = []
-            for k in range(m):
-                v = cells[k]
-                if v is _WKT_CELL_ERROR and not dead[k]:
-                    # per-item conversion failure (datetime.date
-                    # ValueError) — the contracted error channel
-                    if not permissive:
-                        raise ValueError("invalid date components")
-                    bad[item_rows[k]] = True
-                    v = None
-                out.append(None if dead[k] else v)
-            return out
-        str_cells: dict[int, list] = {}
-        for idx, field in enumerate(fields):
-            if (
-                field.kind not in _LEN_KINDS
-                or field.repeated
-                or _is_timestamp_field(field)
-            ):
-                continue
-            st, ln, sk = str_start[idx], str_len[idx], seen[idx]
-            out: list = [None] * n
-            if field.kind is Kind.STRING:
-                for i in np.flatnonzero(sk & ~bad):
-                    data = raw_bytes[st[i] : st[i] + ln[i]]
-                    try:
-                        out[i] = data.decode("utf-8")
-                    except UnicodeDecodeError:
-                        # ValueError subclass: permissive nulls the
-                        # row, strict aborts — same as the row path
-                        if not permissive:
-                            raise
-                        bad[i] = True
+    def _finish_rec(self, b, field, idx, parsed):
+        # parsed-and-pruned recursive subtree: () when present
+        _, seen = parsed
+        return [None if (x or not s) else () for s, x in zip(seen.tolist(), b.bad.tolist())]
+
+    def _finish_wkt(self, b, field, idx, parsed):
+        import pandas as pd
+
+        sub, seen = parsed
+        cols = self._sub_finish(b, idx, sub, np.arange(b.n))
+        live = seen & ~b.bad
+        form, payload = _wkt_values(self.item_wkt[idx], cols, b.n, live, self.config)
+        if form == "list":
+            for i in np.flatnonzero(live):
+                if payload[i] is _WKT_CELL_ERROR:
+                    b.fail([i], "invalid date components")
+                    payload[i] = None
+        mask = ~seen | b.bad
+        if form == "obj":
+            col = payload.astype(object)
+            col[mask] = None
+            return col
+        if form == "td64us":
+            arr = payload.astype("timedelta64[us]")
+            arr[mask] = np.timedelta64("NaT")
+            return pd.Series(arr)
+        if form == "empty":
+            return [None if x else () for x in mask.tolist()]
+        if form == "list":
+            return [None if x else v for x, v in zip(mask.tolist(), payload)]
+        # "col": wrapper value pass-through
+        if isinstance(payload, np.ndarray):
+            col = payload.astype(object)
+        else:
+            col = np.empty(len(payload), dtype=object)
+            col[:] = payload
+        col[mask] = None
+        return col
+
+    def _finish_rep_msg(self, b, field, idx, parsed):
+        rows, seqs, sub = parsed
+        # the top-level row path converts each item as it parses it, so
+        # an item before its row's first wire error still converts (and
+        # may hard-raise); nested levels convert whole rows, in field order
+        dead = None if self.nested else seqs >= b.err_seq[rows]
+        return _per_row(b, rows, self._item_cells(b, idx, sub, rows, dead))
+
+    def _finish_repeated(self, b, field, idx, parsed):
+        # missing and empty both finalize to [] like the row path
+        rows, elems = parsed
+        if field.kind not in _LEN_KINDS:
+            elems = self._numeric(field, elems, ~b.bad[rows]).tolist()
+        return _per_row(b, rows, elems)
+
+    def _finish_map(self, b, field, idx, parsed):
+        rows, keys, vals = parsed
+        key_f, val_f = field.message.fields_by_number[1], field.message.fields_by_number[2]
+        live = ~b.bad[rows]
+        if not isinstance(keys, list):
+            keys = self._numeric(key_f, keys, live)
+        if val_f.kind is Kind.MESSAGE:
+            vals = self._item_cells(b, idx, vals, rows)
+        elif not isinstance(vals, list):
+            vals = self._numeric(val_f, vals, live)
+        # never-seen rows finalize to the empty map ({} / []), like the
+        # row path's f_map(None); entries dict-insert in wire order
+        # (same-key overwrite keeps the first position — python dict
+        # semantics, both paths)
+        out = [None if x else {} for x in b.bad.tolist()]
+        for r, k, v in zip(rows.tolist(), keys, vals):
+            cell = out[r]
+            if cell is not None:
+                cell[k] = v
+        if self.config.map_as_list:
+            out = [None if c is None else list(c.items()) for c in out]
+        return out
+
+
+def compile_wire_to_batch(
+    mtype: MessageType,
+    config: ProtarrowSparkConfig = ProtarrowSparkConfig(),
+    permissive: bool = False,
+    _trace: tuple = (),
+    _registry: dict | None = None,
+) -> Callable[[list], tuple] | None:
+    """Compile ``[bytes-or-None per row] -> (columns, bad)`` for a
+    supported message, or return None.
+
+    ``columns`` is a list of per-field cell arrays (numpy array, pandas
+    Series or Python list, length n) in ``mtype.fields`` order —
+    value-identical to ``compile_wire_to_row`` applied per row, with
+    Python lists for repeated cells. ``bad`` is None in strict mode; in
+    permissive mode it is a bool mask of rows that failed to parse (the
+    caller nulls the whole row, the dead-letter convention). Strict
+    mode raises on a malformed row like the row path.
+    """
+    if mtype.full_name in _trace:
+        return None  # recursive shapes keep the row path
+    trace = _trace + (mtype.full_name,)
+    # NESTED levels mirror parse_into, which hands the Timestamp body a
+    # STRICT slice (reads raise at the slice end); only the TOP level's
+    # specialized h_ts reader has the soft row-end limit.
+    nested = bool(_trace)
+    # Shared across the compile tree: (full_name) -> cell holding the
+    # STRICT validator of a recursive type (see _Validator).
+    registry: dict = {} if _registry is None else _registry
+
+    def validator(sub_mt: MessageType):
+        cell = registry.get(sub_mt.full_name)
+        if cell is None:
+            cell = registry[sub_mt.full_name] = {"in_progress": True}
+            # the sentinel ancestor keeps ``nested`` True without
+            # tripping the top-of-compile recursion guard
+            cell["fn"] = compile_wire_to_batch(
+                sub_mt, config, permissive, ("<strict-root>",), registry
+            )
+            cell["in_progress"] = False
+            if cell["fn"] is None:
+                return None  # validator shape unsupported -> row path
+        elif not cell.get("in_progress") and cell.get("fn") is None:
+            return None
+        return _Validator(cell)
+
+    def sub_decoder(sub_mt: MessageType):
+        """-> (decoder, item form) for message-typed values, or None.
+        Under skip_recursive_messages the row path PARSES a recursive
+        body (full validation) then prunes the converted subtree to
+        ``()``; raise-mode recursion keeps the row path."""
+        if sub_mt.full_name in trace:
+            if not config.skip_recursive_messages:
+                return None
+            v = validator(sub_mt)
+            return None if v is None else (v, "rec")
+        sub = compile_wire_to_batch(sub_mt, config, permissive, trace, registry)
+        if sub is None:
+            return None
+        return sub, (sub_mt if sub_mt.full_name in _SPLITTABLE_WKTS else None)
+
+    plan: list = []
+    subs: dict = {}
+    item_wkt: dict = {}
+    entry_tables: dict = {}
+    for idx, field in enumerate(mtype.fields):
+        if field.is_map:
+            key_f = field.message.fields_by_number[1]
+            val_f = field.message.fields_by_number[2]
+            if key_f.kind not in _SCALAR_KINDS:
+                return None
+            if val_f.kind is Kind.MESSAGE:
+                got = sub_decoder(val_f.message)
+                if got is None:
+                    return None
+                subs[idx], item_wkt[idx] = got
+            elif val_f.kind not in _SCALAR_KINDS:
+                return None
+            entry_tables[idx] = _Table(
+                [(1, 0, _wire_class(key_f.kind), 0), (2, 1, _wire_class(val_f.kind), 0)]
+            )
+            plan.append(("map", field, idx))
+        elif field.kind is Kind.MESSAGE and field.repeated:
+            got = sub_decoder(field.message)
+            if got is None:
+                return None
+            subs[idx], item_wkt[idx] = got
+            plan.append(("rep_msg", field, idx))
+        elif field.repeated:
+            if field.kind not in _SCALAR_KINDS:
+                return None
+            plan.append(("repeated", field, idx))
+        elif _is_timestamp_field(field):
+            if config.timestamp_type not in ("timestamp", "long_nanos"):
+                return None
+            plan.append(("timestamp", field, idx))
+        elif field.kind is Kind.MESSAGE:
+            got = sub_decoder(field.message)
+            if got is None:
+                return None
+            subs[idx], form = got
+            if form == "rec":
+                plan.append(("rec", field, idx))
+            elif form is not None:
+                # non-Timestamp WKTs: sub-decoded columns combine into
+                # the scalar cell form (wrapper value / timedelta /
+                # date / nanos-of-day / ())
+                item_wkt[idx] = form
+                plan.append(("wkt", field, idx))
             else:
-                for i in np.flatnonzero(sk & ~bad):
-                    out[i] = raw_bytes[st[i] : st[i] + ln[i]]
-            str_cells[idx] = out
-
-        # Pass 1b: repeated fields — reassemble each row's element
-        # sequence (stable sort keeps parse/append order within a row),
-        # decode LEN payloads (may still grow ``bad``, so this runs
-        # BEFORE any null mask is applied), convert numeric raws.
-        rep_ready: dict[int, tuple] = {}
-        for number, (klass, field, idx, sibs) in plan.items():
-            if klass != "repeated":
-                continue
-            chunks = rep_chunks[idx]
-            kind = field.kind
-            if kind in _LEN_KINDS:
-                rows_all = (
-                    np.concatenate([c[0] for c in chunks])
-                    if chunks
-                    else np.zeros(0, dtype=np.int64)
-                )
-                order = np.argsort(rows_all, kind="stable")
-                rows_s = rows_all[order]
-                starts = (
-                    np.concatenate([c[1] for c in chunks])[order]
-                    if chunks
-                    else rows_all
-                )
-                lens_ = (
-                    np.concatenate([c[2] for c in chunks])[order]
-                    if chunks
-                    else rows_all
-                )
-                elems: list = [None] * len(rows_s)
-                for k in range(len(rows_s)):
-                    i = rows_s[k]
-                    if bad[i]:
-                        continue
-                    data = raw_bytes[starts[k] : starts[k] + lens_[k]]
-                    if kind is Kind.STRING:
-                        try:
-                            elems[k] = data.decode("utf-8")
-                        except UnicodeDecodeError:
-                            if not permissive:
-                                raise
-                            bad[i] = True
-                    else:
-                        elems[k] = data
-                rep_ready[idx] = (rows_s, elems)
-            else:
-                rows_all = (
-                    np.concatenate([c[0] for c in chunks])
-                    if chunks
-                    else np.zeros(0, dtype=np.int64)
-                )
-                vals_all = (
-                    np.concatenate([c[1] for c in chunks])
-                    if chunks
-                    else np.zeros(0, dtype=np.uint64)
-                )
-                order = np.argsort(rows_all, kind="stable")
-                rows_s = rows_all[order]
-                u = vals_all[order]
-                live = ~bad[rows_s] if len(rows_s) else np.zeros(0, dtype=bool)
-                vals = _convert_numeric(
-                    kind, u, live, field, enum_name_mode, u64_decimal
-                )
-                rep_ready[idx] = (rows_s, vals)
-
-        # Pass 1c: map fields — reassemble entries (stable sort keeps
-        # parse order per row), decode string keys/values (may grow
-        # ``bad``), convert numeric raws.
-        map_ready: dict[int, tuple] = {}
-        for number, (klass, field, idx, sibs) in plan.items():
-            if klass != "map":
-                continue
-            chunks = map_chunks[idx]
-            entry_mt = field.message
-            rows_all = (
-                np.concatenate([c["rows"] for c in chunks])
-                if chunks
-                else np.zeros(0, dtype=np.int64)
-            )
-            order = np.argsort(rows_all, kind="stable")
-            rows_s = rows_all[order]
-
-            def _prep_side(fld, u_key, st_key, ln_key):
-                fkind = fld.kind
-                if fkind in _LEN_KINDS:
-                    sts = (
-                        np.concatenate([c[st_key] for c in chunks])[order]
-                        if chunks
-                        else rows_all
-                    )
-                    lns = (
-                        np.concatenate([c[ln_key] for c in chunks])[order]
-                        if chunks
-                        else rows_all
-                    )
-                    elems: list = [None] * len(rows_s)
-                    for k in range(len(rows_s)):
-                        i = rows_s[k]
-                        if bad[i]:
-                            continue
-                        data = raw_bytes[sts[k] : sts[k] + lns[k]]
-                        if fkind is Kind.STRING:
-                            try:
-                                elems[k] = data.decode("utf-8")
-                            except UnicodeDecodeError:
-                                if not permissive:
-                                    raise
-                                bad[i] = True
-                        else:
-                            elems[k] = data
-                    return elems
-                u = (
-                    np.concatenate([c[u_key] for c in chunks])[order]
-                    if chunks
-                    else np.zeros(0, dtype=np.uint64)
-                )
-                live = ~bad[rows_s] if len(rows_s) else np.zeros(0, dtype=bool)
-                return _convert_numeric(
-                    fkind, u, live, fld, enum_name_mode, u64_decimal
-                )
-
-            kv = _prep_side(entry_mt.fields_by_number[1], "k_u", "k_st", "k_ln")
-            if idx in sub_decoders:
-                # message values: join each entry's value pieces (merge
-                # across repeated value occurrences inside one entry),
-                # then decode all entry values as one flat item batch
-                bodies_all: list = []
-                for c in chunks:
-                    rpos = {int(r): k for k, r in enumerate(c["rows"])}
-                    parts: list = [b""] * len(c["rows"])
-                    for pidx, sts, lns in c["v_pieces"]:
-                        for k in range(len(pidx)):
-                            j = rpos.get(int(pidx[k]))
-                            if j is None:
-                                continue  # piece of a row that later failed
-                            piece = raw_bytes[sts[k] : sts[k] + lns[k]]
-                            parts[j] = parts[j] + piece if parts[j] else piece
-                    bodies_all.extend(parts)
-                bodies_all = [bodies_all[k] for k in order]
-                vv = _decode_msg_items(idx, bodies_all, rows_s)
-            else:
-                vv = _prep_side(
-                    entry_mt.fields_by_number[2], "v_u", "v_st", "v_ln"
-                )
-            map_ready[idx] = (rows_s, kv, vv)
-
-        # Pass 1c2: repeated messages — restore per-row item order
-        # (stable sort), decode every item body through the recursive
-        # batch decoder, one python cell per item.
-        repmsg_ready: dict[int, tuple] = {}
-        for number, (klass, field, idx, sibs) in plan.items():
-            if klass != "rep_msg":
-                continue
-            chunks = repmsg_chunks[idx]
-            rows_all = (
-                np.concatenate([c[0] for c in chunks])
-                if chunks
-                else np.zeros(0, dtype=np.int64)
-            )
-            order = np.argsort(rows_all, kind="stable")
-            rows_s = rows_all[order]
-            starts = (
-                np.concatenate([c[1] for c in chunks])[order]
-                if chunks
-                else rows_all
-            )
-            lens_ = (
-                np.concatenate([c[2] for c in chunks])[order]
-                if chunks
-                else rows_all
-            )
-            bodies = [
-                raw_bytes[starts[k] : starts[k] + lens_[k]]
-                for k in range(len(rows_s))
-            ]
-            repmsg_ready[idx] = (rows_s, _decode_msg_items(idx, bodies, rows_s))
-
-        # Pass 1d: nested messages — join each row's body slices
-        # (concatenation == merge) and recursively batch-decode; inner
-        # parse failures grow ``bad`` exactly like the row path's
-        # in-parse raise nulls the row.
-        msg_ready: dict[int, tuple] = {}
-        wkt_ready: dict[int, tuple] = {}
-        rec_idx: set[int] = set()
-        for number, (klass, field, idx, sibs) in plan.items():
-            if klass not in ("nested", "wkt", "rec"):
-                continue
-            sk = seen[idx]
-            bodies: list = [b""] * n
-            for rows_c, sts, lns in msg_chunks[idx]:
-                for k in range(len(rows_c)):
-                    i = rows_c[k]
-                    if sk[i] and not bad[i]:
-                        piece = raw_bytes[sts[k] : sts[k] + lns[k]]
-                        bodies[i] = bodies[i] + piece if bodies[i] else piece
-            if klass == "rec":
-                # validation-only: the row path parses the recursive
-                # subtree (h_msg -> parse_into) then prunes it to ().
-                # Only call the (self-referential) validator when some
-                # body is non-empty — recursion then bottoms out at the
-                # DATA depth, like parse_into's nested parse.
-                if any(bodies):
-                    _, sub_bad = sub_decoders[idx](bodies)
-                    if sub_bad is not None and sub_bad.any():
-                        bad |= sub_bad
-                rec_idx.add(idx)
-                continue
-            sub_cols, sub_bad = sub_decoders[idx](bodies)
-            if sub_bad is not None and sub_bad.any():
-                bad |= sub_bad
-            if klass == "nested":
-                msg_ready[idx] = sub_cols
-            else:  # wkt: combine sub-columns into the scalar cell form
-                live = sk & ~bad
-                form, payload = _wkt_values(
-                    item_wkt[idx], sub_cols, n, live, config
-                )
-                if form == "list":
-                    for i2 in np.flatnonzero(live):
-                        if payload[i2] is _WKT_CELL_ERROR:
-                            if not permissive:
-                                raise ValueError("invalid date components")
-                            bad[i2] = True
-                            payload[i2] = None
-                wkt_ready[idx] = (form, payload)
-
-        columns: list = []
-
-        for idx, field in enumerate(fields):
-            kind = field.kind
-            if idx in msg_ready:
-                sub_cols = msg_ready[idx]
-                sk = seen[idx]
-                out = [
-                    None
-                    if (not sk[i] or bad[i])
-                    else tuple(_subcell(c, i) for c in sub_cols)
-                    for i in range(n)
-                ]
-                columns.append(out)
-                continue
-            if idx in rec_idx:
-                # parsed-and-pruned recursive subtree: () when present
-                sk = seen[idx]
-                columns.append(
-                    [
-                        None if (not sk[i] or bad[i]) else ()
-                        for i in range(n)
-                    ]
-                )
-                continue
-            if idx in wkt_ready:
-                form, payload = wkt_ready[idx]
-                sk = seen[idx]
-                mask = ~sk | bad
-                if form == "obj":
-                    col = payload.astype(object)
-                    col[mask] = None
-                    columns.append(col)
-                elif form == "td64us":
-                    arr = payload.astype("timedelta64[us]")
-                    if mask.any():
-                        arr[mask] = np.timedelta64("NaT")
-                    columns.append(pd.Series(arr))
-                elif form == "empty":
-                    columns.append(
-                        [None if mask[i] else () for i in range(n)]
-                    )
-                elif form == "list":
-                    columns.append(
-                        [None if mask[i] else payload[i] for i in range(n)]
-                    )
-                else:  # "col": wrapper value pass-through
-                    if isinstance(payload, np.ndarray):
-                        col = payload.astype(object)
-                    else:
-                        col = np.empty(len(payload), dtype=object)
-                        col[:] = payload
-                    col[mask] = None
-                    columns.append(col)
-                continue
-            if idx in repmsg_ready:
-                rows_s, cells = repmsg_ready[idx]
-                out = [None if bad[i] else [] for i in range(n)]
-                for k in range(len(rows_s)):
-                    cell = out[rows_s[k]]
-                    if cell is not None:
-                        cell.append(cells[k])
-                columns.append(out)
-                continue
-            if field.is_map:
-                rows_s, kv, vv = map_ready[idx]
-                # never-seen rows finalize to the empty map ({} / []),
-                # like the row path's f_map(None); entries dict-insert
-                # in parse order (same-key overwrite keeps the first
-                # position — python dict semantics, both paths)
-                out = [None if bad[i] else {} for i in range(n)]
-                for k in range(len(rows_s)):
-                    cell = out[rows_s[k]]
-                    if cell is not None:
-                        cell[kv[k]] = vv[k]
-                if map_as_list:
-                    out = [
-                        None if c is None else list(c.items()) for c in out
-                    ]
-                columns.append(out)
-                continue
-            if field.repeated:
-                rows_s, elems = rep_ready[idx]
-                # missing/empty both finalize to [] like the row path
-                out = [None if bad[i] else [] for i in range(n)]
-                if kind in _LEN_KINDS:
-                    for k in range(len(rows_s)):
-                        cell = out[rows_s[k]]
-                        if cell is not None:
-                            cell.append(elems[k])
-                else:
-                    counts = np.bincount(rows_s, minlength=n)
-                    pos = 0
-                    for i in range(n):
-                        c = int(counts[i])
-                        if c and out[i] is not None:
-                            out[i] = elems[pos : pos + c].tolist()
-                        pos += c
-                columns.append(out)
-                continue
-            if _is_timestamp_field(field):
-                sk = seen[idx]
-                null_mask = ~sk | bad
-                sec, nano = ts_sec[idx], ts_nano[idx]
-                if ts_long_nanos:
-                    # the row path computes sec*1e9 + nano in unbounded
-                    # Python ints; int64 would wrap past ~292 years of
-                    # nanos, so hand those rows back to the row path
-                    if (np.abs(sec[sk & ~bad]) > 9_200_000_000).any():
-                        raise Unvectorizable("long_nanos overflow risk")
-                    vals = sec * 1_000_000_000 + nano
-                    col = vals.astype(object)
-                    col[null_mask] = None
-                    columns.append(col)
-                else:
-                    us = sec * 1_000_000 + np.floor_divide(nano, 1_000)
-                    live = sk & ~bad
-                    over = live & (
-                        (sec > 260_000_000_000)
-                        | (sec < -260_000_000_000)
-                        | (us < _DT_US_MIN)
-                        | (us > _DT_US_MAX)
-                    )
-                    if over.any():
-                        # row path: datetime arithmetic OverflowError,
-                        # uncaught in BOTH modes
-                        raise OverflowError("timestamp out of datetime range")
-                    # stay a datetime64[us, UTC] Series (NaT = null):
-                    # object-boxing 32k pd.Timestamps costs more than
-                    # the whole wire parse. NaT goes into the numpy
-                    # array BEFORE the Series wrap (assigning into a
-                    # .dt-derived Series is silently discarded).
-                    arr = us.astype("datetime64[us]")
-                    if null_mask.any():
-                        arr[null_mask] = np.datetime64("NaT")
-                    ser = pd.Series(arr).dt.tz_localize("UTC")
-                    columns.append(ser)
-                continue
-            if kind in _LEN_KINDS:
-                sk = seen[idx]
-                out = str_cells[idx]
-                if not field.has_presence:
-                    default = "" if kind is Kind.STRING else b""
-                    for i in np.flatnonzero(~sk & ~bad):
-                        out[i] = default
-                columns.append(out)
-                continue
-            u = raw_vals[idx]
-            sk = seen[idx]
-            live = sk & ~bad
-            vals = _convert_numeric(
-                kind, u, live, field, enum_name_mode, u64_decimal
-            )
-            null_mask = bad if not field.has_presence else (~sk | bad)
-            if null_mask.any():
-                col = vals.astype(object)
-                col[null_mask] = None
-                columns.append(col)
-            else:
-                # unseen no-presence rows already hold the kind's zero
-                columns.append(vals)
-        # bad rows: null every LEN/string cell too (numeric/timestamp
-        # columns handled their masks above)
-        if bad.any():
-            for idx in str_cells:
-                out = str_cells[idx]
-                for i in np.flatnonzero(bad):
-                    out[i] = None
-        return columns, (bad if permissive else None)
-
-    return decode_batch
+                plan.append(("nested", field, idx))
+        elif field.kind in _SCALAR_KINDS:
+            plan.append(("scalar", field, idx))
+        else:
+            return None
+    return _Decoder(plan, subs, item_wkt, entry_tables, config, permissive, nested)

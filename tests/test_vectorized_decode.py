@@ -377,6 +377,21 @@ def test_uint32_oversized_varint_is_unvectorizable():
         db([w])
 
 
+def test_float_signalling_nan_decodes_without_warning():
+    """Any 32-bit pattern is a valid float payload: a signalling NaN
+    decodes to NaN like the row path's struct.unpack, and warns nothing
+    (a warnings-as-errors worker must not fail on it)."""
+    import warnings
+
+    mt = MessageType("vd.F", (Field("f", 1, Kind.FLOAT),))
+    w = b"\x0d" + struct.pack("<I", 0x7F800001)
+    assert math.isnan(compile_wire_to_row(mt, CFG)(w)[0])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        cols, _ = compile_wire_to_batch(mt, CFG)([w])
+    assert math.isnan(cols[0][0])
+
+
 def test_distributed_decode_uses_identical_values(spark):
     """End-to-end through Spark: decode_proto_bytes (which now takes
     the vectorized path for EVENT_MT) returns the same frame as a
@@ -941,3 +956,213 @@ def test_nested_message_decode_corrupt_permissive(seed):
         for j in range(len(NESTED_MT.fields)):
             a = cols[j][i] if not isinstance(cols[j], pd.Series) else cols[j].iloc[i]
             assert _nested_eq(a, s[j]), f"row {i} field {j}"
+
+
+# --- record loop: deterministic counters and out-of-step rows ---------------
+
+from protarrow_spark.conversion import vectorized_decode as vd  # noqa: E402
+from protarrow_spark.proto import fixtures  # noqa: E402
+from protarrow_spark.proto.message import (  # noqa: E402
+    _read_varint,
+    _skip,
+    _write_varint,
+    serialize,
+)
+from protarrow_spark.queries.conversion import EVENT_MT  # noqa: E402
+from tests.random_messages import random_messages  # noqa: E402
+
+
+def _records(wire):
+    """A well-formed message's top-level records, each as its raw bytes
+    (tag + payload)."""
+    out, pos = [], 0
+    while pos < len(wire):
+        start = pos
+        tag, pos = _read_varint(wire, pos)
+        pos = _skip(wire, pos, tag & 7)
+        out.append(wire[start:pos])
+    return out
+
+
+def _counter_batch(shape):
+    if shape == "example":
+        msgs = random_messages(fixtures.EXAMPLE, 400, seed=2024)
+        return fixtures.EXAMPLE, [serialize(m) for m in msgs]
+    rng = np.random.default_rng(2024)
+    enc = compile_row_to_wire(EVENT_MT, CFG)
+    epoch = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    rows = [
+        (
+            i,
+            int(rng.integers(0, 5_000)),
+            ["click", "view", "buy", ""][int(rng.integers(0, 4))],
+            float(rng.normal()),
+            epoch + dt.timedelta(microseconds=int(rng.integers(0, 10**12))),
+        )
+        for i in range(10_000)
+    ]
+    return EVENT_MT, [enc(r) for r in rows]
+
+
+#: varint reader calls of one decode of each batch below, recorded when
+#: the record loop landed (on perfbench's seed-1 400-message EXAMPLE
+#: batch, the tag-grouped loop it replaced made 1,753 calls; it makes 207)
+_MAX_READER_CALLS = {"example": 193, "event": 14}
+
+
+@pytest.mark.parametrize("shape", ["example", "event"])
+def test_record_loop_counters(monkeypatch, shape):
+    """Pins the algorithm with counters instead of timings: the
+    top-level record loop takes one step per record of the row holding
+    the most, and the whole decode (every sub-decoder included) makes a
+    bounded number of varint reader calls, however many distinct tags a
+    step meets."""
+    mtype, wires = _counter_batch(shape)
+    calls, steps = [0], []
+    read, tokenize = vd._read_varints, vd._tokenize
+
+    def counting_read(*args):
+        calls[0] += 1
+        return read(*args)
+
+    def recording_tokenize(*args):
+        out = tokenize(*args)
+        steps.append(out[2])
+        return out
+
+    monkeypatch.setattr(vd, "_read_varints", counting_read)
+    monkeypatch.setattr(vd, "_tokenize", recording_tokenize)
+    cols, bad = compile_wire_to_batch(mtype, CFG)(wires)
+    most = max(len(_records(w)) for w in wires)
+    assert steps[0] <= most + 1  # the first record loop is the top level
+    assert calls[0] <= _MAX_READER_CALLS[shape], calls[0]
+
+
+def _varint(v):
+    out = bytearray()
+    _write_varint(out, v)
+    return bytes(out)
+
+
+def _rec(number, wt, payload):
+    return _varint(number << 3 | wt) + payload
+
+
+def _len_rec(number, body):
+    return _rec(number, 2, _varint(len(body)) + body)
+
+
+def _extras(rng):
+    """EXAMPLE records that put rows out of step with each other."""
+    zz = lambda v: _varint(((v << 1) ^ (v >> 63)) & (2**64 - 1))  # noqa: E731
+    ints = [rng.randint(-(2**31), 2**31 - 1) for _ in range(4)]
+    members = [
+        _len_rec(58, "payload é".encode()),
+        _rec(59, 0, _varint(rng.randint(0, 2**40))),
+        _len_rec(60, _rec(1, 0, _varint(7))),
+        _rec(61, 0, _varint(1)),
+    ]
+    return [
+        # a singular field written twice (varint and string)
+        _rec(4, 0, _varint(rng.randint(0, 2**62))),
+        _len_rec(14, b"second"),
+        # a packed run split into packed and expanded occurrences
+        _len_rec(22, zz(ints[0]) + zz(ints[1])),
+        _rec(22, 0, zz(ints[2])),
+        _rec(22, 0, zz(ints[3])),
+        _len_rec(16, struct.pack("<2d", 1.5, -2.0)),
+        _rec(16, 1, struct.pack("<d", 4.25)),
+        # two oneof members (the shuffle picks their order)
+        *rng.sample(members, 2),
+        # unknown fields of every skippable wire type
+        _rec(900, 0, _varint(300)),
+        _rec(901, 1, b"\x01" * 8),
+        _len_rec(902, b"\x08\x01junk"),
+        _rec(903, 5, b"\x02" * 4),
+        # observed wire type != the kind's: a varint field tagged wt 2,
+        # a fixed64 field tagged wt 0 (the row path reads by kind)
+        _rec(4, 2, _varint(12345)),
+        _rec(10, 0, struct.pack("<Q", 2**63 + 5)),
+    ]
+
+
+def _scramble(wire, mtype, rng):
+    """``wire`` re-serialized with the records of every message level in
+    a seeded shuffled order, plus the out-of-step extras at each EXAMPLE
+    level."""
+    recs = []
+    for r in _records(wire):
+        tag, pos = _read_varint(r, 0)
+        field = mtype.fields_by_number.get(tag >> 3)
+        if field is not None and field.kind is Kind.MESSAGE:
+            _, start = _read_varint(r, pos)
+            r = _len_rec(tag >> 3, _scramble(r[start:], field.message, rng))
+        recs.append(r)
+    if mtype.full_name == fixtures.EXAMPLE.full_name:
+        recs += _extras(rng)
+    rng.shuffle(recs)
+    return b"".join(recs)
+
+
+def _deep_eq(a, b):
+    if isinstance(a, (list, tuple)) and isinstance(b, (list, tuple)):
+        return len(a) == len(b) and all(_deep_eq(x, y) for x, y in zip(a, b))
+    if isinstance(a, dict) and isinstance(b, dict):
+        return list(a) == list(b) and all(_deep_eq(a[k], b[k]) for k in a)
+    return _eq(a, b)
+
+
+@pytest.mark.parametrize("seed", [31, 32])
+@pytest.mark.parametrize("shape", ["EXAMPLE", "NESTED_EXAMPLE"])
+def test_out_of_step_rows_match_row_path(shape, seed):
+    """Rows whose records come in different orders — shuffled fields,
+    repeated writes, split packed runs, both oneof members, unknown
+    fields, mismatched wire types — decode per row exactly as the row
+    path does: the record log keeps each row's occurrence order. A
+    corrupted copy nulls the same rows in permissive mode."""
+    import random
+
+    mtype = getattr(fixtures, shape)
+    rng = random.Random(seed)
+    wires = [_scramble(serialize(m), mtype, rng) for m in random_messages(mtype, 60, seed)]
+    dr = compile_wire_to_row(mtype, CFG)
+    cols, bad = compile_wire_to_batch(mtype, CFG)(wires)
+    assert bad is None
+    for i, w in enumerate(wires):
+        slow = dr(w)
+        for j, f in enumerate(mtype.fields):
+            assert _deep_eq(_cell(cols[j], i), slow[j]), f"row {i} field {f.name}"
+
+    corrupt = []
+    for i, w in enumerate(wires):
+        b = bytearray(w)
+        if b and i % 3 == 0:
+            b[rng.randrange(len(b))] ^= rng.randrange(1, 256)
+        elif b and i % 3 == 1:
+            b = b[: rng.randrange(len(b))]
+        corrupt.append(bytes(b))
+    slow_rows: list = []
+    hard = False
+    for w in corrupt:
+        try:
+            slow_rows.append(dr(w))
+        except (ValueError, TypeError, IndexError, struct.error):
+            slow_rows.append(None)
+        except OverflowError:
+            slow_rows.append("HARD")
+            hard = True
+    try:
+        cols, bad = compile_wire_to_batch(mtype, CFG, permissive=True)(corrupt)
+    except OverflowError:
+        assert hard
+        return
+    except Unvectorizable:
+        return  # legitimate fallback: the row path decides the batch
+    assert not hard
+    for i, s in enumerate(slow_rows):
+        if s is None:
+            assert bad[i], f"row {i}: row path nulled, batch kept"
+            continue
+        assert not bad[i], f"row {i}: batch nulled, row path decoded"
+        for j, f in enumerate(mtype.fields):
+            assert _deep_eq(_cell(cols[j], i), s[j]), f"row {i} field {f.name}"

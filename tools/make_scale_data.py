@@ -13,8 +13,12 @@ Document text rotates word-wise per replica (same length/vocab
 statistics, mostly disjoint shingle sets) so dedup workloads see
 plausible new documents rather than 10 exact copies of the corpus.
 
-Usage:  python tools/make_scale_data.py [out_dir] [replicas]
+Usage:  python tools/make_scale_data.py [--src SRC_DIR] [out_dir] [replicas]
+        default src: the sf0.1 testdata directory (``SRC`` below)
         default out: benchmarks/data/sf1  (gitignored)
+
+A source directory without parquet files (an unpopulated SF dir) stops
+the script before Spark starts, with one message and exit status 2.
 """
 
 from __future__ import annotations
@@ -59,9 +63,20 @@ OUT_FILES = {
 }
 
 
-def main() -> int:
-    out_dir = pathlib.Path(sys.argv[1] if len(sys.argv) > 1 else REPO / "benchmarks" / "data" / "sf1")
-    replicas = int(sys.argv[2]) if len(sys.argv) > 2 else 10
+def main(argv: list[str] | None = None) -> int:
+    import argparse
+
+    ap = argparse.ArgumentParser(description="Replicate an SF testdata dir 10x.")
+    ap.add_argument("out_dir", nargs="?", default=str(REPO / "benchmarks" / "data" / "sf1"))
+    ap.add_argument("replicas", nargs="?", type=int, default=10)
+    ap.add_argument("--src", default=SRC, help=f"source SF directory (default {SRC})")
+    args = ap.parse_args(argv)
+    src = args.src
+    if not any(pathlib.Path(src).glob("*.parquet")):
+        print(f"make_scale_data: no parquet files in {src}", file=sys.stderr)
+        return 2
+    out_dir = pathlib.Path(args.out_dir)
+    replicas = args.replicas
 
     import pyspark.sql.functions as F
 
@@ -73,18 +88,18 @@ def main() -> int:
     # one base per key space: max over every column that uses it, +1
     bases: dict[str, int] = {}
     for tbl, cols in KEYED.items():
-        df = spark.read.parquet(f"{SRC}/{tbl}.parquet")
+        df = spark.read.parquet(f"{src}/{tbl}.parquet")
         for col, space in cols.items():
             mx = df.agg(F.max(col)).collect()[0][0]
             bases[space] = max(bases.get(space, 0), int(mx) + 1)
     print("key bases:", bases)
 
     for tbl in FIXED_DIMS:
-        shutil.copy(f"{SRC}/{tbl}.parquet", out_dir / f"{tbl}.parquet")
+        shutil.copy(f"{src}/{tbl}.parquet", out_dir / f"{tbl}.parquet")
         print(f"copied {tbl}")
 
     for tbl, cols in KEYED.items():
-        df = spark.read.parquet(f"{SRC}/{tbl}.parquet")
+        df = spark.read.parquet(f"{src}/{tbl}.parquet")
         parts = []
         for r in range(replicas):
             rep = df
