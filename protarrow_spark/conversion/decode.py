@@ -53,10 +53,10 @@ ValueConverter = Callable[[Any], Any]
 def _is_null(v: Any) -> bool:
     if v is None:
         return True
-    # pandas NaN / NaT without importing pandas in the hot path
+    # pandas NaN / NaT / NA without importing pandas in the hot path
     if isinstance(v, float) and v != v:
         return True
-    return type(v).__name__ == "NaTType"
+    return type(v).__name__ in ("NaTType", "NAType")
 
 
 def _as_mapping_items(v: Any) -> Iterable[tuple[Any, Any]]:

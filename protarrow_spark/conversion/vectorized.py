@@ -1,14 +1,25 @@
-"""Vectorized (numpy) wire ENCODE for flat messages.
+"""Vectorized (numpy) wire ENCODE for batches of messages.
 
 ``compile_row_to_wire`` walks Python objects per row (~40k rows/s on
 a 5-field message — enum dispatch, per-field closures, a Message
 allocation per Timestamp). At 100 TB the executor-side codec IS the
 conversion surface, so this module compiles a BATCH encoder that does
 the same work columnar: two's-complement/zigzag mapping, varint byte
-classes, default-skip masks, and Timestamp submessage bodies are all
-numpy array ops; the only per-row Python left is one buffer slice per
-row and a memcpy per string/bytes cell. ~10-20x the row path on
-numeric-heavy messages.
+classes, default-skip masks and Timestamp submessage bodies are numpy
+array ops.
+
+Every LEN payload source is one **payload buffer**: a ``(values:
+uint8, offsets: int64[n+1])`` pair, payload k being
+``values[offsets[k]:offsets[k + 1]]``. STRING and BYTES cells — scalar
+columns, repeated items and map sides alike — become one with a single
+``pa.array`` call, which also does the UTF-8 encoding. Nested, WKT,
+repeated-message and message-valued-map bodies are the frame
+``(buf, offsets, bad)`` that the recursively compiled sub-encoder
+hands back for the whole batch. Lengths are ``np.diff(offsets)``, and
+:func:`_fill_payloads` writes a whole buffer into the output with one
+numpy gather. Only the public ``encode_batch`` splits its frame into
+one ``bytes`` per row, once. Flat shapes run no other per-row Python;
+nested shapes still flatten list, map and struct cells row by row.
 
 Byte-compatibility contract: for every supported message shape the
 output is BIT-IDENTICAL to ``compile_row_to_wire`` (differential-
@@ -164,14 +175,88 @@ def _range_check(kind: Kind, v, valid, bad=None):
     bad |= viol
 
 
-def _encode_str_cell(x) -> bytes:
-    """UTF-8 encode one STRING cell, refusing non-str cells: the row
-    path raises AttributeError there (an encoder bug, deliberately
-    fatal even in permissive mode — distributed.py's except list), so
-    the vectorized path must not paper over it with ``str(x)``."""
-    if isinstance(x, str):
-        return x.encode("utf-8")
-    raise Unvectorizable(f"STRING cell of type {type(x).__name__}")
+def _payload_buffer(cells, kind: Kind, null=None):
+    """STRING or BYTES cells (an object array, or a list) -> payload
+    buffer ``(values, offsets)``; a ``null`` cell is empty. One
+    ``pa.array`` call encodes UTF-8 and concatenates.
+
+    A cell of another type, or a string UTF-8 cannot encode (a lone
+    surrogate), raises :class:`Unvectorizable`, so the row path decides
+    the batch. It raises AttributeError for a non-str STRING cell (an
+    encoder bug, deliberately fatal even in permissive mode —
+    distributed.py's except list), so nothing here coerces with
+    ``str(x)``; its ``bytes(x)`` converter judges BYTES cells."""
+    import numpy as np
+    import pyarrow as pa
+    from pandas.api.types import infer_dtype
+
+    if kind is Kind.STRING:
+        want, typ = "string", pa.large_string()
+    else:
+        want, typ = "bytes", pa.large_binary()
+    got = infer_dtype(cells if null is None else cells[~null], skipna=False)
+    if got not in (want, "empty"):
+        raise Unvectorizable(f"{kind.name} cells of type {got}")
+    try:
+        arr = pa.array(cells, type=typ, mask=null)
+    except UnicodeEncodeError as exc:
+        raise Unvectorizable(str(exc)) from exc
+    _, offsets, values = arr.buffers()
+    return (
+        np.frombuffer(values, dtype=np.uint8),
+        np.frombuffer(offsets, dtype=np.int64, count=len(arr) + 1),
+    )
+
+
+def _fill_payloads(buf, dst, values, offsets, active):
+    """Write payload k of the buffer ``(values, offsets)`` at
+    ``buf[dst[k]:]`` for every active k, all with one numpy gather."""
+    import numpy as np
+
+    plen = np.where(active, np.diff(offsets), 0)
+    total = int(plen.sum())
+    if not total:
+        return
+    run = np.cumsum(plen) - plen  # payload k's start among the copied bytes
+    src = np.repeat(offsets[:-1] - run, plen) + np.arange(total)
+    buf[src + np.repeat(dst - offsets[:-1], plen)] = values[src]
+
+
+def _len_parts(number: int, values, offsets) -> dict:
+    """LEN wire parts of one payload buffer: the tag, per-payload
+    lengths and their varint sizes, and ``contrib``, each payload's
+    framed size (tag + length + payload)."""
+    import numpy as np
+
+    plen = np.diff(offsets)
+    lnb = _varint_nbytes(plen.view(np.uint64))
+    tag = _tag_bytes(number, _WT_LEN)
+    return dict(
+        klass="len", tag=tag, values=values, offsets=offsets, plen=plen,
+        lnb=lnb, contrib=len(tag) + lnb + plen,
+    )
+
+
+def _fill_len(buf, pos, parts, active):
+    """Write the length varint and payload of LEN ``parts`` for the
+    active items; ``pos`` points just past each item's tag."""
+    import numpy as np
+
+    _fill_varint(buf, pos, parts["plen"].view(np.uint64), parts["lnb"], active)
+    _fill_payloads(
+        buf, pos + parts["lnb"], parts["values"], parts["offsets"], active
+    )
+
+
+def _empty_frame(n: int):
+    """The sub-encoder frame of ``n`` empty bodies."""
+    import numpy as np
+
+    return (
+        np.zeros(0, dtype=np.uint8),
+        np.zeros(n + 1, dtype=np.int64),
+        np.zeros(n, dtype=bool),
+    )
 
 
 def _is_timestamp_field(field: Field) -> bool:
@@ -217,15 +302,7 @@ def _fill_repeated(buf, pos, rt, active):
         ipos = pos[row_of] + within
         for j, tb in enumerate(tag):
             buf[ipos[aflat] + j] = tb
-        p = ipos + len(tag)
-        _fill_varint(buf, p, rt["plen"].view(np.uint64), rt["lnb"], aflat)
-        starts = p + rt["lnb"]
-        payloads = rt["payloads"]
-        for k in np.flatnonzero(aflat):
-            data = payloads[k]
-            if data:
-                st = int(starts[k])
-                buf[st : st + len(data)] = np.frombuffer(data, dtype=np.uint8)
+        _fill_len(buf, ipos + len(tag), rt, aflat)
         return
     # packed: tag + body length varint per row, then flat values
     for j, tb in enumerate(tag):
@@ -254,19 +331,9 @@ def _side_parts(fld, flat, row_of, bad):
     kind = fld.kind
     m = len(flat)
     if kind in (Kind.STRING, Kind.BYTES):
-        if kind is Kind.STRING:
-            payloads = [_encode_str_cell(x) for x in flat]
-        else:
-            payloads = list(flat)  # already bytes via the value conv
-        plen = np.fromiter((len(p) for p in payloads), dtype=np.int64, count=m)
-        skip = plen == 0  # == default b"" / ""
-        lnb = _varint_nbytes(plen.view(np.uint64))
-        tag = _tag_bytes(fld.number, _WT_LEN)
-        contrib = np.where(skip, 0, len(tag) + lnb + plen)
-        return dict(
-            klass="len", tag=tag, payloads=payloads, plen=plen, lnb=lnb,
-            skip=skip, contrib=contrib,
-        )
+        parts = _len_parts(fld.number, *_payload_buffer(flat, kind))
+        skip = parts["plen"] == 0  # == default b"" / ""
+        return dict(parts, skip=skip, contrib=np.where(skip, 0, parts["contrib"]))
     if kind in (Kind.UINT64, Kind.FIXED64):
         # conv already wrapped/validated to python ints; full uint64
         hi = (1 << 64) - 1
@@ -337,8 +404,6 @@ def _side_parts(fld, flat, row_of, bad):
 def _fill_side(buf, spos, parts, aflat):
     """Write one entry side's bytes for active entries (skipping
     default-valued sides, which contribute nothing)."""
-    import numpy as np
-
     act = aflat & ~parts["skip"]
     if not act.any():
         return
@@ -351,34 +416,20 @@ def _fill_side(buf, spos, parts, aflat):
     elif parts["klass"] == "fixed":
         _fill_fixed(buf, q, parts["u"], parts["width"], act)
     else:
-        _fill_varint(buf, q, parts["plen"].view(np.uint64), parts["lnb"], act)
-        starts = q + parts["lnb"]
-        payloads = parts["payloads"]
-        for k in np.flatnonzero(act):
-            data = payloads[k]
-            if data:
-                st = int(starts[k])
-                buf[st : st + len(data)] = np.frombuffer(data, dtype=np.uint8)
+        _fill_len(buf, q, parts, act)
 
 
 def _prepare_nested(field, cells, n, config, sub_encode, bad):
     """Precompute one plain nested-message field: split the struct
     cells into sub-columns, batch-encode the submessage bodies with
     the recursively compiled encoder, and frame them like any LEN
-    payload (message presence: null skips entirely; a present-but-
-    default message still emits tag + len 0, exactly the row path's
-    serialize-of-empty-Message)."""
-    import numpy as np
+    payload (:func:`_frame_sub_bodies`)."""
     import pandas as pd
 
     from protarrow_spark.conversion.decode import _struct_get
 
     sub_mt = field.message
-    null = np.fromiter(
-        (c is None or (isinstance(c, float) and c != c) for c in cells),
-        dtype=bool,
-        count=n,
-    )
+    null = _null_mask_cells(cells, n)
     sub_cols = []
     for j, sf in enumerate(sub_mt.fields):
         vals = [
@@ -393,29 +444,25 @@ def _prepare_nested(field, cells, n, config, sub_encode, bad):
             sub_cols.append(pd.Series(vals))
         else:
             sub_cols.append(pd.Series(vals, dtype=object))
-    payloads = sub_encode(sub_cols)
+    return _frame_sub_bodies(field, sub_encode(sub_cols, n), null, bad)
+
+
+def _frame_sub_bodies(field, frame, null, bad):
+    """Frame one sub-encoder frame ``(buf, offsets, sub_bad)`` of per-row
+    bodies as a LEN field. Message presence: null skips entirely; a
+    present-but-default message still emits tag + len 0, exactly the
+    row path's serialize-of-empty-Message. A row the permissive
+    sub-encode nulled has an empty body, and its violation belongs to
+    the whole OUTER row (the row path's per-row try/except wraps the
+    full encode)."""
+    import numpy as np
+
+    values, offsets, sub_bad = frame
     if bad is not None:
-        # permissive sub-encode nulls contract-violating rows; the
-        # violation belongs to the whole OUTER row (the row path's
-        # per-row try/except wraps the full encode)
-        fixed = []
-        for i, p in enumerate(payloads):
-            if p is None:
-                if not null[i]:
-                    bad[i] = True
-                fixed.append(b"")
-            else:
-                fixed.append(p)
-        payloads = fixed
-    plen = np.fromiter((len(p) for p in payloads), dtype=np.int64, count=n)
-    lnb = _varint_nbytes(plen.view(np.uint64))
-    tag = _tag_bytes(field.number, _WT_LEN)
-    rt: dict[str, Any] = {
-        "field": field, "klass": "len", "tag": tag, "skip": null,
-        "payloads": payloads, "plen": plen, "lnb": lnb,
-    }
-    flen = np.where(null, 0, len(tag) + lnb + plen)
-    return rt, flen
+        bad |= sub_bad & ~null
+    rt = _len_parts(field.number, values, offsets)
+    rt.update(field=field, skip=null)
+    return rt, np.where(null, 0, rt["contrib"])
 
 
 def _prepare_map(field, cells, n, config, bad, msg_val=None):
@@ -454,12 +501,11 @@ def _prepare_map(field, cells, n, config, bad, msg_val=None):
 
     rt: dict[str, Any] = {"field": field, "klass": "map"}
     counts = np.zeros(n, dtype=np.int64)
-    null = np.zeros(n, dtype=bool)
+    null = _null_mask_cells(cells, n)
     flat_k: list = []
     flat_v: list = []
     for i, c in enumerate(cells):
-        if c is None:
-            null[i] = True
+        if null[i]:
             continue
         try:
             items = c.items() if isinstance(c, dict) else [(e[0], e[1]) for e in c]
@@ -524,6 +570,28 @@ def _fill_map(buf, pos, rt, active):
     _fill_side(buf, vpos, rt["vparts"], aflat)
 
 
+def _frame_items(field, values, offsets, counts, null):
+    """Frame one expanded repeated field — string/bytes items or
+    message items, flattened row-major into the payload buffer
+    ``(values, offsets)`` with ``counts`` items per row: one tag + len +
+    payload per item (emit_default=True: empty items still emit)."""
+    import numpy as np
+
+    n = len(counts)
+    rt = _len_parts(field.number, values, offsets)
+    csum = np.zeros(len(offsets), dtype=np.int64)
+    np.cumsum(rt["contrib"], out=csum[1:])
+    ends = np.cumsum(counts)
+    starts = ends - counts
+    row_of = np.repeat(np.arange(n), counts)
+    skip = null | (counts == 0)
+    rt.update(
+        field=field, klass="rep_len", skip=skip, row_of=row_of,
+        within=csum[:-1] - csum[starts][row_of],
+    )
+    return rt, np.where(skip, 0, csum[ends] - csum[starts])
+
+
 def _prepare_repeated(field, cells, n, config, bad):
     """Precompute one repeated scalar field: flattened wire values,
     per-row packed body lengths (numeric kinds) or per-item expanded
@@ -533,14 +601,14 @@ def _prepare_repeated(field, cells, n, config, bad):
     Mirrors the row path exactly: None/empty cells emit nothing;
     per-item conversion/range failures raise in strict mode (``bad``
     is None) and null exactly the violating ROW in permissive mode;
-    non-str STRING items raise :class:`Unvectorizable` (the row path's
-    AttributeError is an encoder bug, fatal in both modes)."""
+    STRING/BYTES items of another type raise :class:`Unvectorizable`
+    (see :func:`_payload_buffer`)."""
     import numpy as np
 
     kind = field.kind
     rt: dict[str, Any] = {"field": field}
     counts = np.zeros(n, dtype=np.int64)
-    null = np.zeros(n, dtype=bool)
+    null = _null_mask_cells(cells, n)
     perm = bad is not None
 
     def row_fail(i, exc):
@@ -552,53 +620,20 @@ def _prepare_repeated(field, cells, n, config, bad):
         null[i] = True  # emit nothing for the dead row
 
     if kind in (Kind.STRING, Kind.BYTES):
-        # expanded: one tag+len+payload per item (emit_default=True —
-        # empty items still emit)
-        payloads: list[bytes] = []
+        flat: list = []
         for i, c in enumerate(cells):
-            if c is None:
-                null[i] = True
+            if null[i]:
                 continue
             items = list(c)
-            if kind is Kind.STRING:
-                # non-str items: Unvectorizable (the row path raises
-                # AttributeError — an encoder bug, fatal in both modes)
-                bs = [_encode_str_cell(x) for x in items]
-            else:
-                try:
-                    bs = [bytes(x) for x in items]
-                except (TypeError, ValueError) as exc:
-                    # the row path's bytes(x) converter raises the same
-                    # classes — a bad VALUE, caught per-row permissive
-                    row_fail(i, exc)
-                    continue
-            payloads.extend(bs)
-            counts[i] = len(bs)
-        nflat = len(payloads)
-        plen = np.fromiter((len(p) for p in payloads), dtype=np.int64, count=nflat)
-        lnb = _varint_nbytes(plen.view(np.uint64))
-        tag = _tag_bytes(field.number, _WT_LEN)
-        item_total = len(tag) + lnb + plen
-        csum = np.zeros(nflat + 1, dtype=np.int64)
-        np.cumsum(item_total, out=csum[1:])
-        ends = np.cumsum(counts)
-        starts = ends - counts
-        row_of = np.repeat(np.arange(n), counts)
-        skip = null | (counts == 0)
-        flen = np.where(skip, 0, csum[ends] - csum[starts])
-        within = csum[:-1] - csum[starts][row_of] if nflat else csum[:0]
-        rt.update(
-            klass="rep_len", tag=tag, skip=skip, payloads=payloads,
-            plen=plen, lnb=lnb, row_of=row_of, within=within,
-        )
-        return rt, flen
+            flat.extend(items)
+            counts[i] = len(items)
+        return _frame_items(field, *_payload_buffer(flat, kind), counts, null)
 
     # numeric kinds: packed body (proto3 default), tag wt=LEN
     flats: list = []
     if kind is Kind.BOOL:
         for i, c in enumerate(cells):
-            if c is None:
-                null[i] = True
+            if null[i]:
                 continue
             try:
                 # row path: _write_scalar BOOL is truthiness (None ->
@@ -615,8 +650,7 @@ def _prepare_repeated(field, cells, n, config, bad):
     elif kind is Kind.ENUM and config.enum_type != "int":
         by_name = field.enum.by_name
         for i, c in enumerate(cells):
-            if c is None:
-                null[i] = True
+            if null[i]:
                 continue
             try:
                 a = np.fromiter(
@@ -635,8 +669,7 @@ def _prepare_repeated(field, cells, n, config, bad):
         hi = (1 << 64) - 1
         vals: list[int] = []
         for i, c in enumerate(cells):
-            if c is None:
-                null[i] = True
+            if null[i]:
                 continue
             try:
                 items = [int(x) for x in c]
@@ -663,8 +696,7 @@ def _prepare_repeated(field, cells, n, config, bad):
         )
     elif kind in (Kind.DOUBLE, Kind.FLOAT):
         for i, c in enumerate(cells):
-            if c is None:
-                null[i] = True
+            if null[i]:
                 continue
             try:
                 a = np.asarray(c, dtype=np.float64)
@@ -680,8 +712,7 @@ def _prepare_repeated(field, cells, n, config, bad):
             flat_u = f.astype(np.float32).view(np.uint32).astype(np.uint64)
     else:  # int64-representable: varint family, sint, fixed32/64
         for i, c in enumerate(cells):
-            if c is None:
-                null[i] = True
+            if null[i]:
                 continue
             try:
                 a = np.asarray(c, dtype=np.int64)
@@ -828,14 +859,14 @@ def _ts_sec_nano(s, null, config):
 
 
 def _null_mask_cells(cells, n):
-    """Row-path ``_is_null`` (None / NaN float / NaT) over object cells."""
+    """Row-path ``_is_null`` (None / NaN float / NaT / NA) over object cells."""
     import numpy as np
 
     return np.fromiter(
         (
             c is None
             or (isinstance(c, float) and c != c)
-            or type(c).__name__ == "NaTType"
+            or type(c).__name__ in ("NaTType", "NAType")
             for c in cells
         ),
         dtype=bool,
@@ -963,23 +994,6 @@ def _wkt_sub_columns(mtype: MessageType, cells, n, null, config):
     raise Unvectorizable(f"unsupported WKT {name}")  # pragma: no cover
 
 
-def _frame_len_bodies(field, payloads, null, n):
-    """Frame per-row LEN bodies: tag + body-length varint + body.
-    Message presence semantics: null skips entirely; a present-but-
-    default body still emits tag + len 0."""
-    import numpy as np
-
-    plen = np.fromiter((len(p) for p in payloads), dtype=np.int64, count=n)
-    lnb = _varint_nbytes(plen.view(np.uint64))
-    tag = _tag_bytes(field.number, _WT_LEN)
-    rt: dict[str, Any] = {
-        "field": field, "klass": "len", "tag": tag, "skip": null,
-        "payloads": payloads, "plen": plen, "lnb": lnb,
-    }
-    flen = np.where(null, 0, len(tag) + lnb + plen)
-    return rt, flen
-
-
 def _prepare_wkt(field, cells, n, config, sub_encode, bad):
     """Precompute one singular non-Timestamp WKT field (wrappers,
     Duration, Date, TimeOfDay, Empty): split the scalar cell form into
@@ -988,7 +1002,6 @@ def _prepare_wkt(field, cells, n, config, sub_encode, bad):
     parity with the row path: decode.py's WKT decoders build a Message
     whose serialize() skips default-valued subfields — the recursive
     batch encode does the identical default skipping."""
-    import numpy as np
     import pandas as pd
 
     if isinstance(cells, pd.Series) and cells.dtype != object:
@@ -1000,21 +1013,9 @@ def _prepare_wkt(field, cells, n, config, sub_encode, bad):
     else:
         null = _null_mask_cells(cells, n)
     if field.message.full_name == EMPTY.full_name:
-        payloads = [b""] * n
-        return _frame_len_bodies(field, payloads, null, n)
+        return _frame_sub_bodies(field, _empty_frame(n), null, bad)
     sub_cols = _wkt_sub_columns(field.message, cells, n, null, config)
-    payloads = sub_encode(sub_cols)
-    if bad is not None:
-        fixed = []
-        for i, p in enumerate(payloads):
-            if p is None:
-                if not null[i]:
-                    bad[i] = True  # contract violation -> whole row
-                fixed.append(b"")
-            else:
-                fixed.append(p)
-        payloads = fixed
-    return _frame_len_bodies(field, payloads, null, n)
+    return _frame_sub_bodies(field, sub_encode(sub_cols, n), null, bad)
 
 
 def _split_message_items(sub_mt, items, m, config):
@@ -1038,33 +1039,23 @@ def _split_message_items(sub_mt, items, m, config):
 
 
 def _item_payloads(sub_mt, items, m, config, sub_encode, kind):
-    """Flattened message items -> wire bodies. ``kind``: "wkt" routes
-    through the scalar-cell splitter, "plain" struct-splits, "rec"
-    (recursive-typed items, skip mode) emits empty bodies — the row
-    converter ignores the cell. Returns (payloads, item_bad) where
-    item_bad marks items whose encode was nulled by a permissive
-    sub-encoder."""
+    """Flattened message items -> the frame ``(buf, offsets, item_bad)``
+    of their wire bodies. ``kind``: "wkt" routes through the
+    scalar-cell splitter, "plain" struct-splits, "rec" (recursive-typed
+    items, skip mode) emits empty bodies — the row converter ignores
+    the cell. ``item_bad`` marks items a permissive sub-encoder nulled
+    (their bodies are empty)."""
     import numpy as np
 
-    if kind == "rec":
-        return [b""] * m, np.zeros(m, dtype=bool)
+    if kind == "rec" or sub_mt.full_name == EMPTY.full_name:
+        return _empty_frame(m)
     if kind == "wkt":
         null = np.zeros(m, dtype=bool)  # items are non-null by contract
-        if sub_mt.full_name == EMPTY.full_name:
-            return [b""] * m, np.zeros(m, dtype=bool)
         sub_cols = _wkt_sub_columns(sub_mt, items, m, null, config)
     else:
         sub_cols = _split_message_items(sub_mt, items, m, config)
-    payloads = sub_encode(sub_cols) if m else []
-    item_bad = np.zeros(m, dtype=bool)
-    fixed = []
-    for k, p in enumerate(payloads):
-        if p is None:
-            item_bad[k] = True
-            fixed.append(b"")
-        else:
-            fixed.append(p)
-    return fixed, item_bad
+    values, offsets, item_bad = sub_encode(sub_cols, m)
+    return values, offsets, np.zeros(m, dtype=bool) if item_bad is None else item_bad
 
 
 def _prepare_repeated_msg(field, cells, n, config, sub_encode, kind, bad):
@@ -1079,12 +1070,11 @@ def _prepare_repeated_msg(field, cells, n, config, sub_encode, kind, bad):
     import numpy as np
 
     perm = bad is not None
-    null = np.zeros(n, dtype=bool)
+    null = _null_mask_cells(cells, n)
     counts = np.zeros(n, dtype=np.int64)
     flat: list = []
     for i, c in enumerate(cells):
-        if c is None or (isinstance(c, float) and c != c):
-            null[i] = True
+        if null[i]:
             continue
         items = list(c)
         if kind != "rec" and any(
@@ -1098,33 +1088,12 @@ def _prepare_repeated_msg(field, cells, n, config, sub_encode, kind, bad):
             continue
         flat.extend(items)
         counts[i] = len(items)
-    m = len(flat)
-    payloads, item_bad = _item_payloads(
-        field.message, flat, m, config, sub_encode, kind
+    values, offsets, item_bad = _item_payloads(
+        field.message, flat, len(flat), config, sub_encode, kind
     )
-    row_of = np.repeat(np.arange(n), counts)
-    if item_bad.any():
-        if not perm:  # pragma: no cover — strict sub-encode raises
-            raise ValueError(f"unencodable item in repeated {field.name}")
-        bad[row_of[item_bad]] = True
-    nflat = m
-    plen = np.fromiter((len(p) for p in payloads), dtype=np.int64, count=nflat)
-    lnb = _varint_nbytes(plen.view(np.uint64))
-    tag = _tag_bytes(field.number, _WT_LEN)
-    item_total = len(tag) + lnb + plen
-    csum = np.zeros(nflat + 1, dtype=np.int64)
-    np.cumsum(item_total, out=csum[1:])
-    ends = np.cumsum(counts)
-    starts = ends - counts
-    skip = null | (counts == 0)
-    flen = np.where(skip, 0, csum[ends] - csum[starts])
-    within = csum[:-1] - csum[starts][row_of] if nflat else csum[:0]
-    rt: dict[str, Any] = {
-        "field": field, "klass": "rep_len", "tag": tag, "skip": skip,
-        "payloads": payloads, "plen": plen, "lnb": lnb,
-        "row_of": row_of, "within": within,
-    }
-    return rt, flen
+    if item_bad.any():  # permissive only: strict sub-encodes raise
+        bad[np.repeat(np.arange(n), counts)[item_bad]] = True
+    return _frame_items(field, values, offsets, counts, null)
 
 
 def _msg_value_side_parts(val_f, flat, row_of, config, sub_encode, kind, bad):
@@ -1134,20 +1103,13 @@ def _msg_value_side_parts(val_f, flat, row_of, config, sub_encode, kind, bad):
     import numpy as np
 
     m = len(flat)
-    payloads, item_bad = _item_payloads(
+    values, offsets, item_bad = _item_payloads(
         val_f.message, flat, m, config, sub_encode, kind
     )
-    if item_bad.any():
-        if bad is None:  # pragma: no cover — strict sub-encode raises
-            raise ValueError("unencodable map value")
+    if item_bad.any():  # permissive only: strict sub-encodes raise
         bad[row_of[item_bad]] = True
-    plen = np.fromiter((len(p) for p in payloads), dtype=np.int64, count=m)
-    lnb = _varint_nbytes(plen.view(np.uint64))
-    tag = _tag_bytes(val_f.number, _WT_LEN)
-    contrib = len(tag) + lnb + plen  # never skipped
     return dict(
-        klass="len", tag=tag, payloads=payloads, plen=plen, lnb=lnb,
-        skip=np.zeros(m, dtype=bool), contrib=contrib,
+        _len_parts(val_f.number, values, offsets), skip=np.zeros(m, dtype=bool)
     )
 
 
@@ -1158,7 +1120,7 @@ def compile_batch_to_wire(
     _trace: tuple = (),
 ) -> Callable[[list], list] | None:
     """Compile ``[column arrays in SCHEMA field order] -> [bytes per
-    row]`` for a supported flat message, or return None.
+    row]`` for a supported message, or return None.
 
     Output is byte-identical to ``compile_row_to_wire`` applied to the
     zipped rows (fields emitted in field-number order, proto3 default
@@ -1168,6 +1130,36 @@ def compile_batch_to_wire(
     violate the contract (range checks) come back as None instead of
     raising — the vectorized twin of the row loop\'s per-row
     try/except, without re-encoding the whole batch row-wise."""
+    import numpy as np
+
+    encode_frame = _compile_frame_encoder(mtype, config, permissive, _trace)
+    if encode_frame is None:
+        return None
+
+    def encode_batch(cols: list) -> list:
+        buf, offsets, bad = encode_frame(cols, len(cols[0]) if cols else 0)
+        raw = buf.tobytes()
+        ends = offsets.tolist()
+        out: list = [raw[a:b] for a, b in zip(ends, ends[1:])]
+        if bad is not None:
+            for i in np.flatnonzero(bad).tolist():
+                out[i] = None
+        return out
+
+    return encode_batch
+
+
+def _compile_frame_encoder(
+    mtype: MessageType,
+    config: ProtarrowSparkConfig,
+    permissive: bool,
+    _trace: tuple,
+) -> Callable[[list, int], tuple] | None:
+    """Compile ``(columns, n) -> (buf, offsets, bad)`` for ``n`` rows,
+    or return None: row i's bytes are ``buf[offsets[i]:offsets[i + 1]]``,
+    and ``bad`` (None unless ``permissive``) marks the rows that violate
+    the contract, whose bytes are empty. A parent message takes the
+    frame of a sub-message field as that field's payload buffer."""
     import numpy as np
 
     if mtype.full_name in _trace:
@@ -1193,13 +1185,11 @@ def compile_batch_to_wire(
             if not config.skip_recursive_messages:
                 return None  # row path raises TypeError at compile
             return (None, "rec")
-        if sub_mt.full_name in _SPLITTABLE_WKTS:
-            if sub_mt.full_name == EMPTY.full_name:
-                return (None, "wkt")  # bodies are b"" — no sub-encode
-            sub = compile_batch_to_wire(sub_mt, config, permissive, trace)
-            return None if sub is None else (sub, "wkt")
-        sub = compile_batch_to_wire(sub_mt, config, permissive, trace)
-        return None if sub is None else (sub, "plain")
+        if sub_mt.full_name == EMPTY.full_name:
+            return (None, "wkt")  # bodies are b"" — no sub-encode
+        sub = _compile_frame_encoder(sub_mt, config, permissive, trace)
+        kind = "wkt" if sub_mt.full_name in _SPLITTABLE_WKTS else "plain"
+        return None if sub is None else (sub, kind)
 
     for field in mtype.fields_number_order:
         if field.is_map:
@@ -1279,7 +1269,7 @@ def compile_batch_to_wire(
             # row is just another batch encode — recurse and frame the
             # bodies (tag + len + body; message presence: null skips,
             # empty message still emits).
-            sub = compile_batch_to_wire(field.message, config, permissive, trace)
+            sub = _compile_frame_encoder(field.message, config, permissive, trace)
             if sub is None:
                 return None
             sub_encoders[index_of[field.name]] = sub
@@ -1298,253 +1288,49 @@ def compile_batch_to_wire(
             continue
         plan.append(("scalar", field, index_of[field.name]))
 
-    def encode_batch(cols: list) -> list:
+    def encode_frame(cols: list, n: int) -> tuple:
         import pandas as pd
 
-        n = len(cols[0]) if cols else 0
-        if n == 0:
-            return []
-        # Per-field precomputation pass: masks, numeric forms, lengths.
         bad = np.zeros(n, dtype=bool) if permissive else None
+        if n == 0:
+            return np.zeros(0, dtype=np.uint8), np.zeros(1, dtype=np.int64), bad
+        # Per-field precomputation pass: masks, numeric forms, lengths.
         total_len = np.zeros(n, dtype=np.int64)
         fields_rt: list[dict] = []
         for klass, field, idx in plan:
             col = cols[idx]
             s = col if isinstance(col, pd.Series) else pd.Series(col)
-            rt: dict[str, Any] = {"field": field, "klass": klass}
-            kind = field.kind
-
+            if klass in ("repeated", "map", "rep_msg", "rec_empty", "nested"):
+                cells = s.to_numpy(dtype=object)
             if klass == "repeated":
-                rt, flen = _prepare_repeated(
-                    field, s.to_numpy(dtype=object), n, config, bad
-                )
-                rt["flen"] = flen
-                total_len += flen
-                fields_rt.append(rt)
-                continue
-
-            if klass == "map":
+                rt, flen = _prepare_repeated(field, cells, n, config, bad)
+            elif klass == "map":
                 rt, flen = _prepare_map(
-                    field, s.to_numpy(dtype=object), n, config, bad,
-                    msg_val=item_encoders.get(idx),
+                    field, cells, n, config, bad, msg_val=item_encoders.get(idx)
                 )
-                rt["flen"] = flen
-                total_len += flen
-                fields_rt.append(rt)
-                continue
-
-            if klass == "rep_msg":
+            elif klass == "rep_msg":
                 sub, ikind = item_encoders[idx]
                 rt, flen = _prepare_repeated_msg(
-                    field, s.to_numpy(dtype=object), n, config, sub,
-                    ikind, bad,
+                    field, cells, n, config, sub, ikind, bad
                 )
-                rt["flen"] = flen
-                total_len += flen
-                fields_rt.append(rt)
-                continue
-
-            if klass == "wkt":
+            elif klass == "wkt":
                 sub, _ = item_encoders[idx]
                 rt, flen = _prepare_wkt(field, s, n, config, sub, bad)
-                rt["flen"] = flen
-                total_len += flen
-                fields_rt.append(rt)
-                continue
-
-            if klass == "rec_empty":
-                rt, flen = _frame_len_bodies(
-                    field,
-                    [b""] * n,
-                    _null_mask_cells(s.to_numpy(dtype=object), n),
-                    n,
-                )
-                rt["flen"] = flen
-                total_len += flen
-                fields_rt.append(rt)
-                continue
-
-            if klass == "nested":
+            elif klass == "rec_empty":
+                null = _null_mask_cells(cells, n)
+                rt, flen = _frame_sub_bodies(field, _empty_frame(n), null, bad)
+            elif klass == "nested":
                 rt, flen = _prepare_nested(
-                    field,
-                    s.to_numpy(dtype=object),
-                    n,
-                    config,
-                    sub_encoders[idx],
-                    bad,
+                    field, cells, n, config, sub_encoders[idx], bad
                 )
-                rt["flen"] = flen
-                total_len += flen
-                fields_rt.append(rt)
-                continue
-
-            null = pd.isna(s)
-            if null.values.ndim != 1:  # array-typed cell slipped through
-                raise Unvectorizable("non-scalar cell")
-            null = null.to_numpy(dtype=bool)
-
-            if klass == "timestamp":
-                sec, nano = _ts_sec_nano(s, null, config)
-                sec_u = sec.view(np.uint64)
-                nano_u = nano.view(np.uint64)
-                sec_nb = _varint_nbytes(sec_u)
-                nano_nb = _varint_nbytes(nano_u)
-                sec_on = sec != 0
-                nano_on = nano != 0
-                body_len = (
-                    np.where(sec_on, 1 + sec_nb, 0)
-                    + np.where(nano_on, 1 + nano_nb, 0)
-                )
-                blen_u = body_len.view(np.uint64)
-                blen_nb = _varint_nbytes(blen_u)
-                tag = _tag_bytes(field.number, _WT_LEN)
-                rt.update(
-                    tag=tag,
-                    skip=null,
-                    sec_u=sec_u, sec_nb=sec_nb, sec_on=sec_on,
-                    nano_u=nano_u, nano_nb=nano_nb, nano_on=nano_on,
-                    body_len=body_len, blen_u=blen_u, blen_nb=blen_nb,
-                )
-                flen = np.where(
-                    null, 0, len(tag) + blen_nb + body_len
-                )
-            elif klass == "u64_decimal":
-                vals = s.to_numpy(dtype=object)
-                u = np.zeros(n, dtype=np.uint64)
-                hi = (1 << 64) - 1
-                try:
-                    for i in np.flatnonzero(~null):
-                        x = int(vals[i])
-                        if not 0 <= x <= hi:
-                            if bad is None:
-                                raise ValueError(
-                                    f"{kind.name} value {x} out of range [0, {hi}]"
-                                )
-                            bad[i] = True
-                            continue
-                        u[i] = x
-                except TypeError as exc:
-                    raise Unvectorizable(str(exc)) from exc
-                skip = null if field.has_presence else (null | (u == 0))
-                if kind is Kind.UINT64:
-                    nb = _varint_nbytes(u)
-                    tag = _tag_bytes(field.number, _WT_VARINT)
-                    rt.update(tag=tag, skip=skip, u=u, nb=nb, klass="varint")
-                    flen = np.where(skip, 0, len(tag) + nb)
-                else:  # FIXED64
-                    tag = _tag_bytes(field.number, _WT_I64)
-                    rt.update(tag=tag, skip=skip, u=u, width=8, klass="fixed")
-                    flen = np.where(skip, 0, len(tag) + 8)
-            elif kind in (Kind.STRING, Kind.BYTES) or klass == "enum_name":
-                if klass == "enum_name":
-                    by_name = field.enum.by_name
-                    nums = s.map(lambda v: by_name.get(v, 0)).where(~null, 0)
-                    v = nums.to_numpy(dtype=np.int64)
-                    _range_check(Kind.ENUM, v, ~null, bad)
-                    u = v.view(np.uint64)
-                    nb = _varint_nbytes(u)
-                    skip = null | (v == 0 if not field.has_presence else False)
-                    if field.has_presence:
-                        skip = null
-                    tag = _tag_bytes(field.number, _WT_VARINT)
-                    rt.update(tag=tag, skip=skip, u=u, nb=nb, klass="varint")
-                    flen = np.where(skip, 0, len(tag) + nb)
-                else:
-                    try:
-                        if kind is Kind.STRING:
-                            payloads = [
-                                b"" if isnull else _encode_str_cell(x)
-                                for x, isnull in zip(s.to_numpy(), null)
-                            ]
-                        else:
-                            payloads = [
-                                b"" if isnull else bytes(x)
-                                for x, isnull in zip(s.to_numpy(), null)
-                            ]
-                    except (TypeError, ValueError) as exc:
-                        raise Unvectorizable(str(exc)) from exc
-                    plen = np.fromiter(
-                        (len(p) for p in payloads), dtype=np.int64, count=n
-                    )
-                    skip = null | (
-                        (plen == 0) if not field.has_presence else False
-                    )
-                    if field.has_presence:
-                        skip = null
-                    lnb = _varint_nbytes(plen.view(np.uint64))
-                    tag = _tag_bytes(field.number, _WT_LEN)
-                    rt.update(
-                        tag=tag, skip=skip, payloads=payloads,
-                        plen=plen, lnb=lnb, klass="len",
-                    )
-                    flen = np.where(skip, 0, len(tag) + lnb + plen)
-            elif kind is Kind.BOOL:
-                try:
-                    v = s.where(s.notna(), False).to_numpy(dtype=bool)
-                except (TypeError, ValueError) as exc:
-                    raise Unvectorizable(str(exc)) from exc
-                u = v.astype(np.uint64)
-                skip = null if field.has_presence else (null | ~v)
-                tag = _tag_bytes(field.number, _WT_VARINT)
-                nb = np.ones(n, dtype=np.int64)
-                rt.update(tag=tag, skip=skip, u=u, nb=nb, klass="varint")
-                flen = np.where(skip, 0, len(tag) + 1)
-            elif kind in (Kind.DOUBLE, Kind.FLOAT):
-                try:
-                    if kind is Kind.DOUBLE:
-                        f = s.to_numpy(dtype=np.float64, na_value=0.0)
-                        u = f.view(np.uint64)
-                        width = 8
-                        wt = _WT_I64
-                    else:
-                        f = s.to_numpy(dtype=np.float64, na_value=0.0)
-                        u = f.astype(np.float32).view(np.uint32).astype(np.uint64)
-                        width = 4
-                        wt = _WT_I32
-                except (TypeError, ValueError) as exc:
-                    raise Unvectorizable(str(exc)) from exc
-                # proto3 default skip: exactly +0.0 (bits == 0); -0.0 emits
-                skip = null if field.has_presence else (null | (u == 0))
-                tag = _tag_bytes(field.number, wt)
-                rt.update(tag=tag, skip=skip, u=u, width=width, klass="fixed")
-                flen = np.where(skip, 0, len(tag) + width)
-            elif kind in (Kind.FIXED64, Kind.SFIXED64, Kind.FIXED32, Kind.SFIXED32):
-                try:
-                    v = s.where(s.notna(), 0).to_numpy(dtype=np.int64)
-                except (TypeError, ValueError) as exc:
-                    raise Unvectorizable(str(exc)) from exc
-                if kind in (Kind.FIXED32, Kind.SFIXED32):
-                    # Row path packs '<I'/'<i' which raises struct.error
-                    # out of range; masking to the low 32 bits here would
-                    # silently write a DIFFERENT number to the wire.
-                    _range_check(kind, v, ~null, bad)
-                    width, wt = 4, _WT_I32
-                    u = (v.view(np.uint64) & np.uint64(0xFFFFFFFF))
-                else:
-                    width, wt = 8, _WT_I64
-                    u = v.view(np.uint64)
-                skip = null if field.has_presence else (null | (v == 0))
-                tag = _tag_bytes(field.number, wt)
-                rt.update(tag=tag, skip=skip, u=u, width=width, klass="fixed")
-                flen = np.where(skip, 0, len(tag) + width)
-            else:  # varint family: int32/64, uint32/64, sint32/64, enum(int)
-                try:
-                    v = s.where(s.notna(), 0).to_numpy(dtype=np.int64)
-                except (TypeError, ValueError) as exc:
-                    raise Unvectorizable(str(exc)) from exc
-                _range_check(kind, v, ~null, bad)
-                if kind in _ZIGZAG:
-                    u = ((v << 1) ^ (v >> 63)).view(np.uint64)
-                else:
-                    u = v.view(np.uint64)
-                nb = _varint_nbytes(u)
-                skip = null if field.has_presence else (null | (v == 0))
-                tag = _tag_bytes(field.number, _WT_VARINT)
-                rt.update(tag=tag, skip=skip, u=u, nb=nb, klass="varint")
-                flen = np.where(skip, 0, len(tag) + nb)
+            else:
+                rt, flen = _prepare_scalar(klass, field, s, n, config, bad)
             rt["flen"] = flen
             total_len += flen
             fields_rt.append(rt)
+
+        if bad is not None:
+            total_len[bad] = 0  # a bad row's bytes are empty
 
         offsets = np.zeros(n + 1, dtype=np.int64)
         np.cumsum(total_len, out=offsets[1:])
@@ -1552,7 +1338,7 @@ def compile_batch_to_wire(
         pos = offsets[:-1].copy()
 
         for rt in fields_rt:
-            active = ~rt["skip"]
+            active = ~rt["skip"] if bad is None else ~(rt["skip"] | bad)
             if not active.any():
                 continue
             klass = rt["klass"]
@@ -1573,18 +1359,7 @@ def compile_batch_to_wire(
             elif klass == "fixed":
                 _fill_fixed(buf, p, rt["u"], rt["width"], active)
             elif klass == "len":
-                _fill_varint(
-                    buf, p, rt["plen"].view(np.uint64), rt["lnb"], active
-                )
-                starts = p + rt["lnb"]
-                payloads = rt["payloads"]
-                for i in np.flatnonzero(active):
-                    data = payloads[i]
-                    if data:
-                        st = int(starts[i])
-                        buf[st : st + len(data)] = np.frombuffer(
-                            data, dtype=np.uint8
-                        )
+                _fill_len(buf, p, rt, active)
             else:  # timestamp submessage body
                 _fill_varint(buf, p, rt["blen_u"], rt["blen_nb"], active)
                 p2 = p + rt["blen_nb"]
@@ -1603,14 +1378,155 @@ def compile_batch_to_wire(
                     )
             pos = pos + np.where(active, rt["flen"], 0)
 
-        raw = buf.tobytes()
-        if bad is not None and bad.any():
-            return [
-                None if bad[i] else raw[offsets[i] : offsets[i + 1]]
-                for i in range(n)
-            ]
-        return [
-            raw[offsets[i] : offsets[i + 1]] for i in range(n)
-        ]
+        return buf, offsets, bad
 
-    return encode_batch
+    return encode_frame
+
+
+def _prepare_scalar(klass, field, s, n, config, bad):
+    """Precompute one singular scalar or Timestamp field of the Series
+    ``s``: skip mask, wire form and per-row field length."""
+    import numpy as np
+    import pandas as pd
+
+    rt: dict[str, Any] = {"field": field, "klass": klass}
+    kind = field.kind
+    null = pd.isna(s)
+    if null.values.ndim != 1:  # array-typed cell slipped through
+        raise Unvectorizable("non-scalar cell")
+    null = null.to_numpy(dtype=bool)
+
+    if klass == "timestamp":
+        sec, nano = _ts_sec_nano(s, null, config)
+        sec_u = sec.view(np.uint64)
+        nano_u = nano.view(np.uint64)
+        sec_nb = _varint_nbytes(sec_u)
+        nano_nb = _varint_nbytes(nano_u)
+        sec_on = sec != 0
+        nano_on = nano != 0
+        body_len = (
+            np.where(sec_on, 1 + sec_nb, 0)
+            + np.where(nano_on, 1 + nano_nb, 0)
+        )
+        blen_u = body_len.view(np.uint64)
+        blen_nb = _varint_nbytes(blen_u)
+        tag = _tag_bytes(field.number, _WT_LEN)
+        rt.update(
+            tag=tag,
+            skip=null,
+            sec_u=sec_u, sec_nb=sec_nb, sec_on=sec_on,
+            nano_u=nano_u, nano_nb=nano_nb, nano_on=nano_on,
+            body_len=body_len, blen_u=blen_u, blen_nb=blen_nb,
+        )
+        flen = np.where(
+            null, 0, len(tag) + blen_nb + body_len
+        )
+    elif klass == "u64_decimal":
+        vals = s.to_numpy(dtype=object)
+        u = np.zeros(n, dtype=np.uint64)
+        hi = (1 << 64) - 1
+        try:
+            for i in np.flatnonzero(~null):
+                x = int(vals[i])
+                if not 0 <= x <= hi:
+                    if bad is None:
+                        raise ValueError(
+                            f"{kind.name} value {x} out of range [0, {hi}]"
+                        )
+                    bad[i] = True
+                    continue
+                u[i] = x
+        except TypeError as exc:
+            raise Unvectorizable(str(exc)) from exc
+        skip = null if field.has_presence else (null | (u == 0))
+        if kind is Kind.UINT64:
+            nb = _varint_nbytes(u)
+            tag = _tag_bytes(field.number, _WT_VARINT)
+            rt.update(tag=tag, skip=skip, u=u, nb=nb, klass="varint")
+            flen = np.where(skip, 0, len(tag) + nb)
+        else:  # FIXED64
+            tag = _tag_bytes(field.number, _WT_I64)
+            rt.update(tag=tag, skip=skip, u=u, width=8, klass="fixed")
+            flen = np.where(skip, 0, len(tag) + 8)
+    elif klass == "enum_name":
+        by_name = field.enum.by_name
+        v = s.map(lambda x: by_name.get(x, 0)).where(~null, 0).to_numpy(dtype=np.int64)
+        _range_check(Kind.ENUM, v, ~null, bad)
+        u = v.view(np.uint64)
+        nb = _varint_nbytes(u)
+        skip = null if field.has_presence else (null | (v == 0))
+        tag = _tag_bytes(field.number, _WT_VARINT)
+        rt.update(tag=tag, skip=skip, u=u, nb=nb, klass="varint")
+        flen = np.where(skip, 0, len(tag) + nb)
+    elif kind in (Kind.STRING, Kind.BYTES):
+        rt.update(_len_parts(
+            field.number, *_payload_buffer(s.to_numpy(dtype=object), kind, null)
+        ))
+        skip = null if field.has_presence else (null | (rt["plen"] == 0))
+        rt["skip"] = skip
+        flen = np.where(skip, 0, rt["contrib"])
+    elif kind is Kind.BOOL:
+        try:
+            v = s.where(s.notna(), False).to_numpy(dtype=bool)
+        except (TypeError, ValueError) as exc:
+            raise Unvectorizable(str(exc)) from exc
+        u = v.astype(np.uint64)
+        skip = null if field.has_presence else (null | ~v)
+        tag = _tag_bytes(field.number, _WT_VARINT)
+        nb = np.ones(n, dtype=np.int64)
+        rt.update(tag=tag, skip=skip, u=u, nb=nb, klass="varint")
+        flen = np.where(skip, 0, len(tag) + 1)
+    elif kind in (Kind.DOUBLE, Kind.FLOAT):
+        try:
+            if kind is Kind.DOUBLE:
+                f = s.to_numpy(dtype=np.float64, na_value=0.0)
+                u = f.view(np.uint64)
+                width = 8
+                wt = _WT_I64
+            else:
+                f = s.to_numpy(dtype=np.float64, na_value=0.0)
+                u = f.astype(np.float32).view(np.uint32).astype(np.uint64)
+                width = 4
+                wt = _WT_I32
+        except (TypeError, ValueError) as exc:
+            raise Unvectorizable(str(exc)) from exc
+        # proto3 default skip: exactly +0.0 (bits == 0); -0.0 emits
+        skip = null if field.has_presence else (null | (u == 0))
+        tag = _tag_bytes(field.number, wt)
+        rt.update(tag=tag, skip=skip, u=u, width=width, klass="fixed")
+        flen = np.where(skip, 0, len(tag) + width)
+    elif kind in (Kind.FIXED64, Kind.SFIXED64, Kind.FIXED32, Kind.SFIXED32):
+        try:
+            v = s.where(s.notna(), 0).to_numpy(dtype=np.int64)
+        except (TypeError, ValueError) as exc:
+            raise Unvectorizable(str(exc)) from exc
+        if kind in (Kind.FIXED32, Kind.SFIXED32):
+            # Row path packs '<I'/'<i' which raises struct.error
+            # out of range; masking to the low 32 bits here would
+            # silently write a DIFFERENT number to the wire.
+            _range_check(kind, v, ~null, bad)
+            width, wt = 4, _WT_I32
+            u = (v.view(np.uint64) & np.uint64(0xFFFFFFFF))
+        else:
+            width, wt = 8, _WT_I64
+            u = v.view(np.uint64)
+        skip = null if field.has_presence else (null | (v == 0))
+        tag = _tag_bytes(field.number, wt)
+        rt.update(tag=tag, skip=skip, u=u, width=width, klass="fixed")
+        flen = np.where(skip, 0, len(tag) + width)
+    else:  # varint family: int32/64, uint32/64, sint32/64, enum(int)
+        try:
+            v = s.where(s.notna(), 0).to_numpy(dtype=np.int64)
+        except (TypeError, ValueError) as exc:
+            raise Unvectorizable(str(exc)) from exc
+        _range_check(kind, v, ~null, bad)
+        if kind in _ZIGZAG:
+            u = ((v << 1) ^ (v >> 63)).view(np.uint64)
+        else:
+            u = v.view(np.uint64)
+        nb = _varint_nbytes(u)
+        skip = null if field.has_presence else (null | (v == 0))
+        tag = _tag_bytes(field.number, _WT_VARINT)
+        rt.update(tag=tag, skip=skip, u=u, nb=nb, klass="varint")
+        flen = np.where(skip, 0, len(tag) + nb)
+    return rt, flen

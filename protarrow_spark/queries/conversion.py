@@ -185,10 +185,12 @@ def conv_roundtrip_repeated(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``proto_to_arrow.py:456-491`` via offsets + flattened values).
 
     Events collapse to one message per user holding sorted arrays of
-    ids/values/types; the encode half takes the r9 vectorized repeated
-    path (conversion/vectorized.py ``_prepare_repeated``), the decode
-    half the r9 transposed packed/expanded batch reader
-    (conversion/vectorized_decode.py).
+    ids/values/types; the encode half takes the vectorized repeated
+    path (conversion/vectorized.py ``_prepare_repeated``: packed
+    numeric bodies, string items as one payload buffer), the decode
+    half the record loop (conversion/vectorized_decode.py: per-row
+    element runs from the sorted record log, one packed-body batch per
+    field).
     The readout re-expands the arrays: exact integer aggregates of the
     decoded int/string arrays per user plus every decoded double
     re-exploded positionally, so a single wrong byte in any packed
@@ -255,9 +257,10 @@ def conv_roundtrip_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     entry message (key=1/value=2) with default-valued sides omitted
     from entry bodies, exactly protoc's layout.
 
-    Both codec halves take the r9 vectorized map paths
-    (conversion/vectorized.py ``_prepare_map`` /
-    conversion/vectorized_decode.py entry-slice sub-loop). The readout
+    Both codec halves take the vectorized map paths
+    (conversion/vectorized.py ``_prepare_map``; in
+    conversion/vectorized_decode.py the entries run through the same
+    record loop, one unit per entry). The readout
     re-explodes the decoded maps to (user, type, count, micros) rows,
     so a wrong entry frame, omitted-default mishandling, or key/value
     mix-up fails the value hash.

@@ -1015,3 +1015,183 @@ def test_nested_long_nanos_big_timestamp_no_float_rounding():
     out = be([df["m"]])
     re_ = compile_row_to_wire(mt, cfg)
     assert out[0] == re_(((big,),))
+
+
+# --- payload buffers: STRING edge cases and copy counters --------------------
+
+import pyarrow as pa  # noqa: E402
+
+from protarrow_spark.conversion.vectorized import Unvectorizable  # noqa: E402
+
+STR_SCALAR_MT = MessageType(
+    "vec.StrScalar",
+    (Field("s", 1, Kind.STRING), Field("ps", 2, Kind.STRING, optional=True)),
+)
+STR_REP_MT = MessageType(
+    "vec.StrRep", (Field("ss", 1, Kind.STRING, repeated=True),)
+)
+STR_MAP_MT = MessageType(
+    "vec.StrMap", (map_field("m", 1, Kind.STRING, Kind.INT64),)
+)
+#: multibyte UTF-8 (2-, 3- and 4-byte sequences), empty and long strings
+_STRS = ["héllo", "漢字\U0001f600", "", "x" * 200, "a"]
+_NULLS = [None, np.nan, pd.NaT, pd.NA]
+
+
+def _str_columns(mt, vals):
+    """One object column per field of a STRING edge-case shape, built
+    from scalar cells ``vals`` (a null stays null in every shape)."""
+    def wrap(v, i):
+        if any(v is x for x in _NULLS):
+            return v
+        if mt is STR_REP_MT:
+            return [v, "", _STRS[i % len(_STRS)]]
+        return {v: i, _STRS[i % len(_STRS)]: -i} if mt is STR_MAP_MT else v
+
+    cells = [wrap(v, i) for i, v in enumerate(vals)]
+    return {f.name: pd.Series(cells, dtype=object) for f in mt.fields}
+
+
+def _assert_cols_identical(mt, cols):
+    be = compile_batch_to_wire(mt, CFG)
+    re_ = compile_row_to_wire(mt, CFG)
+    series = [cols[f.name] for f in mt.fields]
+    assert be(series) == [re_(rec) for rec in zip(*series)]
+
+
+@pytest.mark.parametrize("mt", [STR_SCALAR_MT, STR_REP_MT, STR_MAP_MT])
+def test_string_edge_cases_match_row_path(mt):
+    """Multibyte UTF-8, empty strings (skipped on a field without
+    presence, tag + len 0 on a presence field and as a repeated item),
+    and every pandas null form match the row codec's bytes, from an
+    object column and from a slice whose index does not start at 0."""
+    vals = (_STRS + _NULLS) * 3
+    _assert_cols_identical(mt, _str_columns(mt, vals))
+    sliced = {k: s.iloc[5:] for k, s in _str_columns(mt, vals).items()}
+    assert next(iter(sliced.values())).index[0] == 5
+    _assert_cols_identical(mt, sliced)
+    if mt is STR_SCALAR_MT:
+        out = compile_batch_to_wire(mt, CFG)([pd.Series([""]), pd.Series([""])])
+        assert out == [b"\x12\x00"]  # only the presence field emits ""
+
+
+def test_string_arrow_backed_columns_match_row_path():
+    """``string[pyarrow]`` columns (their nulls iterate as ``pd.NA``),
+    one of them over an Arrow chunk with a non-zero offset, match the
+    row codec's bytes."""
+    vals = _STRS + [None] + _STRS[::-1] + [None]
+    chunk = pa.array(["skip", "me"] + vals, type=pa.large_string()).slice(2)
+    assert chunk.offset == 2
+    for col in (
+        pd.Series(vals, dtype="string[pyarrow]"),
+        pd.Series(pd.arrays.ArrowStringArray(pa.chunked_array([chunk]))),
+    ):
+        assert col.dtype == "string"
+        _assert_cols_identical(STR_SCALAR_MT, {"s": col, "ps": col})
+
+
+@pytest.mark.parametrize("mt", [STR_SCALAR_MT, STR_REP_MT, STR_MAP_MT])
+@pytest.mark.parametrize("cell", [b"bytes-not-str", "lone \ud800 surrogate"])
+@pytest.mark.parametrize("permissive", [False, True])
+def test_string_bad_cells_are_unvectorizable(mt, cell, permissive):
+    """A bytes cell (the row path raises AttributeError, an encoder bug
+    fatal in both modes) and a string UTF-8 cannot encode both hand
+    the batch back to the row path, strict or permissive."""
+    cols = _str_columns(mt, ["ok", "fine"])
+    name = mt.fields[0].name
+    bad = {"s": cell, "ss": ["ok", cell], "m": {"ok": 1, cell: 2}}[name]
+    cols[name] = pd.Series([cols[name][0], bad], dtype=object)
+    be = compile_batch_to_wire(mt, CFG, permissive=permissive)
+    with pytest.raises(Unvectorizable):
+        be([cols[f.name] for f in mt.fields])
+
+
+def _counter_batches(shape):
+    """(message type, small batch, large batch) for the copy counters.
+    The large batch is the small one tiled, so both meet the same
+    fields, kinds and null patterns at 100x and 10x the rows."""
+    import datetime as dt
+
+    from protarrow_spark.conversion.encode import messages_to_rows
+    from protarrow_spark.proto import fixtures
+    from protarrow_spark.queries.conversion import EVENT_MT
+    from tests.random_messages import random_messages
+
+    if shape == "event":
+        rng = np.random.default_rng(2024)
+        epoch = dt.datetime(2024, 1, 1)
+        small = pd.DataFrame({
+            "event_id": np.arange(100, dtype=np.int64),
+            "user_id": rng.integers(0, 5_000, 100),
+            "event_type": pd.Series(["click", "view", "búy", "", None] * 20),
+            "value": rng.normal(size=100),
+            "ts": pd.Series(
+                [epoch + dt.timedelta(microseconds=int(x))
+                 for x in rng.integers(0, 10**12, 100)]
+            ).astype("datetime64[ns]"),
+        })
+        return EVENT_MT, small, pd.concat([small] * 100, ignore_index=True)
+    mt = fixtures.EXAMPLE
+    rows = messages_to_rows(random_messages(mt, 40, seed=2024), mt)
+    small = pd.DataFrame({
+        f.name: pd.Series([r[j] for r in rows], dtype=object)
+        for j, f in enumerate(mt.fields)
+    })
+    return mt, small, pd.concat([small] * 10, ignore_index=True)
+
+
+#: (np.frombuffer, _fill_payloads) calls of one encode of either batch,
+#: recorded when every LEN payload became one payload buffer. The
+#: per-cell copy loops it replaced made one np.frombuffer call per
+#: non-empty string, bytes or sub-message payload: 60 and 6,000 for the
+#: two event batches, 875 and 8,750 for the two EXAMPLE batches.
+_ENCODE_CALLS = {"event": (2, 1), "example": (32, 34)}
+
+
+@pytest.mark.parametrize("shape", ["event", "example"])
+def test_encode_copy_counters_do_not_grow_with_rows(monkeypatch, shape):
+    """Pins the algorithm with counters instead of timings: an encode
+    makes as many np.frombuffer and _fill_payloads calls at 10-100x the
+    rows, so no per-row or per-cell copy can come back unseen."""
+    import protarrow_spark.conversion.vectorized as vz
+
+    mtype, small, big = _counter_batches(shape)
+    be = compile_batch_to_wire(mtype, CFG)
+    calls = {"frombuffer": 0, "fill": 0}
+    frombuffer, fill = np.frombuffer, vz._fill_payloads
+
+    def counting_frombuffer(*args, **kwargs):
+        calls["frombuffer"] += 1
+        return frombuffer(*args, **kwargs)
+
+    def counting_fill(*args):
+        calls["fill"] += 1
+        return fill(*args)
+
+    monkeypatch.setattr(np, "frombuffer", counting_frombuffer)
+    monkeypatch.setattr(vz, "_fill_payloads", counting_fill)
+    seen, outs = [], []
+    for df in (small, big):
+        calls.update(frombuffer=0, fill=0)
+        outs.append(be([df[f.name] for f in mtype.fields]))
+        seen.append((calls["frombuffer"], calls["fill"]))
+    assert outs[1] == outs[0] * (len(big) // len(small))
+    assert seen[0] == seen[1] == _ENCODE_CALLS[shape], seen
+
+
+def test_nested_message_without_fields():
+    """A sub-message type with no fields: each sub-encode is told its
+    row count, as an empty column list cannot tell it (the row path
+    writes tag + len 0 per present cell and per item)."""
+    sub = MessageType("vec.NoFields", ())
+    mt = MessageType(
+        "vec.NoFieldsOuter",
+        (
+            Field("m", 1, Kind.MESSAGE, message=sub),
+            Field("rm", 2, Kind.MESSAGE, message=sub, repeated=True),
+        ),
+    )
+    df = pd.DataFrame(
+        {"m": [(), None, ()], "rm": [[(), ()], None, []]}, dtype=object
+    )
+    _assert_identical(mt, df)
