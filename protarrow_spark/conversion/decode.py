@@ -11,6 +11,11 @@ Arrow columns inside executors (``mapInArrow``): structs arrive as Row
 or dict, maps as dict or list-of-pairs, arrays as list or ndarray,
 timestamps as datetime or pd.Timestamp, binary as bytes or bytearray.
 
+The compiled converters write ``Message`` storage, not attributes:
+each message's values are decoded into a fresh dict with
+``Message.__setattr__``'s normalization decided per field at compile
+time, and wrapped by ``Message._from_values``.
+
 Semantics preserved:
 
 * enum name -> number decoding falls back to 0 for unknown names
@@ -26,13 +31,15 @@ Semantics preserved:
 from __future__ import annotations
 
 import datetime
-from typing import Any, Callable, Iterable
+from itertools import repeat
+from operator import getitem
+from typing import Any, Callable, Iterable, Iterator
 
 from pyspark.sql import DataFrame
 
 from protarrow_spark.config import ProtarrowSparkConfig
-from protarrow_spark.conversion.encode import DATE_SENTINEL, _EPOCH
-from protarrow_spark.proto.message import Message
+from protarrow_spark.conversion.encode import DATE_SENTINEL, _EPOCH, _identity
+from protarrow_spark.proto.message import Message, _float32
 from protarrow_spark.proto.model import (
     DATE,
     DURATION,
@@ -46,13 +53,25 @@ from protarrow_spark.proto.model import (
 )
 
 _U64 = 1 << 64
+_new = Message._from_values
 
 ValueConverter = Callable[[Any], Any]
+
+
+#: exact cell types that are never null. Tested with ``type(v)``, not
+#: ``isinstance``: ``pd.Timestamp`` subclasses ``datetime`` and ``NaT``
+#: must still read as null.
+_NEVER_NULL = frozenset(
+    {int, str, bytes, bool, list, tuple, dict,
+     datetime.datetime, datetime.date, datetime.timedelta}
+)
 
 
 def _is_null(v: Any) -> bool:
     if v is None:
         return True
+    if type(v) in _NEVER_NULL:
+        return False
     # pandas NaN / NaT / NA without importing pandas in the hot path
     if isinstance(v, float) and v != v:
         return True
@@ -93,13 +112,13 @@ def _timestamp_decoder(config: ProtarrowSparkConfig) -> ValueConverter:
 
         def from_nanos(v: Any) -> Message:
             seconds, nanos = divmod(int(v), 1_000_000_000)
-            return Message(TIMESTAMP, seconds=seconds, nanos=nanos)
+            return _new(TIMESTAMP, {"seconds": seconds, "nanos": nanos})
 
         return from_nanos
 
     def from_ts(v: Any) -> Message:
         seconds, micros = divmod(_timestamp_us(v), 1_000_000)
-        return Message(TIMESTAMP, seconds=seconds, nanos=micros * 1_000)
+        return _new(TIMESTAMP, {"seconds": seconds, "nanos": micros * 1_000})
 
     return from_ts
 
@@ -110,7 +129,7 @@ def _duration_decoder(config: ProtarrowSparkConfig) -> ValueConverter:
         if seconds < 0 and nanos > 0:
             seconds += 1
             nanos -= 1_000_000_000
-        return Message(DURATION, seconds=seconds, nanos=nanos)
+        return _new(DURATION, {"seconds": seconds, "nanos": nanos})
 
     if config.duration_type == "long_nanos":
 
@@ -135,8 +154,8 @@ def _date_decoder(v: Any) -> Message:
     if hasattr(v, "date") and not isinstance(v, datetime.date):
         v = v.date()  # pd.Timestamp
     if v == DATE_SENTINEL:
-        return Message(DATE)  # unset date round-trips to Date()
-    return Message(DATE, year=v.year, month=v.month, day=v.day)
+        return _new(DATE, {})  # unset date round-trips to Date()
+    return _new(DATE, {"year": v.year, "month": v.month, "day": v.day})
 
 
 def _time_of_day_decoder(v: Any) -> Message:
@@ -145,8 +164,9 @@ def _time_of_day_decoder(v: Any) -> Message:
     seconds_total = total // 1_000_000_000
     minutes_total, seconds = divmod(seconds_total, 60)
     hours, minutes = divmod(minutes_total, 60)
-    return Message(
-        TIME_OF_DAY, hours=hours, minutes=minutes, seconds=seconds, nanos=nanos
+    return _new(
+        TIME_OF_DAY,
+        {"hours": hours, "minutes": minutes, "seconds": seconds, "nanos": nanos},
     )
 
 
@@ -177,15 +197,21 @@ def _wkt_decoder(
     if name == TIME_OF_DAY.full_name:
         return _time_of_day_decoder
     if name == EMPTY.full_name:
-        return lambda v: Message(EMPTY)
+        return lambda v: _new(EMPTY, {})
     if name in WRAPPER_TYPES:
+        # the wrapped value as Message.__setattr__ stores it
         kind = WRAPPER_TYPES[name]
         if kind is Kind.UINT64:
             inner = _uint64_decoder(config)
-            return lambda v: Message(mtype, value=inner(v))
-        if kind is Kind.BYTES:
-            return lambda v: Message(mtype, value=bytes(v))
-        return lambda v: Message(mtype, value=v)
+        elif kind is Kind.BYTES:
+            inner = bytes
+        elif kind is Kind.FLOAT:
+            inner = _float32
+        elif kind is Kind.BOOL:
+            inner = bool
+        else:
+            return lambda v: _new(mtype, {"value": v})
+        return lambda v: _new(mtype, {"value": inner(v)})
     return None
 
 
@@ -204,7 +230,7 @@ def _scalar_decoder(field: Field, config: ProtarrowSparkConfig) -> ValueConverte
         return lambda v: float(v)
     if kind is Kind.BOOL:
         return lambda v: bool(v)
-    return lambda v: v  # string
+    return _identity  # string
 
 
 def _value_decoder(
@@ -225,31 +251,68 @@ def message_builder(
     _trace: tuple[str, ...] = (),
 ) -> Callable[[Any], Message]:
     """Compile a ``row-like -> Message`` converter (the reference's
-    ``MessageExtractor`` compilation, ``message_extractor.py:144-162``)."""
+    ``MessageExtractor`` compilation, ``message_extractor.py:144-162``).
+
+    Each row is read the way ``_struct_get`` reads a struct: a plain
+    tuple or list, or a ``Row`` whose ``__fields__`` are the schema's
+    names in order, by position; a dict or any other ``Row`` by name.
+    The decoded values go into a fresh storage dict with
+    ``Message.__setattr__``'s rules applied at compile time (a null cell
+    is skipped, a oneof member drops its siblings; :func:`_field_decoder`
+    rounds FLOAT and converts BOOL), so no cell goes through the
+    attribute protocol."""
     if mtype.full_name in _trace:
         if config.skip_recursive_messages:
-            return lambda row: Message(mtype)
+            return lambda row: _new(mtype, {})
         raise TypeError(f"recursive message {mtype.full_name}")
     trace = _trace + (mtype.full_name,)
 
-    setters: list[tuple[str, int, Callable[[Any], Any]]] = []
-    for idx, field in enumerate(mtype.fields):
-        setters.append((field.name, idx, _field_decoder(field, config, trace)))
+    names = [f.name for f in mtype.fields]
+    n = len(names)
+    setters = [
+        (
+            field.name,
+            _field_decoder(field, config, trace),
+            tuple(
+                s.name for s in mtype.fields
+                if field.oneof is not None and s.oneof == field.oneof and s is not field
+            ),
+        )
+        for field in mtype.fields
+    ]
 
     def build(row: Any) -> Message:
-        msg = Message(mtype)
-        for name, idx, dec in setters:
-            value = dec(_struct_get(row, name, idx))
+        if isinstance(row, (tuple, list)) and getattr(row, "__fields__", None) in (
+            None, names
+        ):
+            cells = row if len(row) >= n else _short_row(row)
+        else:
+            cells = map(getitem, repeat(row), names)
+        values: dict = {}
+        for (name, dec, sibs), cell in zip(setters, cells):
+            value = dec(cell)
             if value is not None:
-                setattr(msg, name, value)
-        return msg
+                if sibs:
+                    for sib in sibs:
+                        values.pop(sib, None)
+                values[name] = value
+        return _new(mtype, values)
 
     return build
+
+
+def _short_row(row: Any) -> Iterator[Any]:
+    """The cells of a positional row with fewer cells than fields, then
+    the ``IndexError`` that reading the first missing one raises."""
+    yield from row
+    row[len(row)]
 
 
 def _field_decoder(
     field: Field, config: ProtarrowSparkConfig, trace: tuple[str, ...]
 ) -> Callable[[Any], Any]:
+    """Spark cell -> the value ``Message`` storage holds for ``field``,
+    or None for a null cell."""
     if field.is_map:
         entry = field.message
         key_dec = _scalar_decoder(entry.fields_by_number[1], config)
@@ -264,16 +327,18 @@ def _field_decoder(
 
         return map_cell
 
-    dec = _value_decoder(field, config, trace)
+    if field.kind is Kind.FLOAT:
+
+        def dec(v: Any) -> float:  # rounded, as Message.__setattr__ stores it
+            return _float32(float(v))
+
+    else:
+        dec = _value_decoder(field, config, trace)
     if field.repeated:
         return lambda v: None if _is_null(v) else [dec(x) for x in v]
-
-    def cell(v: Any) -> Any:
-        if _is_null(v):
-            return None
-        return dec(v)
-
-    return cell
+    if dec is _identity:
+        return lambda v: None if _is_null(v) else v
+    return lambda v: None if _is_null(v) else dec(v)
 
 
 class MessageExtractor:

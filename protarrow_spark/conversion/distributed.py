@@ -574,8 +574,10 @@ def compile_wire_to_row(
     overwrite, unknown fields skip, oneof later-member-wins clears its
     siblings, packed and expanded repeated encodings both accepted.
     Nested message VALUES still parse into Messages (their converters
-    need message trees); only the top level is direct — which is where
-    the per-row allocation + attribute-protocol cost lives.
+    need message trees); only the top level is direct. The nested
+    converters read each Message's ``_values`` storage directly, so
+    what a nested value costs is its parse and one allocation, not
+    the attribute protocol.
 
     Differential-tested bit-for-bit against ``row_builder(parse(...))``
     over the golden corpora and the random full matrix.

@@ -6,7 +6,10 @@ Re-expresses the reference's columnar encode path
 Where the reference compiles per-field *array builders* once per
 schema, we compile per-field *cell converters* once per message type
 (the same "converter compilation" technique, SURVEY §4), then map
-them over messages.
+them over messages. The compiled converters read each message's
+storage dict (``Message._values``) with every per-field property
+(presence, default, kind) resolved at compile time, never the
+attribute protocol.
 
 Semantics preserved:
 
@@ -30,6 +33,7 @@ from __future__ import annotations
 
 import datetime
 import decimal
+import operator
 from typing import Any, Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -79,35 +83,45 @@ def _enum_converter(field: Field, config: ProtarrowSparkConfig) -> CellConverter
     return lambda v: by_number.get(v, fallback)
 
 
+def _nanos_of(m: Message) -> int:
+    """Timestamp or Duration -> total nanoseconds."""
+    v = m._values
+    return v.get("seconds", 0) * 1_000_000_000 + v.get("nanos", 0)
+
+
+def _micros_of(m: Message) -> int:
+    """Timestamp or Duration -> total microseconds, with protobuf's
+    ``ToMicroseconds`` floor semantics."""
+    v = m._values
+    return v.get("seconds", 0) * 1_000_000 + v.get("nanos", 0) // 1_000
+
+
 def _timestamp_converter(config: ProtarrowSparkConfig) -> CellConverter:
     if config.timestamp_type == "long_nanos":
-        return lambda m: m.seconds * 1_000_000_000 + m.nanos
-    # protobuf Timestamp.ToMicroseconds: seconds * 1e6 + nanos // 1e3
-    return lambda m: _EPOCH + datetime.timedelta(
-        seconds=m.seconds, microseconds=m.nanos // 1_000
-    )
+        return _nanos_of
+    return lambda m: _EPOCH + datetime.timedelta(microseconds=_micros_of(m))
 
 
 def _duration_converter(config: ProtarrowSparkConfig) -> CellConverter:
     if config.duration_type == "long_nanos":
-        return lambda m: m.seconds * 1_000_000_000 + m.nanos
-    # protobuf Duration.ToMicroseconds floor semantics
-    return lambda m: datetime.timedelta(
-        microseconds=m.seconds * 1_000_000 + m.nanos // 1_000
-    )
+        return _nanos_of
+    return lambda m: datetime.timedelta(microseconds=_micros_of(m))
 
 
 def _date_converter(m: Message) -> datetime.date:
-    if m.year == 0:
+    v = m._values
+    year = v.get("year", 0)
+    if year == 0:
         return DATE_SENTINEL
-    return datetime.date(m.year, m.month, m.day)
+    return datetime.date(year, v.get("month", 0), v.get("day", 0))
 
 
 def _time_of_day_converter(m: Message) -> int:
     # nanos-of-day (reference `_time_of_day_to_nanos` semantics)
+    v = m._values
     return (
-        (m.hours * 60 + m.minutes) * 60 + m.seconds
-    ) * 1_000_000_000 + m.nanos
+        (v.get("hours", 0) * 60 + v.get("minutes", 0)) * 60 + v.get("seconds", 0)
+    ) * 1_000_000_000 + v.get("nanos", 0)
 
 
 def _wkt_converter(
@@ -127,11 +141,11 @@ def _wkt_converter(
     if name == EMPTY.full_name:
         return lambda m: ()
     if name in WRAPPER_TYPES:
-        kind = WRAPPER_TYPES[name]
-        if kind is Kind.UINT64:
+        default = mtype.fields[0].default_value
+        if WRAPPER_TYPES[name] is Kind.UINT64:
             inner = _uint64_converter(config)
-            return lambda m: inner(m.value)
-        return lambda m: m.value
+            return lambda m: inner(m._values.get("value", default))
+        return lambda m: m._values.get("value", default)
     return None
 
 
@@ -156,8 +170,7 @@ def _value_converter(
         wkt = _wkt_converter(field.message, config)
         if wkt is not None:
             return wkt
-        builder = row_builder(field.message, config, _trace=trace)
-        return lambda m: builder(m)
+        return row_builder(field.message, config, _trace=trace)
     return _scalar_converter(field, config)
 
 
@@ -171,53 +184,64 @@ def row_builder(
     The tuple matches :func:`message_type_to_schema` field order.
     Compiled once, applied per message (the reference's converter
     compilation, ``message_extractor.py:145-154`` mirrored for the
-    encode direction).
+    encode direction). Each cell reads the message's ``_values``
+    storage with the field's kind, presence and default resolved here.
     """
     if mtype.full_name in _trace:
         if config.skip_recursive_messages:
             return lambda m: () if m is not None else None
         raise TypeError(f"recursive message {mtype.full_name}")
     trace = _trace + (mtype.full_name,)
-
-    cells: list[Callable[[Message], Any]] = []
-    for field in mtype.fields:
-        cells.append(_cell_builder(field, config, trace))
+    cells = [_cell_builder(field, config, trace) for field in mtype.fields]
 
     def build(msg: Message | None) -> tuple | None:
         if msg is None:
             return None
-        return tuple(cell(msg) for cell in cells)
+        values = msg._values
+        return tuple([cell(values) for cell in cells])
 
     return build
 
 
 def _cell_builder(
     field: Field, config: ProtarrowSparkConfig, trace: tuple[str, ...]
-) -> Callable[[Message], Any]:
+) -> Callable[[dict], Any]:
+    """``Message._values -> cell`` for one field. An unset map or
+    repeated field is empty, an unset presence field is None, an unset
+    plain scalar is its proto default."""
     name = field.name
     if field.is_map:
         entry = field.message
         key_conv = _scalar_converter(entry.fields_by_number[1], config)
         val_conv = _value_converter(entry.fields_by_number[2], config, trace)
+        plain = key_conv is _identity and val_conv is _identity
         if config.map_as_list:
-
-            def map_cell(msg: Message) -> list:
-                return [(key_conv(k), val_conv(v)) for k, v in getattr(msg, name).items()]
-
-            return map_cell
-
-        def dict_cell(msg: Message) -> dict:
-            return {key_conv(k): val_conv(v) for k, v in getattr(msg, name).items()}
-
-        return dict_cell
+            if plain:
+                return lambda values: list(d.items()) if (d := values.get(name)) else []
+            return lambda values: [
+                (key_conv(k), val_conv(v)) for k, v in d.items()
+            ] if (d := values.get(name)) else []
+        if plain:
+            return lambda values: dict(d) if (d := values.get(name)) else {}
+        return lambda values: {
+            key_conv(k): val_conv(v) for k, v in d.items()
+        } if (d := values.get(name)) else {}
 
     conv = _value_converter(field, config, trace)
     if field.repeated:
-        return lambda msg: [conv(v) for v in getattr(msg, name)]
+        if conv is _identity:
+            return lambda values: list(items) if (items := values.get(name)) else []
+        return lambda values: [
+            conv(v) for v in items
+        ] if (items := values.get(name)) else []
     if field.has_presence:
-        return lambda msg: conv(getattr(msg, name)) if msg.HasField(name) else None
-    # absent no-presence scalars read their proto default via getattr
-    return lambda msg: conv(getattr(msg, name))
+        if conv is _identity:
+            return operator.methodcaller("get", name)
+        return lambda values: None if (v := values.get(name)) is None else conv(v)
+    default = field.default_value
+    if conv is _identity:
+        return operator.methodcaller("get", name, default)
+    return lambda values: conv(values.get(name, default))
 
 
 def messages_to_rows(

@@ -28,7 +28,7 @@ absent-field defaults ``proto_to_arrow.py:428-437``.
 from __future__ import annotations
 
 import struct
-from typing import Any, Iterator
+from typing import Any
 
 from protarrow_spark.proto.model import (
     I32_KINDS,
@@ -66,6 +66,14 @@ class Message:
     conversion layer touches: attribute access, ``HasField``,
     ``SetField`` via plain assignment, equality with proto3 presence
     semantics.
+
+    Storage is ``_values``, a dict from field name to the value as
+    ``__setattr__`` normalizes it: no ``None`` values, FLOAT scalars and
+    repeated items rounded to float32, BOOL scalars as ``bool``, lists
+    for repeated fields, dicts for maps, at most one member per oneof.
+    :meth:`_from_values` wraps such a dict without running
+    ``__setattr__``; its caller must hand it values already normalized
+    (the compiled converters of ``conversion/decode.py`` do).
     """
 
     __slots__ = ("_type", "_values")
@@ -75,6 +83,15 @@ class Message:
         object.__setattr__(self, "_values", {})
         for name, value in values.items():
             setattr(self, name, value)
+
+    @classmethod
+    def _from_values(cls, mtype: MessageType, values: dict) -> "Message":
+        """A message over ``values``, taken as normalized storage (see
+        the class docstring); nothing is checked or copied."""
+        msg = object.__new__(cls)
+        object.__setattr__(msg, "_type", mtype)
+        object.__setattr__(msg, "_values", values)
+        return msg
 
     @property
     def type(self) -> MessageType:
@@ -492,10 +509,3 @@ def parse_into(msg: Message, data: bytes) -> Message:
 def parse(data: bytes, mtype: MessageType) -> Message:
     """Wire bytes -> a fresh :class:`Message` of ``mtype``."""
     return parse_into(Message(mtype), data)
-
-
-def iter_set_fields(msg: Message) -> Iterator[tuple[Field, Any]]:
-    """(field, value) for fields explicitly set on the message."""
-    for field in msg.type.fields:
-        if field.name in msg._values:
-            yield field, msg._values[field.name]

@@ -27,6 +27,7 @@ from protarrow_spark.proto.model import (
     DOUBLE_VALUE,
     DURATION,
     EMPTY,
+    FLOAT_VALUE,
     INT64_VALUE,
     STRING_VALUE,
     TIME_OF_DAY,
@@ -36,6 +37,7 @@ from protarrow_spark.proto.model import (
     MessageType,
     map_field,
 )
+from tests.test_roundtrip import FULL_MATRIX, _cfg_id
 
 UTC = datetime.timezone.utc
 CFG = ProtarrowSparkConfig()
@@ -280,3 +282,187 @@ def test_full_example_matrix_roundtrip(spark) -> None:
     back = dataframe_to_messages(df, mt, CFG)
     assert back[0] == m
     assert back[1] == Message(mt)
+
+
+# ---------------------------------------------------------------------------
+# Compiled builders: Message storage access and __setattr__ semantics
+# ---------------------------------------------------------------------------
+
+#: (Message.__getattr__, Message.__setattr__, MessageType._indexes) calls
+#: in one EXAMPLE round trip (messages_to_rows, then rows_to_messages),
+#: the same at 40 and 400 messages. The attribute-protocol builders made
+#: (3,034, 3,006, 6,976) calls at 40 messages and (30,291, 30,012,
+#: 69,519) at 400.
+_ROUNDTRIP_CALLS = (0, 0, 16)
+
+
+def test_roundtrip_touches_message_storage_only(monkeypatch) -> None:
+    """Pins the compiled converters with counters instead of timings:
+    no cell goes through the attribute protocol, and the descriptor
+    indexes are read at compile time only."""
+    from tests.random_messages import expected_roundtrip, random_messages
+
+    mt = fixtures.EXAMPLE
+    batches = [random_messages(mt, n, seed=9) for n in (40, 400)]
+    calls = {"getattr": 0, "setattr": 0, "indexes": 0}
+    get, set_, indexes = Message.__getattr__, Message.__setattr__, MessageType._indexes
+
+    def counting_getattr(self, name):
+        calls["getattr"] += 1
+        return get(self, name)
+
+    def counting_setattr(self, name, value):
+        calls["setattr"] += 1
+        set_(self, name, value)
+
+    def counting_indexes(self):
+        calls["indexes"] += 1
+        return indexes(self)
+
+    monkeypatch.setattr(Message, "__getattr__", counting_getattr)
+    monkeypatch.setattr(Message, "__setattr__", counting_setattr)
+    monkeypatch.setattr(MessageType, "_indexes", counting_indexes)
+    seen, backs = [], []
+    for msgs in batches:
+        calls.update(getattr=0, setattr=0, indexes=0)
+        backs.append(rows_to_messages(messages_to_rows(msgs, mt, CFG), mt, CFG))
+        seen.append((calls["getattr"], calls["setattr"], calls["indexes"]))
+    monkeypatch.undo()
+    for back, msgs in zip(backs, batches):
+        assert back == [expected_roundtrip(m, CFG) for m in msgs]
+    assert seen[0] == seen[1] == _ROUNDTRIP_CALLS, seen
+
+
+BUILDER_MSG = MessageType(
+    "t.Builder",
+    (
+        Field("id", 1, Kind.INT64),
+        Field("ratio", 2, Kind.FLOAT),
+        Field("ratios", 3, Kind.FLOAT, repeated=True),
+        Field("wrapped_ratio", 4, Kind.MESSAGE, message=FLOAT_VALUE),
+        Field("flag", 5, Kind.BOOL),
+        Field("opt", 6, Kind.INT32, optional=True),
+        Field("ts", 7, Kind.MESSAGE, message=TIMESTAMP),
+        Field("color", 8, Kind.ENUM, enum=fixtures.COLOR),
+        Field("big", 9, Kind.UINT64),
+        map_field("attrs", 10, Kind.STRING, Kind.INT64),
+        Field("nested", 11, Kind.MESSAGE, message=fixtures.NESTED),
+        Field("choice_text", 12, Kind.STRING, oneof="choice"),
+        Field("choice_number", 13, Kind.INT64, oneof="choice"),
+        Field("choice_nested", 14, Kind.MESSAGE, message=fixtures.NESTED, oneof="choice"),
+    ),
+)
+
+_BASE = {
+    "id": 7,
+    "ratio": 2.5,
+    "ratios": [0.5, -1.0],
+    "wrapped_ratio": Message(FLOAT_VALUE, value=0.25),
+    "flag": True,
+    "opt": 3,
+    "ts": Message(TIMESTAMP, seconds=1_700_000_000, nanos=250_000),
+    "color": 2,
+    "big": 2**64 - 5,
+    "attrs": {"k": 1, "j": -2},
+    "nested": Message(fixtures.NESTED, nested_int=5, nested_text="n"),
+    "choice_text": "t",
+}
+
+
+def _builder_cases(cfg: ProtarrowSparkConfig) -> list[tuple[dict, dict]]:
+    """(row cells by name, expected proto values by name) per case; a
+    case's cells are the encoded base message's with some replaced."""
+    import pandas as pd
+
+    (row,) = messages_to_rows([Message(BUILDER_MSG, **_BASE)], BUILDER_MSG, cfg)
+    base = dict(zip([f.name for f in BUILDER_MSG.fields], row))
+    nested_cell = base["nested"]
+    ts = pd.Timestamp("2024-03-01 12:00:00.123456", tz="UTC")
+    ts_cell = ts if cfg.timestamp_type == "timestamp" else ts.value
+    return [
+        (base, _BASE),
+        # two and three non-null members of one oneof: the later wins
+        ({**base, "choice_number": 9}, {**_BASE, "choice_number": 9}),
+        (
+            {**base, "choice_number": 9, "choice_nested": nested_cell},
+            {**_BASE, "choice_number": 9, "choice_nested": _BASE["nested"]},
+        ),
+        # float32 cannot hold these: FLOAT cells round on decode
+        (
+            {**base, "ratio": 0.1, "ratios": [0.1, 1 / 3, 1e-40], "wrapped_ratio": 0.1},
+            {
+                **_BASE,
+                "ratio": 0.1,
+                "ratios": [0.1, 1 / 3, 1e-40],
+                "wrapped_ratio": Message(FLOAT_VALUE, value=0.1),
+            },
+        ),
+        # null cells leave their field unset, whatever the null
+        (
+            {
+                **base,
+                "id": None,
+                "ratio": float("nan"),
+                "ratios": pd.NA,
+                "wrapped_ratio": float("nan"),
+                "opt": pd.NA,
+                "ts": pd.NaT,
+                "attrs": None,
+                "nested": pd.NaT,
+                "choice_text": float("nan"),
+                "choice_number": None,
+            },
+            {
+                k: v for k, v in _BASE.items()
+                if k not in (
+                    "id", "ratio", "ratios", "wrapped_ratio", "opt", "ts",
+                    "attrs", "nested", "choice_text",
+                )
+            },
+        ),
+        (
+            {**base, "ts": ts_cell, "flag": 1},
+            {**_BASE, "flag": 1, "ts": Message(TIMESTAMP, seconds=1_709_294_400, nanos=123_456_000)},
+        ),
+    ]
+
+
+def _row_forms(cells: dict) -> dict:
+    """One row in every form the builders accept; a struct cell takes
+    the same form as its row."""
+    from pyspark.sql import Row
+
+    def nested(form, cell):
+        if not isinstance(cell, tuple):
+            return cell
+        named = dict(zip([f.name for f in fixtures.NESTED.fields], cell))
+        return form(named)
+
+    forms = {
+        "tuple": lambda d: tuple(d.values()),
+        "list": lambda d: list(d.values()),
+        "dict": dict,
+        "row": lambda d: Row(**d),
+        "row_reversed": lambda d: Row(**dict(reversed(list(d.items())))),
+    }
+    return {
+        name: form({k: nested(form, v) for k, v in cells.items()})
+        for name, form in forms.items()
+    }
+
+
+@pytest.mark.parametrize("cfg", FULL_MATRIX, ids=_cfg_id)
+def test_builder_matches_setattr_semantics(cfg: ProtarrowSparkConfig) -> None:
+    """rows_to_messages decodes every row form to the message that
+    assigning the same proto values in field order through
+    Message.__setattr__ builds: later oneof member wins, FLOAT rounds to
+    float32, BOOL converts, null cells stay unset."""
+    for cells, proto in _builder_cases(cfg):
+        expected = Message(BUILDER_MSG, **proto)
+        for form, row in _row_forms(cells).items():
+            (back,) = rows_to_messages([row], BUILDER_MSG, cfg)
+            assert back == expected, (form, cells)
+            assert back._values == expected._values, (form, cells)
+    rounded = rows_to_messages([_builder_cases(cfg)[3][0]], BUILDER_MSG, cfg)[0]
+    assert rounded.ratio != 0.1 and rounded.wrapped_ratio.value != 0.1
+    assert rounded.ratios[2] != 1e-40
