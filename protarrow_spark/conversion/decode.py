@@ -12,9 +12,10 @@ or dict, maps as dict or list-of-pairs, arrays as list or ndarray,
 timestamps as datetime or pd.Timestamp, binary as bytes or bytearray.
 
 The compiled converters write ``Message`` storage, not attributes:
-each message's values are decoded into a fresh dict with
-``Message.__setattr__``'s normalization decided per field at compile
-time, and wrapped by ``Message._from_values``.
+each message's values are decoded into a fresh dict, normalized by the
+rules ``Message.__setattr__`` uses (``message._normalizer`` and
+``message._oneof_siblings``, looked up per field at compile time), and
+wrapped by ``Message._from_values``.
 
 Semantics preserved:
 
@@ -39,7 +40,7 @@ from pyspark.sql import DataFrame
 
 from protarrow_spark.config import ProtarrowSparkConfig
 from protarrow_spark.conversion.encode import DATE_SENTINEL, _EPOCH, _identity
-from protarrow_spark.proto.message import Message, _float32
+from protarrow_spark.proto.message import Message, _normalizer, _oneof_siblings
 from protarrow_spark.proto.model import (
     DATE,
     DURATION,
@@ -199,19 +200,18 @@ def _wkt_decoder(
     if name == EMPTY.full_name:
         return lambda v: _new(EMPTY, {})
     if name in WRAPPER_TYPES:
-        # the wrapped value as Message.__setattr__ stores it
-        kind = WRAPPER_TYPES[name]
-        if kind is Kind.UINT64:
+        # a null item (a repeated wrapper or a map value) is an empty
+        # wrapper, as Message(mtype, value=None) is
+        field = mtype.fields[0]
+        if field.kind is Kind.UINT64:
             inner = _uint64_decoder(config)
-        elif kind is Kind.BYTES:
+        elif field.kind is Kind.BYTES:
             inner = bytes
-        elif kind is Kind.FLOAT:
-            inner = _float32
-        elif kind is Kind.BOOL:
-            inner = bool
         else:
-            return lambda v: _new(mtype, {"value": v})
-        return lambda v: _new(mtype, {"value": inner(v)})
+            inner = _normalizer(field)
+        if inner is None:
+            return lambda v: _new(mtype, {} if v is None else {"value": v})
+        return lambda v: _new(mtype, {} if v is None else {"value": inner(v)})
     return None
 
 
@@ -222,14 +222,14 @@ def _scalar_decoder(field: Field, config: ProtarrowSparkConfig) -> ValueConverte
     if kind in (Kind.UINT64, Kind.FIXED64):
         return _uint64_decoder(config)
     if kind is Kind.BYTES:
-        return lambda v: bytes(v)
+        return bytes
     if kind in (Kind.INT32, Kind.INT64, Kind.SINT32, Kind.SINT64, Kind.UINT32,
                 Kind.FIXED32, Kind.SFIXED32, Kind.SFIXED64):
-        return lambda v: int(v)
+        return int
     if kind in (Kind.DOUBLE, Kind.FLOAT):
-        return lambda v: float(v)
+        return float
     if kind is Kind.BOOL:
-        return lambda v: bool(v)
+        return bool
     return _identity  # string
 
 
@@ -256,11 +256,11 @@ def message_builder(
     Each row is read the way ``_struct_get`` reads a struct: a plain
     tuple or list, or a ``Row`` whose ``__fields__`` are the schema's
     names in order, by position; a dict or any other ``Row`` by name.
-    The decoded values go into a fresh storage dict with
-    ``Message.__setattr__``'s rules applied at compile time (a null cell
-    is skipped, a oneof member drops its siblings; :func:`_field_decoder`
-    rounds FLOAT and converts BOOL), so no cell goes through the
-    attribute protocol."""
+    The decoded values go into a fresh storage dict under
+    ``Message.__setattr__``'s rules, looked up per field here: a null
+    cell leaves the field unset, a oneof member drops
+    ``_oneof_siblings``, and :func:`_field_decoder` applies
+    ``_normalizer``. No cell goes through the attribute protocol."""
     if mtype.full_name in _trace:
         if config.skip_recursive_messages:
             return lambda row: _new(mtype, {})
@@ -270,14 +270,7 @@ def message_builder(
     names = [f.name for f in mtype.fields]
     n = len(names)
     setters = [
-        (
-            field.name,
-            _field_decoder(field, config, trace),
-            tuple(
-                s.name for s in mtype.fields
-                if field.oneof is not None and s.oneof == field.oneof and s is not field
-            ),
-        )
+        (field.name, _field_decoder(field, config, trace), _oneof_siblings(mtype, field))
         for field in mtype.fields
     ]
 
@@ -327,18 +320,19 @@ def _field_decoder(
 
         return map_cell
 
-    if field.kind is Kind.FLOAT:
-
-        def dec(v: Any) -> float:  # rounded, as Message.__setattr__ stores it
-            return _float32(float(v))
-
-    else:
-        dec = _value_decoder(field, config, trace)
+    dec = _normalized(field, _value_decoder(field, config, trace))
     if field.repeated:
         return lambda v: None if _is_null(v) else [dec(x) for x in v]
-    if dec is _identity:
-        return lambda v: None if _is_null(v) else v
     return lambda v: None if _is_null(v) else dec(v)
+
+
+def _normalized(field: Field, dec: ValueConverter) -> ValueConverter:
+    """``dec`` followed by the field's storage ``_normalizer``, if any
+    (a BOOL scalar's decoder is already ``bool``)."""
+    norm = _normalizer(field)
+    if norm is None or norm is dec:
+        return dec
+    return lambda v: norm(dec(v))
 
 
 class MessageExtractor:

@@ -589,6 +589,7 @@ def compile_wire_to_row(
     )
     from protarrow_spark.proto.message import (
         _check_bounds,
+        _oneof_siblings,
         _read_varint,
         _skip,
         parse_into,
@@ -605,15 +606,7 @@ def compile_wire_to_row(
 
     for field in mtype.fields:
         idx = index_of[field.name]
-        sibs = (
-            tuple(
-                index_of[s.name]
-                for s in mtype.fields
-                if s.oneof == field.oneof and s.name != field.name
-            )
-            if field.oneof is not None
-            else ()
-        )
+        sibs = tuple(index_of[s] for s in _oneof_siblings(mtype, field))
         if field.is_map:
             entry_mt = field.message
             key_conv = _scalar_converter(entry_mt.fields_by_number[1], config)

@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import datetime
 import decimal
-import operator
 from typing import Any, Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -214,33 +213,22 @@ def _cell_builder(
         entry = field.message
         key_conv = _scalar_converter(entry.fields_by_number[1], config)
         val_conv = _value_converter(entry.fields_by_number[2], config, trace)
-        plain = key_conv is _identity and val_conv is _identity
         if config.map_as_list:
-            if plain:
-                return lambda values: list(d.items()) if (d := values.get(name)) else []
             return lambda values: [
                 (key_conv(k), val_conv(v)) for k, v in d.items()
             ] if (d := values.get(name)) else []
-        if plain:
-            return lambda values: dict(d) if (d := values.get(name)) else {}
         return lambda values: {
             key_conv(k): val_conv(v) for k, v in d.items()
         } if (d := values.get(name)) else {}
 
     conv = _value_converter(field, config, trace)
     if field.repeated:
-        if conv is _identity:
-            return lambda values: list(items) if (items := values.get(name)) else []
         return lambda values: [
             conv(v) for v in items
         ] if (items := values.get(name)) else []
     if field.has_presence:
-        if conv is _identity:
-            return operator.methodcaller("get", name)
         return lambda values: None if (v := values.get(name)) is None else conv(v)
     default = field.default_value
-    if conv is _identity:
-        return operator.methodcaller("get", name, default)
     return lambda values: conv(values.get(name, default))
 
 

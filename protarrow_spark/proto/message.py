@@ -28,7 +28,7 @@ absent-field defaults ``proto_to_arrow.py:428-437``.
 from __future__ import annotations
 
 import struct
-from typing import Any
+from typing import Any, Callable
 
 from protarrow_spark.proto.model import (
     I32_KINDS,
@@ -59,6 +59,27 @@ def _float32(v: float) -> float:
     return struct.unpack("<f", struct.pack("<f", v))[0]
 
 
+def _normalizer(field: Field) -> Callable[[Any], Any] | None:
+    """How ``Message`` storage holds a non-None scalar of ``field``, or
+    each item of a repeated ``field``: FLOAT rounded to float32, a BOOL
+    scalar as ``bool``. None where the value is stored as given (every
+    other kind, and map entries). ``None`` itself never reaches it: it
+    means "unset" and is never stored."""
+    if field.kind is Kind.FLOAT:
+        return _float32
+    if field.kind is Kind.BOOL and not field.repeated:
+        return bool
+    return None
+
+
+def _oneof_siblings(mtype: MessageType, field: Field) -> tuple[str, ...]:
+    """Names of the other members of ``field``'s oneof, which setting
+    ``field`` clears; empty outside a oneof."""
+    if field.oneof is None:
+        return ()
+    return tuple(f.name for f in mtype.oneofs[field.oneof] if f is not field)
+
+
 class Message:
     """A dynamic message instance bound to a :class:`MessageType`.
 
@@ -68,12 +89,13 @@ class Message:
     semantics.
 
     Storage is ``_values``, a dict from field name to the value as
-    ``__setattr__`` normalizes it: no ``None`` values, FLOAT scalars and
-    repeated items rounded to float32, BOOL scalars as ``bool``, lists
-    for repeated fields, dicts for maps, at most one member per oneof.
-    :meth:`_from_values` wraps such a dict without running
-    ``__setattr__``; its caller must hand it values already normalized
-    (the compiled converters of ``conversion/decode.py`` do).
+    ``__setattr__`` normalizes it: no ``None`` values, scalars and
+    repeated items as :func:`_normalizer` gives them, lists for repeated
+    fields, dicts for maps, at most one member per oneof (see
+    :func:`_oneof_siblings`). :meth:`_from_values` wraps such a dict
+    without running ``__setattr__``; its caller must hand it values
+    already normalized by those two rules (the compiled converters of
+    ``conversion/decode.py`` do).
     """
 
     __slots__ = ("_type", "_values")
@@ -123,27 +145,22 @@ class Message:
 
     def __setattr__(self, name: str, value: Any) -> None:
         field = self._field(name)
+        values = self._values
         if value is None:
-            self._values.pop(name, None)
+            values.pop(name, None)
             return
-        if field.oneof is not None:
-            # language-guide oneof rule: setting any member clears the
-            # group's other members ("at most one set" invariant).
-            for sib in self._type.fields:
-                if sib.oneof == field.oneof and sib.name != name:
-                    self._values.pop(sib.name, None)
+        # language-guide oneof rule: setting any member clears the
+        # group's other members ("at most one set" invariant).
+        for sib in _oneof_siblings(self._type, field):
+            values.pop(sib, None)
         if field.is_map:
-            self._values[name] = dict(value)
-        elif field.repeated:
-            if field.kind is Kind.FLOAT:
-                value = [_float32(v) for v in value]
-            self._values[name] = list(value)
-        elif field.kind is Kind.FLOAT:
-            self._values[name] = _float32(value)
-        elif field.kind is Kind.BOOL:
-            self._values[name] = bool(value)
+            values[name] = dict(value)
+            return
+        norm = _normalizer(field)
+        if field.repeated:
+            values[name] = list(value) if norm is None else [norm(v) for v in value]
         else:
-            self._values[name] = value
+            values[name] = value if norm is None else norm(value)
 
     def HasField(self, name: str) -> bool:  # noqa: N802 — protobuf API parity
         field = self._field(name)

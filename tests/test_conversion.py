@@ -19,9 +19,10 @@ from protarrow_spark.conversion import (
     messages_to_rows,
     rows_to_messages,
 )
+from protarrow_spark.conversion.distributed import compile_row_to_wire
 from protarrow_spark.conversion.encode import DATE_SENTINEL
 from protarrow_spark.proto import fixtures
-from protarrow_spark.proto.message import Message
+from protarrow_spark.proto.message import Message, parse
 from protarrow_spark.proto.model import (
     DATE,
     DOUBLE_VALUE,
@@ -32,6 +33,7 @@ from protarrow_spark.proto.model import (
     STRING_VALUE,
     TIME_OF_DAY,
     TIMESTAMP,
+    UINT64_VALUE,
     Field,
     Kind,
     MessageType,
@@ -290,10 +292,11 @@ def test_full_example_matrix_roundtrip(spark) -> None:
 
 #: (Message.__getattr__, Message.__setattr__, MessageType._indexes) calls
 #: in one EXAMPLE round trip (messages_to_rows, then rows_to_messages),
-#: the same at 40 and 400 messages. The attribute-protocol builders made
+#: the same at 40 and 400 messages: every _indexes call is made while
+#: compiling the converters. The attribute-protocol builders made
 #: (3,034, 3,006, 6,976) calls at 40 messages and (30,291, 30,012,
 #: 69,519) at 400.
-_ROUNDTRIP_CALLS = (0, 0, 16)
+_ROUNDTRIP_CALLS = (0, 0, 20)
 
 
 def test_roundtrip_touches_message_storage_only(monkeypatch) -> None:
@@ -350,6 +353,10 @@ BUILDER_MSG = MessageType(
         Field("choice_text", 12, Kind.STRING, oneof="choice"),
         Field("choice_number", 13, Kind.INT64, oneof="choice"),
         Field("choice_nested", 14, Kind.MESSAGE, message=fixtures.NESTED, oneof="choice"),
+        Field("names", 15, Kind.MESSAGE, repeated=True, message=STRING_VALUE),
+        Field("wrapped_ratios", 16, Kind.MESSAGE, repeated=True, message=FLOAT_VALUE),
+        Field("bigs", 17, Kind.MESSAGE, repeated=True, message=UINT64_VALUE),
+        map_field("weights", 18, Kind.STRING, Kind.MESSAGE, value_message=DOUBLE_VALUE),
     ),
 )
 
@@ -366,6 +373,10 @@ _BASE = {
     "attrs": {"k": 1, "j": -2},
     "nested": Message(fixtures.NESTED, nested_int=5, nested_text="n"),
     "choice_text": "t",
+    "names": [Message(STRING_VALUE, value="a")],
+    "wrapped_ratios": [Message(FLOAT_VALUE, value=0.5)],
+    "bigs": [Message(UINT64_VALUE, value=2**64 - 1)],
+    "weights": {"k": Message(DOUBLE_VALUE, value=1.5)},
 }
 
 
@@ -379,6 +390,10 @@ def _builder_cases(cfg: ProtarrowSparkConfig) -> list[tuple[dict, dict]]:
     nested_cell = base["nested"]
     ts = pd.Timestamp("2024-03-01 12:00:00.123456", tz="UTC")
     ts_cell = ts if cfg.timestamp_type == "timestamp" else ts.value
+    weights = base["weights"]
+    null_weights = (
+        [*weights, ("z", None)] if cfg.map_as_list else {**weights, "z": None}
+    )
     return [
         (base, _BASE),
         # two and three non-null members of one oneof: the later wins
@@ -424,6 +439,27 @@ def _builder_cases(cfg: ProtarrowSparkConfig) -> list[tuple[dict, dict]]:
             {**base, "ts": ts_cell, "flag": 1},
             {**_BASE, "flag": 1, "ts": Message(TIMESTAMP, seconds=1_709_294_400, nanos=123_456_000)},
         ),
+        # a null wrapper item or map value (cells that list_value_nullable
+        # and map_value_nullable schemas admit) is an empty wrapper
+        (
+            {
+                **base,
+                "names": [*base["names"], None],
+                "wrapped_ratios": [0.1, None],
+                "bigs": [*base["bigs"], None],
+                "weights": null_weights,
+            },
+            {
+                **_BASE,
+                "names": [*_BASE["names"], Message(STRING_VALUE, value=None)],
+                "wrapped_ratios": [
+                    Message(FLOAT_VALUE, value=0.1),
+                    Message(FLOAT_VALUE, value=None),
+                ],
+                "bigs": [*_BASE["bigs"], Message(UINT64_VALUE, value=None)],
+                "weights": {**_BASE["weights"], "z": Message(DOUBLE_VALUE, value=None)},
+            },
+        ),
     ]
 
 
@@ -456,13 +492,28 @@ def test_builder_matches_setattr_semantics(cfg: ProtarrowSparkConfig) -> None:
     """rows_to_messages decodes every row form to the message that
     assigning the same proto values in field order through
     Message.__setattr__ builds: later oneof member wins, FLOAT rounds to
-    float32, BOOL converts, null cells stay unset."""
-    for cells, proto in _builder_cases(cfg):
+    float32, BOOL converts, null cells stay unset, a null wrapper item
+    is an empty wrapper. The row codec writes the bytes of that
+    message."""
+    to_wire = compile_row_to_wire(BUILDER_MSG, cfg)
+    cases = _builder_cases(cfg)
+    for cells, proto in cases:
         expected = Message(BUILDER_MSG, **proto)
         for form, row in _row_forms(cells).items():
             (back,) = rows_to_messages([row], BUILDER_MSG, cfg)
             assert back == expected, (form, cells)
             assert back._values == expected._values, (form, cells)
-    rounded = rows_to_messages([_builder_cases(cfg)[3][0]], BUILDER_MSG, cfg)[0]
+        # two set members of one oneof write both tags; parse keeps the later
+        assert parse(to_wire(tuple(cells.values())), BUILDER_MSG) == expected, cells
+    rounded = rows_to_messages([cases[3][0]], BUILDER_MSG, cfg)[0]
     assert rounded.ratio != 0.1 and rounded.wrapped_ratio.value != 0.1
     assert rounded.ratios[2] != 1e-40
+    # only None empties a wrapper: a NaN DoubleValue keeps its NaN
+    cells = cases[6][0]
+    nan = float("nan")
+    cells["weights"] = (
+        [*cells["weights"], ("n", nan)] if cfg.map_as_list else {**cells["weights"], "n": nan}
+    )
+    (back,) = rows_to_messages([tuple(cells.values())], BUILDER_MSG, cfg)
+    assert back.weights["n"]._values["value"] is nan
+
