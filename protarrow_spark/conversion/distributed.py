@@ -8,8 +8,9 @@ columns serialize back to proto bytes for a Kafka/file sink.
 
 Implementation: ``mapInArrow`` (Arrow record batches, one Python
 worker per partition) + the vectorized batch codec
-(``conversion/vectorized*.py``) with the compiled row codec below as
-its fallback. Spark's built-in ``from_protobuf`` / ``to_protobuf``
+(``conversion/vectorized*.py``), with the row codec at the end of this
+module (:func:`compile_row_to_wire` / :func:`compile_wire_to_row`) as
+its per-batch fallback. Spark's built-in ``from_protobuf`` / ``to_protobuf``
 would be the zero-Python alternative but requires the external
 spark-protobuf jar and compiled descriptor sets; this path has no such
 dependency and supports the engine's config policies
@@ -43,8 +44,9 @@ from protarrow_spark.conversion.vectorized import (
     Unvectorizable,
     compile_batch_to_wire,
 )
+from protarrow_spark.conversion.encode import row_builder
 from protarrow_spark.conversion.vectorized_decode import compile_wire_to_batch
-from protarrow_spark.proto.message import Message
+from protarrow_spark.proto.message import parse
 from protarrow_spark.proto.model import MessageType
 from protarrow_spark.schema import message_type_to_schema
 
@@ -437,19 +439,14 @@ def encode_proto_column(
 
 
 # ---------------------------------------------------------------------------
-# Compiled fast path: Spark row tuple -> wire bytes WITHOUT building a
-# Message. Composes the existing per-field decoders (Spark cell ->
-# proto value, decode.py) with the wire writers (message.py), so every
-# conversion policy lives in exactly one place; what it skips is the
-# dynamic Message object: allocation, attribute-protocol setattr, and
-# serialize()'s per-field dict probing. ~1.5x on the encode half of
-# the codec, bit-identical output (differential-tested against the
-# Message path over the golden corpora + the random full matrix).
-#
-# One deliberate divergence, unreachable from valid input: a row with
-# TWO non-null members of the same oneof writes both tags (the
-# Message path keeps only the later one). parse() applies last-wins
-# either way, so even then the decoded result is identical.
+# Row codec: one Spark row tuple <-> wire bytes, the fallback of the
+# vectorized kernels and the semantics they are tested against. Both
+# directions are compiled once per message type. Encode composes the
+# per-field decoders (Spark cell -> proto value, decode.py) with the
+# wire writers (message.py), without building a Message; decode is the
+# compiled wire parser (message.py) followed by the compiled
+# ``row_builder`` (encode.py), so all conversion policy lives in one
+# place per direction.
 # ---------------------------------------------------------------------------
 
 
@@ -485,339 +482,14 @@ def compile_row_to_wire(
     return encode_row
 
 
-def _make_scalar_reader(kind):
-    """Pre-bound ``(data, pos) -> (value, pos)`` for one scalar kind —
-    the per-kind dispatch chain of ``_read_scalar`` resolved at compile
-    time (it costs an enum hash + ladder walk PER SCALAR at decode
-    time). Semantics identical to ``_read_scalar`` by construction;
-    differential-pinned by the compiled-decoder test matrix."""
-    import struct as _struct
-
-    from protarrow_spark.proto.message import (
-        _check_bounds,
-        _read_scalar,
-        _read_varint,
-    )
-    from protarrow_spark.proto.model import Kind
-
-    U64, S64 = 1 << 64, 1 << 63
-
-    if kind in (Kind.INT64, Kind.ENUM):
-
-        def r(data, pos):
-            raw, pos = _read_varint(data, pos)
-            return (raw - U64 if raw >= S64 else raw), pos
-
-    elif kind is Kind.INT32:
-
-        def r(data, pos):
-            raw, pos = _read_varint(data, pos)
-            low = raw & 0xFFFFFFFF
-            return (low - (1 << 32) if low >= (1 << 31) else low), pos
-
-    elif kind in (Kind.UINT32, Kind.UINT64):
-        r = _read_varint
-    elif kind in (Kind.SINT32, Kind.SINT64):
-
-        def r(data, pos):
-            raw, pos = _read_varint(data, pos)
-            return (raw >> 1) ^ -(raw & 1), pos
-
-    elif kind is Kind.BOOL:
-
-        def r(data, pos):
-            raw, pos = _read_varint(data, pos)
-            return raw != 0, pos
-
-    elif kind is Kind.DOUBLE:
-
-        def r(data, pos):
-            return _struct.unpack_from("<d", data, pos)[0], pos + 8
-
-    elif kind is Kind.STRING:
-
-        def r(data, pos):
-            n, pos = _read_varint(data, pos)
-            _check_bounds(data, pos, n)
-            return data[pos : pos + n].decode("utf-8"), pos + n
-
-    elif kind is Kind.BYTES:
-
-        def r(data, pos):
-            n, pos = _read_varint(data, pos)
-            _check_bounds(data, pos, n)
-            return bytes(data[pos : pos + n]), pos + n
-
-    else:  # float / fixed kinds: rare — keep the generic reader
-
-        def r(data, pos, *, kind=kind):
-            return _read_scalar(data, pos, kind)
-
-    return r
-
-
 def compile_wire_to_row(
     mtype: MessageType,
     config: ProtarrowSparkConfig = ProtarrowSparkConfig(),
 ):
-    """Compile ``serialized bytes -> row tuple (schema field order)``
-    without building a top-level Message.
-
-    The inverse fast path of :func:`compile_row_to_wire`: one pass
-    over the wire stream dispatches on field number into per-field
-    handlers that write row cells directly. All conversion policy is
-    the SAME compiled converters the Message path uses
-    (``encode._scalar_converter`` / ``encode._value_converter``), and
-    the public merge semantics are preserved exactly: scalars last-
-    wins, single message fields MERGE across occurrences (accumulated
-    in a sub-Message, converted once at the end), repeated/map append/
-    overwrite, unknown fields skip, oneof later-member-wins clears its
-    siblings, packed and expanded repeated encodings both accepted.
-    Nested message VALUES still parse into Messages (their converters
-    need message trees); only the top level is direct. The nested
-    converters read each Message's ``_values`` storage directly, so
-    what a nested value costs is its parse and one allocation, not
-    the attribute protocol.
-
-    Differential-tested bit-for-bit against ``row_builder(parse(...))``
-    over the golden corpora and the random full matrix.
-    """
-    from protarrow_spark.conversion.encode import (
-        _identity as _conv_identity,
-        _scalar_converter,
-        _value_converter,
-    )
-    from protarrow_spark.proto.message import (
-        _check_bounds,
-        _oneof_siblings,
-        _read_varint,
-        _skip,
-        parse_into,
-    )
-    from protarrow_spark.proto.model import TIMESTAMP, Kind
-
-    trace = (mtype.full_name,)
-    n_fields = len(mtype.fields)
-    index_of = {f.name: i for i, f in enumerate(mtype.fields)}
-
-    init_cells: list = [None] * n_fields
-    finalizers: list = []  # (idx, fn) applied in field order
-    handlers: dict[int, object] = {}
-
-    for field in mtype.fields:
-        idx = index_of[field.name]
-        sibs = tuple(index_of[s] for s in _oneof_siblings(mtype, field))
-        if field.is_map:
-            entry_mt = field.message
-            key_conv = _scalar_converter(entry_mt.fields_by_number[1], config)
-            val_conv = _value_converter(
-                entry_mt.fields_by_number[2], config, trace
-            )
-            as_list = config.map_as_list
-
-            def h_map(data, pos, wt, slots, *, idx=idx, entry_mt=entry_mt):
-                ln, pos = _read_varint(data, pos)
-                _check_bounds(data, pos, ln)
-                entry = Message(entry_mt)
-                parse_into(entry, data[pos : pos + ln])
-                d = slots[idx]
-                if d is None:
-                    d = {}
-                    slots[idx] = d
-                d[entry.key] = entry.value
-                return pos + ln
-
-            def f_map(raw, *, key_conv=key_conv, val_conv=val_conv, as_list=as_list):
-                items = raw.items() if raw else ()
-                if as_list:
-                    return [(key_conv(k), val_conv(v)) for k, v in items]
-                return {key_conv(k): val_conv(v) for k, v in items}
-
-            handlers[field.number] = h_map
-            finalizers.append((idx, f_map))
-        elif field.kind is Kind.MESSAGE:
-            sub_mt = field.message
-            val_conv = _value_converter(field, config, trace)
-            if field.repeated:
-
-                def h_rep_msg(
-                    data, pos, wt, slots, *, idx=idx, sub_mt=sub_mt, val_conv=val_conv
-                ):
-                    ln, pos = _read_varint(data, pos)
-                    _check_bounds(data, pos, ln)
-                    item = Message(sub_mt)
-                    parse_into(item, data[pos : pos + ln])
-                    lst = slots[idx]
-                    if lst is None:
-                        lst = []
-                        slots[idx] = lst
-                    lst.append(val_conv(item))
-                    return pos + ln
-
-                handlers[field.number] = h_rep_msg
-                finalizers.append((idx, lambda v: v if v is not None else []))
-            elif sub_mt.full_name == TIMESTAMP.full_name and (
-                config.timestamp_type in ("timestamp", "long_nanos")
-            ):
-                # Specialized Timestamp submessage: the generic path
-                # builds a Message (allocation + attribute protocol)
-                # per occurrence — ~40% of flat-event decode time. The
-                # two varints parse directly into a [seconds, nanos]
-                # accumulator with the same merge semantics (scalar
-                # subfields last-wins across occurrences, unknown
-                # subfields skipped, int64/int32 sign handling as in
-                # _read_scalar).
-                U64, S64 = 1 << 64, 1 << 63
-
-                def h_ts(data, pos, wt, slots, *, idx=idx, sibs=sibs):
-                    ln, pos = _read_varint(data, pos)
-                    _check_bounds(data, pos, ln)
-                    end = pos + ln
-                    st = slots[idx]
-                    if type(st) is not list:
-                        st = [0, 0]
-                        slots[idx] = st
-                    while pos < end:
-                        tag, pos = _read_varint(data, pos)
-                        fn = tag >> 3
-                        if fn == 1:
-                            raw, pos = _read_varint(data, pos)
-                            st[0] = raw - U64 if raw >= S64 else raw
-                        elif fn == 2:
-                            raw, pos = _read_varint(data, pos)
-                            low = raw & 0xFFFFFFFF
-                            st[1] = (
-                                low - (1 << 32) if low >= (1 << 31) else low
-                            )
-                        else:
-                            pos = _skip(data, pos, tag & 7)
-                    for s in sibs:
-                        slots[s] = None
-                    return end
-
-                handlers[field.number] = h_ts
-                if config.timestamp_type == "long_nanos":
-
-                    def f_ts(v):
-                        if type(v) is not list:
-                            return v
-                        return v[0] * 1_000_000_000 + v[1]
-
-                else:
-                    import datetime as _dt
-
-                    _epoch = _dt.datetime(
-                        1970, 1, 1, tzinfo=_dt.timezone.utc
-                    )
-
-                    def f_ts(v, *, _epoch=_epoch, _td=_dt.timedelta):
-                        if type(v) is not list:
-                            return v
-                        return _epoch + _td(
-                            seconds=v[0], microseconds=v[1] // 1_000
-                        )
-
-                finalizers.append((idx, f_ts))
-            else:
-
-                def h_msg(
-                    data, pos, wt, slots, *, idx=idx, sub_mt=sub_mt, sibs=sibs
-                ):
-                    ln, pos = _read_varint(data, pos)
-                    _check_bounds(data, pos, ln)
-                    acc = slots[idx]
-                    if not isinstance(acc, Message):
-                        acc = Message(sub_mt)
-                        slots[idx] = acc
-                    parse_into(acc, data[pos : pos + ln])
-                    for s in sibs:
-                        slots[s] = None
-                    return pos + ln
-
-                handlers[field.number] = h_msg
-                finalizers.append(
-                    (
-                        idx,
-                        lambda v, *, val_conv=val_conv: (
-                            val_conv(v) if isinstance(v, Message) else v
-                        ),
-                    )
-                )
-        elif field.repeated:
-            kind = field.kind
-            conv = _scalar_converter(field, config)
-            unpacked = kind in (Kind.STRING, Kind.BYTES)
-            reader = _make_scalar_reader(kind)
-
-            def h_rep(
-                data, pos, wt, slots, *, idx=idx, reader=reader, conv=conv,
-                unpacked=unpacked,
-            ):
-                lst = slots[idx]
-                if lst is None:
-                    lst = []
-                    slots[idx] = lst
-                if wt == 2 and not unpacked:  # packed
-                    ln, pos = _read_varint(data, pos)
-                    _check_bounds(data, pos, ln)
-                    stop = pos + ln
-                    while pos < stop:
-                        v, pos = reader(data, pos)
-                        lst.append(conv(v))
-                    return pos
-                v, pos = reader(data, pos)
-                lst.append(conv(v))
-                return pos
-
-            handlers[field.number] = h_rep
-            finalizers.append((idx, lambda v: v if v is not None else []))
-        else:
-            kind = field.kind
-            conv = _scalar_converter(field, config)
-            if not field.has_presence:
-                init_cells[idx] = conv(field.default_value)
-            reader = _make_scalar_reader(kind)
-            if conv is _conv_identity:
-                # fused read-and-store: no converter call, no kind
-                # dispatch — the hot path for int/float/string fields
-
-                def h_scalar_id(
-                    data, pos, wt, slots, *, idx=idx, reader=reader, sibs=sibs
-                ):
-                    v, pos = reader(data, pos)
-                    slots[idx] = v
-                    for s in sibs:
-                        slots[s] = None
-                    return pos
-
-                handlers[field.number] = h_scalar_id
-            else:
-
-                def h_scalar(
-                    data, pos, wt, slots, *, idx=idx, reader=reader, conv=conv,
-                    sibs=sibs,
-                ):
-                    v, pos = reader(data, pos)
-                    slots[idx] = conv(v)
-                    for s in sibs:
-                        slots[s] = None
-                    return pos
-
-                handlers[field.number] = h_scalar
-
-    def decode_wire(data: bytes) -> tuple:
-        slots = list(init_cells)
-        pos = 0
-        end = len(data)
-        while pos < end:
-            tag, pos = _read_varint(data, pos)
-            h = handlers.get(tag >> 3)
-            if h is None:
-                pos = _skip(data, pos, tag & 7)
-                continue
-            pos = h(data, pos, tag & 7, slots)
-        for idx, fin in finalizers:
-            slots[idx] = fin(slots[idx])
-        return tuple(slots)
-
-    return decode_wire
+    """Compile ``serialized bytes -> row tuple (schema field order)``:
+    ``row_builder(mtype, config)`` applied to ``parse(data, mtype)``.
+    The whole row parses before any value converts, and values convert
+    in field order, so a malformed record fails its row before a
+    conversion could raise."""
+    build = row_builder(mtype, config)
+    return lambda data: build(parse(data, mtype))

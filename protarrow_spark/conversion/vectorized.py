@@ -490,11 +490,12 @@ def _prepare_map(field, cells, n, config, bad, msg_val=None):
             return v
     else:
         # message values stay RAW through the key-dedup (conversion is
-        # the batch encode below); a None value fails its row like the
-        # row path's converter (struct-get / int() TypeError)
+        # the batch encode below); a null value is checked like a
+        # repeated item (see _check_item)
+        empty_ok = _null_is_empty(val_f.message)
+
         def val_dec(v):
-            if v is None or (isinstance(v, float) and v != v):
-                raise TypeError(f"None value in map {field.name}")
+            _check_item(v, empty_ok, f"None value in map {field.name}")
             return v
 
     perm = bad is not None
@@ -1058,18 +1059,42 @@ def _item_payloads(sub_mt, items, m, config, sub_encode, kind):
     return values, offsets, np.zeros(m, dtype=bool) if item_bad is None else item_bad
 
 
+def _null_is_empty(mtype: MessageType) -> bool:
+    """Whether a None item or map value of ``mtype`` encodes as an empty
+    body: decode.py's wrapper and Empty decoders build an empty message
+    from None, every other message decoder raises on it."""
+    return mtype.full_name in WRAPPER_TYPES or mtype.full_name == EMPTY.full_name
+
+
+def _check_item(x, empty_ok: bool, what: str) -> None:
+    """Check one message item or map value: None passes when
+    ``empty_ok`` (the sub-encoder skips the wrapper's unset value) and
+    otherwise fails its row with the row path's TypeError (struct get /
+    int()). A NaN item fails the same way, except in a wrapper, where
+    the row path keeps NaN as the value and so decides the batch."""
+    if x is None:
+        if not empty_ok:
+            raise TypeError(what)
+    elif isinstance(x, float) and x != x:
+        if empty_ok:
+            raise Unvectorizable(f"NaN wrapper item: {what}")
+        raise TypeError(what)
+
+
 def _prepare_repeated_msg(field, cells, n, config, sub_encode, kind, bad):
     """Precompute one repeated MESSAGE field (plain nested, WKT, or
     recursive items): flatten items row-major, batch-encode the bodies,
     frame one tag + len + payload per item (messages never pack),
-    reusing the expanded rep_len layout. A None item or a
-    contract-violating item fails its whole ROW (the row path's
-    per-row try/except wraps the full ``[dec(x) for x in v]`` list
-    comprehension) — EXCEPT recursive items, whose row converter
-    ignores the cell (even None encodes as an empty body)."""
+    reusing the expanded rep_len layout. A null item (see
+    :func:`_check_item`) or a contract-violating item fails its whole
+    ROW (the row path's per-row try/except wraps the full
+    ``[dec(x) for x in v]`` list comprehension) — EXCEPT recursive
+    items, whose row converter ignores the cell (even None encodes as
+    an empty body)."""
     import numpy as np
 
     perm = bad is not None
+    empty_ok = _null_is_empty(field.message)
     null = _null_mask_cells(cells, n)
     counts = np.zeros(n, dtype=np.int64)
     flat: list = []
@@ -1077,15 +1102,16 @@ def _prepare_repeated_msg(field, cells, n, config, sub_encode, kind, bad):
         if null[i]:
             continue
         items = list(c)
-        if kind != "rec" and any(
-            x is None or (isinstance(x, float) and x != x) for x in items
-        ):
-            # row path: dec(None) raises TypeError (struct get / int())
-            if not perm:
-                raise TypeError(f"None item in repeated {field.name}")
-            bad[i] = True
-            null[i] = True
-            continue
+        if kind != "rec":
+            try:
+                for x in items:
+                    _check_item(x, empty_ok, f"None item in repeated {field.name}")
+            except TypeError:
+                if not perm:
+                    raise
+                bad[i] = True
+                null[i] = True
+                continue
         flat.extend(items)
         counts[i] = len(items)
     values, offsets, item_bad = _item_payloads(

@@ -2,11 +2,11 @@
 per-field cell columns.
 
 The symmetric half of :mod:`protarrow_spark.conversion.vectorized`:
-``compile_wire_to_row`` walks one row's bytes in Python — a varint
-loop, a dict dispatch and a handler call per record. This module
-compiles a BATCH decoder that walks every row of a batch at once as a
-RECORD LOOP (:func:`_tokenize`). Each step reads the next record of
-every row still inside its bytes:
+``compile_wire_to_row`` parses one row's bytes in Python — a varint
+loop, a dict dispatch and a handler call per record — then converts
+the parsed message. This module compiles a BATCH decoder that walks
+every row of a batch at once as a RECORD LOOP (:func:`_tokenize`).
+Each step reads the next record of every row still inside its bytes:
 
 * one vectorized tag read for all of them;
 * a field-number -> payload-class lookup in a table built at compile
@@ -41,11 +41,12 @@ assembled once from its slice:
   several, each piece is also parsed on its own, as the row path
   parses each occurrence.
 
-Decoding has two phases, in the row path's order: ``parse`` finds
-every wire-level error (framing, UTF-8, nested parse errors) before
-``finish`` converts values (enum names, Decimal, datetime ranges,
-dates) in field order. A row the row path nulls for a malformed record
-therefore never reaches a conversion that would hard-raise.
+Decoding has two phases, in the row path's order at every level:
+``parse`` finds every wire-level error (framing, UTF-8, nested parse
+errors) before ``finish`` converts values (enum names, Decimal,
+datetime ranges, dates) in field order. A row the row path nulls for a
+malformed record therefore never reaches a conversion that would
+hard-raise.
 
 Value-compatibility contract: for every supported message shape the
 decoded cells are IDENTICAL to ``compile_wire_to_row`` — differential-
@@ -61,13 +62,11 @@ maps, nested messages to any depth, every WKT, repeated messages, and
 recursive types under ``skip_recursive_messages`` (a late-bound strict
 validator parses the subtree for error parity, then the cell prunes to
 ``()`` like the row converter). Raise-mode recursion returns None (the
-row path raises at compile). Nested levels parse Timestamp bodies
-strictly, like ``parse_into``; the top level keeps ``h_ts``'s soft
-limit (reads may run past the body up to the row end). Runtime
-surprises (wire values outside what the numpy dtypes can mirror
-exactly, e.g. >=2^63 varints in a uint32 field from corrupt bytes)
-raise :class:`Unvectorizable` and the caller falls back per batch —
-the row path stays the semantics oracle.
+row path raises at compile). Runtime surprises (wire values outside
+what the numpy dtypes can mirror exactly, e.g. >=2^63 varints in a
+uint32 field from corrupt bytes) raise :class:`Unvectorizable` and the
+caller falls back per batch — the row path stays the semantics
+oracle.
 
 Reference parity: the reference's decode direction is
 ``arrow_to_proto.py:608-656`` (columnar extraction from pyarrow
@@ -136,11 +135,6 @@ _SCALAR_KINDS = _VARINT_KINDS | set(_FIXED_WIDTH) | _LEN_KINDS
 #: length), 1 fixed-width, 2 none (the record is unreadable)
 _READ_GROUP = np.array([0, 1, 0, 2, 2, 1, 2, 2])
 _EIGHT = np.arange(8)
-
-#: ``_Batch.err_seq`` of a row without a wire error, and of a row whose
-#: record loop failed (after every record the loop logged for it)
-_NO_ERROR = np.iinfo(np.int64).max
-_AFTER_RECORDS = _NO_ERROR - 1
 
 #: a declared length above this can only come from a corrupt 10-byte
 #: varint; capping keeps ``start + length`` in int64 and still an error
@@ -703,16 +697,11 @@ class _Batch:
         )
         self.start, self.rowend = offsets[:-1], offsets[1:]
         self.n, self.bad, self.permissive = n, bad, permissive
-        # each row's first wire error, as the failing record's position
-        # in wire order (see fail)
-        self.err_seq = np.where(bad, -1, _NO_ERROR)
         self.parsed: dict = {}
 
-    def fail(self, rows, message: str, seq=_AFTER_RECORDS) -> None:
-        """Row-local errors (``rows``: a mask or row indices; ``seq``: the
-        wire order position of each failing record, by default after all
-        of its row's records): permissive marks the rows bad and keeps
-        each row's earliest failure, strict raises like the row path."""
+    def fail(self, rows, message: str) -> None:
+        """Row-local errors (``rows``: a mask or row indices): permissive
+        marks the rows bad, strict raises like the row path."""
         rows = np.asarray(rows)
         if rows.dtype == bool:
             rows = np.flatnonzero(rows)
@@ -721,9 +710,8 @@ class _Batch:
         if not self.permissive:
             raise ValueError(message)
         self.bad[rows] = True
-        np.minimum.at(self.err_seq, rows, seq)
 
-    def slices(self, starts, ends, rows, seqs, kind) -> list:
+    def slices(self, starts, ends, rows, kind) -> list:
         """LEN payloads -> str/bytes cells. A STRING payload that is not
         UTF-8 fails its row, as the row path's reader raises on it."""
         raw, bounds = self.raw, zip(starts.tolist(), ends.tolist())
@@ -734,23 +722,22 @@ class _Batch:
         except UnicodeDecodeError:
             pass
         out = []
-        for s, e, r, q in zip(starts.tolist(), ends.tolist(), rows.tolist(), seqs.tolist()):
+        for s, e, r in zip(starts.tolist(), ends.tolist(), rows.tolist()):
             try:
                 out.append(raw[s:e].decode("utf-8"))
             except UnicodeDecodeError:
-                self.fail([r], "invalid UTF-8 in a string field", q)
+                self.fail([r], "invalid UTF-8 in a string field")
                 out.append(None)
         return out
 
 
 def _join_pieces(raw, recs, eff, m):
     """Per unit, its effective LEN pieces joined (wire concatenation ==
-    protobuf merge), and the wire order position of its first piece.
-    Also returns the pieces that must each parse on their own, as
-    ``(units, bodies, seqs)`` or None: every piece of a unit with
-    several, and pieces a oneof sibling cleared (the row path parses
-    every occurrence, so a corrupt one fails the row even when a later
-    one replaces it)."""
+    protobuf merge). Also returns the pieces that must each parse on
+    their own, as ``(units, bodies)`` or None: every piece of a unit
+    with several, and pieces a oneof sibling cleared (the row path
+    parses every occurrence, so a corrupt one fails the row even when a
+    later one replaces it)."""
     pieces = [raw[s:e] for s, e in zip(recs.start.tolist(), recs.end.tolist())]
     units = recs.unit
     if eff is None:
@@ -759,16 +746,11 @@ def _join_pieces(raw, recs, eff, m):
     for u, p, f in zip(units.tolist(), pieces, eff.tolist()):
         if f:
             bodies[u] = bodies[u] + p if bodies[u] else p
-    first = np.full(m, _AFTER_RECORDS)
-    eu = units[eff]
-    if len(eu):
-        head = np.r_[True, eu[1:] != eu[:-1]]
-        first[eu[head]] = recs.seq[eff][head]
-    extra = ~eff | (np.bincount(eu, minlength=m)[units] > 1)
+    extra = ~eff | (np.bincount(units[eff], minlength=m)[units] > 1)
     if not extra.any():
-        return bodies, first, None
+        return bodies, None
     k = np.flatnonzero(extra)
-    return bodies, first, (units[k], [pieces[j] for j in k], recs.seq[k])
+    return bodies, (units[k], [pieces[j] for j in k])
 
 
 def _per_row(batch, rows, items) -> list:
@@ -805,17 +787,13 @@ class _Decoder:
     """``[bytes per row] -> (columns, bad)`` for one message type; see
     :func:`compile_wire_to_batch`."""
 
-    def __init__(self, plan, subs, item_wkt, entry_tables, config, permissive, nested):
+    def __init__(self, plan, subs, item_wkt, entry_tables, config, permissive):
         self.plan = plan  # (klass, field, idx) in field order; slot == idx
         self.subs = subs
         self.item_wkt = item_wkt
         self.entry_tables = entry_tables
         self.config = config
         self.permissive = permissive
-        self.nested = nested
-        # the top-level row path converts repeated-message items in its
-        # wire loop, before any other field's finalizer runs
-        self.finish_order = sorted(plan, key=lambda p: nested or p[0] != "rep_msg")
         self.enum_name_mode = config.enum_type != "int"
         self.u64_decimal = config.uint64_type == "decimal"
         table, groups = [], {}
@@ -875,7 +853,7 @@ class _Decoder:
         if field.kind in _LEN_KINDS:
             # every occurrence is read (and UTF-8 checked), even one a
             # later occurrence or a oneof sibling replaces
-            every = b.slices(recs.start, recs.end, recs.unit, recs.seq, field.kind)
+            every = b.slices(recs.start, recs.end, recs.unit, field.kind)
             cells = np.empty(b.n, dtype=object)
             cells[rows] = every if len(li) == len(every) else [every[k] for k in li.tolist()]
             return cells, seen
@@ -884,13 +862,8 @@ class _Decoder:
         return raw, seen
 
     def _parse_timestamp(self, b, field, idx, recs, eff):
-        # the TOP level's h_ts reads subfields bounded by the ROW end (a
-        # corrupt subfield may overrun the body without error, then the
-        # cursor clamps back to the body end); nested levels go through
-        # parse_into, which slices the body strictly
-        limit = recs.end if self.nested else b.rowend[recs.unit]
-        log, err, _ = _tokenize(b.buf, recs.start, recs.end, limit, _TS_TABLE)
-        b.fail(recs.unit[err], "truncated timestamp body", recs.seq[err])
+        log, err, _ = _tokenize(b.buf, recs.start, recs.end, recs.end, _TS_TABLE)
+        b.fail(recs.unit[err], "truncated timestamp body")
         seen = np.zeros(b.n, dtype=bool)
         seen[recs.unit if eff is None else recs.unit[eff]] = True
         raw = []
@@ -911,19 +884,19 @@ class _Decoder:
 
     def _parse_message(self, b, field, idx, recs, eff):
         """nested / wkt / rec: one body per row, its pieces joined."""
-        bodies, first, extra = _join_pieces(b.raw, recs, eff, b.n)
+        bodies, extra = _join_pieces(b.raw, recs, eff, b.n)
         seen = np.zeros(b.n, dtype=bool)
         seen[recs.unit if eff is None else recs.unit[eff]] = True
         if extra is not None:
-            units, pieces, seqs = extra
-            self._check_items(b, idx, pieces, units, seqs)
-        return self._check_items(b, idx, bodies, np.arange(b.n), first), seen
+            units, pieces = extra
+            self._check_items(b, idx, pieces, units)
+        return self._check_items(b, idx, bodies, np.arange(b.n)), seen
 
     _parse_nested = _parse_wkt = _parse_rec = _parse_message
 
-    def _check_items(self, b, idx, bodies, rows, seqs):
-        """Parse message bodies as one batch, body k in row ``rows[k]`` at
-        wire position ``seqs[k]``; a malformed body fails its row.
+    def _check_items(self, b, idx, bodies, rows):
+        """Parse message bodies as one batch, body k in row ``rows[k]``; a
+        malformed body fails its row.
         Returns the parsed sub-batch, or None for a recursive type
         (validated only)."""
         sub = self.subs[idx]
@@ -932,20 +905,20 @@ class _Decoder:
         else:
             parsed = sub.parse(bodies)
             bad = parsed.bad
-        b.fail(rows[bad], "malformed nested message", seqs[bad])
+        b.fail(rows[bad], "malformed nested message")
         return parsed
 
     def _parse_rep_msg(self, b, field, idx, recs, eff):
         # one standalone item per occurrence: no merge across them
-        bodies = b.slices(recs.start, recs.end, recs.unit, recs.seq, Kind.BYTES)
-        return recs.unit, recs.seq, self._check_items(b, idx, bodies, recs.unit, recs.seq)
+        bodies = b.slices(recs.start, recs.end, recs.unit, Kind.BYTES)
+        return recs.unit, self._check_items(b, idx, bodies, recs.unit)
 
     def _parse_repeated(self, b, field, idx, recs, eff):
         kind = field.kind
         if kind in _LEN_KINDS:
             # strings/bytes never pack: one item per record, whatever
             # its wire type, like the row path
-            return recs.unit, b.slices(recs.start, recs.end, recs.unit, recs.seq, kind)
+            return recs.unit, b.slices(recs.start, recs.end, recs.unit, kind)
         pk = recs.end >= 0  # packed bodies; the rest are single elements
         if not pk.any():
             return recs.unit, recs.val
@@ -958,7 +931,7 @@ class _Decoder:
             b.rowend[recs.unit[pk]],
             _FIXED_WIDTH.get(kind, -1),
         )
-        b.fail(recs.unit[pk][perr], "truncated packed body", recs.seq[pk][perr])
+        b.fail(recs.unit[pk][perr], "truncated packed body")
         n_elems = np.ones(len(recs.unit), dtype=np.int64)
         n_elems[pk] = counts
         off = np.cumsum(n_elems) - n_elems
@@ -973,17 +946,17 @@ class _Decoder:
         key_f, val_f = field.message.fields_by_number[1], field.message.fields_by_number[2]
         m = len(recs.unit)
         log, err, _ = _tokenize(b.buf, recs.start, recs.end, recs.end, self.entry_tables[idx])
-        b.fail(recs.unit[err], "malformed map entry", recs.seq[err])
+        b.fail(recs.unit[err], "malformed map entry")
         keys = self._entry_side(b, key_f, log[0], m, recs)
         if val_f.kind is not Kind.MESSAGE:
             return recs.unit, keys, self._entry_side(b, val_f, log[1], m, recs)
         # message values: an entry's value pieces merge; an entry with
         # none reads the default message, decoded from b""
-        bodies, _, extra = _join_pieces(b.raw, log[1], None, m)
+        bodies, extra = _join_pieces(b.raw, log[1], None, m)
         if extra is not None:
-            ents, pieces, _ = extra
-            self._check_items(b, idx, pieces, recs.unit[ents], recs.seq[ents])
-        return recs.unit, keys, self._check_items(b, idx, bodies, recs.unit, recs.seq)
+            ents, pieces = extra
+            self._check_items(b, idx, pieces, recs.unit[ents])
+        return recs.unit, keys, self._check_items(b, idx, bodies, recs.unit)
 
     def _entry_side(self, b, fld, recs, m, entries):
         """One entry subfield, last occurrence per entry; absent reads
@@ -991,9 +964,7 @@ class _Decoder:
         li = _last(recs.unit)
         ents = recs.unit[li]
         if fld.kind in _LEN_KINDS:
-            every = b.slices(
-                recs.start, recs.end, entries.unit[recs.unit], entries.seq[recs.unit], fld.kind
-            )
+            every = b.slices(recs.start, recs.end, entries.unit[recs.unit], fld.kind)
             cells = ["" if fld.kind is Kind.STRING else b""] * m
             for e, k in zip(ents.tolist(), li.tolist()):
                 cells[e] = every[k]
@@ -1006,11 +977,10 @@ class _Decoder:
 
     def finish(self, b: _Batch) -> list:
         bad_before = b.bad.copy()
-        done = {
-            idx: getattr(self, "_finish_" + klass)(b, field, idx, b.parsed[idx])
-            for klass, field, idx in self.finish_order
-        }
-        columns = [done[idx] for _, _, idx in self.plan]
+        columns = [
+            getattr(self, "_finish_" + klass)(b, field, idx, b.parsed[idx])
+            for klass, field, idx in self.plan
+        ]
         late = np.flatnonzero(b.bad & ~bad_before)
         if len(late):
             # a conversion error nulls its whole row, also in the
@@ -1023,22 +993,22 @@ class _Decoder:
             field.kind, u, live, field, self.enum_name_mode, self.u64_decimal
         )
 
-    def _sub_finish(self, b, idx, parsed, rows, dead=None):
+    def _sub_finish(self, b, idx, parsed, rows):
         """Finish a sub-batch whose item k belongs to row ``rows[k]``: the
-        ``dead`` items (by default those of rows already bad) are
-        skipped, and an item's conversion error fails its row."""
-        parsed.bad |= b.bad[rows] if dead is None else dead
+        items of rows already bad are skipped, and an item's conversion
+        error fails its row."""
+        parsed.bad |= b.bad[rows]
         before = parsed.bad.copy()
         cols = self.subs[idx].finish(parsed)
         b.fail(rows[parsed.bad & ~before], "invalid nested value")
         return cols
 
-    def _item_cells(self, b, idx, parsed, rows, dead=None) -> list:
+    def _item_cells(self, b, idx, parsed, rows) -> list:
         """Parsed message items -> one cell per item: a tuple, or the
         WKT's scalar form; ``()`` for a pruned recursive type."""
         if parsed is None:
             return [()] * len(rows)
-        cols = self._sub_finish(b, idx, parsed, rows, dead)
+        cols = self._sub_finish(b, idx, parsed, rows)
         wmt = self.item_wkt.get(idx)
         if wmt is None:
             lists = [_aslist(c) for c in cols]
@@ -1143,12 +1113,8 @@ class _Decoder:
         return col
 
     def _finish_rep_msg(self, b, field, idx, parsed):
-        rows, seqs, sub = parsed
-        # the top-level row path converts each item as it parses it, so
-        # an item before its row's first wire error still converts (and
-        # may hard-raise); nested levels convert whole rows, in field order
-        dead = None if self.nested else seqs >= b.err_seq[rows]
-        return _per_row(b, rows, self._item_cells(b, idx, sub, rows, dead))
+        rows, sub = parsed
+        return _per_row(b, rows, self._item_cells(b, idx, sub, rows))
 
     def _finish_repeated(self, b, field, idx, parsed):
         # missing and empty both finalize to [] like the row path
@@ -1202,10 +1168,6 @@ def compile_wire_to_batch(
     if mtype.full_name in _trace:
         return None  # recursive shapes keep the row path
     trace = _trace + (mtype.full_name,)
-    # NESTED levels mirror parse_into, which hands the Timestamp body a
-    # STRICT slice (reads raise at the slice end); only the TOP level's
-    # specialized h_ts reader has the soft row-end limit.
-    nested = bool(_trace)
     # Shared across the compile tree: (full_name) -> cell holding the
     # STRICT validator of a recursive type (see _Validator).
     registry: dict = {} if _registry is None else _registry
@@ -1214,11 +1176,7 @@ def compile_wire_to_batch(
         cell = registry.get(sub_mt.full_name)
         if cell is None:
             cell = registry[sub_mt.full_name] = {"in_progress": True}
-            # the sentinel ancestor keeps ``nested`` True without
-            # tripping the top-of-compile recursion guard
-            cell["fn"] = compile_wire_to_batch(
-                sub_mt, config, permissive, ("<strict-root>",), registry
-            )
+            cell["fn"] = compile_wire_to_batch(sub_mt, config, permissive, (), registry)
             cell["in_progress"] = False
             if cell["fn"] is None:
                 return None  # validator shape unsupported -> row path
@@ -1295,4 +1253,4 @@ def compile_wire_to_batch(
             plan.append(("scalar", field, idx))
         else:
             return None
-    return _Decoder(plan, subs, item_wkt, entry_tables, config, permissive, nested)
+    return _Decoder(plan, subs, item_wkt, entry_tables, config, permissive)

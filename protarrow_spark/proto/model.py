@@ -171,12 +171,19 @@ class MessageType:
 
     def __setattr__(self, name: str, value) -> None:
         # Reassigning `fields` (recursive types bind them after
-        # construction) invalidates the derived-index caches below —
-        # they are on the per-message hot path of the wire codec and
-        # recomputing the dicts per access dominated profiles.
+        # construction) invalidates the caches derived from them: the
+        # indexes below, on the per-message hot path of the wire codec
+        # (recomputing the dicts per access dominated profiles), and
+        # the compiled wire parser of ``proto/message.py``.
         object.__setattr__(self, name, value)
         if name == "fields":
             object.__setattr__(self, "_idx_cache", None)
+            object.__setattr__(self, "_parse_cache", None)
+
+    def __getstate__(self) -> dict:
+        # the caches rebuild on first use; the compiled parser's
+        # closures need not travel with a pickled type
+        return {f.name: getattr(self, f.name) for f in dataclasses.fields(self)}
 
     def _indexes(self) -> tuple:
         cached = getattr(self, "_idx_cache", None)

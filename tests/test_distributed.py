@@ -436,11 +436,9 @@ def test_compiled_wire_decoder_packed_length_bounds() -> None:
 
 
 def test_compiled_wire_decoder_timestamp_merge_and_oneof() -> None:
-    """The specialized Timestamp handler (r8: direct two-varint parse,
-    no Message allocation) must keep the exact merge semantics of the
-    generic path: concatenated occurrences MERGE (seconds from one,
-    nanos from another), later oneof siblings clear it, unknown
-    subfields skip."""
+    """A top-level Timestamp keeps protobuf's merge semantics:
+    concatenated occurrences MERGE (seconds from one, nanos from
+    another), later oneof siblings clear it, unknown subfields skip."""
     import datetime as dt
 
     from protarrow_spark.conversion.distributed import compile_wire_to_row

@@ -364,3 +364,44 @@ def test_truncated_unknown_field_skip_raises() -> None:
     # unknown field 9, wire type I32, no bytes present
     with pytest.raises(ValueError, match="truncated"):
         parse(bytes([(9 << 3) | 5]), mt)
+
+
+def test_truncated_varint_raises_value_error() -> None:
+    """A varint cut off by the end of its buffer (a row, or a nested
+    body's own slice) raises the same 'truncated message' ValueError as
+    an overrunning length prefix."""
+    with pytest.raises(ValueError, match="truncated"):
+        parse(b"\x08\x96", INT_MSG)
+    nested = MessageType(
+        "trunc.Outer", (Field("m", 1, Kind.MESSAGE, message=INT_MSG), Field("n", 2, Kind.INT64))
+    )
+    # m's body is 08 96; the varint's continuation bit points past it
+    with pytest.raises(ValueError, match="truncated"):
+        parse(b"\x0a\x02\x08\x96\x10\x01", nested)
+
+
+def test_compiled_parser_follows_fields_and_pickles() -> None:
+    """The compiled parser is cached per type: reassigning ``fields``
+    (how recursive types are bound) recompiles it, and a pickled type
+    carries no compiled parser but parses the same."""
+    import pickle
+
+    mt = MessageType("cache.T", (Field("a", 1, Kind.INT32),))
+    wire = serialize(Message(mt, a=5))
+    assert parse(wire, mt).a == 5
+    mt.fields = (Field("b", 1, Kind.INT32),)
+    assert parse(wire, mt).b == 5 and "a" not in parse(wire, mt)._values
+    msgs = [Message(fixtures.EXAMPLE, string_value="x", int32_value=3)]
+    parse(serialize(msgs[0]), fixtures.EXAMPLE)
+    copy = pickle.loads(pickle.dumps(fixtures.EXAMPLE))
+    assert "_parse_cache" not in copy.__dict__
+    assert parse(serialize(msgs[0]), copy)._values == msgs[0]._values
+
+
+def test_group_field_fails_only_when_on_the_wire() -> None:
+    """A type may declare a proto2 group (the descriptor adapter maps
+    them); parsing fails only on a record of that field."""
+    mt = MessageType("g.T", (Field("a", 1, Kind.INT32), Field("g", 2, Kind.GROUP)))
+    assert parse(b"\x08\x05", mt)._values == {"a": 5}
+    with pytest.raises(TypeError, match="group"):
+        parse(b"\x08\x05\x13\x14", mt)

@@ -922,10 +922,9 @@ def test_nested_message_decode_incl_merge():
 
 @pytest.mark.parametrize("seed", [700, 701, 702, 703])
 def test_nested_message_decode_corrupt_permissive(seed):
-    """The nesting-level semantics difference is pinned here: the row
-    path's TOP-level Timestamp reader has a soft body limit, while
-    NESTED levels (parse_into) slice strictly — corrupt bytes must
-    null/raise identically at both depths."""
+    """Corrupt bytes at the top level and inside nested messages must
+    null identically in both paths: every level parses strictly, each
+    message body from its own slice."""
     wires = _mutate(_nested_wires(300, seed), seed)
     wires += [b"\x12\x03\x08", b"\x12\x02\x12\x05"]
     dr = compile_wire_to_row(NESTED_MT, CFG)
@@ -956,6 +955,40 @@ def test_nested_message_decode_corrupt_permissive(seed):
         for j in range(len(NESTED_MT.fields)):
             a = cols[j][i] if not isinstance(cols[j], pd.Series) else cols[j].iloc[i]
             assert _nested_eq(a, s[j]), f"row {i} field {j}"
+
+
+TS_TAIL_MT = MessageType(
+    "vd.TsTail",
+    (
+        Field("ts", 1, Kind.MESSAGE, message=TIMESTAMP),
+        Field("n", 2, Kind.INT64),
+    ),
+)
+
+
+@pytest.mark.parametrize("ts_type", ["timestamp", "long_nanos"])
+def test_top_level_timestamp_body_is_strict(ts_type):
+    """A top-level Timestamp body whose last subfield varint continues
+    past the body end fails its row in both paths, as it does in a
+    nested message and in protobuf itself: strict raises ValueError,
+    permissive nulls the row. (The varint used to run on into the next
+    record and the row decoded.)"""
+    cfg = ProtarrowSparkConfig(timestamp_type=ts_type)
+    good = b"\x0a\x02\x08\x05\x10\x07"  # ts{seconds: 5}, n: 7
+    bad = b"\x0a\x02\x08\x85\x10\x07"  # seconds' varint runs into n
+    dr = compile_wire_to_row(TS_TAIL_MT, cfg)
+    with pytest.raises(ValueError):
+        dr(bad)
+    with pytest.raises(ValueError):
+        compile_wire_to_batch(TS_TAIL_MT, cfg)([good, bad])
+    cols, bad_rows = compile_wire_to_batch(TS_TAIL_MT, cfg, permissive=True)([good, bad])
+    assert bad_rows.tolist() == [False, True]
+    row = dr(good)
+    assert row[1] == 7
+    for j, cell in enumerate(row):
+        col = cols[j]
+        got = col.iloc[0] if isinstance(col, pd.Series) else col[0]
+        assert got == cell
 
 
 # --- record loop: deterministic counters and out-of-step rows ---------------

@@ -23,7 +23,7 @@ from hypothesis import strategies as st
 
 from protarrow_spark.config import ProtarrowSparkConfig
 from protarrow_spark.conversion.distributed import compile_row_to_wire
-from protarrow_spark.conversion.vectorized import compile_batch_to_wire
+from protarrow_spark.conversion.vectorized import Unvectorizable, compile_batch_to_wire
 from protarrow_spark.proto.model import (
     DATE,
     DURATION,
@@ -430,6 +430,70 @@ def test_map_message_value_empty_body_still_emits():
     out = compile_batch_to_wire(mt, CFG)([df["m"]])[0]
     # entry len 2: key "" skipped (emit_default=False), value tag + len 0
     assert out.hex() == "0a021200"
+
+
+_NULLABLE = ProtarrowSparkConfig(list_value_nullable=True, map_value_nullable=True)
+
+
+_NULL_ITEM_CASES = [
+    (DV, 1.5),
+    (FV, 2.5),
+    (I64V, -3),
+    (U64V, _u64(_NULLABLE, 2**63 + 5)),
+    (I32V, -4),
+    (U32V, 7),
+    (BV, True),
+    (SV, "a"),
+    (BYV, b"b"),
+    (EMPTY, ()),
+]
+
+
+@pytest.mark.parametrize(
+    "wmt, value", _NULL_ITEM_CASES, ids=[m.name for m, _ in _NULL_ITEM_CASES]
+)
+def test_null_wrapper_item_encodes_empty_body(wmt, value):
+    """A None item of a repeated wrapper (or Empty) field and a None
+    wrapper map value encode as an empty wrapper body, as the row
+    codec's wrapper decoders build an empty message from None: both
+    modes are byte-identical to compile_row_to_wire."""
+    rep = MessageType(
+        "vw.NullRep", (Field("xs", 1, Kind.MESSAGE, repeated=True, message=wmt),)
+    )
+    mp = MessageType(
+        "vw.NullMap",
+        (map_field("m", 1, Kind.STRING, Kind.MESSAGE, value_message=wmt),),
+    )
+    for mt, cells, only_null in (
+        (rep, [[value, None], [None], [value], None, []], b"\n\x00"),
+        (
+            mp,
+            [{"a": value, "b": None}, {"c": None}, {"a": value}, None, {}],
+            b"\n\x05\n\x01c\x12\x00",  # entry: key "c", empty value
+        ),
+    ):
+        cells = pd.Series(cells, dtype=object)
+        slow = [compile_row_to_wire(mt, _NULLABLE)((c,)) for c in cells]
+        assert slow[1] == only_null
+        for permissive in (False, True):
+            fast = compile_batch_to_wire(mt, _NULLABLE, permissive=permissive)([cells])
+            assert list(fast) == slow, (mt.full_name, permissive)
+
+
+def test_nan_wrapper_item_takes_the_row_codec():
+    """A NaN item of a repeated DoubleValue field is a value to the row
+    codec (the wrapper decoder stores it), not a null, so the batch
+    encoder hands the batch to the row codec instead of failing the
+    row (``Unvectorizable`` is the fallback signal)."""
+    mt = MessageType(
+        "vw.NanRep", (Field("xs", 1, Kind.MESSAGE, repeated=True, message=DV),)
+    )
+    cells = pd.Series([[1.5, float("nan")]], dtype=object)
+    item = b"\n\t\t" + _struct.pack("<d", float("nan"))
+    assert compile_row_to_wire(mt, _NULLABLE)((cells[0],)).endswith(item)
+    for permissive in (False, True):
+        with pytest.raises(Unvectorizable):
+            compile_batch_to_wire(mt, _NULLABLE, permissive=permissive)([cells])
 
 
 # --- recursive types -----------------------------------------------------------
