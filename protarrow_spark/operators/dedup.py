@@ -4,10 +4,14 @@ Not present in the reference (a conversion library, SURVEY.md §2.2);
 these are the north-star LLM-pipeline operators, built Spark-first:
 
 * exact:    hash-groupBy on a canonical text digest — one shuffle.
-* n-gram Jaccard: inverted-index self-join on shingles with a
-  document-frequency cap so hot shingles can't quadratically blow up
-  the join at 100 TB; intersection counts exclude capped shingles, so
-  the reported Jaccard is a lower bound once the cap triggers.
+* n-gram pairs: one shingle-pair path (``_shingle_pairs``) counts
+  each document pair's shared shingles under a document-frequency cap
+  (so hot shingles can't quadratically blow up the join at 100 TB)
+  next to both full set sizes; Jaccard, containment and the Jaccard
+  band histogram are projections of that one count, taken on a sparse
+  inverted-index join or a blocked dense matmul. Intersection counts
+  exclude capped shingles, so the reported scores are lower bounds
+  once the cap triggers.
 * MinHash + LSH: shingle -> k minhashes -> banded keys -> bucket
   equi-join. Turns all-pairs similarity into a shuffle join on band
   keys; estimated Jaccard from signature agreement.
@@ -20,6 +24,10 @@ murmur ``hash()`` so results are verifiable against any SQL oracle.
 """
 
 from __future__ import annotations
+
+import operator
+import sys
+from functools import reduce
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
@@ -84,40 +92,94 @@ def ngram_jaccard_pairs(
     max_df: int = MAX_SHINGLE_DF,
     dense_vocab_cap: int | None = None,
     block_size: int = 2048,
-    include_sizes: bool = False,
 ) -> DataFrame:
     """Near-duplicate pairs by n-gram Jaccard similarity.
 
-    Candidate pairs come from an inverted-index self-join restricted to
-    shingles with document frequency <= ``max_df``. The intersection
-    count ``n_common`` is computed over those capped shingles while the
-    set sizes use the full shingle sets, so once ``max_df`` triggers the
-    reported Jaccard is a *lower bound* of the true Jaccard (pairs held
-    together only by corpus-wide boilerplate shingles are deliberately
-    down-weighted at scale).
+    Candidate pairs share at least one shingle with document frequency
+    <= ``max_df``. The intersection count ``n_common`` is computed over
+    those capped shingles while the set sizes use the full shingle
+    sets, so once ``max_df`` triggers the reported Jaccard is a *lower
+    bound* of the true Jaccard (pairs held together only by
+    corpus-wide boilerplate shingles are deliberately down-weighted at
+    scale). The physical strategy (sparse join or blocked dense
+    matmul, same rows either way) is :func:`_shingle_pairs`'.
 
-    Adaptive physical strategy (same results either way):
+    Output: doc_a, doc_b, n_common, jaccard (double).
+    """
+    return _shingle_pairs(
+        df, id_col, text_col, "jaccard", threshold, n, max_df, dense_vocab_cap, block_size
+    )
 
-    * **Sparse path** (default): inverted-index self-join on 60-bit
-      md5-derived shingle keys, one row per (pair, shared shingle). A
-      hash collision would merely merge two shingles on BOTH engines
-      (the oracle applies the identical hash), so verification is
+
+#: Pair scores as functions of (n_common, n_a, n_b). Written once and
+#: evaluated on Spark Columns by the sparse join and on int64 numpy
+#: arrays by the dense kernel, so both paths divide the same integers
+#: into the same doubles — the same expressions the oracle SQL runs.
+_SCORES = {
+    "jaccard": lambda c, a, b: c / (a + b - c),
+    "containment_a": lambda c, a, b: c / a,
+    "containment_b": lambda c, a, b: c / b,
+}
+
+#: mode -> (output schema, scores of which any must reach the
+#: threshold); ``{id}`` is the id column's type. "sizes" is the
+#: Jaccard pair stream plus both full set sizes, from which any band
+#: histogram can be recomputed; "bands" is that histogram,
+#: (band_scale * n_common) div union per pair, counted in-task on the
+#: dense path.
+_MODES = {
+    "jaccard": ("doc_a {id}, doc_b {id}, n_common bigint, jaccard double", ("jaccard",)),
+    "sizes": (
+        "doc_a {id}, doc_b {id}, n_common bigint, jaccard double, n_a bigint, n_b bigint",
+        ("jaccard",),
+    ),
+    "containment": (
+        "doc_a {id}, doc_b {id}, n_common bigint, "
+        "containment_a double, containment_b double",
+        ("containment_a", "containment_b"),
+    ),
+    "bands": ("band bigint, n_pairs bigint", ("jaccard",)),
+}
+
+
+def _columns(mode: str) -> list[str]:
+    return [f.split()[0] for f in _MODES[mode][0].split(", ")]
+
+
+def _shingle_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    mode: str,
+    threshold: float,
+    n: int,
+    max_df: int,
+    dense_vocab_cap: int | None,
+    block_size: int,
+    band_scale: int = 20,
+) -> DataFrame:
+    """The one shingle-pair path: 60-bit md5 shingle keys, then per
+    pair ``n_common`` (shared shingles of document frequency <=
+    ``max_df``) and the full set sizes ``n_a``/``n_b``, projected to
+    ``mode``'s columns (see ``_MODES``).
+
+    Adaptive physical strategy (same rows either way):
+
+    * **Sparse path** (default): inverted-index self-join on the
+      shingle keys, one row per (pair, shared shingle). A hash
+      collision would merely merge two shingles on BOTH engines (the
+      oracle applies the identical hash), so verification is
       unaffected. Right when shared-shingle volume is sparse — the
       normal regime for real text.
     * **Dense path** (opt-in via ``dense_vocab_cap``; probing costs a
       full vocab scan, so the caller asserts density rather than every
       sparse-regime call paying to discover it isn't): when the
       distinct-shingle count fits the cap, the shingle space is
-      structurally dense —
-      almost every pair overlaps, and the join would emit
-      Theta(pairs x shared) rows (224M at sf0.1 on the synthetic
-      corpus, 112 s). Instead, docs are hash-blocked and every block
-      pair cogroups once; per block pair one float32 matmul over
-      dense doc x vocab incidence matrices yields ALL pairwise
-      intersection counts (exact: counts <= vocab < 2^24). Data moved
-      is n_blocks x corpus rows — the right trade exactly when the
-      output itself is near-quadratic. 112 s -> 7 s at sf0.1 (vs
-      15.6 s for single-node DuckDB), identical rows.
+      structurally dense — almost every pair overlaps, and the join
+      would emit Theta(pairs x shared) rows (224M at sf0.1 on the
+      synthetic corpus, 112 s). Instead :func:`_jaccard_dense_blocked`
+      counts every pair's intersection with blocked matmuls: 112 s ->
+      7 s at sf0.1 (vs 15.6 s for single-node DuckDB), identical rows.
     """
     grams = doc_shingles(df, id_col, text_col, n).select(
         F.col(id_col),
@@ -129,7 +191,6 @@ def ngram_jaccard_pairs(
         # it once so the scan+explode+distinct pipeline isn't re-run
         # per action (r13 opt: 3 full shingle pipelines -> 1).
         grams = grams.localCheckpoint(eager=True)
-    sizes = grams.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_grams"))
     vocab = grams.groupBy("g").agg(F.count(F.lit(1)).alias("df_g"))
     if dense_vocab_cap:
         # Probe by collecting up to cap+1 vocab rows: if the vocab fits,
@@ -138,36 +199,25 @@ def ngram_jaccard_pairs(
         probe = vocab.limit(dense_vocab_cap + 1).collect()
         if len(probe) <= dense_vocab_cap:
             return _jaccard_dense_blocked(
-                grams,
-                df.count(),
-                probe,
-                id_col,
-                threshold,
-                max_df,
-                block_size,
-                include_sizes=include_sizes,
+                grams, df.count(), probe, id_col, mode, threshold, max_df,
+                block_size, band_scale,
             )
-
-    return _jaccard_sparse_pairs(
-        grams, sizes, vocab, id_col, threshold, max_df, include_sizes
-    )
+    return _jaccard_sparse_pairs(grams, vocab, id_col, mode, threshold, max_df, band_scale)
 
 
 def _jaccard_sparse_pairs(
     grams: DataFrame,
-    sizes: DataFrame,
     vocab: DataFrame,
     id_col: str,
+    mode: str,
     threshold: float,
     max_df: int,
-    include_sizes: bool = False,
+    band_scale: int,
 ) -> DataFrame:
-    """Sparse-regime pair join over ALREADY-BUILT shingle frames, so
-    callers that computed grams/sizes for their own probing (the
-    threshold sweep's band histogram) don't pay the shingle explode
-    and vocab aggregation twice on the fallback path."""
-    rare_shingles = vocab.filter(F.col("df_g") <= max_df)
-    rare = grams.join(rare_shingles.select("g"), "g")
+    """Sparse regime: rare-shingle self-join -> ``n_common`` per pair
+    -> join of both full set sizes, then the mode's scores."""
+    sizes = grams.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_grams"))
+    rare = grams.join(vocab.filter(F.col("df_g") <= max_df).select("g"), "g")
     a = rare.select(F.col(id_col).alias("doc_a"), "g")
     b = rare.select(F.col(id_col).alias("doc_b"), "g")
     inter = (
@@ -178,22 +228,21 @@ def _jaccard_sparse_pairs(
     )
     sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_grams").alias("n_a"))
     sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_grams").alias("n_b"))
-    out_cols = ["doc_a", "doc_b", "n_common", "jaccard"]
-    if include_sizes:
-        # The full-set sizes are already joined for the denominator —
-        # exposing them is free and saves callers (the threshold
-        # sweep) a second shingle pass + re-join of the pair stream.
-        out_cols += ["n_a", "n_b"]
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
+    pairs = inter.join(sa, "doc_a").join(sb, "doc_b")
+    scores = _MODES[mode][1]
+    for s in scores:
+        pairs = pairs.withColumn(s, _SCORES[s](F.col("n_common"), F.col("n_a"), F.col("n_b")))
+    pairs = pairs.filter(reduce(operator.or_, (F.col(s) >= threshold for s in scores)))
+    if mode == "bands":
+        # The pair stream stays JVM-side (no Arrow hop), so banding
+        # after the join costs one codegen'd projection.
+        band = F.expr(f"({band_scale} * n_common) div (n_a + n_b - n_common)")
+        return (
+            pairs.select(band.alias("band"))
+            .groupBy("band")
+            .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
         )
-        .filter(F.col("jaccard") >= threshold)
-        .select(*out_cols)
-    )
+    return pairs.select(*_columns(mode))
 
 
 def _jaccard_dense_blocked(
@@ -201,22 +250,27 @@ def _jaccard_dense_blocked(
     n_docs: int,
     vocab_rows: list,
     id_col: str,
+    mode: str,
     threshold: float,
     max_df: int,
     block_size: int,
-    mode: str = "jaccard",
-    include_sizes: bool = False,
-    band_scale: int = 20,
+    band_scale: int,
 ) -> DataFrame:
-    """Dense-vocab Jaccard: blocked all-pairs intersection counting.
+    """Dense-vocab regime: blocked all-pairs intersection counting.
 
     Docs are assigned to ``ceil(n / block_size)`` blocks by id hash;
     each unordered block pair (i <= j) cogroups once, and one
     ``A @ B.T`` float32 matmul over doc x vocab 0/1 incidence
     matrices produces every pairwise intersection count in the block
-    pair. Shingles over ``max_df`` are excluded from the matrices
-    (candidate semantics) while ``n_grams`` sizes keep the full sets
-    — identical semantics to the sparse path.
+    pair (exact: counts <= vocab < 2^24). Data moved is n_blocks x
+    corpus rows — the right trade exactly when the output itself is
+    near-quadratic. Shingles over ``max_df`` are excluded from the
+    matrices (candidate semantics) while ``n_grams`` sizes keep the
+    full sets, and only pairs sharing a counted shingle are kept —
+    identical semantics to the sparse path. In "bands" mode each task
+    reduces its pairs to a ~band_scale-row histogram (aggregation
+    pushdown): the pair stream never crosses the Arrow boundary or a
+    shuffle.
     """
     import numpy as np
     import pandas as pd
@@ -267,16 +321,12 @@ def _jaccard_dense_blocked(
         F.greatest("blk", "other").alias("gj"),
     )
 
-    id_type = grams.schema[id_col].dataType.simpleString()
-
-    if mode == "bands":
-        out_cols = ["band", "n_pairs"]
-    elif mode == "jaccard":
-        out_cols = ["doc_a", "doc_b", "n_common", "jaccard"]
-    else:
-        out_cols = ["doc_a", "doc_b", "n_common", "containment_a", "containment_b"]
-    if include_sizes and mode != "bands":
-        out_cols += ["n_a", "n_b"]
+    schema, scores = _MODES[mode]
+    out_cols = _columns(mode)
+    # A pair scores above 0 exactly when it shares a counted shingle,
+    # so a threshold floored at the smallest positive double keeps
+    # only those pairs, as the sparse join does — at no per-pair cost.
+    threshold = max(threshold, sys.float_info.min)
 
     # Row-chunked postprocessing of the intersection matrix (r13 opt,
     # guide §5 "per-task state"): the former code materialized the full
@@ -288,8 +338,7 @@ def _jaccard_dense_blocked(
     # box). Iterating row chunks with same-shaped scratch keeps the
     # working set at a few MB per task — the allocator reuses the same
     # pages across chunks — and bounds task memory regardless of block
-    # size. Arithmetic per pair is IDENTICAL (same int64/float64 ops in
-    # the same order), so every emitted value is unchanged.
+    # size.
     CHUNK_ROWS = 256
 
     def block_pair(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -337,27 +386,22 @@ def _jaccard_dense_blocked(
         for r0 in range(0, n_l, CHUNK_ROWS):
             r1 = min(r0 + CHUNK_ROWS, n_l)
             common = C[r0:r1].astype(np.int64)  # (chunk, n_r)
-            union = ng_l[r0:r1, None] + ng_r[None, :] - common
-            if mode == "containment":
-                ca = common / ng_l[r0:r1, None]
-                cb = common / ng_r[None, :]
-                keep = (ca >= threshold) | (cb >= threshold)
-            else:
-                keep = common / union >= threshold
+            na, nb = ng_l[r0:r1, None], ng_r[None, :]
+            keep = reduce(
+                operator.or_, (_SCORES[s](common, na, nb) >= threshold for s in scores)
+            )
             if triu:
                 # pairs i < j only (ids are sorted ascending, so the
                 # upper triangle IS the canonical doc_a < doc_b order)
                 keep &= col[None, :] > np.arange(r0, r1)[:, None]
             if mode == "bands":
-                # Aggregation pushdown: the (quadratic) pair stream
-                # never leaves numpy — only ~|bands| histogram rows do.
-                band = (band_scale * common[keep]) // union[keep]
+                band = (band_scale * common[keep]) // (na + nb - common)[keep]
                 hist += np.bincount(band, minlength=band_scale + 1)
                 continue
             ri, ci = np.nonzero(keep)  # kept pairs only: small
-            l_ids, r_ids = ids_l[ri + r0], ids_r[ci]
             ck = common[ri, ci]
             na_k, nb_k = ng_l[ri + r0], ng_r[ci]
+            l_ids, r_ids = ids_l[ri + r0], ids_r[ci]
             if triu:
                 ids_a, ids_b = l_ids, r_ids
             else:
@@ -371,17 +415,11 @@ def _jaccard_dense_blocked(
                     np.where(swap, nb_k, na_k),
                     np.where(swap, na_k, nb_k),
                 )
-            acc["doc_a"].append(ids_a)
-            acc["doc_b"].append(ids_b)
-            acc["n_common"].append(ck)
-            if mode == "jaccard":
-                acc["jaccard"].append(ck / (na_k + nb_k - ck))
-            else:
-                acc["containment_a"].append(ck / na_k)
-                acc["containment_b"].append(ck / nb_k)
-            if include_sizes:
-                acc["n_a"].append(na_k)
-                acc["n_b"].append(nb_k)
+            vals = {
+                "doc_a": ids_a, "doc_b": ids_b, "n_common": ck, "n_a": na_k, "n_b": nb_k,
+            }
+            for c in out_cols:
+                acc[c].append(vals[c] if c in vals else _SCORES[c](ck, na_k, nb_k))
         if mode == "bands":
             nz = np.nonzero(hist)[0]
             return pd.DataFrame(
@@ -400,22 +438,15 @@ def _jaccard_dense_blocked(
     # exempt from AQE coalescing and the groupBy reuses it (no second
     # shuffle).
     parallelism = grams.sparkSession.sparkContext.defaultParallelism
-    if mode == "bands":
-        schema = "band bigint, n_pairs bigint"
-    elif mode == "jaccard":
-        schema = f"doc_a {id_type}, doc_b {id_type}, n_common bigint, jaccard double"
-    else:
-        schema = (
-            f"doc_a {id_type}, doc_b {id_type}, n_common bigint, "
-            "containment_a double, containment_b double"
-        )
-    if include_sizes and mode != "bands":
-        schema += ", n_a bigint, n_b bigint"
-    return (
+    id_type = grams.schema[id_col].dataType.simpleString()
+    out = (
         pairs.repartition(parallelism, "gi", "gj")
         .groupBy("gi", "gj")
-        .applyInPandas(block_pair, schema)
+        .applyInPandas(block_pair, schema.format(id=id_type))
     )
+    if mode == "bands":
+        return out.groupBy("band").agg(F.sum("n_pairs").cast("long").alias("n_pairs"))
+    return out
 
 
 #: Universal-hash modulus for MinHash: the Mersenne prime 2^31 - 1.
@@ -890,13 +921,12 @@ def ngram_containment_pairs(
     because the union is dominated by the larger document. A pair is
     emitted when EITHER direction's containment reaches ``threshold``.
 
-    Scale: identical adaptive topology to :func:`ngram_jaccard_pairs`
-    — sparse inverted-index self-join by default, and the SAME blocked
-    dense-matmul cogroup when the caller asserts a vocab-dense corpus
-    (``dense_vocab_cap``); only the scoring differs (divide by each
-    side's own set size instead of the union — note the dense path
-    swaps sizes with the canonical id order, which symmetric Jaccard
-    never notices).
+    Scale: the same shingle-pair path as :func:`ngram_jaccard_pairs`
+    (:func:`_shingle_pairs`: the sparse inverted-index self-join by
+    default, the blocked dense matmul when the caller asserts a
+    vocab-dense corpus with ``dense_vocab_cap``) — the same pairs'
+    ``n_common``, ``n_a`` and ``n_b``, scored against each side's own
+    set size instead of the union.
 
     Recall caveat: ``n_common`` counts RARE shingles only (document
     frequency <= ``max_df``) while the denominators use full set
@@ -910,45 +940,9 @@ def ngram_containment_pairs(
     Output: doc_a, doc_b, n_common, containment_a (of doc_a's set),
     containment_b, both double.
     """
-    grams = doc_shingles(df, id_col, text_col, n).select(
-        F.col(id_col),
-        F.conv(F.substring(F.md5("g"), 1, 15), 16, 10).cast("bigint").alias("g"),
-    )
-    if dense_vocab_cap:
-        # Same 3-actions-over-one-stream materialization as
-        # ngram_jaccard_pairs (r13 opt).
-        grams = grams.localCheckpoint(eager=True)
-    sizes = grams.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_grams"))
-    vocab = grams.groupBy("g").agg(F.count(F.lit(1)).alias("df_g"))
-    if dense_vocab_cap:
-        probe = vocab.limit(dense_vocab_cap + 1).collect()
-        if len(probe) <= dense_vocab_cap:
-            return _jaccard_dense_blocked(
-                grams, df.count(), probe, id_col, threshold, max_df, block_size,
-                mode="containment",
-            )
-    rare = grams.join(vocab.filter(F.col("df_g") <= max_df).select("g"), "g")
-    a = rare.select(F.col(id_col).alias("doc_a"), "g")
-    b = rare.select(F.col(id_col).alias("doc_b"), "g")
-    inter = (
-        a.join(b, "g")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("n_grams").alias("n_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("n_grams").alias("n_b"))
-    ca = F.col("n_common") / F.col("n_a")
-    cb = F.col("n_common") / F.col("n_b")
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn("containment_a", ca)
-        .withColumn("containment_b", cb)
-        .filter(
-            (F.col("containment_a") >= threshold) | (F.col("containment_b") >= threshold)
-        )
-        .select("doc_a", "doc_b", "n_common", "containment_a", "containment_b")
+    return _shingle_pairs(
+        df, id_col, text_col, "containment", threshold, n, max_df,
+        dense_vocab_cap, block_size,
     )
 
 
@@ -1103,47 +1097,7 @@ def jaccard_band_counts(
     Arrow boundary or any shuffle, which is the difference between
     moving ~20 rows and ~10M rows per block pair at sweep thresholds.
     """
-    grams = doc_shingles(df, id_col, text_col, n).select(
-        F.col(id_col),
-        F.conv(F.substring(F.md5("g"), 1, 15), 16, 10).cast("bigint").alias("g"),
-    )
-    if dense_vocab_cap:
-        # Same 3-actions-over-one-stream materialization as
-        # ngram_jaccard_pairs (r13 opt).
-        grams = grams.localCheckpoint(eager=True)
-    sizes = grams.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_grams"))
-    vocab = grams.groupBy("g").agg(F.count(F.lit(1)).alias("df_g"))
-    if dense_vocab_cap:
-        probe = vocab.limit(dense_vocab_cap + 1).collect()
-        if len(probe) <= dense_vocab_cap:
-            h = _jaccard_dense_blocked(
-                grams,
-                df.count(),
-                probe,
-                id_col,
-                threshold,
-                max_df,
-                block_size,
-                mode="bands",
-                band_scale=band_scale,
-            )
-            return h.groupBy("band").agg(
-                F.sum("n_pairs").cast("long").alias("n_pairs")
-            )
-    # Sparse regime: the pair stream stays JVM-side (no Arrow hop), so
-    # banding after the inverted-index join costs one codegen'd
-    # projection; reuse the sparse join body WITH the frames already
-    # built above — the fallback must not pay the shingle explode and
-    # vocab aggregation a second time.
-    pairs = _jaccard_sparse_pairs(
-        grams, sizes, vocab, id_col, threshold, max_df, include_sizes=True
-    )
-    return (
-        pairs.select(
-            F.expr(
-                f"({band_scale} * n_common) div (n_a + n_b - n_common)"
-            ).alias("band")
-        )
-        .groupBy("band")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"))
+    return _shingle_pairs(
+        df, id_col, text_col, "bands", threshold, n, max_df, dense_vocab_cap,
+        block_size, band_scale,
     )

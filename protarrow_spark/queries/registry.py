@@ -55,53 +55,6 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 #: SURVEY.md §2 row gets driver verification; redundant variants of
 #: already-covered families follow after and stay covered by
 #: tests/test_oracle_parity.py (same compare, run in pytest).
-#: Round-5 rotation: the driver grades the first 50 only, so each
-#: round swaps redundant family variants out for members never
-#: driver-checked before — coverage ACCUMULATES across rounds (the
-#: swapped-out names stay oracle-verified by tests/test_oracle_parity).
-#: Swapped out in r5: dedup_ngram_jaccard, dedup_simhash_hamming,
-#: sketch_kmv_distinct, sketch_hll_distinct, ann_cosine_topk,
-#: ann_ivf_topk, q3_shipping_priority, q6_revenue_forecast,
-#: agg_percentile_disc, window_topk_per_segment,
-#: set_union_priority_keys, scalar_json_extract (all gate-green in
-#: CORRECTNESS_r04); late-r5, five MORE r4-green entries rotate out
-#: (dedup_minhash_lsh, sketch_cms_heavy_hitters, pivot_event_matrix,
-#: window_sessionize, score_quality_linear) so the five operators NEW
-#: this round — graph_triangle_count, text_bm25_topk,
-#: text_bpe_encode, ann_mmr_select, score_unigram_surprisal — get
-#: driver verification on their first appearance; stream_session_windows
-#: (r4-green) likewise rotates out for the new stream_cms_topk, and
-#: q5_local_supplier_volume / join_broadcast_brand_revenue /
-#: agg_grouping_sets (all r4-green, family-redundant in-window) for
-#: the new window_gapfill_resample / pipeline_rag_ingest /
-#: table_incremental_rollup families; join_range_bucketed and
-#: text_winnow_fingerprint (r4-green, family-redundant) likewise
-#: rotate out for mine_association_rules and window_ewma_decay.
-#: Round-6 rotation (the largest): 33 of the 50 slots go to queries
-#: NEVER driver-graded in r1-r5 — all hash-parity-green locally via
-#: tests/test_oracle_parity.py, which now also fails on int-vs-float
-#: oracle dtype skew (the r5 grading-hash failure class). Rotated out
-#: (every one gate-green in r4 or r5, family still anchored in-window):
-#: mm_audio_fingerprint_match, dedup_incremental_lsh,
-#: dedup_embedding_lsh_banded, graph_triangle_count, text_quality,
-#: text_repetition_filter, text_decontaminate, text_pii_redact,
-#: text_bpe_encode, text_bm25_topk, pack_sequences, dedup_span_clean,
-#: table_merge_upsert, table_scd2_history, table_incremental_rollup,
-#: sample_stratified_sources, ann_lsh_banded_topk, ann_mmr_select,
-#: sketch_kmv_set_ops, embed_random_projection, q1_pricing_summary,
-#: window_ewma_decay, window_gapfill_resample, window_time_range_sum,
-#: agg_linreg_exact, join_salted_skew, layout_zorder_lineitem,
-#: pipeline_rag_ingest, mine_association_rules, score_unigram_surprisal,
-#: sort_topk_lineitems, stream_cms_topk, stream_interval_join.
-#: Round-7 rotation candidates (added late in r6, all hash-parity-green
-#: locally incl. a 50/50 sf0.01 gate rehearsal — tools/gate_rehearsal.py):
-#: dedup_semdedup, dedup_boundary_overlap, text_boilerplate_ngrams,
-#: sample_temperature_mix, sample_perplexity_filter, pipeline_ccnet,
-#: window_cusum_changepoint, dq_referential_integrity, dq_freshness_lag,
-#: stream_freshness_lag, embed_pca_top1, embed_pca_project,
-#: join_asof_nearest, agg_skew_kurtosis_exact, order_length_buckets,
-#: graph_common_neighbors, conv_descset_roundtrip — plus the 38 earlier
-#: never-graded names listed in the r6 planning notes.
 GRADED_FIRST = [
     # ROUND-14 ROTATION (optimization round — no births). Standing
     # convention, three cohorts:

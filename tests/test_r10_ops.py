@@ -198,48 +198,44 @@ class TestJaccardBandCounts:
         the intersection matrix) must emit the exact same pair set as
         the sparse inverted-index join — forced multi-block so the
         cross-block (gi != gj) arm and the chunk boundary both run,
-        and in all three modes (jaccard, containment, sizes)."""
+        in the jaccard-with-sizes and containment modes, and at
+        threshold 0 too, where only pairs sharing a shingle count."""
         from protarrow_spark.sources.tables import table
 
         docs = table(spark, sf_dir, "documents")
 
-        def rows(df):
+        def rows(mode, threshold, cap):
+            # block_size 128 -> ceil(n/128) blocks; well above 1 even
+            # at sf0.001, and chunks of 256 rows split the 128-row
+            # blocks' concatenated cross groups.
+            df = dedup._shingle_pairs(
+                docs, "doc_id", "text", mode, threshold, 1,
+                dedup.MAX_SHINGLE_DF, cap, 128,
+            )
             return sorted(
                 tuple(round(x, 9) if isinstance(x, float) else x for x in r)
                 for r in df.collect()
             )
 
-        # block_size 128 -> ceil(n/128) blocks; well above 1 even at
-        # sf0.001, and chunks of 256 rows split the 128-row blocks'
-        # concatenated cross groups.
-        dense_j = dedup.ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.1, n=1,
-            dense_vocab_cap=4096, block_size=128, include_sizes=True,
-        )
-        sparse_j = dedup.ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.1, n=1, include_sizes=True,
-        )
-        assert rows(dense_j) == rows(sparse_j)
-
-        dense_c = dedup.ngram_containment_pairs(
-            docs, "doc_id", "text", threshold=0.3, n=1,
-            dense_vocab_cap=4096, block_size=128,
-        )
-        sparse_c = dedup.ngram_containment_pairs(
-            docs, "doc_id", "text", threshold=0.3, n=1,
-        )
-        assert rows(dense_c) == rows(sparse_c)
+        for mode, threshold in (
+            ("sizes", 0.1), ("sizes", 0.0), ("containment", 0.3), ("containment", 0.0)
+        ):
+            assert rows(mode, threshold, 4096) == rows(mode, threshold, None), (
+                mode, threshold,
+            )
 
     def test_pushdown_matches_pair_banding_on_both_paths(self, spark, sf_dir):
         """The in-task band histogram (aggregation pushdown) must equal
-        banding the materialized pair stream, on BOTH physical paths."""
+        banding the materialized sparse pair stream, on BOTH physical
+        paths, with one block and with many (cross-block arm and chunk
+        boundary), and at threshold 0 too."""
         from protarrow_spark.sources.tables import table
 
         docs = table(spark, sf_dir, "documents")
-        for cap in (4096, None):  # dense-matmul path, sparse join path
-            pairs = dedup.ngram_jaccard_pairs(
-                docs, "doc_id", "text",
-                threshold=0.1, n=1, dense_vocab_cap=cap, include_sizes=True,
+        for threshold in (0.1, 0.0):
+            pairs = dedup._shingle_pairs(
+                docs, "doc_id", "text", "sizes", threshold, 1,
+                dedup.MAX_SHINGLE_DF, None, 2048,
             )
             expected = {
                 r["band"]: r["n"]
@@ -250,14 +246,17 @@ class TestJaccardBandCounts:
                 .agg(F.count(F.lit(1)).alias("n"))
                 .collect()
             }
-            got = {
-                r["band"]: r["n_pairs"]
-                for r in dedup.jaccard_band_counts(
-                    docs, "doc_id", "text",
-                    threshold=0.1, n=1, dense_vocab_cap=cap,
-                ).collect()
-            }
-            assert got == expected, f"cap={cap}"
+            # dense-matmul path in one block and in 128-row blocks,
+            # sparse join path
+            for cap, block_size in ((4096, 2048), (4096, 128), (None, 2048)):
+                got = {
+                    r["band"]: r["n_pairs"]
+                    for r in dedup.jaccard_band_counts(
+                        docs, "doc_id", "text", threshold=threshold, n=1,
+                        dense_vocab_cap=cap, block_size=block_size,
+                    ).collect()
+                }
+                assert got == expected, (threshold, cap, block_size)
 
 
 class TestPqTopk:

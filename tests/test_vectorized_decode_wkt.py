@@ -402,7 +402,8 @@ def test_repeated_message_decode_random_matrix():
 
 
 def test_repeated_message_items_do_not_merge():
-    # two occurrences = two ITEMS (h_rep_msg), unlike singular fields
+    # two occurrences = two ITEMS (parse's repeated-message handler
+    # appends one per occurrence), unlike singular fields
     item = b"\x08\x05"  # Inner{x:5}
     w = b"\x0a\x02" + item + b"\x0a\x02" + item
     dr = compile_wire_to_row(REP_MT, CFG)
@@ -575,8 +576,8 @@ def test_far_future_timestamp_item_no_ns_overflow():
 
 def test_repeated_recursive_items_decode_vectorized():
     """r10: repeated recursive items — each occurrence validates via
-    the strict validator and prunes to (), matching h_rep_msg +
-    row_builder's recursion lambda."""
+    the strict validator and prunes to (), matching parse's
+    repeated-message handler + row_builder's recursion lambda."""
     from protarrow_spark.proto.fixtures import recursive_message_type
 
     rec = recursive_message_type()
