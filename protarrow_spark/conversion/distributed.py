@@ -46,7 +46,7 @@ from protarrow_spark.conversion.vectorized import (
 )
 from protarrow_spark.conversion.encode import row_builder
 from protarrow_spark.conversion.vectorized_decode import compile_wire_to_batch
-from protarrow_spark.proto.message import parse
+from protarrow_spark.proto.message import _writer, parse
 from protarrow_spark.proto.model import MessageType
 from protarrow_spark.schema import message_type_to_schema
 
@@ -441,12 +441,12 @@ def encode_proto_column(
 # ---------------------------------------------------------------------------
 # Row codec: one Spark row tuple <-> wire bytes, the fallback of the
 # vectorized kernels and the semantics they are tested against. Both
-# directions are compiled once per message type. Encode composes the
-# per-field decoders (Spark cell -> proto value, decode.py) with the
-# wire writers (message.py), without building a Message; decode is the
-# compiled wire parser (message.py) followed by the compiled
-# ``row_builder`` (encode.py), so all conversion policy lives in one
-# place per direction.
+# directions are compiled once per message type. Encode pairs each
+# field's decoder (Spark cell -> Message storage value, decode.py; a
+# nested or WKT cell decodes to a Message) with that field's writer in
+# the compiled wire writer (message.py). Decode is the compiled wire
+# parser (message.py) followed by the compiled ``row_builder``
+# (encode.py), so all conversion policy lives in one place per direction.
 # ---------------------------------------------------------------------------
 
 
@@ -456,27 +456,20 @@ def compile_row_to_wire(
 ):
     """Compile ``row-tuple (schema field order) -> serialized bytes``."""
     from protarrow_spark.conversion.decode import _field_decoder
-    from protarrow_spark.proto.message import _write_field
 
     index_of = {f.name: i for i, f in enumerate(mtype.fields)}
-    compiled = [
-        (
-            field,
-            index_of[field.name],
-            _field_decoder(field, config, (mtype.full_name,)),
-        )
-        for field in mtype.fields_number_order
+    by_name = mtype.fields_by_name
+    steps = [
+        (index_of[n], _field_decoder(by_name[n], config, (mtype.full_name,)), write)
+        for n, write in _writer(mtype).fields
     ]
 
     def encode_row(rec) -> bytes:
         out = bytearray()
-        for field, idx, conv in compiled:
+        for idx, conv, write in steps:
             v = conv(rec[idx])
-            if v is None:
-                continue
-            if (field.is_map or field.repeated) and not v:
-                continue
-            _write_field(out, field, v)
+            if v is not None:
+                write(out, v)
         return bytes(out)
 
     return encode_row

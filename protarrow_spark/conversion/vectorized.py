@@ -74,7 +74,7 @@ from protarrow_spark.proto.model import (
     Kind,
     MessageType,
 )
-from protarrow_spark.proto.message import _VARINT_RANGE
+from protarrow_spark.proto.message import _KINDS, _VARINT_RANGE, _tag_bytes
 
 #: proto Date(year=0) cell form (encode.py DATE_SENTINEL; imported
 #: lazily in _wkt_sub_columns would cost per call — it's a constant)
@@ -92,19 +92,6 @@ _WT_VARINT, _WT_I64, _WT_LEN, _WT_I32 = 0, 1, 2, 5
 
 #: Thresholds 2^7, 2^14 ... 2^63 — a uint64 v needs 1 + #(v >= t) varint bytes.
 _VARINT_THRESHOLDS = [1 << (7 * k) for k in range(1, 10)]
-
-
-def _tag_bytes(number: int, wt: int) -> bytes:
-    out = bytearray()
-    v = (number << 3) | wt
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        if v:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
 
 
 def _varint_nbytes(u):
@@ -387,16 +374,13 @@ def _side_parts(fld, flat, row_of, bad):
             u = v.view(np.uint64)
     skip = u == 0  # converted default for every numeric kind;
     # -0.0 doubles have nonzero bits and correctly emit
-    if kind in (Kind.DOUBLE, Kind.FIXED64, Kind.SFIXED64):
-        tag = _tag_bytes(fld.number, _WT_I64)
-        contrib = np.where(skip, 0, len(tag) + 8)
-        return dict(klass="fixed", tag=tag, u=u, width=8, skip=skip, contrib=contrib)
-    if kind in (Kind.FLOAT, Kind.FIXED32, Kind.SFIXED32):
-        tag = _tag_bytes(fld.number, _WT_I32)
-        contrib = np.where(skip, 0, len(tag) + 4)
-        return dict(klass="fixed", tag=tag, u=u, width=4, skip=skip, contrib=contrib)
+    wt = _KINDS[kind][0]
+    tag = _tag_bytes(fld.number, wt)
+    if wt != _WT_VARINT:
+        width = 8 if wt == _WT_I64 else 4
+        contrib = np.where(skip, 0, len(tag) + width)
+        return dict(klass="fixed", tag=tag, u=u, width=width, skip=skip, contrib=contrib)
     nb = _varint_nbytes(u)
-    tag = _tag_bytes(fld.number, _WT_VARINT)
     contrib = np.where(skip, 0, len(tag) + nb)
     return dict(klass="varint", tag=tag, u=u, nb=nb, skip=skip, contrib=contrib)
 
@@ -450,11 +434,11 @@ def _prepare_nested(field, cells, n, config, sub_encode, bad):
 def _frame_sub_bodies(field, frame, null, bad):
     """Frame one sub-encoder frame ``(buf, offsets, sub_bad)`` of per-row
     bodies as a LEN field. Message presence: null skips entirely; a
-    present-but-default message still emits tag + len 0, exactly the
-    row path's serialize-of-empty-Message. A row the permissive
-    sub-encode nulled has an empty body, and its violation belongs to
-    the whole OUTER row (the row path's per-row try/except wraps the
-    full encode)."""
+    present-but-default message still emits tag + len 0, exactly as the
+    compiled wire writer writes an empty Message value. A row the
+    permissive sub-encode nulled has an empty body, and its violation
+    belongs to the whole OUTER row (the row path's per-row try/except
+    wraps the full encode)."""
     import numpy as np
 
     values, offsets, sub_bad = frame
@@ -637,8 +621,8 @@ def _prepare_repeated(field, cells, n, config, bad):
             if null[i]:
                 continue
             try:
-                # row path: _write_scalar BOOL is truthiness (None ->
-                # 0, no type error; ambiguous arrays raise ValueError)
+                # row path: the wire writer's BOOL payload is truthiness
+                # (None -> 0; ambiguous arrays raise ValueError)
                 a = np.fromiter((1 if x else 0 for x in c), dtype=np.uint64)
             except (TypeError, ValueError) as exc:
                 row_fail(i, exc)
@@ -1001,8 +985,8 @@ def _prepare_wkt(field, cells, n, config, sub_encode, bad):
     the WKT MessageType's sub-columns, batch-encode the bodies with the
     recursively compiled encoder, and frame tag + len + body. Byte
     parity with the row path: decode.py's WKT decoders build a Message
-    whose serialize() skips default-valued subfields — the recursive
-    batch encode does the identical default skipping."""
+    whose compiled wire writer skips default-valued subfields — the
+    recursive batch encode does the identical default skipping."""
     import pandas as pd
 
     if isinstance(cells, pd.Series) and cells.dtype != object:
@@ -1124,8 +1108,8 @@ def _prepare_repeated_msg(field, cells, n, config, sub_encode, kind, bad):
 
 def _msg_value_side_parts(val_f, flat, row_of, config, sub_encode, kind, bad):
     """Map VALUE side for message-valued maps: one LEN frame per entry,
-    never skipped (``_write_field_single`` always emits message values,
-    even empty bodies — unlike scalar sides' emit_default=False)."""
+    never skipped (the compiled wire writer always emits message
+    values, even empty bodies — unlike scalar sides' emit_default=False)."""
     import numpy as np
 
     m = len(flat)
@@ -1224,7 +1208,7 @@ def _compile_frame_encoder(
             # key/value sides. Message VALUES (r10): one LEN frame per
             # entry value, bodies from a recursive batch encode (plain
             # messages) or the WKT cell splitter; never default-skipped
-            # (_write_field_single always emits message values).
+            # (the compiled wire writer always emits message values).
             entry_mt = field.message
             kf, vf = entry_mt.fields_by_number[1], entry_mt.fields_by_number[2]
             if kf.kind not in _SUPPORTED_SCALARS:
@@ -1504,18 +1488,14 @@ def _prepare_scalar(klass, field, s, n, config, bad):
         flen = np.where(skip, 0, len(tag) + 1)
     elif kind in (Kind.DOUBLE, Kind.FLOAT):
         try:
-            if kind is Kind.DOUBLE:
-                f = s.to_numpy(dtype=np.float64, na_value=0.0)
-                u = f.view(np.uint64)
-                width = 8
-                wt = _WT_I64
-            else:
-                f = s.to_numpy(dtype=np.float64, na_value=0.0)
-                u = f.astype(np.float32).view(np.uint32).astype(np.uint64)
-                width = 4
-                wt = _WT_I32
+            f = s.to_numpy(dtype=np.float64, na_value=0.0)
         except (TypeError, ValueError) as exc:
             raise Unvectorizable(str(exc)) from exc
+        if kind is Kind.DOUBLE:
+            u, width, wt = f.view(np.uint64), 8, _WT_I64
+        else:
+            u = f.astype(np.float32).view(np.uint32).astype(np.uint64)
+            width, wt = 4, _WT_I32
         # proto3 default skip: exactly +0.0 (bits == 0); -0.0 emits
         skip = null if field.has_presence else (null | (u == 0))
         tag = _tag_bytes(field.number, wt)

@@ -12,14 +12,16 @@ internal descriptor model (``proto/model.py``):
   little-endian fixed32/64, length-delimited strings/bytes/messages,
   packed repeated primitives (decoder accepts packed and expanded),
   map fields as repeated key/value entry messages, unknown-field skip.
-  ``parse`` runs a parser compiled once per message type and cached on
-  it: one handler per field number, each with its kind's reader,
-  writing ``Message`` storage directly.
+  ``parse`` and ``serialize`` run a parser and a writer compiled once
+  per message type and cached on it, both over ``Message`` storage: a
+  handler per field number with its kind's reader, and a writer per
+  field whose tag, payload writer and default-skip test are fixed.
 
 The distributed row codec (``conversion/distributed.py``) decodes a
 ``binary`` proto column on executors as ``parse`` followed by the
-compiled ``row_builder``; it is the fallback of the vectorized batch
-decoder. Spark's built-in ``from_protobuf`` would need the external
+compiled ``row_builder`` and encodes rows with the compiled writer's
+per-field writers; it is the fallback of the vectorized batch codec.
+Spark's built-in ``from_protobuf`` would need the external
 spark-protobuf jar + a compiled descriptor set, neither available
 here.
 
@@ -34,9 +36,6 @@ import struct
 from typing import Any, Callable
 
 from protarrow_spark.proto.model import (
-    I32_KINDS,
-    I64_KINDS,
-    VARINT_KINDS,
     ZIGZAG_KINDS,
     Field,
     Kind,
@@ -235,32 +234,17 @@ _WT_VARINT, _WT_I64, _WT_LEN, _WT_I32 = 0, 1, 2, 5
 def _write_varint(out: bytearray, value: int) -> None:
     if value < 0:
         value += _U64  # two's complement, 10 bytes
-    while True:
-        b = value & 0x7F
+    while value > 0x7F:
+        out.append((value & 0x7F) | 0x80)
         value >>= 7
-        if value:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return
+    out.append(value)
 
 
-def _zigzag(value: int) -> int:
-    return (value << 1) ^ (value >> 63)
-
-
-def _tag(number: int, wire_type: int) -> int:
-    return (number << 3) | wire_type
-
-
-def _scalar_wire_type(kind: Kind) -> int:
-    if kind in VARINT_KINDS:
-        return _WT_VARINT
-    if kind in I64_KINDS:
-        return _WT_I64
-    if kind in I32_KINDS:
-        return _WT_I32
-    return _WT_LEN
+def _tag_bytes(number: int, wire_type: int) -> bytes:
+    """The encoded key of one record of field ``number``."""
+    out = bytearray()
+    _write_varint(out, (number << 3) | wire_type)
+    return bytes(out)
 
 
 #: Contract bounds per varint kind: encoding a value outside its
@@ -278,110 +262,145 @@ _VARINT_RANGE = {
 }
 
 
-def _write_scalar(out: bytearray, kind: Kind, value: Any) -> None:
-    """Write one scalar payload (no tag)."""
-    if kind in ZIGZAG_KINDS:
+# Payload writers: ``(out, value) -> None`` append one value without its
+# tag; one per kind (``_KINDS`` below), picked when a writer is compiled.
+
+
+def _varint_payload(kind: Kind) -> Callable[[bytearray, Any], None]:
+    lo, hi = _VARINT_RANGE[kind]
+
+    def write(out: bytearray, value: Any) -> None:
         v = int(value)
-        lo, hi = _VARINT_RANGE[kind]
-        if not lo <= v <= hi:
-            raise ValueError(f"{kind.name} value {v} out of range [{lo}, {hi}]")
-        _write_varint(out, _zigzag(v))
-    elif kind is Kind.BOOL:
-        out.append(1 if value else 0)
-    elif kind in VARINT_KINDS:  # int32/64, uint32/64, enum
-        v = int(value)
-        lo, hi = _VARINT_RANGE[kind]
         if not lo <= v <= hi:
             raise ValueError(f"{kind.name} value {v} out of range [{lo}, {hi}]")
         _write_varint(out, v)
-    elif kind is Kind.DOUBLE:
-        out += struct.pack("<d", value)
-    elif kind is Kind.FLOAT:
-        out += struct.pack("<f", value)
-    elif kind is Kind.FIXED64:
-        out += struct.pack("<Q", int(value))
-    elif kind is Kind.SFIXED64:
-        out += struct.pack("<q", int(value))
-    elif kind is Kind.FIXED32:
-        out += struct.pack("<I", int(value))
-    elif kind is Kind.SFIXED32:
-        out += struct.pack("<i", int(value))
-    elif kind is Kind.STRING:
-        data = value.encode("utf-8")
-        _write_varint(out, len(data))
-        out += data
-    elif kind is Kind.BYTES:
-        _write_varint(out, len(value))
-        out += bytes(value)
-    else:  # pragma: no cover
-        raise TypeError(f"not a scalar kind: {kind}")
+
+    def write_zigzag(out: bytearray, value: Any) -> None:
+        v = int(value)
+        if not lo <= v <= hi:
+            raise ValueError(f"{kind.name} value {v} out of range [{lo}, {hi}]")
+        _write_varint(out, (v << 1) ^ (v >> 63))
+
+    return write_zigzag if kind in ZIGZAG_KINDS else write
 
 
-def _write_field(out: bytearray, field: Field, value: Any) -> None:
+def _write_string(out: bytearray, value: str) -> None:
+    data = value.encode("utf-8")
+    _write_varint(out, len(data))
+    out += data
+
+
+def _write_bytes(out: bytearray, value: Any) -> None:
+    _write_varint(out, len(value))
+    out += bytes(value)
+
+
+def _write_message(out: bytearray, value: Any) -> None:
+    # the body's writer is looked up per occurrence, so recursive types
+    # bind late; a value that is not a Message writes an empty body
+    body = _writer(value._type)(value._values) if isinstance(value, Message) else b""
+    _write_varint(out, len(body))
+    out += body
+
+
+def _write_group(out: bytearray, value: Any) -> None:
+    raise TypeError("proto2 groups are unsupported")
+
+
+def _writer(mtype: MessageType) -> Callable[[dict], bytes]:
+    """The compiled ``write(values) -> bytes`` of ``mtype``, which
+    writes a ``Message._values`` storage dict in field-number order.
+    Its ``fields`` attribute holds the ``(field name, write_field)``
+    pairs it runs. Compiled on first use and cached on ``mtype`` until
+    its ``fields`` are reassigned (the cache is not pickled with it)."""
+    write = getattr(mtype, "_write_cache", None)
+    if write is not None:
+        return write
+    steps = tuple(
+        (f.name, _field_writer(f, emit_default=f.has_presence))
+        for f in mtype.fields_number_order
+    )
+
+    def write(values: dict) -> bytes:
+        out = bytearray()
+        get = values.get
+        for name, write_field in steps:
+            v = get(name)
+            if v is not None:
+                write_field(out, v)
+        return bytes(out)
+
+    write.fields = steps  # type: ignore[attr-defined]
+    object.__setattr__(mtype, "_write_cache", write)
+    return write
+
+
+def _field_writer(field: Field, emit_default: bool) -> Callable[[bytearray, Any], None]:
+    """``(out, value) -> None`` for one field: appends the records of a
+    non-None storage value of ``field``. Empty lists and maps write
+    nothing, numeric lists pack, and a map writes one entry per item
+    whose key and value skip their defaults. Unless ``emit_default``, a
+    singular scalar at its default, ``-0.0`` aside, writes nothing."""
+    wt, _, payload = _KINDS[field.kind]
+    tag = _tag_bytes(field.number, _WT_LEN if field.repeated else wt)
     if field.is_map:
         entry = field.message
-        key_f = entry.fields_by_number[1]
-        val_f = entry.fields_by_number[2]
-        for k, v in value.items():
-            body = bytearray()
-            _write_field_single(body, key_f, k, emit_default=False)
-            _write_field_single(body, val_f, v, emit_default=False)
-            _write_varint(out, _tag(field.number, _WT_LEN))
-            _write_varint(out, len(body))
-            out += body
-    elif field.repeated:
-        if not value:
-            return
-        kind = field.kind
-        if kind in (Kind.STRING, Kind.BYTES, Kind.MESSAGE):
-            for item in value:
-                _write_field_single(out, field, item, emit_default=True)
-        else:
-            # packed (proto3 default for numeric repeated fields)
-            body = bytearray()
-            for item in value:
-                _write_scalar(body, kind, item)
-            _write_varint(out, _tag(field.number, _WT_LEN))
-            _write_varint(out, len(body))
-            out += body
-    else:
-        _write_field_single(out, field, value, emit_default=field.has_presence)
+        write_key = _field_writer(entry.fields_by_number[1], emit_default=False)
+        write_val = _field_writer(entry.fields_by_number[2], emit_default=False)
 
+        def write_map(out: bytearray, value: dict) -> None:
+            for k, v in value.items():
+                body = bytearray()
+                write_key(body, k)
+                write_val(body, v)
+                out += tag
+                _write_varint(out, len(body))
+                out += body
 
-def _write_field_single(
-    out: bytearray, field: Field, value: Any, emit_default: bool
-) -> None:
-    kind = field.kind
-    if kind is Kind.MESSAGE:
-        body = serialize(value) if isinstance(value, Message) else b""
-        _write_varint(out, _tag(field.number, _WT_LEN))
-        _write_varint(out, len(body))
-        out += body
-        return
-    if not emit_default and not field.repeated:
-        # proto3 no-presence scalars are omitted when equal to default
-        if value == field.default_value and not (
-            isinstance(value, float) and str(value) == "-0.0"
-        ):
-            return
-    _write_varint(out, _tag(field.number, _scalar_wire_type(kind)))
-    _write_scalar(out, kind, value)
+        return write_map
+
+    if field.repeated:
+        if wt == _WT_LEN:  # strings, bytes, messages: one record per item
+
+            def write_items(out: bytearray, value: list) -> None:
+                for item in value:
+                    out += tag
+                    payload(out, item)
+
+            return write_items
+
+        def write_packed(out: bytearray, value: list) -> None:
+            if value:
+                body = bytearray()
+                for item in value:
+                    payload(body, item)
+                out += tag
+                _write_varint(out, len(body))
+                out += body
+
+        return write_packed
+
+    if emit_default or field.kind is Kind.MESSAGE:
+
+        def write_value(out: bytearray, value: Any) -> None:
+            out += tag
+            payload(out, value)
+
+        return write_value
+
+    default = field.default_value
+
+    def write_unless_default(out: bytearray, value: Any) -> None:
+        if value != default or (isinstance(value, float) and str(value) == "-0.0"):
+            out += tag
+            payload(out, value)
+
+    return write_unless_default
 
 
 def serialize(msg: Message) -> bytes:
     """Message -> wire bytes, fields in field-number order (stable)."""
-    out = bytearray()
-    values = msg._values
-    for field in msg.type.fields_number_order:
-        if field.name not in values:
-            continue
-        value = values[field.name]
-        if field.is_map or field.repeated:
-            if value:
-                _write_field(out, field, value)
-        else:
-            _write_field(out, field, value)
-    return bytes(out)
+    return _writer(msg._type)(msg._values)
 
 
 # ---------------------------------------------------------------------------
@@ -445,8 +464,8 @@ def _skip(data: bytes, pos: int, wire_type: int) -> int:
     raise ValueError(f"cannot skip wire type {wire_type} (groups unsupported)")
 
 
-# Scalar readers: ``(data, pos) -> (value, pos)``, one per kind. A
-# scalar is read by its field's kind, whatever the record's wire type.
+# Scalar readers: ``(data, pos) -> (value, pos)``. A scalar is read by
+# its field's kind, whatever the record's wire type.
 
 
 def _read_int64(data: bytes, pos: int) -> tuple[int, int]:
@@ -480,32 +499,40 @@ def _read_bytes(data: bytes, pos: int) -> tuple[bytes, int]:
     return bytes(data[start:end]), end
 
 
-def _fixed_reader(fmt: str) -> Callable[[bytes, int], tuple[Any, int]]:
-    unpack, width = struct.Struct(fmt).unpack_from, struct.calcsize(fmt)
+def _fixed(fmt: str) -> tuple[int, Callable, Callable]:
+    """Wire type, reader and payload writer of a fixed-width kind."""
+    codec = struct.Struct(fmt)
+    unpack, pack, width = codec.unpack_from, codec.pack, codec.size
 
     def read(data: bytes, pos: int) -> tuple[Any, int]:
         return unpack(data, pos)[0], pos + width
 
-    return read
+    wt = _WT_I64 if width == 8 else _WT_I32
+    if fmt in ("<d", "<f"):
+        return wt, read, lambda out, value: out.extend(pack(value))
+    return wt, read, lambda out, value: out.extend(pack(int(value)))
 
 
-_SCALAR_READERS = {
-    Kind.INT64: _read_int64,
-    Kind.ENUM: _read_int64,
-    Kind.INT32: _read_int32,
-    Kind.UINT32: _read_varint,
-    Kind.UINT64: _read_varint,
-    Kind.SINT32: _read_sint,
-    Kind.SINT64: _read_sint,
-    Kind.BOOL: _read_bool,
-    Kind.STRING: _read_string,
-    Kind.BYTES: _read_bytes,
-    Kind.DOUBLE: _fixed_reader("<d"),
-    Kind.FLOAT: _fixed_reader("<f"),
-    Kind.FIXED64: _fixed_reader("<Q"),
-    Kind.SFIXED64: _fixed_reader("<q"),
-    Kind.FIXED32: _fixed_reader("<I"),
-    Kind.SFIXED32: _fixed_reader("<i"),
+#: kind -> (wire type, scalar reader or None, payload writer)
+_KINDS = {
+    Kind.INT64: (_WT_VARINT, _read_int64, _varint_payload(Kind.INT64)),
+    Kind.ENUM: (_WT_VARINT, _read_int64, _varint_payload(Kind.ENUM)),
+    Kind.INT32: (_WT_VARINT, _read_int32, _varint_payload(Kind.INT32)),
+    Kind.UINT32: (_WT_VARINT, _read_varint, _varint_payload(Kind.UINT32)),
+    Kind.UINT64: (_WT_VARINT, _read_varint, _varint_payload(Kind.UINT64)),
+    Kind.SINT32: (_WT_VARINT, _read_sint, _varint_payload(Kind.SINT32)),
+    Kind.SINT64: (_WT_VARINT, _read_sint, _varint_payload(Kind.SINT64)),
+    Kind.BOOL: (_WT_VARINT, _read_bool, lambda out, value: out.append(1 if value else 0)),
+    Kind.STRING: (_WT_LEN, _read_string, _write_string),
+    Kind.BYTES: (_WT_LEN, _read_bytes, _write_bytes),
+    Kind.DOUBLE: _fixed("<d"),
+    Kind.FLOAT: _fixed("<f"),
+    Kind.FIXED64: _fixed("<Q"),
+    Kind.SFIXED64: _fixed("<q"),
+    Kind.FIXED32: _fixed("<I"),
+    Kind.SFIXED32: _fixed("<i"),
+    Kind.MESSAGE: (_WT_LEN, None, _write_message),
+    Kind.GROUP: (_WT_LEN, None, _write_group),
 }
 
 
@@ -600,7 +627,7 @@ def _field_handler(mtype: MessageType, field: Field) -> Callable:
 
         return read_message
 
-    read = _SCALAR_READERS.get(field.kind)
+    read = _KINDS[field.kind][1]
     if read is None:  # proto2 groups: a type may declare one (adapter.py)
 
         def read_group(data, pos, wt, values):

@@ -48,21 +48,6 @@ class Kind(enum.Enum):
     GROUP = "group"
 
 
-#: Wire types (public encoding spec): 0=varint, 1=i64, 2=len, 5=i32.
-VARINT_KINDS = {
-    Kind.INT32,
-    Kind.INT64,
-    Kind.UINT32,
-    Kind.UINT64,
-    Kind.SINT32,
-    Kind.SINT64,
-    Kind.BOOL,
-    Kind.ENUM,
-}
-I64_KINDS = {Kind.FIXED64, Kind.SFIXED64, Kind.DOUBLE}
-I32_KINDS = {Kind.FIXED32, Kind.SFIXED32, Kind.FLOAT}
-LEN_KINDS = {Kind.STRING, Kind.BYTES, Kind.MESSAGE}
-
 SIGNED_INT_KINDS = {Kind.INT32, Kind.INT64, Kind.SFIXED32, Kind.SFIXED64}
 ZIGZAG_KINDS = {Kind.SINT32, Kind.SINT64}
 UNSIGNED_INT_KINDS = {Kind.UINT32, Kind.UINT64, Kind.FIXED32, Kind.FIXED64}
@@ -174,15 +159,16 @@ class MessageType:
         # construction) invalidates the caches derived from them: the
         # indexes below, on the per-message hot path of the wire codec
         # (recomputing the dicts per access dominated profiles), and
-        # the compiled wire parser of ``proto/message.py``.
+        # the compiled wire parser and writer of ``proto/message.py``.
         object.__setattr__(self, name, value)
         if name == "fields":
             object.__setattr__(self, "_idx_cache", None)
             object.__setattr__(self, "_parse_cache", None)
+            object.__setattr__(self, "_write_cache", None)
 
     def __getstate__(self) -> dict:
-        # the caches rebuild on first use; the compiled parser's
-        # closures need not travel with a pickled type
+        # the caches rebuild on first use; the compiled parser's and
+        # writer's closures need not travel with a pickled type
         return {f.name: getattr(self, f.name) for f in dataclasses.fields(self)}
 
     def _indexes(self) -> tuple:

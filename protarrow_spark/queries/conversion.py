@@ -625,7 +625,7 @@ def conv_decode_corrupt_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame
 
 #: Every 7th event violates the export contract: its uint32 `code`
 #: cell is pushed past 2^32-1, which the wire writer rejects (range
-#: validation in proto/message.py _write_scalar).
+#: validation in the compiled writer of proto/message.py).
 ENCODE_BAD_MOD = 7
 
 #: The export contract: a uint32 field makes contract bounds real

@@ -380,6 +380,79 @@ def test_truncated_varint_raises_value_error() -> None:
         parse(b"\x0a\x02\x08\x96\x10\x01", nested)
 
 
+# ---------------------------------------------------------------------------
+# Writer edge cases, pinned as the bytes the interpreted writer wrote
+# ---------------------------------------------------------------------------
+
+EDGE_MSG = MessageType(
+    "t.Edge",
+    (
+        Field("f", 1, Kind.FLOAT),
+        Field("d", 2, Kind.DOUBLE),
+        Field("s", 3, Kind.STRING),
+        Field("b", 4, Kind.BYTES),
+        Field("opt", 5, Kind.INT32, optional=True),
+        Field("choice_int", 6, Kind.INT64, oneof="choice"),
+        Field("choice_str", 7, Kind.STRING, oneof="choice"),
+        Field("rep", 8, Kind.INT32, repeated=True),
+        map_field("m", 9, Kind.STRING, Kind.INT64),
+        Field("msg", 10, Kind.MESSAGE, message=fixtures.NESTED),
+        map_field("mm", 11, Kind.INT32, Kind.MESSAGE, value_message=fixtures.NESTED),
+        Field("fs", 12, Kind.FLOAT, repeated=True),
+    ),
+)
+
+
+@pytest.mark.parametrize(
+    "values,wire_hex",
+    [
+        ({"f": -0.0}, "0d00000080"),  # -0.0 is not the default
+        ({"d": -0.0}, "110000000000000080"),
+        ({"f": 0.0, "d": 0.0, "s": "", "b": b""}, ""),
+        ({"f": float("nan")}, "0d0000c07f"),
+        ({"d": float("nan")}, "11000000000000f87f"),
+        ({"opt": 0}, "2800"),  # presence scalar at its default
+        ({"choice_int": 0}, "3000"),  # oneof members have presence
+        ({"choice_str": ""}, "3a00"),
+        ({"rep": [], "m": {}, "mm": {}, "fs": []}, ""),
+        ({"m": {"": 0}}, "4a00"),  # entry key and value skip defaults
+        ({"mm": {0: Message(fixtures.NESTED)}}, "5a021200"),
+        ({"msg": Message(fixtures.NESTED)}, "5200"),  # tag plus length 0
+        ({"fs": [0.0, -0.0]}, "62080000000000000080"),  # packed keeps both
+    ],
+)
+def test_writer_edge_case_bytes_pinned(values: dict, wire_hex: str) -> None:
+    assert serialize(Message(EDGE_MSG, **values)).hex() == wire_hex
+
+
+@pytest.mark.parametrize(
+    "kind,value,error,text",
+    [
+        (Kind.INT32, 2**31, ValueError,
+         "INT32 value 2147483648 out of range [-2147483648, 2147483647]"),
+        (Kind.INT32, -(2**31) - 1, ValueError,
+         "INT32 value -2147483649 out of range [-2147483648, 2147483647]"),
+        (Kind.UINT32, -1, ValueError, "UINT32 value -1 out of range [0, 4294967295]"),
+        (Kind.UINT32, 2**32, ValueError,
+         "UINT32 value 4294967296 out of range [0, 4294967295]"),
+        (Kind.SINT32, 2**31, ValueError,
+         "SINT32 value 2147483648 out of range [-2147483648, 2147483647]"),
+        (Kind.UINT64, 2**64, ValueError,
+         "UINT64 value 18446744073709551616 out of range [0, 18446744073709551615]"),
+        (Kind.UINT64, -1, ValueError,
+         "UINT64 value -1 out of range [0, 18446744073709551615]"),
+        (Kind.FIXED32, 2**32, struct.error, None),
+        (Kind.FIXED32, -1, struct.error, None),
+    ],
+)
+def test_writer_rejects_out_of_range(kind: Kind, value: int, error: type, text) -> None:
+    mt = MessageType("t.Range", (Field("v", 1, kind),))
+    with pytest.raises(error) as info:
+        serialize(Message(mt, v=value))
+    if text is not None:
+        assert str(info.value) == text
+
+
 def test_compiled_parser_follows_fields_and_pickles() -> None:
     """The compiled parser is cached per type: reassigning ``fields``
     (how recursive types are bound) recompiles it, and a pickled type
@@ -396,6 +469,42 @@ def test_compiled_parser_follows_fields_and_pickles() -> None:
     copy = pickle.loads(pickle.dumps(fixtures.EXAMPLE))
     assert "_parse_cache" not in copy.__dict__
     assert parse(serialize(msgs[0]), copy)._values == msgs[0]._values
+
+
+def test_compiled_writer_follows_fields_and_pickles() -> None:
+    """The compiled writer is cached per type like the parser:
+    reassigning ``fields`` recompiles it, a pickled type carries no
+    compiled writer but writes the same bytes, and recursive types
+    serialize (sub-message writers bind per occurrence)."""
+    import pickle
+
+    mt = MessageType("cache.W", (Field("a", 1, Kind.INT32),))
+    msg = Message(mt, a=5)
+    assert serialize(msg) == b"\x08\x05"
+    assert mt.__dict__["_write_cache"] is not None
+    mt.fields = (Field("a", 2, Kind.INT32),)
+    assert serialize(msg) == b"\x10\x05"
+    ex = Message(fixtures.EXAMPLE, string_value="x", int32_value=3, int64_values=[1, -2])
+    wire = serialize(ex)
+    copy = pickle.loads(pickle.dumps(fixtures.EXAMPLE))
+    assert "_write_cache" not in copy.__dict__
+    assert serialize(Message._from_values(copy, dict(ex._values))) == wire
+    # the golden RecursiveSelf shape, serialized once before its fields
+    # are bound, as fixtures.recursive_self_type binds them
+    rs = MessageType("protarrow_spark.test.RecursiveSelf", ())
+    assert serialize(Message(rs)) == b""
+    rs.fields = (Field("next", 1, Kind.MESSAGE, message=rs), Field("depth", 2, Kind.INT32))
+    nested = Message(rs, depth=1, next=Message(rs, depth=2, next=Message(rs)))
+    assert serialize(nested).hex() == "0a040a0010021001"
+    rm = fixtures.recursive_map_type()
+    tree = Message(rm, name="a", children_map={"b": Message(rm, children_map={"c": Message(rm)})})
+    assert serialize(tree).hex() == "0a0161120c0a0162120712050a01631200"
+    rr = fixtures.recursive_repeated_type()
+    items = [Message(rr), Message(rr, depth=-1, children=[Message(rr, depth=3)])]
+    assert (
+        serialize(Message(rr, depth=1, children=items)).hex()
+        == "08011200120f08ffffffffffffffffff0112020803"
+    )
 
 
 def test_group_field_fails_only_when_on_the_wire() -> None:

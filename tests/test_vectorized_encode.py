@@ -675,7 +675,7 @@ def test_repeated_null_item_matches_row_path_error_class():
 
 def test_repeated_message_encodes_vectorized():
     # r10: repeated messages flatten row-major into one LEN frame per
-    # item — byte parity with _write_field_single's per-item walk
+    # item — byte parity with the compiled wire writer's per-item walk
     sub = MessageType("vec.RSub", (Field("x", 1, Kind.INT64),))
     mt = MessageType(
         "vec.RM",

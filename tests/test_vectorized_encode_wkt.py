@@ -419,7 +419,7 @@ def test_map_message_value_none_fails_row_like_row_path():
 
 
 def test_map_message_value_empty_body_still_emits():
-    # _write_field_single always frames message values — an all-default
+    # the compiled wire writer always frames message values — an all-default
     # Inner still contributes tag2 + len 0 inside its entry
     mt = MessageType(
         "vw.ME",
