@@ -1,24 +1,39 @@
-"""Dependency-free baseline JPEG (ITU-T T.81) codec — grayscale AND
-YCbCr color (4:4:4, 4:2:2, 4:2:0).
+"""Dependency-free JPEG (ITU-T T.81) codec: baseline sequential and
+progressive DCT, grayscale AND YCbCr color (4:4:4, 4:2:2, 4:2:0).
 
 JPEG dominates real image corpora, so the multimodal path needs a real
-decoder, not a stub. This module implements the public baseline
-sequential DCT process from the spec alone — SOI/APPn/DQT/SOF0/DHT/
-SOS/EOI marker parsing, Huffman entropy coding with byte stuffing,
-DPCM DC / run-length AC coefficient coding, zigzag, dequantization, a
-separable float IDCT, interleaved multi-component MCU scans with
-sampling factors up to 2x2 (covering the 4:2:0 layout essentially all
-real color JPEGs use, with replication chroma upsampling), and the
-JFIF YCbCr<->RGB conversions — plus matching grayscale AND color
-encoders so tests push GENUINE entropy-coded bytes through the decoder
-(same pattern as the BMP/PGM/WAV codecs in ``operators.multimodal``).
+decoder, not a stub. This module implements the public DCT processes
+from the spec alone — SOI/APPn/DQT/SOF0/SOF2/DHT/DRI/SOS/RSTn/EOI
+marker parsing, Huffman entropy coding with byte stuffing, DPCM DC /
+run-length AC coefficient coding, the progressive scan types of
+Annex G (DC/AC first and refinement scans, EOBn runs), restart
+intervals, zigzag, (de)quantization, a separable float DCT, sampling
+factors up to 2x2 (covering the 4:2:0 layout essentially all real
+color JPEGs use, with replication chroma upsampling), and the JFIF
+YCbCr<->RGB conversions — plus matching encoders so tests push GENUINE
+entropy-coded bytes through the decoder (same pattern as the BMP/PGM/
+WAV codecs in ``operators.multimodal``).
+
+Design: one frame, a script of scans (T.81 Annex G; libjpeg's scan
+scripts). Every layout here is one frame plus a list of
+``(components, Ss, Se, Ah, Al)`` scans. :func:`_components` turns the
+planes into component records, :func:`_write_frame` writes any script
+over them, and each public encoder only names its frame and script —
+one sequential scan over all components (baseline gray and color), one
+sequential scan per component (multiscan), or the progressive DC/AC
+first and refinement scans. :func:`_block_units` is the only code that
+knows T.81 block order, for the encoder and the decoder alike. The
+decoder runs every scan into persistent per-component coefficient
+state — sequential scans through :func:`_decode_scan_sequential`,
+progressive ones through :func:`_decode_scan_progressive` — and
+reconstructs the planes once.
 
 Honest boundaries (documented ``NotImplementedError``, not silent
-wrong answers): progressive (SOF2) and other non-baseline frames,
-sampling factors above 2, non-interleaved multi-scan files, 16-bit
-quantization tables, restart intervals, and arithmetic coding. A blob
-that does not start with the SOI marker returns ``None`` (the
-operator's null path, like the other codecs).
+wrong answers): lossless, hierarchical and arithmetic-coded frames,
+12-bit precision, sampling factors above 2, component counts other
+than 1 and 3, and 16-bit quantization tables. A blob that does not
+start with the SOI marker returns ``None`` (the operator's null path,
+like the other codecs).
 
 Determinism note for oracle-gated queries: baseline JPEG is lossy in
 general, but an 8x8-block-constant image encoded with an all-ones
@@ -39,6 +54,9 @@ from __future__ import annotations
 
 import re
 import struct
+from collections import namedtuple
+
+import numpy as np
 
 #: First non-stuffed marker = end of entropy-coded data (B.1.1.5).
 _MARKER_RE = re.compile(rb"\xff[^\x00]")
@@ -167,12 +185,15 @@ _M_SOF2 = 0xC2  # progressive DCT, Huffman (T.81 Annex G)
 def _dct_matrix():
     """8x8 DCT-II basis A with A[u, x] = c(u)/2 * cos((2x+1)u*pi/16);
     F = A f A^T, f = A^T F A (T.81 A.3.3)."""
-    import numpy as np
-
     x = np.arange(8)
     a = np.cos((2 * x[None, :] + 1) * x[:, None] * np.pi / 16) / 2
     a[0, :] = 1 / (2 * np.sqrt(2))
     return a
+
+
+#: The DCT basis and the zigzag permutation, computed once.
+_DCT = _dct_matrix()
+_ZZ = np.asarray(ZIGZAG)
 
 
 def _build_codes(bits, huffval):
@@ -194,6 +215,25 @@ def _build_codes(bits, huffval):
     return codes
 
 
+#: An encoder Huffman table: its DHT class/id byte (Tc << 4 | Th), the
+#: BITS and HUFFVAL it ships, and the {symbol: (code, length)} map.
+_Table = namedtuple("_Table", "tc_th bits huffval codes")
+
+
+def _table(tc_th, bits, huffval):
+    return _Table(tc_th, bits, huffval, _build_codes(bits, huffval))
+
+
+#: The encoders' tables, built once: Annex K luma (id 0) and chroma
+#: (id 1), and the progressive AC table that luma and chroma AC scans
+#: share under id 0 (it has the EOBn symbols Annex K lacks).
+_DC_LUMA = _table(0x00, DC_BITS, DC_HUFFVAL)
+_AC_LUMA = _table(0x10, AC_BITS, AC_HUFFVAL)
+_DC_CHROMA = _table(0x01, DC_BITS_CHROMA, DC_HUFFVAL_CHROMA)
+_AC_CHROMA = _table(0x11, AC_BITS_CHROMA, AC_HUFFVAL_CHROMA)
+_AC_PROG = _table(0x10, PROG_AC_BITS, PROG_AC_HUFFVAL)
+
+
 class _BitWriter:
     """MSB-first bit stream with T.81 byte stuffing (0x00 after 0xFF)."""
 
@@ -205,18 +245,20 @@ class _BitWriter:
     def write(self, value: int, length: int) -> None:
         self.acc = (self.acc << length) | (value & ((1 << length) - 1))
         self.nbits += length
-        while self.nbits >= 8:
-            byte = (self.acc >> (self.nbits - 8)) & 0xFF
-            self.out.append(byte)
-            if byte == 0xFF:
-                self.out.append(0x00)
-            self.nbits -= 8
-            self.acc &= (1 << self.nbits) - 1
+        if self.nbits >= 8:
+            rest = self.nbits & 7
+            whole = (self.acc >> rest).to_bytes(self.nbits >> 3, "big")
+            self.out += whole.replace(b"\xff", b"\xff\x00")
+            self.nbits = rest
+            self.acc &= (1 << rest) - 1
 
-    def flush(self) -> bytes:
+    def align(self) -> None:
         if self.nbits:  # pad with 1s (T.81 F.1.2.3)
             pad = 8 - self.nbits
             self.write((1 << pad) - 1, pad)
+
+    def flush(self) -> bytes:
+        self.align()
         return bytes(self.out)
 
 
@@ -231,8 +273,6 @@ def _build_lut(table: dict) -> list:
     ``lut[next16bits] = (symbol << 5) | code_length`` (0 = invalid
     prefix). One list index replaces a bit-by-bit tree walk — the
     classic fast-Huffman layout; 16 is the spec's max code length."""
-    import numpy as np
-
     key = tuple(sorted(table.items()))
     cached = _LUT_CACHE.get(key)
     if cached is not None:
@@ -263,140 +303,179 @@ def _extend(value: int, size: int) -> int:
     return value
 
 
-def encode_jpeg_gray(pixels, quant=None, restart_interval: int = 0) -> bytes:
-    """Grayscale (h, w) uint8 raster -> a GENUINE baseline JPEG
-    (JFIF APP0, DQT, SOF0 1-component, Annex-K Huffman DHTs, SOS,
-    entropy-coded scan with byte stuffing, EOI). ``quant`` is a 64-entry
-    raster-order quantization table (default :data:`QUANT_ANNEX_K`;
-    pass :data:`QUANT_UNITY` for the near-lossless mode).
+def _block_units(frame, comps):
+    """Yield a scan's blocks in T.81 order, grouped per restart-countable
+    unit (A.2: one MCU for interleaved scans, one block for
+    single-component scans). Each unit is a list of
+    ``(component, block_index)``. ``frame`` is ``(width, height,
+    frame components)``; the scan's components carry their sampling
+    factors ``h``, ``v`` and their block-grid width ``bw``.
 
-    ``restart_interval`` > 0 emits a DRI segment and an RSTn marker
-    (cyclic D0-D7) after every that-many MCUs: the bit stream is
-    byte-aligned (1-padded) before each marker and the DC predictor
-    resets after it — T.81 F.1.2.2.2, the camera-output resync feature
-    real-world JPEGs carry."""
-    import numpy as np
+    Single-component scans iterate the COMPONENT's own block grid
+    (ceil of its scaled dimensions), row-major — narrower than the
+    padded interleaved grid when the image is not an exact multiple
+    of the MCU size."""
+    w, h, frame_comps = frame
+    hmax = max(c["h"] for c in frame_comps)
+    vmax = max(c["v"] for c in frame_comps)
+    if len(comps) > 1:
+        for my in range(-(-h // (8 * vmax))):
+            for mx in range(-(-w // (8 * hmax))):
+                yield [
+                    (c, (my * c["v"] + v) * c["bw"] + mx * c["h"] + hh)
+                    for c in comps
+                    for v in range(c["v"])
+                    for hh in range(c["h"])
+                ]
+    else:
+        c = comps[0]
+        cw = -(-(w * c["h"]) // hmax)
+        ch = -(-(h * c["v"]) // vmax)
+        for by in range(-(-ch // 8)):
+            for bx in range(-(-cw // 8)):
+                yield [(c, by * c["bw"] + bx)]
 
-    px = np.asarray(pixels, dtype=np.uint8)
+
+# ---------------------------------------------------------------------------
+# Encode side: component records, scan coders, one frame writer
+# ---------------------------------------------------------------------------
+
+
+def _plane_zigzag_coefs(plane, quant, bh, bw):
+    """Pad a uint8 plane to (bh*8, bw*8) by edge replication, DCT +
+    quantize every block, and return the (bh*bw, 64) zigzag-ordered
+    integer coefficients in raster block order."""
+    px = np.asarray(plane, dtype=np.uint8)
     h, w = px.shape
-    q = np.asarray(quant if quant is not None else QUANT_ANNEX_K, dtype=np.int32)
-    bh, bw = -(-h // 8), -(-w // 8)
-    # Edge replication padding (the common convention; any padding is
-    # spec-legal since the decoder crops to (h, w)).
+    q = np.asarray(quant, dtype=np.int32)
     padded = np.empty((bh * 8, bw * 8), dtype=np.float64)
     padded[:h, :w] = px
     padded[h:, :w] = px[h - 1 : h, :]
     padded[:, w:] = padded[:, w - 1 : w]
     padded -= 128.0
-
-    a = _dct_matrix()
     blocks = padded.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3)
-    coefs = a @ blocks @ a.T  # F = A f A^T, broadcast over blocks
+    coefs = _DCT @ blocks @ _DCT.T  # F = A f A^T, broadcast over blocks
     quantized = np.rint(coefs / q.reshape(8, 8)).astype(np.int64)
+    return quantized.reshape(-1, 64)[:, _ZZ]
 
-    dc_codes = _build_codes(DC_BITS, DC_HUFFVAL)
-    ac_codes = _build_codes(AC_BITS, AC_HUFFVAL)
-    # Vectorized per-block prep: zigzag reorder, DC DPCM differences,
-    # and last-nonzero-AC index across ALL blocks at once; the Python
-    # loop below only walks actual nonzero coefficients.
-    zz = np.asarray(ZIGZAG)
-    flat_all = quantized.reshape(-1, 64)[:, zz]
-    dcs = flat_all[:, 0]
-    diffs = np.empty_like(dcs)
-    diffs[0] = dcs[0]
-    diffs[1:] = dcs[1:] - dcs[:-1]
-    ri = int(restart_interval)
-    if ri > 0:
-        # DC prediction restarts from 0 after every RSTn
-        diffs[ri::ri] = dcs[ri::ri]
-    has_ac = (flat_all[:, 1:] != 0).any(axis=1)
-    last_nz = np.where(
-        has_ac, 63 - np.argmax(flat_all[:, :0:-1] != 0, axis=1), 0
-    )
-    writer = _BitWriter()
+
+def _subsample(plane):
+    """4:2:0 chroma: the rounded mean of every 2x2 cell of the plane,
+    edge-padded to even dimensions."""
+    p = np.asarray(plane, dtype=np.float64)
+    h, w = p.shape
+    eh, ew = -(-h // 2) * 2, -(-w // 2) * 2
+    pad = np.empty((eh, ew), dtype=np.float64)
+    pad[:h, :w] = p
+    pad[h:, :w] = p[h - 1 : h, :]
+    pad[:, w:] = pad[:, w - 1 : w]
+    m = pad.reshape(eh // 2, 2, ew // 2, 2).mean(axis=(1, 3))
+    return np.rint(m).astype(np.uint8)
+
+
+def _components(y, cb=None, cr=None, quant_luma=None, quant_chroma=None,
+                subsample=False, progressive=False):
+    """A gray plane ``y``, or Y/Cb/Cr planes, -> the frame ``(width,
+    height, components)``. Each component record carries its id
+    ``cid``, sampling factors ``h``/``v``, block-grid width ``bw``,
+    quantization table ``q`` (raster order) and its id ``tq``, Huffman
+    tables ``dc``/``ac`` (luma for Y, chroma for Cb/Cr; the shared
+    progressive AC table when ``progressive``), and per block in raster
+    order the quantized zigzag coefficients ``coefs`` and the index of
+    the last nonzero AC coefficient ``last``. ``subsample=True`` is
+    4:2:0: Y at 2x2, chroma at 1x1 on a half-resolution grid."""
+    y = np.asarray(y, dtype=np.uint8)
+    h, w = y.shape
+    s = 2 if subsample else 1
+    specs = [(y, s, quant_luma, QUANT_ANNEX_K, 0, _DC_LUMA, _AC_LUMA)]
+    if cb is not None:
+        for p in (cb, cr):
+            p = _subsample(p) if subsample else np.asarray(p, dtype=np.uint8)
+            specs.append(
+                (p, 1, quant_chroma, QUANT_ANNEX_K_CHROMA, 1, _DC_CHROMA, _AC_CHROMA)
+            )
+    mcux, mcuy = -(-w // (8 * s)), -(-h // (8 * s))
+    comps = []
+    for cid, (px, hv, quant, default, tq, dc, ac) in enumerate(specs, 1):
+        q = np.asarray(default if quant is None else quant, dtype=np.int32)
+        coefs = _plane_zigzag_coefs(px, q, mcuy * hv, mcux * hv)
+        nz = coefs[:, 1:] != 0
+        last = np.where(nz.any(axis=1), 63 - np.argmax(nz[:, ::-1], axis=1), 0)
+        comps.append(
+            {
+                "cid": cid,
+                "h": hv,
+                "v": hv,
+                "bw": mcux * hv,
+                "q": q,
+                "tq": tq,
+                "dc": dc,
+                "ac": _AC_PROG if progressive else ac,
+                "coefs": coefs,
+                "last": last.tolist(),
+            }
+        )
+    return w, h, comps
+
+
+def _enc_sequential(writer, frame, comps, se=63, al=0, ri=0):
+    """The sequential block coder (T.81 F.1.2) over one scan: per block
+    the DC difference from its component's predictor, then, when
+    ``se`` is 63, the AC coefficients as run-length symbols with ZRL
+    and EOB. ``se == 0`` is the progressive DC first scan (G.1.2.1):
+    the DCs point-transformed by ``al``, no AC. ``ri`` > 0 byte-aligns
+    the stream and emits an RSTn marker (cyclic D0-D7) after every
+    ``ri`` units, and the DC predictors restart from 0 (F.1.2.2.2)."""
     write = writer.write
-    eob_code, eob_len = ac_codes[0x00]
-    zrl_code, zrl_len = ac_codes[0xF0]
-    scan_parts = []
-    for bi in range(flat_all.shape[0]):
-        if ri > 0 and bi and bi % ri == 0:
-            scan_parts.append(writer.flush())
-            scan_parts.append(bytes([0xFF, 0xD0 + ((bi // ri - 1) & 7)]))
-            writer = _BitWriter()
-            write = writer.write
-        diff = int(diffs[bi])
-        s = _category(diff)
-        code, length = dc_codes[s]
-        write(code, length)
-        if s:
-            write(diff if diff >= 0 else diff + (1 << s) - 1, s)
-        end = int(last_nz[bi])
-        run = 0
-        row = flat_all[bi]
-        for i in range(1, end + 1):
-            v = int(row[i])
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                write(zrl_code, zrl_len)
-                run -= 16
-            s = _category(v)
-            code, length = ac_codes[(run << 4) | s]
-            write(code, length)
-            write(v if v >= 0 else v + (1 << s) - 1, s)
-            run = 0
-        if end < 63:
-            write(eob_code, eob_len)
-    scan_parts.append(writer.flush())
-    scan = b"".join(scan_parts)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
-
-    def dht(tc_th: int, bits, huffval) -> bytes:
-        return bytes([tc_th]) + bytes(bits) + bytes(huffval)
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(_M_DQT, bytes([0x00]) + bytes(int(q[ZIGZAG[i]]) for i in range(64)))
-    if ri > 0:
-        out += seg(_M_DRI, struct.pack(">H", ri))
-    out += seg(
-        _M_SOF0,
-        struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0]),
-    )
-    out += seg(_M_DHT, dht(0x00, DC_BITS, DC_HUFFVAL))
-    out += seg(_M_DHT, dht(0x10, AC_BITS, AC_HUFFVAL))
-    out += seg(_M_SOS, bytes([1, 1, 0x00, 0, 63, 0]))
-    out += scan
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# Progressive DCT (T.81 Annex G) — encode side (scan-type coverage for
-# the decoder's hermetic round-trip tests; spec-valid output)
-# ---------------------------------------------------------------------------
+    for c in comps:
+        c["prev_dc"] = 0
+    for i, unit in enumerate(_block_units(frame, comps)):
+        if ri > 0 and i and i % ri == 0:
+            writer.align()
+            writer.out += bytes((0xFF, 0xD0 + ((i // ri - 1) & 7)))
+            for c in comps:
+                c["prev_dc"] = 0
+        for c, bi in unit:
+            row = c["coefs"][bi]
+            dc = int(row[0]) >> al
+            diff = dc - c["prev_dc"]
+            c["prev_dc"] = dc
+            s = _category(diff)
+            code, length = c["dc"].codes[s]
+            # the block's codes and extra bits, gathered for one write
+            bits = (code << s) | (diff if diff >= 0 else diff + (1 << s) - 1)
+            nbits = length + s
+            if se:
+                ac = c["ac"].codes
+                end = c["last"][bi]
+                run = 0
+                for v in row[1 : end + 1].tolist() if end else ():
+                    if v == 0:
+                        run += 1
+                        continue
+                    while run > 15:
+                        code, length = ac[0xF0]  # ZRL
+                        bits = (bits << length) | code
+                        nbits += length
+                        run -= 16
+                    s = _category(v)
+                    code, length = ac[(run << 4) | s]
+                    bits = (bits << (length + s)) | (code << s) | (
+                        v if v >= 0 else v + (1 << s) - 1
+                    )
+                    nbits += length + s
+                    run = 0
+                if end < 63:
+                    code, length = ac[0x00]  # EOB
+                    bits = (bits << length) | code
+                    nbits += length
+            write(bits, nbits)
 
 
 def _pt_ac(v: int, al: int) -> int:
     """AC point transform: divide by 2^Al truncating toward zero
     (T.81 G.1.2.1 — NOT an arithmetic shift for negatives)."""
     return v >> al if v >= 0 else -((-v) >> al)
-
-
-def _enc_dc_first(writer, dc_codes, shifted_dcs):
-    """DC first scan (Ah=0): DPCM diffs of the point-transformed DCs."""
-    prev = 0
-    for dc in shifted_dcs:
-        diff = int(dc) - prev
-        prev = int(dc)
-        s = _category(diff)
-        code, length = dc_codes[s]
-        writer.write(code, length)
-        if s:
-            writer.write(diff if diff >= 0 else diff + (1 << s) - 1, s)
 
 
 def _enc_ac_first(writer, ac_codes, rows, ss, se, al):
@@ -519,9 +598,94 @@ def _enc_ac_refine(writer, ac_codes, rows, ss, se, al):
     flush_eobrun()
 
 
-def _enc_dc_refine(writer, shifted_dcs, al_bit):
-    for dc in shifted_dcs:
-        writer.write((int(dc) >> al_bit) & 1, 1)
+#: JFIF 1.01 APP0 payload: no thumbnail, 1:1 pixel aspect.
+_JFIF = b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
+
+
+def _seg(marker: int, payload: bytes) -> bytes:
+    return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
+
+
+def _dht(table) -> bytes:
+    return _seg(_M_DHT, bytes([table.tc_th, *table.bits, *table.huffval]))
+
+
+def _sos(comps, ss, se, ah, al) -> bytes:
+    """SOS header: a DC-only scan selects AC table 0 and an AC-only
+    scan DC table 0, since neither reads that table."""
+    body = [len(comps)]
+    for c in comps:
+        td = c["dc"].tc_th & 15 if ss == 0 else 0
+        ta = c["ac"].tc_th & 15 if se else 0
+        body += [c["cid"], (td << 4) | ta]
+    return _seg(_M_SOS, bytes(body + [ss, se, (ah << 4) | al]))
+
+
+def _write_frame(sof, frame, script, ri=0) -> bytes:
+    """One JPEG file: SOI, JFIF APP0, a DQT per quantization table,
+    DRI when ``ri`` > 0, the ``sof`` frame header, a DHT per Huffman
+    table the components use, then for every ``(components, Ss, Se,
+    Ah, Al)`` scan of ``script`` its SOS and entropy-coded data, and
+    EOI. A scan with Ss = Ah = 0 is sequential (Se = 63) or a
+    progressive DC first scan (Se = 0); the rest are progressive DC
+    refinement (Ss = 0) and AC first / refinement scans over one
+    component (T.81 G.1.1.1.1). Restarts apply to the former."""
+    w, h, comps = frame
+    out = bytearray(JPEG_MAGIC)
+    out += _seg(0xE0, _JFIF)
+    for tq, q in {c["tq"]: c["q"] for c in comps}.items():
+        out += _seg(_M_DQT, bytes([tq, *(int(q[z]) for z in ZIGZAG)]))
+    if ri > 0:
+        out += _seg(_M_DRI, struct.pack(">H", ri))
+    out += _seg(
+        sof,
+        struct.pack(">BHHB", 8, h, w, len(comps))
+        + bytes(
+            b for c in comps for b in (c["cid"], (c["h"] << 4) | c["v"], c["tq"])
+        ),
+    )
+    tables = []
+    for c in comps:
+        for t in (c["dc"], c["ac"]):
+            if t not in tables:
+                tables.append(t)
+                out += _dht(t)
+    for scan_comps, ss, se, ah, al in script:
+        out += _sos(scan_comps, ss, se, ah, al)
+        writer = _BitWriter()
+        if ss == 0 and ah == 0:
+            _enc_sequential(writer, frame, scan_comps, se, al, ri)
+        else:
+            blocks = [b for unit in _block_units(frame, scan_comps) for b in unit]
+            if ss == 0:  # DC refinement: bit Al of every DC
+                for c, bi in blocks:
+                    writer.write((int(c["coefs"][bi, 0]) >> al) & 1, 1)
+            else:  # AC scans cover one component (G.1.1.1.1)
+                c = scan_comps[0]
+                rows = c["coefs"][[bi for _, bi in blocks]].tolist()
+                coder = _enc_ac_first if ah == 0 else _enc_ac_refine
+                coder(writer, c["ac"].codes, rows, ss, se, al)
+        out += writer.flush()
+    out += b"\xff\xd9"  # EOI
+    return bytes(out)
+
+
+def encode_jpeg_gray(pixels, quant=None, restart_interval: int = 0) -> bytes:
+    """Grayscale (h, w) uint8 raster -> a GENUINE baseline JPEG
+    (JFIF APP0, DQT, SOF0 1-component, Annex-K Huffman DHTs, SOS,
+    entropy-coded scan with byte stuffing, EOI). ``quant`` is a 64-entry
+    raster-order quantization table (default :data:`QUANT_ANNEX_K`;
+    pass :data:`QUANT_UNITY` for the near-lossless mode).
+
+    ``restart_interval`` > 0 emits a DRI segment and an RSTn marker
+    (cyclic D0-D7) after every that-many MCUs: the bit stream is
+    byte-aligned (1-padded) before each marker and the DC predictor
+    resets after it — T.81 F.1.2.2.2, the camera-output resync feature
+    real-world JPEGs carry."""
+    frame = _components(pixels, quant_luma=quant)
+    return _write_frame(
+        _M_SOF0, frame, [(frame[2], 0, 63, 0, 0)], int(restart_interval)
+    )
 
 
 def encode_jpeg_progressive_gray(pixels, quant=None) -> bytes:
@@ -531,53 +695,12 @@ def encode_jpeg_progressive_gray(pixels, quant=None) -> bytes:
     (Ah=1, Al=0), DC refinement (Ah=1, Al=0). Fully refined, so the
     decoded image is bit-identical to the baseline encoding at the
     same quantization table."""
-    import numpy as np
-
-    px = np.asarray(pixels, dtype=np.uint8)
-    h, w = px.shape
-    q = np.asarray(quant if quant is not None else QUANT_ANNEX_K, dtype=np.int32)
-    bh, bw = -(-h // 8), -(-w // 8)
-    rows = _plane_zigzag_coefs(px, q, bh, bw)
-    dcs = rows[:, 0]
-
-    dc_codes = _build_codes(DC_BITS, DC_HUFFVAL)
-    ac_codes = _build_codes(PROG_AC_BITS, PROG_AC_HUFFVAL)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
-
-    def dht(tc_th: int, bits, huffval) -> bytes:
-        return bytes([tc_th]) + bytes(bits) + bytes(huffval)
-
-    def sos(comp_tbl, ss, se, ah, al) -> bytes:
-        body = bytes([len(comp_tbl)])
-        for cid, td, ta in comp_tbl:
-            body += bytes([cid, (td << 4) | ta])
-        return seg(_M_SOS, body + bytes([ss, se, (ah << 4) | al]))
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(_M_DQT, bytes([0x00]) + bytes(int(q[ZIGZAG[i]]) for i in range(64)))
-    out += seg(_M_SOF2, struct.pack(">BHHB", 8, h, w, 1) + bytes([1, 0x11, 0]))
-    out += seg(_M_DHT, dht(0x00, DC_BITS, DC_HUFFVAL))
-    out += seg(_M_DHT, dht(0x10, PROG_AC_BITS, PROG_AC_HUFFVAL))
-
-    def scan(enc, ss, se, ah, al):
-        nonlocal out
-        out += sos([(1, 0, 0)], ss, se, ah, al)
-        wtr = _BitWriter()
-        enc(wtr)
-        out += wtr.flush()
-
-    shifted = dcs >> 1  # numpy arithmetic shift (DC point transform)
-    scan(lambda wr: _enc_dc_first(wr, dc_codes, shifted), 0, 0, 0, 1)
-    scan(lambda wr: _enc_ac_first(wr, ac_codes, rows, 1, 5, 1), 1, 5, 0, 1)
-    scan(lambda wr: _enc_ac_first(wr, ac_codes, rows, 6, 63, 1), 6, 63, 0, 1)
-    scan(lambda wr: _enc_ac_refine(wr, ac_codes, rows, 1, 5, 0), 1, 5, 1, 0)
-    scan(lambda wr: _enc_ac_refine(wr, ac_codes, rows, 6, 63, 0), 6, 63, 1, 0)
-    scan(lambda wr: _enc_dc_refine(wr, dcs, 0), 0, 0, 1, 0)
-    out += b"\xff\xd9"
-    return bytes(out)
+    frame = _components(pixels, quant_luma=quant, progressive=True)
+    c = frame[2]
+    return _write_frame(_M_SOF2, frame, [
+        (c, 0, 0, 0, 1), (c, 1, 5, 0, 1), (c, 6, 63, 0, 1),
+        (c, 1, 5, 1, 0), (c, 6, 63, 1, 0), (c, 0, 0, 1, 0),
+    ])
 
 
 def encode_jpeg_color_multiscan(
@@ -589,124 +712,8 @@ def encode_jpeg_color_multiscan(
     multi-scan baseline layout some encoders emit. Every block is
     fully coded (DC diff + run-length AC, Annex-K tables); per-scan
     DC predictors."""
-    import numpy as np
-
-    ql = np.asarray(
-        quant_luma if quant_luma is not None else QUANT_ANNEX_K, dtype=np.int32
-    )
-    qc = np.asarray(
-        quant_chroma if quant_chroma is not None else QUANT_ANNEX_K_CHROMA,
-        dtype=np.int32,
-    )
-    y = np.asarray(y, dtype=np.uint8)
-    h, w = y.shape
-    if subsample:
-        hy, vy = 2, 2
-
-        def shrink(p):
-            p = np.asarray(p, dtype=np.float64)
-            eh, ew = -(-h // 2) * 2, -(-w // 2) * 2
-            pad = np.empty((eh, ew), dtype=np.float64)
-            pad[:h, :w] = p
-            pad[h:, :w] = p[h - 1 : h, :]
-            pad[:, w:] = pad[:, w - 1 : w]
-            return (
-                pad.reshape(eh // 2, 2, ew // 2, 2).mean(axis=(1, 3))
-            ).round().astype(np.uint8)
-
-        cb_p, cr_p = shrink(cb), shrink(cr)
-    else:
-        hy, vy = 1, 1
-        cb_p = np.asarray(cb, dtype=np.uint8)
-        cr_p = np.asarray(cr, dtype=np.uint8)
-
-    hmax, vmax = hy, vy
-    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-    planes = [
-        {"px": y, "hv": (hy, vy), "q": ql, "tq": 0, "cid": 1},
-        {"px": cb_p, "hv": (1, 1), "q": qc, "tq": 1, "cid": 2},
-        {"px": cr_p, "hv": (1, 1), "q": qc, "tq": 1, "cid": 3},
-    ]
-    for p in planes:
-        hi, vi = p["hv"]
-        p["bw"], p["bh"] = mcux * hi, mcuy * vi
-        p["rows"] = _plane_zigzag_coefs(p["px"], p["q"], p["bh"], p["bw"])
-
-    dc_l = _build_codes(DC_BITS, DC_HUFFVAL)
-    ac_l = _build_codes(AC_BITS, AC_HUFFVAL)
-    dc_c = _build_codes(DC_BITS_CHROMA, DC_HUFFVAL_CHROMA)
-    ac_c = _build_codes(AC_BITS_CHROMA, AC_HUFFVAL_CHROMA)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
-
-    def dht(tc_th: int, bits, huffval) -> bytes:
-        return bytes([tc_th]) + bytes(bits) + bytes(huffval)
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(_M_DQT, bytes([0x00]) + bytes(int(ql[ZIGZAG[i]]) for i in range(64)))
-    out += seg(_M_DQT, bytes([0x01]) + bytes(int(qc[ZIGZAG[i]]) for i in range(64)))
-    sof = struct.pack(">BHHB", 8, h, w, 3)
-    for p in planes:
-        hi, vi = p["hv"]
-        sof += bytes([p["cid"], (hi << 4) | vi, p["tq"]])
-    out += seg(_M_SOF0, sof)
-    out += seg(_M_DHT, dht(0x00, DC_BITS, DC_HUFFVAL))
-    out += seg(_M_DHT, dht(0x10, AC_BITS, AC_HUFFVAL))
-    out += seg(_M_DHT, dht(0x01, DC_BITS_CHROMA, DC_HUFFVAL_CHROMA))
-    out += seg(_M_DHT, dht(0x11, AC_BITS_CHROMA, AC_HUFFVAL_CHROMA))
-
-    for ci, p in enumerate(planes):
-        dc_codes = dc_l if ci == 0 else dc_c
-        ac_codes = ac_l if ci == 0 else ac_c
-        td = ta = 0 if ci == 0 else 1
-        out += seg(
-            _M_SOS,
-            bytes([1, p["cid"], (td << 4) | ta, 0, 63, 0]),
-        )
-        wtr = _BitWriter()
-        prev = 0
-        hi, vi = p["hv"]
-        cw = -(-(w * hi) // hmax)
-        ch = -(-(h * vi) // vmax)
-        eob_code, eob_len = ac_codes[0x00]
-        zrl_code, zrl_len = ac_codes[0xF0]
-        for by in range(-(-ch // 8)):
-            for bx in range(-(-cw // 8)):
-                row = p["rows"][by * p["bw"] + bx]
-                dc = int(row[0])
-                diff = dc - prev
-                prev = dc
-                s = _category(diff)
-                code, length = dc_codes[s]
-                wtr.write(code, length)
-                if s:
-                    wtr.write(diff if diff >= 0 else diff + (1 << s) - 1, s)
-                last_nz = 0
-                for i in range(63, 0, -1):
-                    if row[i]:
-                        last_nz = i
-                        break
-                run = 0
-                for i in range(1, last_nz + 1):
-                    v = int(row[i])
-                    if v == 0:
-                        run += 1
-                        continue
-                    while run > 15:
-                        wtr.write(zrl_code, zrl_len)
-                        run -= 16
-                    s = _category(v)
-                    code, length = ac_codes[(run << 4) | s]
-                    wtr.write(code, length)
-                    wtr.write(v if v >= 0 else v + (1 << s) - 1, s)
-                    run = 0
-                if last_nz < 63:
-                    wtr.write(eob_code, eob_len)
-        out += wtr.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
+    frame = _components(y, cb, cr, quant_luma, quant_chroma, subsample)
+    return _write_frame(_M_SOF0, frame, [([c], 0, 63, 0, 0) for c in frame[2]])
 
 
 def encode_jpeg_progressive_color(
@@ -717,166 +724,18 @@ def encode_jpeg_progressive_color(
     AC refinement scans (progressive AC scans are single-component by
     G.1.1.1.1), interleaved DC refinement. ``subsample=True`` encodes
     4:2:0 (luma 2x2, chroma 1x1 on a half-resolution grid)."""
-    import numpy as np
-
-    ql = np.asarray(
-        quant_luma if quant_luma is not None else QUANT_ANNEX_K, dtype=np.int32
+    frame = _components(
+        y, cb, cr, quant_luma, quant_chroma, subsample, progressive=True
     )
-    qc = np.asarray(
-        quant_chroma if quant_chroma is not None else QUANT_ANNEX_K_CHROMA,
-        dtype=np.int32,
+    comps = frame[2]
+    return _write_frame(
+        _M_SOF2,
+        frame,
+        [(comps, 0, 0, 0, 1)]
+        + [([c], 1, 63, 0, 1) for c in comps]
+        + [([c], 1, 63, 1, 0) for c in comps]
+        + [(comps, 0, 0, 1, 0)],
     )
-    y = np.asarray(y, dtype=np.uint8)
-    h, w = y.shape
-    if subsample:
-        hy, vy = 2, 2
-
-        def shrink(p):
-            p = np.asarray(p, dtype=np.float64)
-            # average 2x2 cells over an edge-padded even grid
-            eh, ew = -(-h // 2) * 2, -(-w // 2) * 2
-            pad = np.empty((eh, ew), dtype=np.float64)
-            pad[:h, :w] = p
-            pad[h:, :w] = p[h - 1 : h, :]
-            pad[:, w:] = pad[:, w - 1 : w]
-            return (
-                pad.reshape(eh // 2, 2, ew // 2, 2).mean(axis=(1, 3))
-            ).round().astype(np.uint8)
-
-        cb_p, cr_p = shrink(cb), shrink(cr)
-    else:
-        hy, vy = 1, 1
-        cb_p = np.asarray(cb, dtype=np.uint8)
-        cr_p = np.asarray(cr, dtype=np.uint8)
-
-    hmax, vmax = hy, vy
-    mcux, mcuy = -(-w // (8 * hmax)), -(-h // (8 * vmax))
-    planes = [
-        {"px": y, "hv": (hy, vy), "q": ql, "tq": 0, "cid": 1},
-        {"px": cb_p, "hv": (1, 1), "q": qc, "tq": 1, "cid": 2},
-        {"px": cr_p, "hv": (1, 1), "q": qc, "tq": 1, "cid": 3},
-    ]
-    for p in planes:
-        hi, vi = p["hv"]
-        p["bw"], p["bh"] = mcux * hi, mcuy * vi
-        p["rows"] = _plane_zigzag_coefs(p["px"], p["q"], p["bh"], p["bw"])
-
-    dc_codes = _build_codes(DC_BITS, DC_HUFFVAL)
-    dc_codes_c = _build_codes(DC_BITS_CHROMA, DC_HUFFVAL_CHROMA)
-    # one shared progressive AC table (has the EOBn symbols Annex K
-    # lacks); luma and chroma scans both reference table id 0
-    ac_codes = ac_codes_c = _build_codes(PROG_AC_BITS, PROG_AC_HUFFVAL)
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
-
-    def dht(tc_th: int, bits, huffval) -> bytes:
-        return bytes([tc_th]) + bytes(bits) + bytes(huffval)
-
-    def sos(comp_tbl, ss, se, ah, al) -> bytes:
-        body = bytes([len(comp_tbl)])
-        for cid, td, ta in comp_tbl:
-            body += bytes([cid, (td << 4) | ta])
-        return seg(_M_SOS, body + bytes([ss, se, (ah << 4) | al]))
-
-    out = bytearray(b"\xff\xd8")
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(_M_DQT, bytes([0x00]) + bytes(int(ql[ZIGZAG[i]]) for i in range(64)))
-    out += seg(_M_DQT, bytes([0x01]) + bytes(int(qc[ZIGZAG[i]]) for i in range(64)))
-    sof = struct.pack(">BHHB", 8, h, w, 3)
-    for p in planes:
-        hi, vi = p["hv"]
-        sof += bytes([p["cid"], (hi << 4) | vi, p["tq"]])
-    out += seg(_M_SOF2, sof)
-    out += seg(_M_DHT, dht(0x00, DC_BITS, DC_HUFFVAL))
-    out += seg(_M_DHT, dht(0x10, PROG_AC_BITS, PROG_AC_HUFFVAL))
-    out += seg(_M_DHT, dht(0x01, DC_BITS_CHROMA, DC_HUFFVAL_CHROMA))
-
-    # interleaved DC first (Al=1): per-component DPCM in MCU order
-    wtr = _BitWriter()
-    prev = [0, 0, 0]
-    al = 1
-    for my in range(mcuy):
-        for mx in range(mcux):
-            for ci, p in enumerate(planes):
-                hi, vi = p["hv"]
-                codes = dc_codes if ci == 0 else dc_codes_c
-                for v in range(vi):
-                    for hh in range(hi):
-                        bi = (my * vi + v) * p["bw"] + mx * hi + hh
-                        dc = int(p["rows"][bi][0]) >> al
-                        diff = dc - prev[ci]
-                        prev[ci] = dc
-                        s = _category(diff)
-                        code, length = codes[s]
-                        wtr.write(code, length)
-                        if s:
-                            wtr.write(
-                                diff if diff >= 0 else diff + (1 << s) - 1, s
-                            )
-    out += sos([(1, 0, 0), (2, 1, 0), (3, 1, 0)], 0, 0, 0, 1)
-    out += wtr.flush()
-
-    def comp_rows(p):
-        """Blocks the single-component scans cover, row-major over the
-        COMPONENT's own grid (matches the decoder's _block_units)."""
-        hi, vi = p["hv"]
-        cw = -(-(w * hi) // hmax)
-        ch = -(-(h * vi) // vmax)
-        for by in range(-(-ch // 8)):
-            for bx in range(-(-cw // 8)):
-                yield p["rows"][by * p["bw"] + bx]
-
-    for ci, p in enumerate(planes):
-        codes = ac_codes if ci == 0 else ac_codes_c
-        ta = 0  # shared progressive AC table
-        out += sos([(p["cid"], 0, ta)], 1, 63, 0, 1)
-        wtr = _BitWriter()
-        _enc_ac_first(wtr, codes, list(comp_rows(p)), 1, 63, 1)
-        out += wtr.flush()
-    for ci, p in enumerate(planes):
-        codes = ac_codes if ci == 0 else ac_codes_c
-        ta = 0  # shared progressive AC table
-        out += sos([(p["cid"], 0, ta)], 1, 63, 1, 0)
-        wtr = _BitWriter()
-        _enc_ac_refine(wtr, codes, list(comp_rows(p)), 1, 63, 0)
-        out += wtr.flush()
-    # interleaved DC refinement (Ah=1, Al=0): raw bit 0 per block
-    wtr = _BitWriter()
-    for my in range(mcuy):
-        for mx in range(mcux):
-            for p in planes:
-                hi, vi = p["hv"]
-                for v in range(vi):
-                    for hh in range(hi):
-                        bi = (my * vi + v) * p["bw"] + mx * hi + hh
-                        wtr.write(int(p["rows"][bi][0]) & 1, 1)
-    out += sos([(1, 0, 0), (2, 1, 0), (3, 1, 0)], 0, 0, 1, 0)
-    out += wtr.flush()
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-def _plane_zigzag_coefs(plane, quant, bh, bw):
-    """Pad a uint8 plane to (bh*8, bw*8) by edge replication, DCT +
-    quantize every block, and return the (bh*bw, 64) zigzag-ordered
-    integer coefficients in raster block order."""
-    import numpy as np
-
-    px = np.asarray(plane, dtype=np.uint8)
-    h, w = px.shape
-    q = np.asarray(quant, dtype=np.int32)
-    padded = np.empty((bh * 8, bw * 8), dtype=np.float64)
-    padded[:h, :w] = px
-    padded[h:, :w] = px[h - 1 : h, :]
-    padded[:, w:] = padded[:, w - 1 : w]
-    padded -= 128.0
-    a = _dct_matrix()
-    blocks = padded.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3)
-    coefs = a @ blocks @ a.T
-    quantized = np.rint(coefs / q.reshape(8, 8)).astype(np.int64)
-    zz = np.asarray(ZIGZAG)
-    return quantized.reshape(-1, 64)[:, zz]
 
 
 def encode_jpeg_color(y, cb, cr, quant_luma=None, quant_chroma=None,
@@ -890,130 +749,8 @@ def encode_jpeg_color(y, cb, cr, quant_luma=None, quant_chroma=None,
     real-corpus color JPEGs. With unity quant tables and planes
     constant per MCU, the lossy format round-trips EXACTLY (DC-only
     blocks; same argument as the grayscale module doc)."""
-    import numpy as np
-
-    ypx = np.asarray(y, dtype=np.uint8)
-    h, w = ypx.shape
-    ql = list(quant_luma if quant_luma is not None else QUANT_ANNEX_K)
-    qc = list(quant_chroma if quant_chroma is not None else QUANT_ANNEX_K_CHROMA)
-    if subsample:
-        hy = vy = 2
-
-        def shrink(p):
-            px = np.asarray(p, dtype=np.float64)
-            hh = -(-px.shape[0] // 2) * 2
-            ww = -(-px.shape[1] // 2) * 2
-            pad = np.empty((hh, ww), dtype=np.float64)
-            pad[: px.shape[0], : px.shape[1]] = px
-            pad[px.shape[0] :, : px.shape[1]] = px[-1:, :]
-            pad[:, px.shape[1] :] = pad[:, px.shape[1] - 1 : px.shape[1]]
-            m = pad.reshape(hh // 2, 2, ww // 2, 2).mean(axis=(1, 3))
-            return np.clip(np.rint(m), 0, 255).astype(np.uint8)
-
-        cbp, crp = shrink(cb), shrink(cr)
-    else:
-        hy = vy = 1
-        cbp = np.asarray(cb, dtype=np.uint8)
-        crp = np.asarray(cr, dtype=np.uint8)
-    mcux, mcuy = -(-w // (8 * hy)), -(-h // (8 * vy))
-    planes = [
-        (ypx, ql, hy, vy, 0),
-        (cbp, qc, 1, 1, 1),
-        (crp, qc, 1, 1, 1),
-    ]
-    coef_sets = [
-        _plane_zigzag_coefs(px, q, mcuy * vi, mcux * hi)
-        for px, q, hi, vi, _tq in planes
-    ]
-    # Vectorized last-nonzero-AC index per block (same trick as the
-    # grayscale encoder) so the write loop only walks real coefficients.
-    last_nz_sets = []
-    for flat in coef_sets:
-        has_ac = (flat[:, 1:] != 0).any(axis=1)
-        last_nz_sets.append(
-            np.where(has_ac, 63 - np.argmax(flat[:, :0:-1] != 0, axis=1), 0)
-        )
-
-    dc_luma = _build_codes(DC_BITS, DC_HUFFVAL)
-    ac_luma = _build_codes(AC_BITS, AC_HUFFVAL)
-    dc_chroma = _build_codes(DC_BITS_CHROMA, DC_HUFFVAL_CHROMA)
-    ac_chroma = _build_codes(AC_BITS_CHROMA, AC_HUFFVAL_CHROMA)
-    tables = [(dc_luma, ac_luma), (dc_chroma, ac_chroma), (dc_chroma, ac_chroma)]
-
-    writer = _BitWriter()
-    write = writer.write
-    prev_dc = [0, 0, 0]
-
-    def put_block(row, end, dc_codes, ac_codes, ci):
-        diff = int(row[0]) - prev_dc[ci]
-        prev_dc[ci] = int(row[0])
-        s = _category(diff)
-        code, length = dc_codes[s]
-        write(code, length)
-        if s:
-            write(diff if diff >= 0 else diff + (1 << s) - 1, s)
-        run = 0
-        zrl_code, zrl_len = ac_codes[0xF0]
-        for i in range(1, end + 1):
-            v = int(row[i])
-            if v == 0:
-                run += 1
-                continue
-            while run > 15:
-                write(zrl_code, zrl_len)
-                run -= 16
-            s = _category(v)
-            code, length = ac_codes[(run << 4) | s]
-            write(code, length)
-            write(v if v >= 0 else v + (1 << s) - 1, s)
-            run = 0
-        if end < 63:
-            code, length = ac_codes[0x00]
-            write(code, length)
-
-    for my in range(mcuy):
-        for mx in range(mcux):
-            for ci, (px, q, hi, vi, _tq) in enumerate(planes):
-                bwc = mcux * hi
-                for v in range(vi):
-                    for hh in range(hi):
-                        bi = (my * vi + v) * bwc + mx * hi + hh
-                        put_block(
-                            coef_sets[ci][bi],
-                            int(last_nz_sets[ci][bi]),
-                            *tables[ci],
-                            ci,
-                        )
-    scan = writer.flush()
-
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
-
-    def dht(tc_th: int, bits, huffval) -> bytes:
-        return bytes([tc_th]) + bytes(bits) + bytes(huffval)
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(_M_DQT, bytes([0x00]) + bytes(ql[ZIGZAG[i]] for i in range(64)))
-    out += seg(_M_DQT, bytes([0x01]) + bytes(qc[ZIGZAG[i]] for i in range(64)))
-    out += seg(
-        _M_SOF0,
-        struct.pack(">BHHB", 8, h, w, 3)
-        + bytes([1, (hy << 4) | vy, 0])
-        + bytes([2, 0x11, 1])
-        + bytes([3, 0x11, 1]),
-    )
-    out += seg(_M_DHT, dht(0x00, DC_BITS, DC_HUFFVAL))
-    out += seg(_M_DHT, dht(0x10, AC_BITS, AC_HUFFVAL))
-    out += seg(_M_DHT, dht(0x01, DC_BITS_CHROMA, DC_HUFFVAL_CHROMA))
-    out += seg(_M_DHT, dht(0x11, AC_BITS_CHROMA, AC_HUFFVAL_CHROMA))
-    out += seg(
-        _M_SOS,
-        bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]),
-    )
-    out += scan
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
+    frame = _components(y, cb, cr, quant_luma, quant_chroma, subsample)
+    return _write_frame(_M_SOF0, frame, [(frame[2], 0, 63, 0, 0)])
 
 
 def ycbcr_to_rgb(y, cb, cr):
@@ -1021,8 +758,6 @@ def ycbcr_to_rgb(y, cb, cr):
     public fixed conversion R = Y + 1.402(Cr-128), G = Y -
     0.344136(Cb-128) - 0.714136(Cr-128), B = Y + 1.772(Cb-128),
     rounded and clipped."""
-    import numpy as np
-
     yf = np.asarray(y, dtype=np.float64)
     cbf = np.asarray(cb, dtype=np.float64) - 128.0
     crf = np.asarray(cr, dtype=np.float64) - 128.0
@@ -1037,8 +772,6 @@ def rgb_to_ycbcr(r, g, b):
     """JFIF RGB -> YCbCr (uint8 planes in, uint8 planes out): Y =
     0.299R + 0.587G + 0.114B, Cb = 128 - 0.168736R - 0.331264G +
     0.5B, Cr = 128 + 0.5R - 0.418688G - 0.081312B, rounded/clipped."""
-    import numpy as np
-
     rf = np.asarray(r, dtype=np.float64)
     gf = np.asarray(g, dtype=np.float64)
     bf = np.asarray(b, dtype=np.float64)
@@ -1049,25 +782,31 @@ def rgb_to_ycbcr(r, g, b):
     return clip(y), clip(cb), clip(cr)
 
 
+# ---------------------------------------------------------------------------
+# Decode side
+# ---------------------------------------------------------------------------
+
+
 def decode_jpeg(data: bytes):
     """Parse a REAL JPEG into ``(width, height, planes)`` where
     ``planes`` is a list of row-major uint8 (h, w) arrays — one for
     grayscale, three (Y, Cb, Cr, chroma upsampled to full size by
     sample replication) for color. Handles baseline sequential (SOF0)
-    interleaved scans AND progressive (SOF2, T.81 Annex G: DC/AC
-    first + refinement scans, EOBn runs), with sampling factors 1-2
-    in each direction (4:4:4, 4:2:2, 4:2:0). Returns ``None`` when
-    the blob does not start with SOI (not a JPEG — the operator's
-    null path); raises ``NotImplementedError`` at the codec's honest
-    boundaries (lossless/hierarchical frames, 12-bit precision, >2x
-    sampling factors, 16-bit quant tables) and ``ValueError`` on
-    corrupt streams. Baseline multi-scan (non-interleaved) layouts
-    decode through the same persistent-state machinery as progressive
-    (r8). Restart intervals
-    (DRI/RSTn — standard camera output) are fully supported: the
-    entropy stream resyncs and DC predictors reset at every RSTn."""
-    import numpy as np
+    scans, interleaved or one per component, AND progressive (SOF2,
+    T.81 Annex G: DC/AC first + refinement scans, EOBn runs), with
+    sampling factors 1-2 in each direction (4:4:4, 4:2:2, 4:2:0) and
+    restart intervals (DRI/RSTn — standard camera output: the entropy
+    stream resyncs and DC predictors reset at every RSTn). Returns
+    ``None`` when the blob does not start with SOI (not a JPEG — the
+    operator's null path); raises ``NotImplementedError`` at the
+    codec's honest boundaries (lossless/hierarchical frames, 12-bit
+    precision, >2x sampling factors, 16-bit quant tables) and
+    ``ValueError`` on corrupt streams.
 
+    Every scan decodes into persistent per-component coefficient
+    state. A sequential scan over every frame component completes the
+    image, so it returns at once, EOI or not; any other stream must
+    reach its EOI."""
     if len(data) < 4 or data[:2] != JPEG_MAGIC:
         return None
     pos = 2
@@ -1075,8 +814,7 @@ def decode_jpeg(data: bytes):
     huff_tables: dict[tuple[int, int], dict] = {}
     frame = None
     progressive = False
-    prog_state = None  # per frame component, persists across scans
-    saw_eoi = False
+    state = None  # per frame component id, persists across scans
     restart_interval = 0
     while pos + 2 <= len(data):
         if data[pos] != 0xFF:
@@ -1089,9 +827,8 @@ def decode_jpeg(data: bytes):
             pos += 2
             continue
         if marker == _M_EOI:
-            if prog_state is not None:
-                saw_eoi = True
-                break  # all progressive scans landed; reconstruct below
+            if state is not None:
+                return frame[0], frame[1], _reconstruct(frame, state)
             raise ValueError("EOI before SOS")
         if pos + 4 > len(data):
             raise ValueError(f"truncated segment 0xFF{marker:02X}")
@@ -1136,6 +873,8 @@ def decode_jpeg(data: bytes):
                 "are supported"
             )
         elif marker in (_M_SOF0, _M_SOF2):
+            if state is not None:  # the scans' state is sized by the frame
+                raise ValueError("SOF after the first SOS")
             progressive = marker == _M_SOF2
             if len(payload) < 6:
                 raise ValueError("truncated SOF0 segment")
@@ -1177,58 +916,21 @@ def decode_jpeg(data: bytes):
             w, h, comps = frame
             if len(payload) < 1 + 2 * ns + 3:
                 raise ValueError("truncated SOS segment")
-            by_cid = {c["cid"]: c for c in comps}
-
-            if not progressive and ns == len(comps):
-                scan_comps = []
-                for s in range(ns):
-                    cs = payload[1 + 2 * s]
-                    td, ta = payload[2 + 2 * s] >> 4, payload[2 + 2 * s] & 0x0F
-                    c = by_cid.get(cs)
-                    if c is None:
-                        raise ValueError(f"SOS component {cs} not in SOF0")
-                    if c["tq"] not in quant_tables:
-                        raise ValueError(
-                            f"SOF references undefined DQT table {c['tq']}"
-                        )
-                    if (0, td) not in huff_tables or (1, ta) not in huff_tables:
-                        raise ValueError(
-                            f"SOS references undefined DHT table (dc={td}, ta={ta})"
-                        )
-                    scan_comps.append(
-                        {
-                            "h": c["h"],
-                            "v": c["v"],
-                            "quant": quant_tables[c["tq"]],
-                            "dc": huff_tables[(0, td)],
-                            "ac": huff_tables[(1, ta)],
-                        }
-                    )
-                return _decode_scan(
-                    data, pos, w, h, scan_comps, restart_interval
-                )
-
-            # multi-scan path: progressive scans, or BASELINE
-            # non-interleaved scans (ns < frame components — each
-            # component's blocks arrive fully coded in its own scan,
-            # T.81 A.2.2). Both decode into persistent coefficient
-            # state and continue the marker loop (DHT/DRI may redefine
-            # between scans) until EOI.
-            import numpy as np
-
-            if prog_state is None:
+            # DHT/DRI may be redefined between scans; the coefficient
+            # state lives from the first scan to the reconstruction.
+            if state is None:
                 hmax = max(c["h"] for c in comps)
                 vmax = max(c["v"] for c in comps)
                 mcux = -(-w // (8 * hmax))
                 mcuy = -(-h // (8 * vmax))
-                prog_state = {}
+                state = {}
                 for c in comps:
                     if c["tq"] not in quant_tables:
                         raise ValueError(
                             f"SOF references undefined DQT table {c['tq']}"
                         )
                     bwc, bhc = mcux * c["h"], mcuy * c["v"]
-                    prog_state[c["cid"]] = {
+                    state[c["cid"]] = {
                         "coefs": np.zeros((bhc * bwc, 64), dtype=np.int64),
                         "bw": bwc,
                         "bh": bhc,
@@ -1246,7 +948,7 @@ def decode_jpeg(data: bytes):
             for s in range(ns):
                 cs = payload[1 + 2 * s]
                 td, ta = payload[2 + 2 * s] >> 4, payload[2 + 2 * s] & 0x0F
-                st = prog_state.get(cs)
+                st = state.get(cs)
                 if st is None:
                     raise ValueError(f"SOS component {cs} not in SOF")
                 if not progressive or (ss_ == 0 and ah_ == 0):
@@ -1269,193 +971,35 @@ def decode_jpeg(data: bytes):
                     data, pos, frame, scan_states, ss_, se_, ah_, al_,
                     restart_interval,
                 )
-            else:
-                pos = _decode_scan_sequential(
-                    data, pos, frame, scan_states, restart_interval
-                )
-            continue
+                continue
+            pos = _decode_scan_sequential(
+                data, pos, frame, scan_states, restart_interval
+            )
+            if ns == len(comps):
+                return w, h, _reconstruct(frame, state)
         # else: APPn/COM/etc — skipped via seg_len
-    if prog_state is not None:
-        # Strict pipeline semantics: a progressive stream without its
+    if state is not None:
+        # Strict pipeline semantics: a multi-scan stream without its
         # EOI is a truncated download, not a partially-refined preview
         # — raise rather than silently return a lower-fidelity image.
-        if not saw_eoi:
-            raise ValueError("truncated progressive stream (no EOI)")
-        w, h, comps = frame
-        hmax = max(c["h"] for c in comps)
-        vmax = max(c["v"] for c in comps)
-        states = [prog_state[c["cid"]] for c in comps]
-        quants = [st["quant"] for st in states]
-        return w, h, _reconstruct(states, quants, w, h, hmax, vmax)
+        raise ValueError("truncated multi-scan stream (no EOI)")
     raise ValueError("no SOS marker found")
 
 
-def _decode_scan(data, pos, w, h, comps, restart_interval: int = 0):
-    """Entropy-decode an interleaved baseline scan and reconstruct.
-
-    ``comps`` is the scan's component list ({h, v, quant, dc, ac} per
-    component); a single-component scan is the 1-element case (MCU =
-    one block, Hmax = Vmax = 1 — identical to the dedicated grayscale
-    path this generalizes).
-
-    Fast path: the scan is un-stuffed ONCE per restart segment
-    (0xFF 0x00 -> 0xFF; legal because baseline entropy data contains
-    no other 0xFF-started pair inside a segment), then read through
-    16-bit-window integer peeks against the prefix LUTs — a handful of
-    int ops per coefficient instead of a per-bit method-call walk.
-
-    ``restart_interval`` > 0 (from DRI): the scan is split at RSTn
-    markers into byte-aligned segments; after every that-many MCUs the
-    reader jumps to the next segment and every component's DC
-    predictor resets (T.81 F.2.2.5) — one corrupt segment in a real
-    camera JPEG damages 8 MCU rows, not the rest of the image."""
-    import numpy as np
-
+def _reconstruct(frame, state):
+    """Dequantize + IDCT every frame component's zigzag coefficient
+    blocks and crop/upsample them to (h, w) planes, in frame order."""
+    w, h, comps = frame
     hmax = max(c["h"] for c in comps)
     vmax = max(c["v"] for c in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    ri = int(restart_interval)
-    if ri <= 0:
-        # Entropy data ends at the first marker (0xFF followed by
-        # anything but the stuffed 0x00).
-        m = _MARKER_RE.search(data, pos)
-        end = m.start() if m else len(data)
-        segments = [data[pos:end].replace(b"\xff\x00", b"\xff")]
-    else:
-        # Split on RSTn (D0-D7, cyclic, no length field); the first
-        # non-RST marker ends the scan.
-        segments = []
-        start = p = pos
-        while True:
-            m = _MARKER_RE.search(data, p)
-            if m is None:
-                segments.append(data[start:].replace(b"\xff\x00", b"\xff"))
-                break
-            segments.append(
-                data[start : m.start()].replace(b"\xff\x00", b"\xff")
-            )
-            if 0xD0 <= data[m.start() + 1] <= 0xD7:
-                start = p = m.start() + 2
-            else:
-                break
-    seg_idx = 0
-    entropy = segments[0]
-    buf = entropy + b"\x00\x00\x00\x00"
-    nbits_total = len(entropy) * 8
-
-    zz = np.asarray(ZIGZAG)
-    state = []  # per component: (coefs, blocks_w, dc_lut, ac_lut)
-    for c in comps:
-        bwc, bhc = mcux * c["h"], mcuy * c["v"]
-        state.append(
-            {
-                "coefs": np.zeros((bhc * bwc, 64), dtype=np.int64),
-                "bw": bwc,
-                "bh": bhc,
-                "dc_lut": _build_lut(c["dc"]),
-                "ac_lut": _build_lut(c["ac"]),
-                "prev_dc": 0,
-                "h": c["h"],
-                "v": c["v"],
-            }
-        )
-    bitpos = 0
-    from_bytes = int.from_bytes
-    for my in range(mcuy):
-        for mx in range(mcux):
-            mi = my * mcux + mx
-            if ri > 0 and mi and mi % ri == 0:
-                if bitpos > nbits_total:
-                    raise ValueError("entropy stream truncated")
-                seg_idx += 1
-                if seg_idx >= len(segments):
-                    raise ValueError(
-                        f"missing RSTn marker before MCU {mi}"
-                    )
-                entropy = segments[seg_idx]
-                buf = entropy + b"\x00\x00\x00\x00"
-                nbits_total = len(entropy) * 8
-                bitpos = 0
-                for st in state:
-                    st["prev_dc"] = 0
-            for st in state:
-                for v in range(st["v"]):
-                    for hh in range(st["h"]):
-                        if bitpos > nbits_total:
-                            raise ValueError("entropy stream truncated")
-                        dc_lut, ac_lut = st["dc_lut"], st["ac_lut"]
-                        byteidx = bitpos >> 3
-                        chunk = from_bytes(buf[byteidx : byteidx + 4], "big")
-                        ent = dc_lut[(chunk >> (16 - (bitpos & 7))) & 0xFFFF]
-                        if ent == 0:
-                            raise ValueError("invalid Huffman code in scan")
-                        s = ent >> 5
-                        bitpos += ent & 31
-                        if s:
-                            byteidx = bitpos >> 3
-                            chunk = from_bytes(
-                                buf[byteidx : byteidx + 4], "big"
-                            )
-                            val = (chunk >> (32 - s - (bitpos & 7))) & (
-                                (1 << s) - 1
-                            )
-                            bitpos += s
-                            st["prev_dc"] += _extend(val, s)
-                        bi = (my * st["v"] + v) * st["bw"] + mx * st["h"] + hh
-                        block = st["coefs"][bi]
-                        block[0] = st["prev_dc"]
-                        i = 1
-                        while i < 64:
-                            byteidx = bitpos >> 3
-                            chunk = from_bytes(
-                                buf[byteidx : byteidx + 4], "big"
-                            )
-                            ent = ac_lut[(chunk >> (16 - (bitpos & 7))) & 0xFFFF]
-                            if ent == 0:
-                                raise ValueError("invalid Huffman code in scan")
-                            sym = ent >> 5
-                            bitpos += ent & 31
-                            if sym == 0x00:  # EOB
-                                break
-                            if sym == 0xF0:  # ZRL
-                                i += 16
-                                continue
-                            i += sym >> 4
-                            size = sym & 0x0F
-                            if i >= 64:
-                                raise ValueError("AC run past block end")
-                            byteidx = bitpos >> 3
-                            chunk = from_bytes(
-                                buf[byteidx : byteidx + 4], "big"
-                            )
-                            val = (chunk >> (32 - size - (bitpos & 7))) & (
-                                (1 << size) - 1
-                            )
-                            bitpos += size
-                            block[i] = _extend(val, size)
-                            i += 1
-    if bitpos > nbits_total:
-        raise ValueError("entropy stream truncated")
-    quants = [c["quant"] for c in comps]
-    return w, h, _reconstruct(state, quants, w, h, hmax, vmax)
-
-
-def _reconstruct(state, quants, w, h, hmax, vmax):
-    """Dequantize + IDCT every component's zigzag coefficient blocks
-    and crop/upsample to (h, w) planes — shared by the baseline and
-    progressive paths (same math once all scans have landed)."""
-    import numpy as np
-
-    a = _dct_matrix()
-    zz = np.asarray(ZIGZAG)
     planes = []
-    for q64, st in zip(quants, state):
-        q = np.asarray(q64, dtype=np.float64)
+    for c in comps:
+        st = state[c["cid"]]
+        q = np.asarray(st["quant"], dtype=np.float64)
         dez = np.zeros((st["bh"] * st["bw"], 64), dtype=np.float64)
-        dez[:, zz] = st["coefs"]  # de-zigzag, all blocks at once
+        dez[:, _ZZ] = st["coefs"]  # de-zigzag, all blocks at once
         blocks = (dez * q).reshape(st["bh"], st["bw"], 8, 8)
-        spatial = a.T @ blocks @ a  # f = A^T F A, broadcast over blocks
+        spatial = _DCT.T @ blocks @ _DCT  # f = A^T F A, broadcast over blocks
         raster = spatial.transpose(0, 2, 1, 3).reshape(
             st["bh"] * 8, st["bw"] * 8
         )
@@ -1470,16 +1014,12 @@ def _reconstruct(state, quants, w, h, hmax, vmax):
     return planes
 
 
-# ---------------------------------------------------------------------------
-# Progressive DCT (T.81 Annex G) — decode side
-# ---------------------------------------------------------------------------
-
-
 def _entropy_segments(data, pos, ri):
     """Split a scan's entropy data at RSTn markers, unstuffing each
-    segment; returns ``(segments, end_pos)`` with ``end_pos`` the
-    offset of the first non-RST marker after the scan (where the
-    caller's marker loop resumes)."""
+    segment (0xFF 0x00 -> 0xFF; legal because entropy data holds no
+    other 0xFF-started pair inside a segment); returns ``(segments,
+    end_pos)`` with ``end_pos`` the offset of the first non-RST marker
+    after the scan (where the caller's marker loop resumes)."""
     if ri <= 0:
         m = _MARKER_RE.search(data, pos)
         end = m.start() if m else len(data)
@@ -1498,9 +1038,89 @@ def _entropy_segments(data, pos, ri):
             return segments, m.start()
 
 
+def _decode_scan_sequential(data, pos, frame, scan_states, ri):
+    """Entropy-decode ONE baseline sequential scan — interleaved, or
+    over a subset of the frame's components (T.81 A.2) — into the
+    persistent coefficient state: every block arrives complete (DC
+    diff + run-length AC), DC predictors reset per scan and at RSTn
+    (F.2.2.5). Returns the position after the scan's entropy data.
+
+    Each restart segment is read through 16-bit-window integer peeks
+    against the prefix LUTs — a handful of int ops per coefficient
+    instead of a per-bit method-call walk. The over-read check before
+    every block stops a corrupt frame size from walking all its blocks
+    through the zero padding."""
+    segments, end = _entropy_segments(data, pos, ri)
+    seg_idx = 0
+    buf = segments[0] + b"\x00\x00\x00\x00"
+    nbits_total = len(segments[0]) * 8
+    bitpos = 0
+    from_bytes = int.from_bytes
+    for st in scan_states:
+        st["prev_dc"] = 0
+    for ui, unit in enumerate(_block_units(frame, scan_states)):
+        if ri > 0 and ui and ui % ri == 0:
+            if bitpos > nbits_total:
+                raise ValueError("entropy stream truncated")
+            seg_idx += 1
+            if seg_idx >= len(segments):
+                raise ValueError("missing RSTn marker in scan")
+            buf = segments[seg_idx] + b"\x00\x00\x00\x00"
+            nbits_total = len(segments[seg_idx]) * 8
+            bitpos = 0
+            for st in scan_states:
+                st["prev_dc"] = 0
+        for st, bi in unit:
+            if bitpos > nbits_total:
+                raise ValueError("entropy stream truncated")
+            dc_lut, ac_lut = st["dc_lut"], st["ac_lut"]
+            byteidx = bitpos >> 3
+            chunk = from_bytes(buf[byteidx : byteidx + 4], "big")
+            ent = dc_lut[(chunk >> (16 - (bitpos & 7))) & 0xFFFF]
+            if ent == 0:
+                raise ValueError("invalid Huffman code in scan")
+            s = ent >> 5
+            bitpos += ent & 31
+            if s:
+                byteidx = bitpos >> 3
+                chunk = from_bytes(buf[byteidx : byteidx + 4], "big")
+                val = (chunk >> (32 - s - (bitpos & 7))) & ((1 << s) - 1)
+                bitpos += s
+                st["prev_dc"] += _extend(val, s)
+            block = st["coefs"][bi]
+            block[0] = st["prev_dc"]
+            i = 1
+            while i < 64:
+                byteidx = bitpos >> 3
+                chunk = from_bytes(buf[byteidx : byteidx + 4], "big")
+                ent = ac_lut[(chunk >> (16 - (bitpos & 7))) & 0xFFFF]
+                if ent == 0:
+                    raise ValueError("invalid Huffman code in scan")
+                sym = ent >> 5
+                bitpos += ent & 31
+                size = sym & 0x0F
+                if size == 0:
+                    if sym != 0xF0:  # EOB: every run but 15 (F.2.2.2)
+                        break
+                    i += 16  # ZRL
+                    continue
+                i += sym >> 4
+                if i >= 64:
+                    raise ValueError("AC run past block end")
+                byteidx = bitpos >> 3
+                chunk = from_bytes(buf[byteidx : byteidx + 4], "big")
+                val = (chunk >> (32 - size - (bitpos & 7))) & ((1 << size) - 1)
+                bitpos += size
+                block[i] = _extend(val, size)
+                i += 1
+    if bitpos > nbits_total:
+        raise ValueError("entropy stream truncated")
+    return end
+
+
 class _ScanBits:
     """MSB-first bit reader over RST-segmented unstuffed entropy data,
-    using the same 16-bit-window LUT peek as the baseline fast path.
+    using the same 16-bit-window LUT peek as the sequential decoder.
     ``restart()`` jumps to the next RST segment (byte-aligned by
     construction) and ``finish()`` validates no segment over-read."""
 
@@ -1549,80 +1169,6 @@ class _ScanBits:
         return self.bits(1)
 
 
-def _block_units(scan_states, mcux, mcuy, w, h, hmax, vmax):
-    """Yield the scan's block sequence, grouped per restart-countable
-    unit (T.81 G: one MCU for interleaved scans, one block for
-    single-component scans). Each unit is a list of (state, block_idx).
-
-    Single-component scans iterate the COMPONENT's own block grid
-    (ceil of its scaled dimensions), row-major — narrower than the
-    padded interleaved grid when the image is not an exact multiple
-    of the MCU size."""
-    if len(scan_states) > 1:
-        for my in range(mcuy):
-            for mx in range(mcux):
-                unit = []
-                for st in scan_states:
-                    for v in range(st["v"]):
-                        for hh in range(st["h"]):
-                            unit.append(
-                                (st, (my * st["v"] + v) * st["bw"] + mx * st["h"] + hh)
-                            )
-                yield unit
-    else:
-        st = scan_states[0]
-        cw = -(-(w * st["h"]) // hmax)
-        ch = -(-(h * st["v"]) // vmax)
-        for by in range(-(-ch // 8)):
-            for bx in range(-(-cw // 8)):
-                yield [(st, by * st["bw"] + bx)]
-
-
-def _decode_scan_sequential(data, pos, frame, scan_states, ri):
-    """Entropy-decode ONE baseline sequential scan over a SUBSET of
-    the frame's components (non-interleaved when ns == 1, partially
-    interleaved otherwise — T.81 A.2) into the persistent coefficient
-    state: every block arrives complete (DC diff + run-length AC),
-    DC predictors reset per scan and at RSTn. Returns the position
-    after the scan's entropy data."""
-    w, h, comps = frame
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
-    segments, end = _entropy_segments(data, pos, ri)
-    rd = _ScanBits(segments)
-    for st in scan_states:
-        st["prev_dc"] = 0
-    units = _block_units(scan_states, mcux, mcuy, w, h, hmax, vmax)
-    for i, unit in enumerate(units):
-        if ri and i and i % ri == 0:
-            rd.restart()
-            for st in scan_states:
-                st["prev_dc"] = 0
-        for st, bi in unit:
-            block = st["coefs"][bi]
-            s = rd.decode(st["dc_lut"])
-            st["prev_dc"] += _extend(rd.bits(s), s) if s else 0
-            block[0] = st["prev_dc"]
-            k = 1
-            while k < 64:
-                rs = rd.decode(st["ac_lut"])
-                r, sz = rs >> 4, rs & 15
-                if sz == 0:
-                    if r == 15:  # ZRL
-                        k += 16
-                        continue
-                    break  # EOB
-                k += r
-                if k > 63:
-                    raise ValueError("AC run past block end")
-                block[k] = _extend(rd.bits(sz), sz)
-                k += 1
-    rd.finish()
-    return end
-
-
 def _decode_scan_progressive(
     data, pos, frame, scan_states, ss, se, ah, al, ri
 ):
@@ -1631,14 +1177,19 @@ def _decode_scan_progressive(
     or single-component) and AC first / AC refinement (single-component
     only, per G.1.1.1.1). Returns the stream position after the scan's
     entropy data."""
-    w, h, comps = frame
-    hmax = max(c["h"] for c in comps)
-    vmax = max(c["v"] for c in comps)
-    mcux = -(-w // (8 * hmax))
-    mcuy = -(-h // (8 * vmax))
+    if not ss <= se <= 63:
+        raise ValueError(f"progressive scan band [{ss}, {se}] out of range")
     segments, end = _entropy_segments(data, pos, ri)
     rd = _ScanBits(segments)
-    units = _block_units(scan_states, mcux, mcuy, w, h, hmax, vmax)
+
+    def checked_units():
+        # an over-read stops the walk at once: a corrupt frame size
+        # must not walk all its blocks through the zero padding
+        for unit in _block_units(frame, scan_states):
+            rd.finish()
+            yield unit
+
+    units = checked_units()
 
     if ss == 0:  # DC scan (Se must be 0 per G.1.1.1.1)
         if se != 0:

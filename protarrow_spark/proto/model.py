@@ -48,9 +48,7 @@ class Kind(enum.Enum):
     GROUP = "group"
 
 
-SIGNED_INT_KINDS = {Kind.INT32, Kind.INT64, Kind.SFIXED32, Kind.SFIXED64}
 ZIGZAG_KINDS = {Kind.SINT32, Kind.SINT64}
-UNSIGNED_INT_KINDS = {Kind.UINT32, Kind.UINT64, Kind.FIXED32, Kind.FIXED64}
 
 
 @dataclasses.dataclass(frozen=True)

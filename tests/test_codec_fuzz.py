@@ -19,6 +19,7 @@ from hypothesis import strategies as st
 
 from protarrow_spark.operators.jpeg import (
     QUANT_UNITY,
+    encode_jpeg_color_multiscan,
     encode_jpeg_gray,
     decode_jpeg_gray,
 )
@@ -39,6 +40,8 @@ VALID = {
     "jpeg": encode_jpeg_gray(_IMG, quant=QUANT_UNITY),
     # restart-interval stream: RSTn resync + DC-reset paths fuzzed too
     "jpeg_rst": encode_jpeg_gray(_IMG, quant=QUANT_UNITY, restart_interval=1),
+    # three single-component scans: the non-interleaved path
+    "jpeg_multiscan": encode_jpeg_color_multiscan(_IMG, _IMG.T, 255 - _IMG),
     "png": encode_png(_IMG),
     "gif": encode_gif_gray(_IMG),
     "bmp": encode_bmp_gray(_IMG),
@@ -49,6 +52,7 @@ VALID = {
 DECODERS = {
     "jpeg": decode_jpeg_gray,
     "jpeg_rst": decode_jpeg_gray,
+    "jpeg_multiscan": decode_jpeg_gray,
     "png": decode_png_gray,
     "gif": decode_gif_gray,
     "bmp": decode_bmp_gray,

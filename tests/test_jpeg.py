@@ -155,6 +155,18 @@ def test_truncated_raises_value_error():
         decode_jpeg_gray(blob[:40])
     with pytest.raises(ValueError):
         decode_jpeg_gray(blob[:150])
+    # a single-scan baseline file decodes without its EOI trailer
+    _, _, gray = decode_jpeg_gray(blob[:-2])
+    assert np.array_equal(gray, GOLDEN_PIXELS)
+    # a 4:2:0 color scan cut in the middle of its entropy data
+    from protarrow_spark.operators.jpeg import encode_jpeg_color
+
+    rng = np.random.default_rng(19)
+    y, cb, cr = (rng.integers(0, 256, (24, 40), dtype=np.uint8) for _ in range(3))
+    color = encode_jpeg_color(y, cb, cr, subsample=True)
+    sos = color.find(b"\xff\xda")
+    with pytest.raises(ValueError):
+        decode_jpeg_gray(color[: sos + (len(color) - sos) // 2])
 
 
 def test_nonbaseline_and_sampling_boundaries():

@@ -89,7 +89,6 @@ def test_progressive_partial_script_spectral_selection_only():
     q = np.asarray(J.QUANT_ANNEX_K, dtype=np.int32)
     bh, bw = -(-h // 8), -(-w // 8)
     rows = J._plane_zigzag_coefs(img, q, bh, bw)
-    dc_codes = J._build_codes(J.DC_BITS, J.DC_HUFFVAL)
     ac_codes = J._build_codes(J.PROG_AC_BITS, J.PROG_AC_HUFFVAL)
 
     def seg(marker, payload):
@@ -104,7 +103,8 @@ def test_progressive_partial_script_spectral_selection_only():
     )
     # DC first Al=0 (complete), then three AC bands Al=0 (complete)
     wtr = J._BitWriter()
-    J._enc_dc_first(wtr, dc_codes, rows[:, 0])
+    comp = {"h": 1, "v": 1, "bw": bw, "coefs": rows, "dc": J._DC_LUMA}
+    J._enc_sequential(wtr, (w, h, [comp]), [comp], se=0)
     out += seg(0xDA, bytes([1, 1, 0x00, 0, 0, 0x00])) + wtr.flush()
     for ss, se in [(1, 5), (6, 20), (21, 63)]:
         wtr = J._BitWriter()
@@ -117,7 +117,7 @@ def test_progressive_partial_script_spectral_selection_only():
     assert np.array_equal(prog, base)
 
 
-def test_progressive_truncation_and_corruption_raise():
+def test_progressive_truncation_and_corruption_raise(monkeypatch):
     rng = np.random.default_rng(11)
     img = rng.integers(0, 256, (16, 24)).astype(np.uint8)
     blob = encode_jpeg_progressive_gray(img)
@@ -133,6 +133,29 @@ def test_progressive_truncation_and_corruption_raise():
     bad[dht + 5] = 0xFF
     with pytest.raises(ValueError):
         decode_jpeg_gray(bytes(bad))
+    # an AC band past coefficient 63 (Se = 191 in the second SOS) is a
+    # corrupt header: ValueError, not an IndexError from the block walk
+    se = blob.find(b"\xff\xda", blob.find(b"\xff\xda") + 2) + 8
+    assert blob[se] == 5
+    bad = bytearray(blob)
+    bad[se] = 191
+    with pytest.raises(ValueError, match="band"):
+        decode_jpeg_gray(bytes(bad))
+    # a SOF claiming 4096x4096 pixels over 16x24 pixels of entropy data
+    # fails at the first over-read, not after walking all 262,144 blocks
+    from protarrow_spark.operators import jpeg as J
+
+    sof = blob.find(b"\xff\xc2")
+    huge = bytearray(blob)
+    huge[sof + 5 : sof + 9] = b"\x10\x00\x10\x00"
+    calls = []
+    decode = J._ScanBits.decode
+    monkeypatch.setattr(
+        J._ScanBits, "decode", lambda rd, lut: calls.append(1) or decode(rd, lut)
+    )
+    with pytest.raises(ValueError, match="truncated"):
+        decode_jpeg_gray(bytes(huge))
+    assert len(calls) < 100
 
 
 def test_progressive_scan_constraint_violations_raise():
@@ -211,3 +234,113 @@ def test_baseline_noninterleaved_multiscan_equals_interleaved():
     blob = encode_jpeg_color_multiscan(y, cb, cr)
     with pytest.raises(ValueError, match="EOI"):
         decode_jpeg(blob[:-2])
+
+
+#: sha256 of every encoder layout no hex golden pins, recorded from the
+#: encoders before they were folded into one frame writer: random
+#: planes from ``default_rng(rows * 100 + cols)``, in (Y, Cb, Cr) order.
+_ENCODER_DIGESTS = {
+    ("progressive_gray", (16, 16)):
+        "585c48e7032cbad8744adc05f50f92218ef966da5c89afdcdb448f2383083bfd",
+    ("progressive_gray", (37, 53)):
+        "b1492454ded2749e79c28fe4665540839eeb0b0c49acbece4d101397a8244ff2",
+    ("progressive_color_444", (16, 16)):
+        "b22ce4f0d6476e2bbde465db2f62040d403b192070cbddca9449ebfce67f0d60",
+    ("progressive_color_444", (37, 53)):
+        "767ceaba50a4a2d2b7a1089a898e96e1eafb023aef695f634b80d98667329d64",
+    ("progressive_color_420", (16, 16)):
+        "39ee58fa989e9d3038d300211bc084821c7f0593c92ed923413ccc4db72a2170",
+    ("progressive_color_420", (37, 53)):
+        "c548f226009b639544ff9af6bcf85aaf2491c2962ffc0fc31c4303d68ab1a470",
+    ("multiscan_444", (16, 16)):
+        "d56a87e21247a4e99451f6b34a570b08bb19ea3c290314a7047003aae044d50b",
+    ("multiscan_444", (37, 53)):
+        "4a147d0516f464d9dbf02090fe761cccd60fb1e14339d85257d4097e37239596",
+    ("multiscan_420", (16, 16)):
+        "6a48aeab39b84341178d6abdff6747462be8990980d64752478fc7df10410a32",
+    ("multiscan_420", (37, 53)):
+        "d3df4b93061b5190e6f2999a0db59e4451f255bcb74ede7d6a2e3087ff9f1bc2",
+    ("color_420_annex_k", (16, 16)):
+        "7c4f5202ac2ffa2d18e639419aee2294ee4221169101eb043d748d9fd2cdcaaa",
+    ("color_420_annex_k", (37, 53)):
+        "1ee40daf1adfec21e3be7540c89d99db911dea26269143feeb45d06813931544",
+    ("gray_annex_k_rst3", (16, 16)):
+        "ce815441f9864ca91cf10ca071bb71577130880e25d562c80d5848310ee530bd",
+    ("gray_annex_k_rst3", (37, 53)):
+        "2f04dabc3d1ee40541b42de90bea7ff023f6999938f9f019da9dd3b109dc70cb",
+}
+
+
+def _encoders():
+    from protarrow_spark.operators import jpeg as J
+
+    return {
+        "progressive_gray": lambda y, cb, cr: J.encode_jpeg_progressive_gray(y),
+        "progressive_color_444": lambda y, cb, cr: (
+            J.encode_jpeg_progressive_color(y, cb, cr)
+        ),
+        "progressive_color_420": lambda y, cb, cr: (
+            J.encode_jpeg_progressive_color(y, cb, cr, subsample=True)
+        ),
+        "multiscan_444": lambda y, cb, cr: J.encode_jpeg_color_multiscan(y, cb, cr),
+        "multiscan_420": lambda y, cb, cr: (
+            J.encode_jpeg_color_multiscan(y, cb, cr, subsample=True)
+        ),
+        "color_420_annex_k": lambda y, cb, cr: (
+            J.encode_jpeg_color(y, cb, cr, subsample=True)
+        ),
+        "gray_annex_k_rst3": lambda y, cb, cr: J.encode_jpeg_gray(
+            y, quant=J.QUANT_ANNEX_K, restart_interval=3
+        ),
+    }
+
+
+def _planes(size):
+    rng = np.random.default_rng(size[0] * 100 + size[1])
+    return [rng.integers(0, 256, size).astype(np.uint8) for _ in range(3)]
+
+
+@pytest.mark.parametrize("name,size", sorted(_ENCODER_DIGESTS))
+def test_encoder_bytes_pinned(name, size):
+    import hashlib
+
+    blob = _encoders()[name](*_planes(size))
+    assert hashlib.sha256(blob).hexdigest() == _ENCODER_DIGESTS[(name, size)]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "gray_annex_k_rst3",
+        "progressive_gray",
+        "multiscan_420",
+        "progressive_color_420",
+        "color_420_annex_k",
+    ],
+)
+def test_encoder_builds_constant_tables_once(name, monkeypatch):
+    """Huffman code tables and the DCT basis are constants: encoding
+    ten images costs no more table builds than encoding one."""
+    from protarrow_spark.operators import jpeg as J
+
+    calls = {"_build_codes": 0, "_dct_matrix": 0}
+
+    def counted(fn_name):
+        fn = getattr(J, fn_name)
+
+        def wrapper(*args, **kwargs):
+            calls[fn_name] += 1
+            return fn(*args, **kwargs)
+
+        return wrapper
+
+    for fn_name in calls:
+        monkeypatch.setattr(J, fn_name, counted(fn_name))
+    encode = _encoders()[name]
+    counts = []
+    for n in (1, 10):
+        calls.update(dict.fromkeys(calls, 0))
+        for i in range(n):
+            encode(*_planes((16 + i, 24)))
+        counts.append(dict(calls))
+    assert counts[0] == counts[1]

@@ -24,7 +24,7 @@ def main() -> None:
     from protarrow_spark.session import get_spark
     from tests.oracle_utils import assert_matches_oracle
 
-    spark = get_spark("parity-subset", cpus=16)
+    spark = get_spark("parity-subset")
     queries, oracles = all_queries(), all_oracles()
     n_red = 0
     for sf_dir in sf_dirs:
