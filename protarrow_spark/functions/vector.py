@@ -1,18 +1,60 @@
 """Vector (embedding) column functions over array<float>.
 
-Implemented with ``zip_with``/``aggregate`` higher-order functions —
-JVM-side sequential folds, deterministic and codegen-friendly. A
-vectorized pandas-UDF path is deliberately NOT the default: for 64-dim
-embeddings the built-in fold stays in Tungsten and avoids the
-Arrow hop entirely.
+Two forms of the same math:
+
+* Column expressions (``dot``, ``l2_norm``, ``cosine_similarity``,
+  ``sign_bucket``, the sparse JL projection) — ``zip_with``/``aggregate``
+  higher-order functions, JVM-side sequential folds that stay in
+  Tungsten with no Python hop.
+* Arrow UDF kernels (``seq_cosine_udf`` and the operators in
+  ``operators/similarity.py``) for the hot paths where a numpy matmul
+  per batch beats the interpreted per-element lambda.
+
+The Arrow kernels cross the Python boundary through exactly two
+functions: :func:`vectors` turns a ``list``/``large_list`` vector
+column into an ``(n, d)`` numpy matrix by reshaping its flat child
+values (one offsets buffer plus one values buffer — no per-row work),
+and :func:`vector_column` turns a matrix back into a ``list`` column
+with one ``ListArray.from_arrays`` over uniform offsets.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import Column
+
+
+def vectors(arr: pa.Array | pa.ChunkedArray, dtype=np.float64) -> np.ndarray:
+    """The ``(n, d)`` matrix of a ``list``/``large_list`` vector column.
+
+    Slice offsets are respected; the flat child values are reshaped
+    (zero-copy when they already have ``dtype``). Raises ``ValueError``
+    on a null row, a null element, or rows of unequal length. An empty
+    input gives a ``(0, 0)`` matrix."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    n = len(arr)
+    if n == 0:
+        return np.zeros((0, 0), dtype=dtype)
+    if arr.null_count:
+        raise ValueError("vector column has a null row")
+    lens = np.diff(arr.offsets.to_numpy())
+    if (lens != lens[0]).any():
+        raise ValueError("vector column has rows of unequal length")
+    flat = arr.flatten()
+    if flat.null_count:
+        raise ValueError("vector column has a null element")
+    return flat.to_numpy(zero_copy_only=False).astype(dtype, copy=False).reshape(n, lens[0])
+
+
+def vector_column(mat: np.ndarray, value_type: pa.DataType | None = None) -> pa.ListArray:
+    """The ``list<value_type>`` column of an ``(n, d)`` matrix, one row
+    per matrix row (``value_type`` None infers it from ``mat.dtype``)."""
+    n, d = mat.shape
+    offsets = pa.array(np.arange(n + 1, dtype=np.int64) * d, type=pa.int32())
+    return pa.ListArray.from_arrays(offsets, pa.array(mat.ravel(), type=value_type))
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -44,10 +86,9 @@ def seq_cosine_udf():
     interpreted per-element lambda of the built-in fold dominates;
     the built-in stays the default for small row counts (no Arrow
     hop)."""
-    @F.pandas_udf("double")
-    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        A = np.stack([np.asarray(x, dtype=np.float64) for x in a.values])
-        B = np.stack([np.asarray(x, dtype=np.float64) for x in b.values])
+    @F.arrow_udf("double")
+    def cos(a: pa.Array, b: pa.Array) -> pa.Array:
+        A, B = vectors(a), vectors(b)
         n = A.shape[0]
         dab = np.zeros(n)
         daa = np.zeros(n)
@@ -56,7 +97,7 @@ def seq_cosine_udf():
             dab = dab + A[:, i] * B[:, i]
             daa = daa + A[:, i] * A[:, i]
             dbb = dbb + B[:, i] * B[:, i]
-        return pd.Series(dab / (np.sqrt(daa) * np.sqrt(dbb)))
+        return pa.array(dab / (np.sqrt(daa) * np.sqrt(dbb)))
 
     return cos
 

@@ -944,6 +944,8 @@ def decode_jpeg(data: bytes):
             ss_, se_ = payload[1 + 2 * ns], payload[2 + 2 * ns]
             approx = payload[3 + 2 * ns]
             ah_, al_ = approx >> 4, approx & 0x0F
+            if progressive and ss_ > 0 and ns != 1:
+                raise ValueError("progressive AC scan with multiple components")
             scan_states = []
             for s in range(ns):
                 cs = payload[1 + 2 * s]
@@ -951,6 +953,9 @@ def decode_jpeg(data: bytes):
                 st = state.get(cs)
                 if st is None:
                     raise ValueError(f"SOS component {cs} not in SOF")
+                if any(st is prev for prev in scan_states):
+                    # T.81 B.2.3: a scan's component selectors are distinct
+                    raise ValueError(f"SOS lists component {cs} twice")
                 if not progressive or (ss_ == 0 and ah_ == 0):
                     # sequential scans and progressive DC-first need DC
                     if (0, td) not in huff_tables:
@@ -1217,10 +1222,7 @@ def _decode_scan_progressive(
         rd.finish()
         return end
 
-    # AC scan: single component only
-    if len(scan_states) != 1:
-        raise ValueError("progressive AC scan with multiple components")
-    st = scan_states[0]
+    st = scan_states[0]  # AC scan: one component (checked at the SOS header)
     ac_lut = st["ac_lut"]
     coefs = st["coefs"]
     eobrun = 0

@@ -24,11 +24,20 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
-from protarrow_spark.functions.vector import dot, l2_norm, seq_cosine_udf, sign_bucket
+from protarrow_spark.functions.vector import (
+    dot,
+    l2_norm,
+    seq_cosine_udf,
+    sign_bucket,
+    vector_column,
+    vectors,
+)
 
 SIGN_BUCKET_COMPONENTS = 3
 
@@ -60,55 +69,56 @@ def rademacher_planes(
     return planes
 
 
-def band_key_columns(
-    vec_col: str,
-    planes: list[list[float]],
-    n_bands: int = LSH_N_BANDS,
-) -> list:
-    """One integer key column per band: bit j of band i is the sign of
-    ``dot(v, planes[i*w + j])``. Pure-JVM fold expressions — the
-    bit-exact reference implementation of the signature (used by the
-    oracle-parity reasoning; the operator itself uses the vectorized
-    ``band_keys_udf`` which agrees wherever |dot| exceeds fp noise —
-    measured margin on the test corpora is >= 4e-5 vs ~1e-15 noise)."""
-    width = len(planes) // n_bands
-    keys = []
-    for b in range(n_bands):
-        key = F.lit(0)
-        for j in range(width):
-            plane = planes[b * width + j]
-            d = dot(F.col(vec_col), F.array(*[F.lit(x) for x in plane]))
-            key = key + F.when(d > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        keys.append(key.alias(f"band_{b}"))
-    return keys
-
-
 def band_keys_udf(planes: list[list[float]], n_bands: int = LSH_N_BANDS):
     """Vectorized signature: one numpy matmul per Arrow batch against
     the (dim x n_planes) +-1 plane matrix, bits packed per band.
 
     This is the 100 TB path for the signature stage: dim*n_planes
     multiply-adds per row in BLAS instead of interpreted per-element
-    lambda evaluation (the JVM fold reference costs ~µs per element)
-    or a giant codegen expression (~10 s compile). Sign decisions are
-    stable: summation-order fp differences are ~1e-15 while observed
-    |dot| minima are ~1e-4 (asserted empirically; see
-    tests/test_plan_shapes.py recall test)."""
+    lambda evaluation (a JVM ``dot`` fold per plane costs ~µs per
+    element) or a giant codegen expression (~10 s compile). Bit j of
+    band i is the sign of ``dot(v, planes[i*w + j])``; the sign
+    decisions match a sequential fold wherever |dot| exceeds fp noise:
+    summation-order differences are ~1e-15 while observed |dot| minima
+    are ~1e-4 (asserted empirically; see tests/test_plan_shapes.py
+    recall test)."""
     mat = np.array(planes, dtype=np.float64).T  # dim x n_planes
     width = len(planes) // n_bands
+    weights = np.array([1 << j for j in range(width)])
 
-    @F.pandas_udf("array<int>")
-    def keys(vecs: pd.Series) -> pd.Series:
-        v = np.stack([np.asarray(x, dtype=np.float64) for x in vecs.values])
-        bits = (v @ mat) > 0  # n x n_planes
-        out = []
-        weights = np.array([1 << j for j in range(width)])
-        for b in range(n_bands):
-            out.append(bits[:, b * width : (b + 1) * width] @ weights)
-        packed = np.stack(out, axis=1)  # n x n_bands
-        return pd.Series(list(packed.astype("int32")))
+    @F.arrow_udf("array<int>")
+    def keys(vecs: pa.Array) -> pa.Array:
+        bits = (vectors(vecs) @ mat) > 0  # n x n_planes
+        banded = bits[:, : n_bands * width].reshape(-1, n_bands, width)
+        return vector_column(banded @ weights, pa.int32())  # n x n_bands
 
     return keys
+
+
+def _arrow_schema(ddl: str) -> pa.Schema:
+    """The Arrow schema Spark expects back from a Python kernel whose
+    output is declared as the DDL string ``ddl``."""
+    return to_arrow_schema(StructType.fromDDL(ddl))
+
+
+def _batch(schema: pa.Schema, *cols) -> pa.RecordBatch:
+    """One output batch of ``schema``: Arrow columns pass through with
+    their own type (an id keeps its type), numpy columns cast to the
+    declared field type."""
+    return pa.RecordBatch.from_arrays(
+        [
+            c.combine_chunks() if isinstance(c, pa.ChunkedArray)
+            else c if isinstance(c, pa.Array)
+            else pa.array(c, type=f.type)
+            for c, f in zip(cols, schema)
+        ],
+        schema=schema,
+    )
+
+
+def _table(schema: pa.Schema, *cols) -> pa.Table:
+    """:func:`_batch` as the one-batch table a grouped kernel returns."""
+    return pa.Table.from_batches([_batch(schema, *cols)])
 
 
 def _ranked_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -261,13 +271,13 @@ def _bucket_gram_pairs(
     double fold the JVM ``dot`` and the SQL oracle compute —
     vectorized across the whole bucket at once."""
     id_type = src.schema[id_col].dataType.simpleString()
+    out_ddl = f"id_a {id_type}, id_b {id_type}, cosine double"
+    schema = _arrow_schema(out_ddl)
 
-    def bucket_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        A = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["v"].values])
+    def bucket_pairs(tbl: pa.Table) -> pa.Table:
+        tbl = tbl.sort_by(id_col)
+        A = vectors(tbl.column("v"))
+        n = len(A)
         g = np.zeros((n, n))
         for i in range(A.shape[1]):
             g += A[:, i, None] * A[None, :, i]
@@ -275,10 +285,8 @@ def _bucket_gram_pairs(
         cos = g / (nrm[:, None] * nrm[None, :])
         ia, ib = np.triu_indices(n, k=1)
         keep = cos[ia, ib] >= threshold
-        ids = pdf[id_col].values
-        return pd.DataFrame(
-            {"id_a": ids[ia[keep]], "id_b": ids[ib[keep]], "cosine": cos[ia, ib][keep]}
-        )
+        ids = tbl.column(id_col)
+        return _table(schema, ids.take(ia[keep]), ids.take(ib[keep]), cos[ia, ib][keep])
 
     # Explicit keyed repartition: AQE coalesces byte-small shuffles to
     # one partition, but bucket cost is a Gram matmul — CPU-quadratic
@@ -288,7 +296,7 @@ def _bucket_gram_pairs(
     return (
         keyed.repartition(parallelism, *group_cols)
         .groupBy(*group_cols)
-        .applyInPandas(bucket_pairs, f"id_a {id_type}, id_b {id_type}, cosine double")
+        .applyInArrow(bucket_pairs, out_ddl)
     )
 
 
@@ -354,23 +362,19 @@ def knn_label_consistency(
         & (F.aggregate(F.col("v"), F.lit(0.0), lambda a, x: a + x * x) > 0.0)
     )
 
-    def bucket_report(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
-        n = len(pdf)
-        empty = pd.DataFrame(
-            {
-                "vec_id_out": pd.Series([], dtype=object),
-                "label": pd.Series([], dtype=np.int64),
-                "n_nbrs": pd.Series([], dtype=np.int64),
-                "n_same_label": pd.Series([], dtype=np.int64),
-                "agree_millis": pd.Series([], dtype=np.int64),
-                "suspect": pd.Series([], dtype=bool),
-            }
-        )
+    report_schema = (
+        f"vec_id_out {id_type}, label long, n_nbrs long, "
+        "n_same_label long, agree_millis long, suspect boolean"
+    )
+    report = _arrow_schema(report_schema)
+
+    def bucket_report(tbl: pa.Table) -> pa.Table:
+        tbl = tbl.sort_by(id_col)
+        n = tbl.num_rows
         if n < 2:
-            return empty
-        A = np.stack([np.asarray(x, dtype=np.float64) for x in pdf["v"].values])
-        labels = pdf["__lbl"].to_numpy(dtype=np.int64)
+            return report.empty_table()
+        A = vectors(tbl.column("v"))
+        labels = tbl.column("__lbl").to_numpy()
         kk = min(k, n - 1)
         if n > max_bucket_rows:
             # Normally unreachable — the routing census sends buckets
@@ -418,8 +422,6 @@ def knn_label_consistency(
             valid = np.isfinite(best_cos)
             nbr_lbls = labels[np.minimum(best_pos, n - 1)]
             same = ((nbr_lbls == labels[:, None]) & valid).sum(axis=1)
-            same = same.astype(np.int64)
-            n_nbrs = np.full(n, kk, dtype=np.int64)
         else:
             g = np.zeros((n, n))
             for i in range(A.shape[1]):
@@ -431,17 +433,11 @@ def knn_label_consistency(
             # -cosine breaks ties toward the smaller neighbor id —
             # exactly the SQL ORDER BY cosine DESC, nid
             top = np.argsort(-cos, axis=1, kind="stable")[:, :kk]
-            same = (labels[top] == labels[:, None]).sum(axis=1).astype(np.int64)
-            n_nbrs = np.full(n, kk, dtype=np.int64)
-        return pd.DataFrame(
-            {
-                "vec_id_out": pdf[id_col].values,
-                "label": labels,
-                "n_nbrs": n_nbrs,
-                "n_same_label": same,
-                "agree_millis": same * 1000 // n_nbrs,
-                "suspect": 2 * same < n_nbrs,
-            }
+            same = (labels[top] == labels[:, None]).sum(axis=1)
+        n_nbrs = np.full(n, kk, dtype=np.int64)
+        return _table(
+            report, tbl.column(id_col), labels, n_nbrs, same,
+            same * 1000 // n_nbrs, 2 * same < n_nbrs,
         )
 
     # Routing: a driver-side per-bucket census (a column-pruned scan +
@@ -453,10 +449,6 @@ def knn_label_consistency(
     # union branches re-evaluated the scan + count join). Only a
     # genuinely hot corpus pays for the split plan, and there the
     # hot-bucket ids and sizes ship as literals, not a join.
-    report_schema = (
-        f"vec_id_out {id_type}, label long, n_nbrs long, "
-        "n_same_label long, agree_millis long, suspect boolean"
-    )
     parallelism = keyed.sparkSession.sparkContext.defaultParallelism
     # The census counts an UPPER BOUND (it skips the zero-norm
     # predicate — an interpreted higher-order fold that would double
@@ -502,7 +494,7 @@ def knn_label_consistency(
         out = (
             keyed.repartition(parallelism, "bucket")
             .groupBy("bucket")
-            .applyInPandas(bucket_report, report_schema)
+            .applyInArrow(bucket_report, report_schema)
         )
         return out.select(
             F.col("vec_id_out").alias(id_col),
@@ -525,7 +517,7 @@ def knn_label_consistency(
     small_report = (
         small.repartition(parallelism, "bucket")
         .groupBy("bucket")
-        .applyInPandas(bucket_report, report_schema)
+        .applyInArrow(bucket_report, report_schema)
     )
 
     # Hot path: hash each row into ceil(bn/B) blocks of <= B expected
@@ -555,18 +547,15 @@ def knn_label_consistency(
         )
     )
 
-    def block_candidates(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        bi, bj = int(key[1]), int(key[2])
-        bn = int(pdf["__bn"].iloc[0])
-        kk = min(k, bn - 1)
-        out: dict[str, list] = {
-            "vec_id_out": [],
-            "label": [],
-            "kk": [],
-            "nbr_id": [],
-            "nbr_lbl": [],
-            "cosine": [],
-        }
+    cand_ddl = (
+        f"vec_id_out {id_type}, label long, kk int, "
+        f"nbr_id {id_type}, nbr_lbl long, cosine double"
+    )
+    cand_schema = _arrow_schema(cand_ddl)
+
+    def block_candidates(key: tuple, tbl: pa.Table) -> pa.Table:
+        bi, bj = key[1].as_py(), key[2].as_py()
+        kk = min(k, tbl.column("__bn")[0].as_py() - 1)
 
         def fold_cross(A: np.ndarray, B: np.ndarray) -> np.ndarray:
             # Rank-1 accumulation, one dimension at a time: the exact
@@ -582,65 +571,39 @@ def knn_label_consistency(
                 n2 += A[:, i] * A[:, i]
             return np.sqrt(n2)
 
-        def emit(qids, qlbls, nids, nlbls, cos) -> None:
+        def emit(qpos, npos, cos):
             # neighbor columns are in ascending id order, so the
             # stable sort breaks cosine ties toward the smaller id.
             top = np.argsort(-cos, axis=1, kind="stable")[:, :kk]
-            for r in range(cos.shape[0]):
-                sel = top[r][np.isfinite(cos[r, top[r]])]
-                m = len(sel)
-                out["vec_id_out"].extend([qids[r]] * m)
-                out["label"].extend([qlbls[r]] * m)
-                out["kk"].extend([kk] * m)
-                out["nbr_id"].extend(nids[sel])
-                out["nbr_lbl"].extend(nlbls[sel])
-                out["cosine"].extend(cos[r, sel])
+            rows = np.broadcast_to(np.arange(cos.shape[0])[:, None], top.shape)
+            c = cos[rows, top]
+            ok = np.isfinite(c)
+            return qpos[rows[ok]], npos[top[ok]], c[ok]
 
-        def stack(sub: pd.DataFrame) -> np.ndarray:
-            return np.stack(
-                [np.asarray(x, dtype=np.float64) for x in sub["v"].values]
-            )
-
+        # Rows in ascending id order; each block keeps that order.
+        tbl = tbl.sort_by(id_col)
+        A = vectors(tbl.column("v"))
+        blk = tbl.column("__blk").to_numpy()
+        pi, pj = np.flatnonzero(blk == bi), np.flatnonzero(blk == bj)
+        c = fold_cross(A[pi], A[pj])
         if bi == bj:
-            sub = pdf.sort_values(id_col).reset_index(drop=True)
-            if len(sub) >= 2:
-                A = stack(sub)
-                g = fold_cross(A, A)
-                nrm = np.sqrt(np.diag(g)).copy()
-                cos = g / (nrm[:, None] * nrm[None, :])
-                np.fill_diagonal(cos, -np.inf)
-                ids = sub[id_col].values
-                lbls = sub["__lbl"].to_numpy(dtype=np.int64)
-                emit(ids, lbls, ids, lbls, cos)
+            ni = nj = np.sqrt(np.diag(c))
+            cos = c / (ni[:, None] * nj[None, :])
+            np.fill_diagonal(cos, -np.inf)
+            parts = [emit(pi, pj, cos)]
         else:
-            pi = pdf[pdf["__blk"] == bi].sort_values(id_col)
-            pj = pdf[pdf["__blk"] == bj].sort_values(id_col)
-            if len(pi) and len(pj):
-                Ai, Aj = stack(pi), stack(pj)
-                c = fold_cross(Ai, Aj)
-                ni, nj = fold_norm(Ai), fold_norm(Aj)
-                cos = c / (ni[:, None] * nj[None, :])
-                ids_i = pi[id_col].values
-                ids_j = pj[id_col].values
-                lbl_i = pi["__lbl"].to_numpy(dtype=np.int64)
-                lbl_j = pj["__lbl"].to_numpy(dtype=np.int64)
-                emit(ids_i, lbl_i, ids_j, lbl_j, cos)
-                emit(ids_j, lbl_j, ids_i, lbl_i, cos.T)
-        return pd.DataFrame(
-            {
-                "vec_id_out": pd.Series(out["vec_id_out"], dtype=object),
-                "label": pd.Series(out["label"], dtype=np.int64),
-                "kk": pd.Series(out["kk"], dtype=np.int32),
-                "nbr_id": pd.Series(out["nbr_id"], dtype=object),
-                "nbr_lbl": pd.Series(out["nbr_lbl"], dtype=np.int64),
-                "cosine": pd.Series(out["cosine"], dtype=np.float64),
-            }
+            ni, nj = fold_norm(A[pi]), fold_norm(A[pj])
+            cos = c / (ni[:, None] * nj[None, :])
+            parts = [emit(pi, pj, cos), emit(pj, pi, cos.T)]
+        q, nb, cs = (np.concatenate(x) for x in zip(*parts))
+        ids, lbls = tbl.column(id_col), tbl.column("__lbl").to_numpy()
+        return _table(
+            cand_schema, ids.take(q), lbls[q], np.full(len(q), kk),
+            ids.take(nb), lbls[nb], cs,
         )
 
-    cands = hot.groupBy("bucket", "__bi", "__bj").applyInPandas(
-        block_candidates,
-        f"vec_id_out {id_type}, label long, kk int, "
-        f"nbr_id {id_type}, nbr_lbl long, cosine double",
+    cands = hot.groupBy("bucket", "__bi", "__bj").applyInArrow(
+        block_candidates, cand_ddl
     )
     w = Window.partitionBy("vec_id_out").orderBy(
         F.desc("cosine"), F.asc("nbr_id")
@@ -738,13 +701,8 @@ def _centroid_matrix(
     driver-side collect — this is the index-build step; a production
     build would swap in k-means centroids from a sampled training job,
     the probe/search plan below is unchanged."""
-    rows = (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .orderBy(id_col)
-        .limit(n_cells)
-        .collect()
-    )
-    return np.array([list(r[1]) for r in rows], dtype=np.float64)
+    tbl = corpus.select(id_col, vec_col).orderBy(id_col).limit(n_cells).toArrow()
+    return vectors(tbl.column(vec_col))
 
 
 def _cell_assign_udf(cents: np.ndarray, m: int):
@@ -758,9 +716,9 @@ def _cell_assign_udf(cents: np.ndarray, m: int):
         cnorm = cnorm + cents[:, i] * cents[:, i]
     cnorm = np.sqrt(cnorm)
 
-    @F.pandas_udf("array<int>")
-    def assign(vecs: pd.Series) -> pd.Series:
-        V = np.stack([np.asarray(x, dtype=np.float64) for x in vecs.values])
+    @F.arrow_udf("array<int>")
+    def assign(vecs: pa.Array) -> pa.Array:
+        V = vectors(vecs)
         n = V.shape[0]
         dots = np.zeros((n, n_cells))
         vnorm = np.zeros(n)
@@ -770,7 +728,7 @@ def _cell_assign_udf(cents: np.ndarray, m: int):
         cos = dots / (np.sqrt(vnorm)[:, None] * cnorm[None, :])
         # lexsort: primary -cos desc, secondary cell index asc (stable)
         order = np.argsort(-cos, axis=1, kind="stable")
-        return pd.Series(list(order[:, :m].astype("int32")))
+        return vector_column(order[:, :m], pa.int32())
 
     return assign
 
@@ -843,25 +801,27 @@ def kmeans_lloyd(
     """
     cents = _centroid_matrix(corpus, id_col, vec_col, k)
     vecs = corpus.select(F.col(id_col), F.col(vec_col).alias("v"))
+    sums_ddl = "c int, n long, s array<double>"
+    sums_schema = _arrow_schema(sums_ddl)
 
     for _ in range(n_iter):
         assign = _cell_assign_udf(cents, 1)
         tagged = vecs.select(F.col(id_col), "v", assign(F.col("v"))[0].alias("c"))
 
         def partial_sums(batches):
-            import pandas as pd
-
-            for batch in batches:
-                V = np.stack([np.asarray(x, dtype=np.float64) for x in batch["v"].values])
-                c = batch["c"].to_numpy()
-                out = []
-                for ci in np.unique(c):
-                    sel = V[c == ci]
-                    out.append((int(ci), int(sel.shape[0]), [float(x) for x in sel.sum(axis=0)]))
-                yield pd.DataFrame(out, columns=["c", "n", "s"])
+            for b in filter(len, batches):
+                V = vectors(b.column("v"))
+                c = b.column("c").to_numpy()
+                cs = np.unique(c)
+                yield _batch(
+                    sums_schema,
+                    cs,
+                    [(c == ci).sum() for ci in cs],
+                    vector_column(np.stack([V[c == ci].sum(axis=0) for ci in cs])),
+                )
 
         sums = (
-            tagged.mapInPandas(partial_sums, "c int, n long, s array<double>")
+            tagged.mapInArrow(partial_sums, sums_ddl)
             .groupBy("c")
             .agg(
                 F.sum("n").alias("n"),
@@ -896,15 +856,15 @@ def kmeans_inertia(
         assignments, id_col
     )
 
+    schema = _arrow_schema("d double")
+
     def sq(batches):
-        import pandas as pd
+        for b in filter(len, batches):
+            V = vectors(b.column("v"))
+            C = cents[b.column("cluster").to_numpy()]
+            yield _batch(schema, ((V - C) ** 2).sum(axis=1))
 
-        for batch in batches:
-            V = np.stack([np.asarray(x, dtype=np.float64) for x in batch["v"].values])
-            C = cents[batch["cluster"].to_numpy()]
-            yield pd.DataFrame({"d": ((V - C) ** 2).sum(axis=1)})
-
-    return joined.mapInPandas(sq, "d double").agg(F.sum("d")).collect()[0][0]
+    return joined.mapInArrow(sq, "d double").agg(F.sum("d")).collect()[0][0]
 
 
 def quantize_int8(
@@ -972,30 +932,30 @@ def int8_topk(
     # Small query set -> driver, like IVF centroids: nothing corpus-
     # sized is collected, and executors get the query matrix via
     # closure serialization (a broadcast variable at real fan-out).
-    qrows = qz.collect()
-    Q = np.array([list(r["q_vec"]) for r in qrows], dtype=np.int64)
-    qn = np.array([r["q_norm"] for r in qrows], dtype=np.float64)
-    qids = np.array([r["query_id"] for r in qrows])
+    qt = qz.toArrow()
+    Q = vectors(qt.column("q_vec"), np.int64)
+    qn = qt.column("q_norm").to_numpy()
+    qids = qt.column("query_id").to_numpy()
 
     from protarrow_spark.sources.tables import spread
 
     id_type = corpus.schema[id_col].dataType.simpleString()
+    out_ddl = f"query_id {id_type}, neighbor_id {id_type}, cosine_q8 double"
+    schema = _arrow_schema(out_ddl)
 
     # Corpus-side quantize happens INSIDE the scoring batch function
     # (r13 opt, guide §4.2): the former quantize_int8 pre-pass ran the
     # interpreted JVM array-HOF chain per row only to feed a
-    # mapInPandas that already held the batch in numpy. The squared
+    # Python kernel that already held the batch in numpy. The squared
     # norm is an exact int64 sum (<= 127^2 * dim) whose double sqrt is
     # bit-identical to the JVM's sequential double fold — every sum
     # term is an exactly-representable integer, so accumulation order
     # cannot round.
     def score(batches):
-        for b in batches:
-            if b.empty:
-                continue
-            C = np.stack([_np_quantize_int8(x) for x in b[vec_col].values])
+        for b in filter(len, batches):
+            C = _np_quantize_int8(vectors(b.column(vec_col)))
             cn = np.sqrt((C * C).sum(axis=1).astype(np.float64))
-            nids = b[id_col].to_numpy()
+            nids = b.column(id_col).to_numpy(zero_copy_only=False)
             # int64 matmul: exact (|dot| <= 127^2 * dim << 2^53).
             dots = (C @ Q.T).astype(np.float64)  # n x n_queries
             cos = dots / (qn[None, :] * cn[:, None])
@@ -1004,13 +964,9 @@ def int8_topk(
             qq = np.tile(qids, n)
             flat = cos.ravel()
             keep = nn != qq
-            yield pd.DataFrame(
-                {"query_id": qq[keep], "neighbor_id": nn[keep], "cosine_q8": flat[keep]}
-            )
+            yield _batch(schema, qq[keep], nn[keep], flat[keep])
 
-    scored = spread(corpus.select(id_col, vec_col)).mapInPandas(
-        score, f"query_id {id_type}, neighbor_id {id_type}, cosine_q8 double"
-    )
+    scored = spread(corpus.select(id_col, vec_col)).mapInArrow(score, out_ddl)
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine_q8"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -1058,42 +1014,27 @@ def kmeans_int8_exact(
     (SemDeDup's Gram pass) need neither a re-quantization nor an
     id-keyed join back to the corpus.
     """
-    from protarrow_spark.sources.tables import spread
-
     id_type = corpus.schema[id_col].dataType.simpleString()
+    out_ddl = f"{id_col} {id_type}, cluster long" + (
+        ", q array<bigint>" if with_vectors else ""
+    )
+    out_schema = _arrow_schema(out_ddl)
+    upd_ddl = "cluster long, pos long, s long, n long"
+    upd_schema = _arrow_schema(upd_ddl)
 
     # Quantize in ONE numpy pass per Arrow batch (r13 opt, guide §4.2)
     # instead of the interpreted JVM array-HOF chain of quantize_int8
     # (array lambdas get no codegen): _np_quantize_int8 is the
     # documented bit-identical op sequence, so the checkpointed (id, q)
     # table — and hence every assignment and centroid — is unchanged.
-    def _quantize(batches):
-        for b in batches:
-            if b.empty:
-                continue
-            yield pd.DataFrame(
-                {
-                    id_col: b[id_col],
-                    "q": [_np_quantize_int8(x) for x in b[vec_col].values],
-                }
-            )
-
-    qz = (
-        spread(corpus.select(id_col, vec_col))
-        .mapInPandas(_quantize, f"{id_col} {id_type}, q array<bigint>")
-        .localCheckpoint(eager=True)
-    )
+    qz = _quantized(corpus, id_col, vec_col).localCheckpoint(eager=True)
 
     # One driver action seeds the loop AND reveals the dimensionality
     # (r13 opt: the former separate `.first()` probe was a whole extra
     # job for a number the seed rows already carry).
-    init = (
-        qz.orderBy(id_col)
-        .limit(k)
-        .collect()
-    )
-    cents = {i: list(r["q"]) for i, r in enumerate(init)}
-    dim = len(init[0]["q"]) if init else 0
+    init = vectors(qz.orderBy(id_col).limit(k).toArrow().column("q"), np.int64)
+    cents = dict(enumerate(init))
+    dim = init.shape[1]
 
     assign = None
     for it in range(iterations):
@@ -1101,24 +1042,17 @@ def kmeans_int8_exact(
         cids = np.array(sorted(cents), dtype=np.int64)
 
         def assign_fn(batches, C=C, cids=cids):
-            for b in batches:
-                if b.empty:
-                    continue
-                V = np.stack([np.asarray(x, dtype=np.int64) for x in b["q"].values])
+            for b in filter(len, batches):
+                V = vectors(b.column("q"), np.int64)
                 d = ((V[:, None, :] - C[None, :, :]) ** 2).sum(axis=-1)
                 pick = cids[np.argmin(d, axis=1)]  # first min = smallest cid
+                cols = [b.column(id_col), pick]
                 if with_vectors:
-                    yield pd.DataFrame(
-                        {id_col: b[id_col], "cluster": pick, "q": b["q"]}
-                    )
-                else:
-                    yield pd.DataFrame({id_col: b[id_col], "cluster": pick})
+                    cols.append(b.column("q"))
+                yield _batch(out_schema, *cols)
 
         if it == iterations - 1:
-            out_schema = f"{id_col} {id_type}, cluster long"
-            if with_vectors:
-                out_schema += ", q array<bigint>"
-            assign = qz.mapInPandas(assign_fn, out_schema)
+            assign = qz.mapInArrow(assign_fn, out_ddl)
             break
 
         # Centroid update with MAP-SIDE partial sums (r13 opt, guide
@@ -1129,33 +1063,22 @@ def kmeans_int8_exact(
         # integer mean stays exact: partial int64 sums commute, and
         # the final trunc-toward-zero division matches SQL `div`.
         def update_fn(batches, C=C, cids=cids):
-            for b in batches:
-                if b.empty:
-                    continue
-                V = np.stack([np.asarray(x, dtype=np.int64) for x in b["q"].values])
+            for b in filter(len, batches):
+                V = vectors(b.column("q"), np.int64)
                 d = ((V[:, None, :] - C[None, :, :]) ** 2).sum(axis=-1)
                 sel = np.argmin(d, axis=1)
-                frames = []
-                for ci in range(len(cids)):
-                    mask = sel == ci
-                    cnt = int(mask.sum())
-                    if not cnt:
-                        continue
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "cluster": np.full(V.shape[1], cids[ci], dtype=np.int64),
-                                "pos": np.arange(V.shape[1], dtype=np.int64),
-                                "s": V[mask].sum(axis=0),
-                                "n": np.full(V.shape[1], cnt, dtype=np.int64),
-                            }
-                        )
-                    )
-                if frames:
-                    yield pd.concat(frames, ignore_index=True)
+                used = np.unique(sel)  # clusters with members, ascending
+                dim_b = V.shape[1]
+                yield _batch(
+                    upd_schema,
+                    np.repeat(cids[used], dim_b),
+                    np.tile(np.arange(dim_b), len(used)),
+                    np.concatenate([V[sel == ci].sum(axis=0) for ci in used]),
+                    np.repeat(np.bincount(sel)[used], dim_b),
+                )
 
         upd = (
-            qz.mapInPandas(update_fn, "cluster long, pos long, s long, n long")
+            qz.mapInArrow(update_fn, upd_ddl)
             .groupBy("cluster", "pos")
             .agg(F.sum("s").alias("s"), F.sum("n").alias("n"))
             .collect()
@@ -1311,7 +1234,7 @@ def mmr_select_int8(
     Output: sel_order (1-based), id, rel, max_sim, mmr2 (all bigint;
     max_sim = 0 for the first pick).
     """
-    from pyspark.sql.types import LongType, StructField, StructType
+    from pyspark.sql.types import LongType, StructField
 
     from protarrow_spark.sources.tables import spread
 
@@ -1329,12 +1252,10 @@ def mmr_select_int8(
     # The query vector: fetch the RAW embedding (the id filter pushes
     # to the scan) and quantize it on the driver — the former path
     # quantized through the corpus-wide projection to read one row.
-    qv_rows = (
-        sp.filter(F.col(id_col) == query_id).select(vec_col).limit(1).collect()
-    )
-    if not qv_rows:
+    qv = sp.filter(F.col(id_col) == query_id).select(vec_col).limit(1).toArrow()
+    if not qv.num_rows:
         return spark.createDataFrame([], out_schema)
-    qvec = _np_quantize_int8(qv_rows[0][vec_col])
+    qvec = _np_quantize_int8(vectors(qv.column(vec_col)))[0]
 
     # Materialize (id, q, rel) ONCE: every greedy step rescans it, and
     # without the barrier Catalyst would re-run quantization per step.
@@ -1351,24 +1272,26 @@ def mmr_select_int8(
     # exclusion is _mmr_excluded: a literal isin at re-ranking k, a
     # broadcast anti-join under ``large_k=True`` (hash-equal by
     # construction and by test).
+    cand_ddl = (
+        f"{id_col} {sp.schema[id_col].dataType.simpleString()}, "
+        "q array<bigint>, rel double"
+    )
+    cand_schema = _arrow_schema(cand_ddl)
+
     def _build(batches):
-        for b in batches:
-            if b.empty:
-                continue
-            Q = np.stack([_np_quantize_int8(x) for x in b[vec_col].values])
-            yield pd.DataFrame(
-                {
-                    id_col: b[id_col],
-                    "q": list(Q),
-                    "rel": (Q @ qvec).astype(np.float64),
-                }
+        for b in filter(len, batches):
+            Q = _np_quantize_int8(vectors(b.column(vec_col)))
+            yield _batch(
+                cand_schema,
+                b.column(id_col),
+                vector_column(Q, pa.int64()),
+                (Q @ qvec).astype(np.float64),
             )
 
-    id_sql = sp.schema[id_col].dataType.simpleString()
     cand = (
         sp.filter(F.col(id_col).isNotNull() & (F.col(id_col) != query_id))
         .select(id_col, vec_col)
-        .mapInPandas(_build, f"{id_col} {id_sql}, q array<bigint>, rel double")
+        .mapInArrow(_build, cand_ddl)
         .localCheckpoint(eager=True)
     )
     # Right-size partitioning for the k sequential scoring passes:
@@ -1401,14 +1324,12 @@ def mmr_select_int8(
             smat = np.stack(sel_vecs)
 
             def _make_max_dot(_s: np.ndarray):
-                @F.pandas_udf("double")
-                def _max_dot(q: pd.Series) -> pd.Series:
-                    if q.empty:
-                        return pd.Series([], dtype=np.float64)
-                    Q = np.stack(
-                        [np.asarray(v, dtype=np.int64) for v in q.values]
-                    )
-                    return pd.Series((Q @ _s.T).max(axis=1).astype(np.float64))
+                @F.arrow_udf("double")
+                def _max_dot(q: pa.Array) -> pa.Array:
+                    if not len(q):
+                        return pa.array([], pa.float64())
+                    Q = vectors(q, np.int64)
+                    return pa.array((Q @ _s.T).max(axis=1).astype(np.float64))
 
                 return _max_dot
 
@@ -1489,34 +1410,28 @@ def semdedup_int8(
     clustered = kmeans_int8_exact(
         corpus, id_col, vec_col, k=k, iterations=iterations, with_vectors=True
     )
-    id_type = corpus.schema[id_col].dataType.simpleString()
+    out_ddl = (
+        f"{id_col} {corpus.schema[id_col].dataType.simpleString()}, "
+        "cluster long, kept long"
+    )
+    schema = _arrow_schema(out_ddl)
     num2, den2 = cos_num * cos_num, cos_den * cos_den
 
-    def flag(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf[id_col].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        V = np.stack([np.asarray(x, dtype=np.int64) for x in pdf["q"].values])[order]
+    def flag(tbl: pa.Table) -> pa.Table:
+        tbl = tbl.sort_by(id_col)
+        V = vectors(tbl.column("q"), np.int64)
         G = V @ V.T  # exact: |entries| <= 127^2 * dim << 2^53
         n2 = np.diag(G)
-        n = len(ids)
-        removed = np.zeros(n, dtype=bool)
-        if n > 1:
-            iu, ju = np.triu_indices(n, 1)
-            d = G[iu, ju]
-            dup = (d > 0) & (den2 * d * d >= num2 * n2[iu] * n2[ju])
-            removed[np.unique(ju[dup])] = True
-        return pd.DataFrame(
-            {
-                id_col: ids,
-                "cluster": pdf["cluster"].to_numpy()[order],
-                "kept": (~removed).astype(np.int64),
-            }
+        iu, ju = np.triu_indices(len(V), 1)
+        d = G[iu, ju]
+        dup = (d > 0) & (den2 * d * d >= num2 * n2[iu] * n2[ju])
+        removed = np.zeros(len(V), dtype=bool)
+        removed[ju[dup]] = True
+        return _table(
+            schema, tbl.column(id_col), tbl.column("cluster"), (~removed).astype(np.int64)
         )
 
-    return clustered.groupBy("cluster").applyInPandas(
-        flag, f"{id_col} {id_type}, cluster long, kept long"
-    )
+    return clustered.groupBy("cluster").applyInArrow(flag, out_ddl)
 
 
 #: Fixed-point PCA: iteration scale (loadings live in [-2^20, 2^20])
@@ -1589,7 +1504,8 @@ def pca_project_int(
     """
     v = _pca_component(corpus, id_col, vec_col, scale, iters)
     va = np.array(v, dtype=np.int64)
-    id_type = corpus.schema[id_col].dataType.simpleString()
+    out_ddl = f"{id_col} {corpus.schema[id_col].dataType.simpleString()}, proj long"
+    schema = _arrow_schema(out_ddl)
 
     # Quantize + project in ONE numpy pass per Arrow batch (r13 opt):
     # the former plan quantized through ~6 interpreted higher-order
@@ -1599,17 +1515,13 @@ def pca_project_int(
     # the int64 matvec is exact in any order, so every proj value is
     # unchanged.
     def project(batches):
-        for b in batches:
-            if b.empty:
-                continue
-            Q = np.stack([_np_quantize_int8(x) for x in b[vec_col].values])
-            yield pd.DataFrame({id_col: b[id_col], "proj": Q @ va})
+        for b in filter(len, batches):
+            Q = _np_quantize_int8(vectors(b.column(vec_col)))
+            yield _batch(schema, b.column(id_col), Q @ va)
 
     from protarrow_spark.sources.tables import spread
 
-    return spread(corpus.select(id_col, vec_col)).mapInPandas(
-        project, f"{id_col} {id_type}, proj long"
-    )
+    return spread(corpus.select(id_col, vec_col)).mapInArrow(project, out_ddl)
 
 
 def _pca_component(
@@ -1625,37 +1537,33 @@ def _pca_component(
     Quantization happens INSIDE the partial-Gram batch function
     (r13 opt, guide §4.2): the former ``quantize_int8`` pre-pass ran
     ~6 chained interpreted higher-order array lambdas per row (array
-    HOFs get no codegen) only to feed a mapInPandas that already held
-    the batch in numpy. ``_np_quantize_int8`` is the documented
+    HOFs get no codegen) only to feed a Python kernel that already
+    held the batch in numpy. ``_np_quantize_int8`` is the documented
     bit-identical op sequence, so every Gram cell is unchanged."""
 
+    cells_ddl = "i long, j long, g long, s long, n long"
+    schema = _arrow_schema(cells_ddl)
+
     def partial(batches):
-        for b in batches:
-            if b.empty:
-                continue
-            V = np.stack([_np_quantize_int8(x) for x in b[vec_col].values])
+        for b in filter(len, batches):
+            V = _np_quantize_int8(vectors(b.column(vec_col)))
             G = V.T @ V  # d x d, |entries| <= n_batch * 127^2
             s = V.sum(axis=0)
             d = G.shape[0]
             ii, jj = np.meshgrid(np.arange(d), np.arange(d), indexing="ij")
-            yield pd.DataFrame(
-                {
-                    "i": ii.ravel(),
-                    "j": jj.ravel(),
-                    "g": G.ravel(),
-                    # per-dim sums ride on the diagonal cells only
-                    "s": np.where(ii.ravel() == jj.ravel(), s[ii.ravel()], 0),
-                    "n": np.where(
-                        (ii.ravel() == 0) & (jj.ravel() == 0), len(V), 0
-                    ),
-                }
+            i, j = ii.ravel(), jj.ravel()
+            yield _batch(
+                schema, i, j, G.ravel(),
+                # per-dim sums ride on the diagonal cells only
+                np.where(i == j, s[i], 0),
+                np.where((i == 0) & (j == 0), len(V), 0),
             )
 
     from protarrow_spark.sources.tables import spread
 
     cells = (
         spread(corpus.select(vec_col))
-        .mapInPandas(partial, "i long, j long, g long, s long, n long")
+        .mapInArrow(partial, cells_ddl)
         .groupBy("i", "j")
         .agg(
             F.sum("g").alias("g"),
@@ -1851,15 +1759,16 @@ def _pq_index(
     needs only ids, so the corpus is never quantized by interpreted
     JVM lambdas on this path — one vectorized pass total.
     """
-    cb_rows = (
+    cb = (
         corpus.select(id_col, vec_col)
         .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
         .limit(codebook_k)
-        .collect()
+        .toArrow()
     )
-    if not cb_rows:
+    if not cb.num_rows:
         raise ValueError("PQ index requires a non-empty corpus")
-    dim = len(cb_rows[0][vec_col])
+    CQ = _np_quantize_int8(vectors(cb.column(vec_col)))
+    dim = CQ.shape[1]
     if dim % n_subspaces != 0:
         raise ValueError(
             f"embedding dim {dim} is not divisible by n_subspaces "
@@ -1868,19 +1777,11 @@ def _pq_index(
         )
     sub = dim // n_subspaces
     # C[j, m, :] = codeword j's subvector in subspace m
-    C = np.stack(
-        [
-            _np_quantize_int8(r[vec_col]).reshape(n_subspaces, sub)
-            for r in cb_rows
-        ]
-    )
+    C = CQ.reshape(len(CQ), n_subspaces, sub)
 
-    @F.pandas_udf("array<int>")
-    def pq_codes(vecs: pd.Series) -> pd.Series:
-        X = np.stack([np.asarray(x, dtype=np.float64) for x in vecs.values])
-        s = np.abs(X).max(axis=1)
-        s[s == 0.0] = 1.0
-        Q = np.floor(X / s[:, None] * 127 + 0.5).astype(np.int64)
+    @F.arrow_udf("array<int>")
+    def pq_codes(vecs: pa.Array) -> pa.Array:
+        Q = _np_quantize_int8(vectors(vecs))
         out = np.zeros((Q.shape[0], n_subspaces), dtype=np.int32)
         for m in range(n_subspaces):
             Xm = Q[:, m * sub : (m + 1) * sub]
@@ -1891,36 +1792,48 @@ def _pq_index(
                 + (Cm * Cm).sum(1)[None, :]
             )
             out[:, m] = np.argmin(d, axis=1)  # ties -> smallest index
-        return pd.Series(list(out))
+        return vector_column(out)
 
     codes = corpus.select(F.col(id_col), pq_codes(F.col(vec_col)).alias("codes"))
 
-    lut_rows = []
-    for qr in queries.select(id_col, vec_col).collect():
-        qv = _np_quantize_int8(qr[vec_col])
-        for m in range(n_subspaces):
-            for j in range(len(cb_rows)):
-                lut_rows.append(
-                    (
-                        qr[id_col],
-                        m,
-                        j,
-                        int(qv[m * sub : (m + 1) * sub] @ C[j, m]),
-                    )
-                )
+    qt = queries.select(id_col, vec_col).toArrow()
+    QV = _np_quantize_int8(vectors(qt.column(vec_col))).reshape(-1, n_subspaces, sub)
+    # L[q, m, j] = query q's subspace-m subvector . codeword j's (exact int64)
+    L = np.einsum("qms,jms->qmj", QV, C)
+    lut_rows = [
+        (qid, m, j, int(L[q, m, j]))
+        for q, qid in enumerate(qt.column(id_col).to_pylist())
+        for m in range(n_subspaces)
+        for j in range(len(C))
+    ]
     lut = corpus.sparkSession.createDataFrame(lut_rows, ["query_id", "m", "j", "dot"])
     return codes, lut
 
 
-def _np_quantize_int8(vec) -> "np.ndarray":
-    """Numpy mirror of :func:`quantize_int8`'s per-vector math, same
-    elementwise IEEE op order (abs-max scale; floor(x/s*127 + 0.5)) —
+def _np_quantize_int8(X: np.ndarray) -> np.ndarray:
+    """Numpy mirror of :func:`quantize_int8` over a float64 ``(n, d)``
+    matrix, row by row in the same elementwise IEEE op order (abs-max
+    scale, the ``== 0 -> 1`` guard, ``floor(x / s * 127 + 0.5)``) —
     bit-identical values, verified by the PQ oracle-parity gates."""
-    x = np.asarray(vec, dtype=np.float64)
-    s = float(np.abs(x).max()) if x.size else 1.0
-    if s == 0.0:
-        s = 1.0
-    return np.floor(x / s * 127 + 0.5).astype(np.int64)
+    s = np.abs(X).max(axis=1, initial=0.0, keepdims=True)
+    s[s == 0.0] = 1.0
+    return np.floor(X / s * 127 + 0.5).astype(np.int64)
+
+
+def _quantized(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """``(id, q array<bigint>)``: :func:`quantize_int8`'s ``q`` column
+    computed in one numpy pass per Arrow batch; the id keeps its type."""
+    from protarrow_spark.sources.tables import spread
+
+    ddl = f"{id_col} {df.schema[id_col].dataType.simpleString()}, q array<bigint>"
+    schema = _arrow_schema(ddl)
+
+    def quantize(batches):
+        for b in filter(len, batches):
+            q = _np_quantize_int8(vectors(b.column(vec_col)))
+            yield _batch(schema, b.column(id_col), vector_column(q, pa.int64()))
+
+    return spread(df.select(id_col, vec_col)).mapInArrow(quantize, ddl)
 
 
 def _pq_ranked(scored: DataFrame, k: int) -> DataFrame:
@@ -2022,13 +1935,14 @@ def kcenter_greedy(
     # former quantize_int8 pre-pass was an interpreted JVM array-HOF
     # chain; _np_quantize_int8 is its documented bit-identical mirror.
     raw = df.select(id_col, vec_col)
-    sample = raw.limit(max_driver_rows + 1).collect()
-    if len(sample) <= max_driver_rows:
-        if not sample:
+    sample = raw.limit(max_driver_rows + 1).toArrow()
+    if sample.num_rows <= max_driver_rows:
+        if not sample.num_rows:
             return []
-        order = sorted(range(len(sample)), key=lambda i: int(sample[i][id_col]))
-        ids = np.array([int(sample[i][id_col]) for i in order], dtype=np.int64)
-        X = np.stack([_np_quantize_int8(sample[i][vec_col]) for i in order])
+        ids = sample.column(id_col).to_numpy().astype(np.int64)
+        order = np.argsort(ids, kind="stable")
+        ids = ids[order]
+        X = _np_quantize_int8(vectors(sample.column(vec_col)))[order]
         n = len(ids)
         xq = (X * X).sum(axis=1)
         picked = [(1, int(ids[0]), 0)]
@@ -2043,27 +1957,8 @@ def kcenter_greedy(
         return picked
     del sample
 
-    def _quantize(batches):
-        for b in batches:
-            if b.empty:
-                continue
-            yield pd.DataFrame(
-                {
-                    id_col: b[id_col],
-                    "q": [_np_quantize_int8(x) for x in b[vec_col].values],
-                }
-            )
-
-    from protarrow_spark.sources.tables import spread
-
-    # Preserve the source id dtype (r14, ADVICE): hardcoding `long`
-    # here narrowed the contract the removed quantize_int8 path kept.
-    id_t = raw.schema[id_col].dataType.simpleString()
-    qdf = (
-        spread(raw)
-        .mapInPandas(_quantize, f"{id_col} {id_t}, q array<bigint>")
-        .localCheckpoint(eager=True)
-    )  # quantize once, scan k times
+    # Quantize once, scan k times; the id keeps its source type.
+    qdf = _quantized(raw, id_col, vec_col).localCheckpoint(eager=True)
     # Partition sizing for the distributed rounds: each round pays one
     # Python-worker round trip PER TASK, while the matmul kernel is
     # happy with ~64k rows per batch — a billion-row corpus fans out
@@ -2080,38 +1975,32 @@ def kcenter_greedy(
     picked = [(1, int(seed[id_col]), 0)]
     centers = [np.asarray(list(seed["q"]), dtype=np.int64)]
 
+    champ_ddl = f"{id_col} long, md long, q array<bigint>"
+    champ_schema = _arrow_schema(champ_ddl)
     for step in range(2, k + 1):
         C = np.stack(centers)
         cqq = (C * C).sum(axis=1)
         taken = np.array([p[1] for p in picked], dtype=np.int64)
 
         def champion(batches, _C=C, _cqq=cqq, _taken=taken):
-            for b in batches:
-                if b.empty:
-                    continue
-                ids = b[id_col].to_numpy(dtype=np.int64)
+            for b in filter(len, batches):
+                ids = b.column(id_col).to_numpy().astype(np.int64)
                 keep = ~np.isin(ids, _taken)
                 if not keep.any():
                     continue
-                X = np.stack(
-                    [np.asarray(x, dtype=np.int64) for x in b["q"].values]
-                )[keep]
+                X = vectors(b.column("q"), np.int64)[keep]
                 ids = ids[keep]
                 xq = (X * X).sum(axis=1)
                 d2 = xq[:, None] + _cqq[None, :] - 2 * (X @ _C.T)
                 md = d2.min(axis=1)
                 # batch champion under the global order (md DESC, id ASC)
-                top = np.lexsort((ids, -md))[0]
-                yield pd.DataFrame(
-                    {
-                        id_col: [int(ids[top])],
-                        "md": [int(md[top])],
-                        "q": [list(map(int, X[top]))],
-                    }
+                t = np.lexsort((ids, -md))[:1]
+                yield _batch(
+                    champ_schema, ids[t], md[t], vector_column(X[t], pa.int64())
                 )
 
         rows = (
-            qdf.mapInPandas(champion, f"{id_col} long, md long, q array<bigint>")
+            qdf.mapInArrow(champion, champ_ddl)
             .orderBy(F.desc("md"), F.asc(id_col))
             .limit(1)
             .collect()

@@ -159,7 +159,7 @@ def test_truncated_raises_value_error():
     _, _, gray = decode_jpeg_gray(blob[:-2])
     assert np.array_equal(gray, GOLDEN_PIXELS)
     # a 4:2:0 color scan cut in the middle of its entropy data
-    from protarrow_spark.operators.jpeg import encode_jpeg_color
+    from protarrow_spark.operators.jpeg import decode_jpeg, encode_jpeg_color
 
     rng = np.random.default_rng(19)
     y, cb, cr = (rng.integers(0, 256, (24, 40), dtype=np.uint8) for _ in range(3))
@@ -167,6 +167,12 @@ def test_truncated_raises_value_error():
     sos = color.find(b"\xff\xda")
     with pytest.raises(ValueError):
         decode_jpeg_gray(color[: sos + (len(color) - sos) // 2])
+    # a scan listing one component twice (Cs 1, 3, 3): T.81 B.2.3
+    # requires distinct selectors, so this is corrupt, not a flat Cb plane
+    dup = bytearray(color)
+    dup[sos + 7] = 3  # second component selector of the SOS header
+    with pytest.raises(ValueError, match="twice"):
+        decode_jpeg(bytes(dup))
 
 
 def test_nonbaseline_and_sampling_boundaries():

@@ -48,3 +48,17 @@ def test_audit_streaming_sums_same_named_state_operators(monkeypatch) -> None:
     assert "| 12 |" in row
     assert "| 100 |" in row
     assert "dedupe" in row
+
+
+def test_audit_one_counts_arrow_python_stages() -> None:
+    plan = "\n".join(
+        [
+            "AdaptiveSparkPlan isFinalPlan=true",
+            "+- FlatMapGroupsInArrow [bucket#3], bucket_pairs(id#0L, v#1)#4, [id_a#5L]",
+            "   +- MapInArrow score(id#0L, v#1)#6, [query_id#7L], false",
+            "      +- ArrowEvalPython [keys(v#1)#8], [pythonUDF0#9], 200",
+            "         +- MapInPandas legacy(id#0L)#10, [id#11L], false",
+            "            +- FileScan parquet [id#0L,v#1] PushedFilters: []",
+        ]
+    )
+    assert plan_audit.audit_one(plan)["python_eval"] == 4

@@ -51,7 +51,11 @@ def audit_one(plan: str) -> dict:
         "scans": scans,
         "red_flags": [f for f in RED_FLAGS if f in plan],
         "python_eval": len(
-            re.findall(r"(BatchEvalPython|ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas)", plan)
+            re.findall(
+                r"(BatchEvalPython|ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas"
+                r"|MapInArrow|FlatMapGroupsInArrow)",
+                plan,
+            )
         ),
     }
 
@@ -61,7 +65,7 @@ def main() -> None:
     from protarrow_spark.queries import all_queries
     from protarrow_spark.session import get_spark
 
-    spark = get_spark("plan-audit", cpus=8)
+    spark = get_spark("plan-audit")
     queries = all_queries()
 
     # Audit EVERY registered batch query (r8: previously the graded
