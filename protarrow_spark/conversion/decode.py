@@ -80,9 +80,11 @@ def _is_null(v: Any) -> bool:
 
 
 def _as_mapping_items(v: Any) -> Iterable[tuple[Any, Any]]:
+    """A map cell's (key, value) pairs: a dict's items, or a list of
+    pairs (an Arrow map) or of key/value structs (``map_as_list``)."""
     if isinstance(v, dict):
         return v.items()
-    return [(e[0], e[1]) for e in v]  # arrow map -> list of (k, v) pairs
+    return [(_struct_get(e, "key", 0), _struct_get(e, "value", 1)) for e in v]
 
 
 def _struct_get(v: Any, name: str, idx: int) -> Any:
@@ -314,8 +316,6 @@ def _field_decoder(
         def map_cell(v: Any) -> dict | None:
             if _is_null(v):
                 return None
-            if config.map_as_list:
-                return {key_dec(e[0]): val_dec(e[1]) for e in v}
             return {key_dec(k): val_dec(x) for k, x in _as_mapping_items(v)}
 
         return map_cell

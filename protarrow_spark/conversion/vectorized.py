@@ -18,8 +18,14 @@ repeated-message and message-valued-map bodies are the frame
 hands back for the whole batch. Lengths are ``np.diff(offsets)``, and
 :func:`_fill_payloads` writes a whole buffer into the output with one
 numpy gather. Only the public ``encode_batch`` splits its frame into
-one ``bytes`` per row, once. Flat shapes run no other per-row Python;
-nested shapes still flatten list, map and struct cells row by row.
+one ``bytes`` per row, once.
+
+Each list, map and message column is flattened once (the reference's
+offsets + flat values, ``proto_to_arrow.py:469-491``), its items
+converted by the row path's own decoder in one call, and struct cells
+are transposed once. The valid path runs no Python step per cell; rows
+are attributed cell by cell only when that one conversion raises
+(:func:`_convert_rows`).
 
 Byte-compatibility contract: for every supported message shape the
 output is BIT-IDENTICAL to ``compile_row_to_wire`` (differential-
@@ -58,6 +64,9 @@ wire bytes) for the distributed codec.
 from __future__ import annotations
 
 import datetime
+from functools import partial
+from itertools import chain, repeat
+from operator import attrgetter, itemgetter
 from typing import Any, Callable
 
 import struct as _struct
@@ -141,25 +150,30 @@ _FIXED_RANGE = {
 }
 
 
-def _range_check(kind: Kind, v, valid, bad=None):
-    """Strict mode (``bad`` is None): raise on the first out-of-range
-    value, like the row path's wire writer. Permissive mode: OR the
-    violating rows into ``bad`` instead — the caller nulls exactly
-    those rows (the vectorized twin of the per-row try/except)."""
-    lo, hi = _VARINT_RANGE[kind] if kind in _VARINT_RANGE else _FIXED_RANGE[kind]
-    if kind in (Kind.INT64, Kind.SINT64):
-        return  # int64 array cannot leave int64 range
-    if kind is Kind.UINT64:
-        return  # two's-complement view covers the full range
-    viol = valid & ((v < lo) | (v > hi))
-    if not viol.any():
-        return
-    if bad is None:
-        first = v[viol][0]
-        raise ValueError(
-            f"{kind.name} value {int(first)} out of range [{lo}, {hi}]"
-        )
-    bad |= viol
+def _range_check(kind: Kind, v, bad, rows=None, lo=None, hi=None):
+    """Check values ``v`` against ``kind``'s range (or ``[lo, hi]``).
+    Strict mode (``bad`` is None): raise on the first out-of-range
+    value, like the row path's wire writer. Permissive mode: mark the
+    violating rows in ``bad`` instead (``rows[k]`` is value k's row;
+    None when values are rows) — the caller nulls exactly those rows
+    (the vectorized twin of the per-row try/except). Null rows must
+    hold 0, which every range contains. Returns the violation mask."""
+    if lo is None:
+        if kind in (Kind.INT64, Kind.SINT64, Kind.UINT64):
+            # an int64 array cannot leave int64 range, and the
+            # two's-complement view covers the full uint64 range
+            return None
+        if kind not in _VARINT_RANGE and kind not in _FIXED_RANGE:
+            return None
+        lo, hi = _VARINT_RANGE[kind] if kind in _VARINT_RANGE else _FIXED_RANGE[kind]
+    viol = (v < lo) | (v > hi)
+    if viol.any():
+        if bad is None:
+            raise ValueError(
+                f"{kind.name} value {int(v[viol][0])} out of range [{lo}, {hi}]"
+            )
+        bad[viol if rows is None else rows[viol]] = True
+    return viol
 
 
 def _payload_buffer(cells, kind: Kind, null=None):
@@ -308,7 +322,255 @@ def _fill_repeated(buf, pos, rt, active):
         _fill_fixed(buf, vpos, rt["flat_u"], rt["width"], aflat)
 
 
-def _side_parts(fld, flat, row_of, bad):
+#: What the row path's per-row try/except catches: a row whose value
+#: raises one of these is nulled in permissive mode.
+_ROW_ERRORS = (TypeError, ValueError, OverflowError, _struct.error)
+
+
+def _objects(items):
+    """Items (an ndarray, or any iterable) as a 1-D array; an iterable
+    becomes an object array whose nested sequences stay single cells."""
+    import numpy as np
+
+    if isinstance(items, np.ndarray):
+        return items
+    return np.fromiter(items, dtype=object)
+
+
+def _filled(vals, null, fill):
+    """``vals`` with ``fill`` in the null rows (a copy only when some
+    row is null)."""
+    if null.any():
+        vals = vals.copy()
+        vals[null] = fill
+    return vals
+
+
+def _null_mask_cells(cells):
+    """Row-path ``_is_null`` (None / NaN float / NaT / NA) over a cell
+    array: one ``pd.isna``, whose hits in an object array are
+    re-checked with ``decode._is_null``, which keeps cells ``pd.isna``
+    also flags (``np.datetime64('NaT')``, ``Decimal('NaN')``) as
+    values, so the verdict is the row path's exactly."""
+    import numpy as np
+    import pandas as pd
+
+    from protarrow_spark.conversion.decode import _is_null
+
+    null = pd.isna(cells)
+    if cells.dtype == object:
+        hits = np.flatnonzero(null)
+        if len(hits):
+            null[hits] = list(map(_is_null, cells[hits]))
+    return null
+
+
+def _convert_rows(convert, cells, null, bad):
+    """Run ``convert`` once over the valid (non-null) cells — the whole
+    valid path — and return its results, the first of which (items per
+    cell) spread over all rows as ``counts`` (0 where null).
+
+    Only when that one call raises is a row attributed: each valid cell
+    is converted alone, and a cell that fails fails its row as the row
+    path's per-row try/except does (strict mode re-raises the first
+    row's error, permissive mode marks the row in ``bad`` and ``null``);
+    the other cells then convert once more. A call that fails as a
+    whole but for no cell alone leaves the batch to the row path."""
+    import numpy as np
+
+    try:
+        out = convert(cells[~null])
+    except _ROW_ERRORS:
+        failed = False
+        for i in np.flatnonzero(~null).tolist():
+            try:
+                convert(cells[i : i + 1])
+            except _ROW_ERRORS:
+                if bad is None:
+                    raise
+                bad[i] = null[i] = True
+                failed = True
+        if not failed:
+            raise Unvectorizable("cells convert alone but not together")
+        out = convert(cells[~null])
+    counts = np.zeros(len(cells), dtype=np.int64)
+    counts[~null] = out[0]
+    return (counts, *out[1:])
+
+
+def _flatten(valid):
+    """List cells -> (items per cell, all items row-major): one
+    ``np.concatenate`` when the cells are 1-D ndarrays of one dtype
+    (Spark's ``to_pandas`` form), else one ``chain`` over the cells."""
+    import numpy as np
+
+    lens = np.fromiter(map(len, valid), dtype=np.int64, count=len(valid))
+    if (
+        len(valid)
+        and set(map(type, valid)) == {np.ndarray}
+        and len(set(map(attrgetter("dtype"), valid))) == 1
+    ):
+        try:
+            items = np.concatenate(list(valid))
+        except ValueError:  # cells of mixed rank: the items decide
+            items = None
+        if items is not None and items.ndim == 1:
+            return lens, items
+    return lens, list(chain.from_iterable(valid))
+
+
+def _typed(py, dtype, exact: str, items):
+    """Convert every item with ``py`` (the row path's decoder: ``int``,
+    ``float`` or ``bool``) into one array of ``dtype``. An ndarray whose
+    dtype kind is in ``exact`` is cast instead: the cast gives the
+    values ``py`` would."""
+    import numpy as np
+
+    if isinstance(items, np.ndarray) and items.dtype.kind in exact:
+        return items.astype(dtype)
+    try:
+        return np.fromiter(map(py, items), dtype=dtype)
+    except OverflowError as exc:
+        if py is not int:
+            raise
+        # an integer past int64, which the row path's writer rejects
+        # by its range
+        raise ValueError(f"integer out of range: {exc}") from exc
+
+
+def _converter(field: Field, config) -> Callable:
+    """``items -> array``: decode.py's ``_scalar_decoder`` for ``field``
+    applied to all items of a column in one call, raising what the
+    decoder raises on a bad item (TypeError, ValueError) or
+    OverflowError for an integer past int64. STRING items stay as
+    they are, UINT64/FIXED64 items become Python ints (range-checked
+    in :func:`_wire_u64`)."""
+    import numpy as np
+
+    kind = field.kind
+    if kind is Kind.STRING:
+        return _objects
+    if kind is Kind.BYTES:
+        return lambda items: _objects(map(bytes, items))
+    if kind is Kind.BOOL:
+        return partial(_typed, bool, np.bool_, "b")
+    if kind in (Kind.DOUBLE, Kind.FLOAT):
+        return partial(_typed, float, np.float64, "biuf")
+    if kind is Kind.ENUM and config.enum_type != "int":
+        get = field.enum.by_name.get  # unknown names fall back to 0
+        return lambda items: np.fromiter(map(get, items, repeat(0)), dtype=np.int64)
+    if kind in (Kind.UINT64, Kind.FIXED64):
+        return lambda items: _objects(map(int, items))
+    return partial(_typed, int, np.int64, "bi")
+
+
+def _wire_u64(kind: Kind, config, vals, rows, bad):
+    """Converted values (:func:`_converter`) -> the uint64 words the
+    wire writers emit, range-checked like the row path's writer (see
+    :func:`_range_check`; ``rows[k]`` is value k's row)."""
+    import numpy as np
+
+    if kind is Kind.BOOL:
+        return vals.astype(np.uint64)
+    if kind is Kind.DOUBLE:
+        return vals.view(np.uint64)
+    if kind is Kind.FLOAT:
+        return vals.astype(np.float32).view(np.uint32).astype(np.uint64)
+    if kind in (Kind.UINT64, Kind.FIXED64):
+        # Python ints: the full uint64 range, and in the non-decimal
+        # modes a negative long wraps once (decode.py _uint64_decoder)
+        lo = 0 if config.uint64_type == "decimal" else -(1 << 64)
+        viol = _range_check(kind, vals, bad, rows, lo, (1 << 64) - 1)
+        return (np.where(viol, 0, vals) % (1 << 64)).astype(np.uint64)
+    _range_check(kind, vals, bad, rows)
+    if kind in _ZIGZAG:
+        return ((vals << 1) ^ (vals >> 63)).view(np.uint64)
+    return vals.view(np.uint64)
+
+
+def _map_entries(valid):
+    """Map cells -> (entries per cell, keys, values), row-major, read
+    as decode.py's map converter reads them: a dict's items, or a list
+    of (key, value) pairs or of key/value structs."""
+    import numpy as np
+
+    from protarrow_spark.conversion.decode import _as_mapping_items
+
+    lens = np.fromiter(map(len, valid), dtype=np.int64, count=len(valid))
+    types = set(map(type, valid))
+    if types <= {dict}:
+        keys = list(chain.from_iterable(valid))
+        return lens, keys, list(chain.from_iterable(map(dict.values, valid)))
+    entries = list(chain.from_iterable(valid))
+    etypes = set(map(type, entries))
+    if dict not in types and etypes == {dict}:  # key/value structs
+        key, value = itemgetter("key"), itemgetter("value")
+    else:
+        if dict in types or not etypes <= {tuple, list}:  # mixed, Rows
+            entries = list(chain.from_iterable(map(_as_mapping_items, valid)))
+        key, value = itemgetter(0), itemgetter(1)
+    return lens, list(map(key, entries)), list(map(value, entries))
+
+
+def _last_wins(lens, keys):
+    """Entry indices a dict built per cell keeps — a repeated key at
+    its first position with its last value, the row path's map
+    semantics — or None when no cell repeats a key."""
+    import numpy as np
+
+    m = len(keys)
+    cell = np.repeat(np.arange(len(lens)), lens).tolist()
+    last = dict(zip(zip(cell, keys.tolist()), range(m)))
+    if len(last) == m:
+        return None
+    return np.fromiter(last.values(), dtype=np.int64, count=len(last))
+
+
+def _struct_columns(mtype: MessageType, structs):
+    """Struct cells -> one object array per field of ``mtype``,
+    transposed once and read as ``decode._struct_get`` reads a struct:
+    plain tuples and lists by position, dicts (Spark's ``to_pandas``
+    form) by name; any other form (a pyspark Row) through
+    ``_struct_get``, cell by cell."""
+    import numpy as np
+
+    names = [f.name for f in mtype.fields]
+    m, nf = len(structs), len(names)
+    types = set(map(type, structs))
+    if not m or not nf:
+        cols: list = [()] * nf
+    elif types <= {tuple, list} and min(map(len, structs)) >= nf:
+        cols = list(zip(*structs))[:nf]
+    elif types == {dict}:
+        get = itemgetter(*names)
+        cols = list(zip(*map(get, structs))) if nf > 1 else [list(map(get, structs))]
+    else:
+        from protarrow_spark.conversion.decode import _struct_get
+
+        cols = [
+            [_struct_get(c, name, j) for c in structs]
+            for j, name in enumerate(names)
+        ]
+    return [np.fromiter(c, dtype=object, count=m) for c in cols]
+
+
+def _spread(frame, keep):
+    """A sub-encoder frame of the ``keep`` rows -> the frame of all
+    rows, the others with empty bodies."""
+    import numpy as np
+
+    values, offsets, sub_bad = frame
+    lens = np.zeros(len(keep), dtype=np.int64)
+    lens[keep] = np.diff(offsets)
+    full = np.zeros(len(keep) + 1, dtype=np.int64)
+    np.cumsum(lens, out=full[1:])
+    if sub_bad is not None:
+        sub_bad, kept = np.zeros(len(keep), dtype=bool), sub_bad
+        sub_bad[keep] = kept
+    return values, full, sub_bad
+
+
+def _side_parts(fld, config, vals, row_of, bad):
     """One side (key or value) of flattened, CONVERTED map entries ->
     wire parts with the row path's ``emit_default=False`` skip masks.
     Range violations raise in strict mode (``bad`` is None) and mark
@@ -316,62 +578,11 @@ def _side_parts(fld, flat, row_of, bad):
     import numpy as np
 
     kind = fld.kind
-    m = len(flat)
     if kind in (Kind.STRING, Kind.BYTES):
-        parts = _len_parts(fld.number, *_payload_buffer(flat, kind))
+        parts = _len_parts(fld.number, *_payload_buffer(vals, kind))
         skip = parts["plen"] == 0  # == default b"" / ""
         return dict(parts, skip=skip, contrib=np.where(skip, 0, parts["contrib"]))
-    if kind in (Kind.UINT64, Kind.FIXED64):
-        # conv already wrapped/validated to python ints; full uint64
-        hi = (1 << 64) - 1
-        u = np.zeros(m, dtype=np.uint64)
-        for k, x in enumerate(flat):
-            xi = int(x)
-            if not 0 <= xi <= hi:
-                if bad is None:
-                    raise ValueError(
-                        f"{kind.name} value {xi} out of range [0, {hi}]"
-                    )
-                bad[row_of[k]] = True
-                xi = 0
-            u[k] = xi
-    elif kind is Kind.BOOL:
-        u = np.fromiter((1 if x else 0 for x in flat), dtype=np.uint64, count=m)
-    elif kind in (Kind.DOUBLE, Kind.FLOAT):
-        f = np.fromiter((float(x) for x in flat), dtype=np.float64, count=m)
-        if kind is Kind.DOUBLE:
-            u = f.view(np.uint64)
-        else:
-            u = f.astype(np.float32).view(np.uint32).astype(np.uint64)
-    else:
-        try:
-            v = np.array([int(x) for x in flat], dtype=np.int64)
-        except OverflowError:
-            v = np.zeros(m, dtype=np.int64)
-            for k, x in enumerate(flat):
-                xi = int(x)
-                if not -(1 << 63) <= xi < (1 << 63):
-                    if bad is None:
-                        raise ValueError(f"{kind.name} value {xi} overflows")
-                    bad[row_of[k]] = True
-                    xi = 0
-                v[k] = xi
-        rng = _VARINT_RANGE.get(kind) or _FIXED_RANGE.get(kind)
-        if rng is not None and kind not in (Kind.INT64, Kind.SINT64) and m:
-            lo, hi2 = rng
-            viol = (v < lo) | (v > hi2)
-            if viol.any():
-                if bad is None:
-                    first = v[viol][0]
-                    raise ValueError(
-                        f"{kind.name} value {int(first)} out of range "
-                        f"[{lo}, {hi2}]"
-                    )
-                bad[row_of[viol]] = True
-        if kind in _ZIGZAG:
-            u = ((v << 1) ^ (v >> 63)).view(np.uint64)
-        else:
-            u = v.view(np.uint64)
+    u = _wire_u64(kind, config, vals, row_of, bad)
     skip = u == 0  # converted default for every numeric kind;
     # -0.0 doubles have nonzero bits and correctly emit
     wt = _KINDS[kind][0]
@@ -404,31 +615,16 @@ def _fill_side(buf, spos, parts, aflat):
 
 
 def _prepare_nested(field, cells, n, config, sub_encode, bad):
-    """Precompute one plain nested-message field: split the struct
-    cells into sub-columns, batch-encode the submessage bodies with
-    the recursively compiled encoder, and frame them like any LEN
-    payload (:func:`_frame_sub_bodies`)."""
-    import pandas as pd
-
-    from protarrow_spark.conversion.decode import _struct_get
-
-    sub_mt = field.message
-    null = _null_mask_cells(cells, n)
-    sub_cols = []
-    for j, sf in enumerate(sub_mt.fields):
-        vals = [
-            None if null[i] else _struct_get(cells[i], sf.name, j)
-            for i in range(n)
-        ]
-        if _is_timestamp_field(sf) and config.timestamp_type != "long_nanos":
-            # let pandas infer datetime64 (exact); in long_nanos mode
-            # the cells are INTS and inference over ints + None gives
-            # float64, silently rounding nanos past 2^53 — keep object
-            # (everything else stays object for the same reason)
-            sub_cols.append(pd.Series(vals))
-        else:
-            sub_cols.append(pd.Series(vals, dtype=object))
-    return _frame_sub_bodies(field, sub_encode(sub_cols, n), null, bad)
+    """Precompute one plain nested-message field: transpose the
+    present struct cells once into one array per subfield
+    (:func:`_struct_columns`), batch-encode their bodies with the
+    recursively compiled encoder, and frame them like any LEN payload
+    (:func:`_frame_sub_bodies`)."""
+    null = _null_mask_cells(cells)
+    keep = ~null
+    sub_cols = _struct_columns(field.message, cells[keep])
+    frame = sub_encode(sub_cols, int(keep.sum()))
+    return _frame_sub_bodies(field, _spread(frame, keep), null, bad)
 
 
 def _frame_sub_bodies(field, frame, null, bad):
@@ -450,71 +646,58 @@ def _frame_sub_bodies(field, frame, null, bad):
 
 
 def _prepare_map(field, cells, n, config, bad, msg_val=None):
-    """Precompute one map field: converted entries flattened row-major
-    (the row path's dict semantics: insert-order, same-key last-wins),
-    per-entry body lengths with default-valued key/value sides omitted
-    (``emit_default=False``), framed tag + body-length per entry.
-    ``msg_val`` = (sub_encode, is_wkt) for message-valued maps (r10):
-    raw values dedup by key, then batch-encode into per-entry LEN
-    frames via :func:`_msg_value_side_parts`."""
+    """Precompute one map field. One flatten takes every entry of the
+    column (:func:`_map_entries`), the key and value decoders convert
+    all keys and all values in one call each (:func:`_converter`), and
+    one dict over (cell, key) pairs applies the row path's dict
+    semantics (insert order, same key last-wins, :func:`_last_wins`).
+    Each entry frames tag + body length with default-valued key/value
+    sides omitted (``emit_default=False``). A row is attributed cell
+    by cell only when a conversion raises (:func:`_convert_rows`).
+    ``msg_val`` = (sub_encode, kind) for message-valued maps: raw
+    values, checked like repeated items (:func:`_check_items`), batch-
+    encode into per-entry LEN frames via :func:`_msg_value_side_parts`."""
     import numpy as np
-
-    from protarrow_spark.conversion.decode import _scalar_decoder
 
     entry = field.message
     key_f = entry.fields_by_number[1]
     val_f = entry.fields_by_number[2]
-    key_dec = _scalar_decoder(key_f, config)
+    key_conv = _converter(key_f, config)
     if msg_val is None:
-        val_dec = _scalar_decoder(val_f, config)
+        val_conv = _converter(val_f, config)
     elif msg_val[1] == "rec":
         # recursive-typed values: the row converter ignores the cell
         # (every value — even None — becomes an empty body)
-        def val_dec(v):
-            return v
+        val_conv = _objects
     else:
-        # message values stay RAW through the key-dedup (conversion is
-        # the batch encode below); a null value is checked like a
-        # repeated item (see _check_item)
-        empty_ok = _null_is_empty(val_f.message)
+        val_conv = partial(
+            _check_items,
+            empty_ok=_null_is_empty(val_f.message),
+            what=f"None value in map {field.name}",
+        )
 
-        def val_dec(v):
-            _check_item(v, empty_ok, f"None value in map {field.name}")
-            return v
+    def convert(valid):
+        lens, keys, vals = _map_entries(valid)
+        keys, vals = key_conv(keys), val_conv(vals)
+        last = _last_wins(lens, keys)
+        if last is not None:
+            cell = np.repeat(np.arange(len(lens)), lens)[last]
+            lens = np.bincount(cell, minlength=len(lens))
+            keys, vals = keys[last], vals[last]
+        return lens, keys, vals
 
-    perm = bad is not None
-
-    rt: dict[str, Any] = {"field": field, "klass": "map"}
-    counts = np.zeros(n, dtype=np.int64)
-    null = _null_mask_cells(cells, n)
-    flat_k: list = []
-    flat_v: list = []
-    for i, c in enumerate(cells):
-        if null[i]:
-            continue
-        try:
-            items = c.items() if isinstance(c, dict) else [(e[0], e[1]) for e in c]
-            d = {key_dec(k): val_dec(v) for k, v in items}
-        except (TypeError, ValueError, OverflowError, _struct.error) as exc:
-            if not perm:
-                raise
-            bad[i] = True
-            null[i] = True
-            continue
-        flat_k.extend(d.keys())
-        flat_v.extend(d.values())
-        counts[i] = len(d)
-
+    null = _null_mask_cells(cells)
+    counts, keys, vals = _convert_rows(convert, cells, null, bad)
     ends = np.cumsum(counts)
     starts = ends - counts
     row_of = np.repeat(np.arange(n), counts)
-    kparts = _side_parts(key_f, flat_k, row_of, bad)
+    kparts = _side_parts(key_f, config, keys, row_of, bad)
     if msg_val is None:
-        vparts = _side_parts(val_f, flat_v, row_of, bad)
+        vparts = _side_parts(val_f, config, vals, row_of, bad)
     else:
         sub_encode, ikind = msg_val
         vparts = _msg_value_side_parts(
-            val_f, flat_v, row_of, config, sub_encode, ikind, bad
+            val_f, vals, row_of, config, sub_encode, ikind, bad
         )
     body_len = kparts["contrib"] + vparts["contrib"]
     blen_u = body_len.view(np.uint64)
@@ -525,11 +708,9 @@ def _prepare_map(field, cells, n, config, bad, msg_val=None):
     np.cumsum(entry_total, out=csum[1:])
     skip = null | (counts == 0)
     flen = np.where(skip, 0, csum[ends] - csum[starts])
-    within = (
-        csum[:-1] - csum[starts][row_of] if len(row_of) else csum[:0]
-    )
-    rt.update(
-        tag=tag, skip=skip, row_of=row_of, within=within,
+    rt = dict(
+        field=field, klass="map", tag=tag, skip=skip, row_of=row_of,
+        within=csum[:-1] - csum[starts][row_of],
         blen_u=blen_u, blen_nb=blen_nb, kcontrib=kparts["contrib"],
         kparts=kparts, vparts=vparts,
     )
@@ -578,200 +759,56 @@ def _frame_items(field, values, offsets, counts, null):
 
 
 def _prepare_repeated(field, cells, n, config, bad):
-    """Precompute one repeated scalar field: flattened wire values,
-    per-row packed body lengths (numeric kinds) or per-item expanded
-    lengths (string/bytes), using the reference's offsets+flat-values
-    formulation (proto_to_arrow.py:456-491).
+    """Precompute one repeated scalar field with the reference's
+    offsets+flat-values formulation (proto_to_arrow.py:469-491): one
+    flatten of the whole column (:func:`_flatten`) gives the per-row
+    counts and the items, and the field's decoder converts all items
+    in one call (:func:`_converter`). Numeric kinds then take their
+    wire words, range-checked as array ops with each value's row
+    (``row_of``), and per-row packed body lengths; string/bytes items
+    take per-item expanded lengths.
 
-    Mirrors the row path exactly: None/empty cells emit nothing;
-    per-item conversion/range failures raise in strict mode (``bad``
-    is None) and null exactly the violating ROW in permissive mode;
-    STRING/BYTES items of another type raise :class:`Unvectorizable`
-    (see :func:`_payload_buffer`)."""
+    Mirrors the row path exactly: None/empty cells emit nothing; an
+    item the decoder rejects (a None, a nested list) fails its ROW —
+    attributed cell by cell only when the one conversion raises
+    (:func:`_convert_rows`) — and a range violation fails its ROW too:
+    strict mode (``bad`` is None) raises, permissive mode nulls exactly
+    the violating rows. STRING/BYTES items of another type raise
+    :class:`Unvectorizable` (see :func:`_payload_buffer`)."""
     import numpy as np
 
     kind = field.kind
-    rt: dict[str, Any] = {"field": field}
-    counts = np.zeros(n, dtype=np.int64)
-    null = _null_mask_cells(cells, n)
-    perm = bad is not None
+    conv = _converter(field, config)
 
-    def row_fail(i, exc):
-        # the row path's per-row try/except: ValueError/TypeError/
-        # OverflowError/struct.error null the row in permissive mode
-        if not perm:
-            raise exc
-        bad[i] = True
-        null[i] = True  # emit nothing for the dead row
+    def convert(valid):
+        lens, items = _flatten(valid)
+        return lens, conv(items)
 
+    null = _null_mask_cells(cells)
+    counts, flat = _convert_rows(convert, cells, null, bad)
     if kind in (Kind.STRING, Kind.BYTES):
-        flat: list = []
-        for i, c in enumerate(cells):
-            if null[i]:
-                continue
-            items = list(c)
-            flat.extend(items)
-            counts[i] = len(items)
         return _frame_items(field, *_payload_buffer(flat, kind), counts, null)
 
     # numeric kinds: packed body (proto3 default), tag wt=LEN
-    flats: list = []
-    if kind is Kind.BOOL:
-        for i, c in enumerate(cells):
-            if null[i]:
-                continue
-            try:
-                # row path: the wire writer's BOOL payload is truthiness
-                # (None -> 0; ambiguous arrays raise ValueError)
-                a = np.fromiter((1 if x else 0 for x in c), dtype=np.uint64)
-            except (TypeError, ValueError) as exc:
-                row_fail(i, exc)
-                continue
-            flats.append(a)
-            counts[i] = len(a)
-        flat_u = (
-            np.concatenate(flats) if flats else np.zeros(0, dtype=np.uint64)
-        )
-    elif kind is Kind.ENUM and config.enum_type != "int":
-        by_name = field.enum.by_name
-        for i, c in enumerate(cells):
-            if null[i]:
-                continue
-            try:
-                a = np.fromiter(
-                    (by_name.get(x, 0) for x in c), dtype=np.int64
-                )
-            except (TypeError, ValueError) as exc:
-                row_fail(i, exc)
-                continue
-            flats.append(a)
-            counts[i] = len(a)
-        flat_v = (
-            np.concatenate(flats) if flats else np.zeros(0, dtype=np.int64)
-        )
-        flat_u = flat_v.view(np.uint64)
-    elif kind in (Kind.UINT64, Kind.FIXED64) and config.uint64_type == "decimal":
-        hi = (1 << 64) - 1
-        vals: list[int] = []
-        for i, c in enumerate(cells):
-            if null[i]:
-                continue
-            try:
-                items = [int(x) for x in c]
-            except (TypeError, ValueError) as exc:
-                row_fail(i, exc)
-                continue
-            ok = True
-            for x in items:
-                if not 0 <= x <= hi:
-                    row_fail(
-                        i,
-                        ValueError(
-                            f"{kind.name} value {x} out of range [0, {hi}]"
-                        ),
-                    )
-                    ok = False
-                    break
-            if not ok:
-                continue
-            vals.extend(items)
-            counts[i] = len(items)
-        flat_u = np.array(vals, dtype=np.uint64) if vals else np.zeros(
-            0, dtype=np.uint64
-        )
-    elif kind in (Kind.DOUBLE, Kind.FLOAT):
-        for i, c in enumerate(cells):
-            if null[i]:
-                continue
-            try:
-                a = np.asarray(c, dtype=np.float64)
-            except (TypeError, ValueError) as exc:
-                row_fail(i, exc)
-                continue
-            flats.append(a)
-            counts[i] = len(a)
-        f = np.concatenate(flats) if flats else np.zeros(0, dtype=np.float64)
-        if kind is Kind.DOUBLE:
-            flat_u = f.view(np.uint64)
-        else:
-            flat_u = f.astype(np.float32).view(np.uint32).astype(np.uint64)
-    else:  # int64-representable: varint family, sint, fixed32/64
-        for i, c in enumerate(cells):
-            if null[i]:
-                continue
-            try:
-                a = np.asarray(c, dtype=np.int64)
-            except (TypeError, ValueError, OverflowError) as exc:
-                row_fail(i, exc)
-                continue
-            if a.ndim != 1:
-                raise Unvectorizable("nested array cell")
-            flats.append(a)
-            counts[i] = len(a)
-        flat_v = (
-            np.concatenate(flats) if flats else np.zeros(0, dtype=np.int64)
-        )
-        # range checks with per-ROW attribution (the row path nulls the
-        # whole violating row)
-        rng = None
-        if kind in _VARINT_RANGE and kind not in (
-            Kind.INT64,
-            Kind.SINT64,
-            Kind.UINT64,
-        ):
-            rng = _VARINT_RANGE[kind]
-        elif kind in _FIXED_RANGE:
-            rng = _FIXED_RANGE[kind]
-        if rng is not None and len(flat_v):
-            lo, hi2 = rng
-            viol = (flat_v < lo) | (flat_v > hi2)
-            if viol.any():
-                if not perm:
-                    first = flat_v[viol][0]
-                    raise ValueError(
-                        f"{kind.name} value {int(first)} out of range "
-                        f"[{lo}, {hi2}]"
-                    )
-                row_of_all = np.repeat(np.arange(n), counts)
-                bad[row_of_all[viol]] = True
-        if kind in _ZIGZAG:
-            flat_u = ((flat_v << 1) ^ (flat_v >> 63)).view(np.uint64)
-        else:
-            flat_u = flat_v.view(np.uint64)
-
     ends = np.cumsum(counts)
     starts = ends - counts
     row_of = np.repeat(np.arange(n), counts)
+    flat_u = _wire_u64(kind, config, flat, row_of, bad)
     skip = null | (counts == 0)
     tag = _tag_bytes(field.number, _WT_LEN)
-    if kind in (
-        Kind.DOUBLE,
-        Kind.FIXED64,
-        Kind.SFIXED64,
-        Kind.FLOAT,
-        Kind.FIXED32,
-        Kind.SFIXED32,
-    ):
-        width = 8 if kind in (Kind.DOUBLE, Kind.FIXED64, Kind.SFIXED64) else 4
+    rt: dict[str, Any] = {"field": field}
+    wt = _KINDS[kind][0]
+    if wt != _WT_VARINT:
+        width = 8 if wt == _WT_I64 else 4
         body_len = counts * width
-        idx_in_row = (
-            np.arange(len(flat_u)) - starts[row_of]
-            if len(flat_u)
-            else np.zeros(0, dtype=np.int64)
-        )
-        within = idx_in_row * width
+        within = (np.arange(len(flat_u)) - starts[row_of]) * width
         rt.update(klass="rep_fixed", width=width)
-        nb_flat = None
     else:
         nb_flat = _varint_nbytes(flat_u)
         csum = np.zeros(len(flat_u) + 1, dtype=np.int64)
         np.cumsum(nb_flat, out=csum[1:])
         body_len = csum[ends] - csum[starts]
-        within = (
-            csum[:-1] - csum[starts][row_of]
-            if len(flat_u)
-            else csum[:0]
-        )
+        within = csum[:-1] - csum[starts][row_of]
         rt.update(klass="rep_varint", nb_flat=nb_flat)
     blen_u = body_len.view(np.uint64)
     blen_nb = _varint_nbytes(blen_u)
@@ -789,10 +826,12 @@ def _ts_sec_nano(s, null, config):
     Shared by the dedicated singular-Timestamp klass and the WKT
     splitter (repeated / map-valued Timestamp contexts)."""
     import numpy as np
+    import pandas as pd
 
     try:
         if config.timestamp_type == "long_nanos":
-            nanos_total = s.where(s.notna(), 0).to_numpy(dtype=np.int64)
+            v = s.to_numpy()
+            nanos_total = _filled(v, pd.isna(v), 0).astype(np.int64)
             sec = nanos_total // 1_000_000_000
             nano = nanos_total - sec * 1_000_000_000
         else:
@@ -811,8 +850,6 @@ def _ts_sec_nano(s, null, config):
                 # DataFrames built from records): let pandas infer the
                 # exact datetime64 form; mixed/naive+aware stays object
                 # and falls through to Unvectorizable below
-                import pandas as pd
-
                 s = pd.Series(s.tolist())
                 if getattr(s.dtype, "tz", None) is not None:
                     s = s.dt.tz_convert("UTC").dt.tz_localize(None)
@@ -843,22 +880,6 @@ def _ts_sec_nano(s, null, config):
     return sec, nano
 
 
-def _null_mask_cells(cells, n):
-    """Row-path ``_is_null`` (None / NaN float / NaT / NA) over object cells."""
-    import numpy as np
-
-    return np.fromiter(
-        (
-            c is None
-            or (isinstance(c, float) and c != c)
-            or type(c).__name__ in ("NaTType", "NAType")
-            for c in cells
-        ),
-        dtype=bool,
-        count=n,
-    )
-
-
 #: WKT full names the vectorized paths can split into / combine from
 #: sub-columns of the (flat, all-scalar) WKT MessageType. Timestamp is
 #: here for the FLATTENED contexts (repeated items, map values); the
@@ -874,9 +895,12 @@ _SPLITTABLE_WKTS = (
     | set(WRAPPER_TYPES)
 )
 
+#: decode.py's Duration decoder reads micros up to this far from zero.
+_DURATION_LIMIT = datetime.timedelta(microseconds=1 << 62)
 
-def _wkt_sub_columns(mtype: MessageType, cells, n, null, config):
-    """Scalar WKT cell forms -> sub-column Series of the WKT's own
+
+def _wkt_sub_columns(mtype: MessageType, vals, n, null, config):
+    """Scalar WKT cells (an array) -> sub-column arrays of the WKT's own
     MessageType, so the recursively compiled batch encoder can emit the
     submessage bodies. Value semantics mirror decode.py's per-WKT
     decoders exactly (``_timestamp_decoder`` / ``_duration_decoder`` /
@@ -887,24 +911,21 @@ def _wkt_sub_columns(mtype: MessageType, cells, n, null, config):
     import pandas as pd
 
     name = mtype.full_name
-    s = cells if isinstance(cells, pd.Series) else pd.Series(cells, dtype=object)
     if name == TIMESTAMP.full_name:
-        if s.dtype == object and config.timestamp_type != "long_nanos":
+        if vals.dtype == object and config.timestamp_type != "long_nanos":
             # flattened items arrive as objects; let pandas infer
-            # datetime64 (exact) like _prepare_nested's ts sub-columns
-            s = pd.Series(s.tolist())
-        sec, nano = _ts_sec_nano(s, null, config)
-        return [pd.Series(sec), pd.Series(nano)]
+            # datetime64 (exact), as for a nested Timestamp sub-column
+            vals = vals.tolist()
+        return list(_ts_sec_nano(pd.Series(vals), null, config))
     if name == DURATION.full_name:
         if config.duration_type == "long_nanos":
             try:
-                ns = s.where(s.notna(), 0).to_numpy(dtype=np.int64)
+                ns = _filled(vals, pd.isna(vals), 0).astype(np.int64)
             except (TypeError, ValueError) as exc:
                 raise Unvectorizable(str(exc)) from exc
             sec = ns // 1_000_000_000
             nano = ns - sec * 1_000_000_000
         else:
-            vals = s.to_numpy()
             if np.issubdtype(vals.dtype, np.timedelta64):
                 unit = np.datetime_data(vals.dtype)[0]
                 ints = vals.astype(np.int64)  # NaT -> INT64_MIN, masked
@@ -916,66 +937,67 @@ def _wkt_sub_columns(mtype: MessageType, cells, n, null, config):
                     raise Unvectorizable(f"duration unit {unit}")
                 us = np.where(null, 0, us)
             else:
+                # timedelta / pd.Timedelta cells: numpy reads their
+                # days, seconds and microseconds, which for a
+                # pd.Timedelta is its .value // 1000 (floor)
                 us = np.zeros(n, dtype=np.int64)
-                lim = 1 << 62
-                for i in np.flatnonzero(~null):
-                    v = s.iloc[i]
-                    value_ns = getattr(v, "value", None)
-                    if value_ns is not None and type(v).__name__ == "Timedelta":
-                        m = value_ns // 1_000
-                    elif isinstance(v, datetime.timedelta):
-                        m = (
-                            v.days * 86_400 + v.seconds
-                        ) * 1_000_000 + v.microseconds
-                    else:
-                        raise Unvectorizable(
-                            f"duration cell of type {type(v).__name__}"
-                        )
-                    if not -lim <= m <= lim:
+                cells = vals[~null]
+                odd = set(map(type, cells)) - {datetime.timedelta, pd.Timedelta}
+                if odd:
+                    raise Unvectorizable(
+                        f"duration cell of type {next(iter(odd)).__name__}"
+                    )
+                if len(cells):
+                    if not -_DURATION_LIMIT <= min(cells) <= max(cells) <= _DURATION_LIMIT:
                         raise Unvectorizable("duration beyond int64 micros")
-                    us[i] = m
-        # divmod floor + protobuf sign normalization (decode.py
-        # _duration_decoder.normalize: seconds and nanos share a sign)
-        if config.duration_type == "long_nanos":
-            pass  # sec/nano already set above
-        else:
+                    us[~null] = np.array(
+                        cells.tolist(), dtype="timedelta64[us]"
+                    ).astype(np.int64)
+            # divmod floor + protobuf sign normalization (decode.py
+            # _duration_decoder.normalize: seconds and nanos share a sign)
             sec, rem = np.divmod(us, 1_000_000)
             nano = rem * 1_000
         over = (~null) & (sec < 0) & (nano > 0)
         sec = np.where(over, sec + 1, sec)
         nano = np.where(over, nano - 1_000_000_000, nano)
-        return [pd.Series(sec), pd.Series(nano)]
+        return [sec, nano]
     if name == DATE.full_name:
-        y = np.zeros(n, dtype=np.int64)
-        mo = np.zeros(n, dtype=np.int64)
-        d = np.zeros(n, dtype=np.int64)
-        for i in np.flatnonzero(~null):
-            v = s.iloc[i]
-            if hasattr(v, "date") and not isinstance(v, datetime.date):
-                v = v.date()  # pd.Timestamp, like decode.py _date_decoder
-            if not isinstance(v, datetime.date):
-                raise Unvectorizable(f"date cell of type {type(v).__name__}")
-            if v == _DATE_SENTINEL:
-                continue  # unset date round-trips to Date()
-            y[i], mo[i], d[i] = v.year, v.month, v.day
-        return [pd.Series(y), pd.Series(mo), pd.Series(d)]
+        ymd = np.zeros((3, n), dtype=np.int64)
+        cells = vals[~null]
+        if set(map(type, cells)) <= {datetime.date}:
+            days = np.array(cells.tolist(), dtype="datetime64[D]")
+            year = days.astype("datetime64[Y]")
+            month = days.astype("datetime64[M]")
+            fields = np.stack([
+                year.astype(np.int64) + 1970,
+                (month - year).astype(np.int64) + 1,
+                (days - month).astype(np.int64) + 1,
+            ])
+            # the unset-date sentinel round-trips to Date()
+            fields[:, days == np.datetime64(_DATE_SENTINEL)] = 0
+            ymd[:, ~null] = fields
+        else:  # datetimes, pd.Timestamps: their calendar fields
+            for i in np.flatnonzero(~null):
+                v = vals[i]
+                if hasattr(v, "date") and not isinstance(v, datetime.date):
+                    v = v.date()  # like decode.py _date_decoder
+                if not isinstance(v, datetime.date):
+                    raise Unvectorizable(f"date cell of type {type(v).__name__}")
+                if v != _DATE_SENTINEL:
+                    ymd[:, i] = v.year, v.month, v.day
+        return list(ymd)
     if name == TIME_OF_DAY.full_name:
         try:
-            total = s.where(s.notna(), 0).to_numpy(dtype=np.int64)
+            total = _filled(vals, pd.isna(vals), 0).astype(np.int64)
         except (TypeError, ValueError) as exc:
             raise Unvectorizable(str(exc)) from exc
         nanos = total % 1_000_000_000
         seconds_total = total // 1_000_000_000
         minutes_total, seconds = np.divmod(seconds_total, 60)
         hours, minutes = np.divmod(minutes_total, 60)
-        return [
-            pd.Series(hours),
-            pd.Series(minutes),
-            pd.Series(seconds),
-            pd.Series(nanos),
-        ]
+        return [hours, minutes, seconds, nanos]
     if name in WRAPPER_TYPES:
-        return [s]  # the sub-encoder applies the value-kind policy
+        return [vals]  # the sub-encoder applies the value-kind policy
     raise Unvectorizable(f"unsupported WKT {name}")  # pragma: no cover
 
 
@@ -989,47 +1011,22 @@ def _prepare_wkt(field, cells, n, config, sub_encode, bad):
     recursive batch encode does the identical default skipping."""
     import pandas as pd
 
-    if isinstance(cells, pd.Series) and cells.dtype != object:
-        # numeric/bool/datetime64/timedelta64 wrapper columns — the hot
-        # telemetry case: vectorized NaN/NaT detection instead of the
-        # per-cell loop (object cells — dates, structs — keep the loop,
-        # which matches the row path's _is_null exactly)
-        null = pd.isna(cells).to_numpy(dtype=bool)
-    else:
-        null = _null_mask_cells(cells, n)
+    vals = cells.to_numpy() if isinstance(cells, pd.Series) else cells
+    null = _null_mask_cells(vals)
     if field.message.full_name == EMPTY.full_name:
         return _frame_sub_bodies(field, _empty_frame(n), null, bad)
-    sub_cols = _wkt_sub_columns(field.message, cells, n, null, config)
+    sub_cols = _wkt_sub_columns(field.message, vals, n, null, config)
     return _frame_sub_bodies(field, sub_encode(sub_cols, n), null, bad)
-
-
-def _split_message_items(sub_mt, items, m, config):
-    """Flattened plain-message cells -> sub-column Series for the
-    recursive batch encoder (the struct split _prepare_nested does per
-    row, applied to an item list)."""
-    import numpy as np
-    import pandas as pd
-
-    from protarrow_spark.conversion.decode import _struct_get
-
-    sub_cols = []
-    for j, sf in enumerate(sub_mt.fields):
-        vals = [_struct_get(items[i], sf.name, j) for i in range(m)]
-        if _is_timestamp_field(sf) and config.timestamp_type != "long_nanos":
-            # same float64-rounding hazard as _prepare_nested's note
-            sub_cols.append(pd.Series(vals))
-        else:
-            sub_cols.append(pd.Series(vals, dtype=object))
-    return sub_cols
 
 
 def _item_payloads(sub_mt, items, m, config, sub_encode, kind):
     """Flattened message items -> the frame ``(buf, offsets, item_bad)``
     of their wire bodies. ``kind``: "wkt" routes through the
-    scalar-cell splitter, "plain" struct-splits, "rec" (recursive-typed
-    items, skip mode) emits empty bodies — the row converter ignores
-    the cell. ``item_bad`` marks items a permissive sub-encoder nulled
-    (their bodies are empty)."""
+    scalar-cell splitter, "plain" transposes the struct cells
+    (:func:`_struct_columns`), "rec" (recursive-typed items, skip mode)
+    emits empty bodies — the row converter ignores the cell.
+    ``item_bad`` marks items a permissive sub-encoder nulled (their
+    bodies are empty)."""
     import numpy as np
 
     if kind == "rec" or sub_mt.full_name == EMPTY.full_name:
@@ -1038,7 +1035,7 @@ def _item_payloads(sub_mt, items, m, config, sub_encode, kind):
         null = np.zeros(m, dtype=bool)  # items are non-null by contract
         sub_cols = _wkt_sub_columns(sub_mt, items, m, null, config)
     else:
-        sub_cols = _split_message_items(sub_mt, items, m, config)
+        sub_cols = _struct_columns(sub_mt, items)
     values, offsets, item_bad = sub_encode(sub_cols, m)
     return values, offsets, np.zeros(m, dtype=bool) if item_bad is None else item_bad
 
@@ -1050,56 +1047,55 @@ def _null_is_empty(mtype: MessageType) -> bool:
     return mtype.full_name in WRAPPER_TYPES or mtype.full_name == EMPTY.full_name
 
 
-def _check_item(x, empty_ok: bool, what: str) -> None:
-    """Check one message item or map value: None passes when
-    ``empty_ok`` (the sub-encoder skips the wrapper's unset value) and
-    otherwise fails its row with the row path's TypeError (struct get /
-    int()). A NaN item fails the same way, except in a wrapper, where
-    the row path keeps NaN as the value and so decides the batch."""
-    if x is None:
-        if not empty_ok:
+def _check_items(items, empty_ok: bool, what: str):
+    """Check message items or map values, returned as an array: a None
+    passes when ``empty_ok`` (the sub-encoder skips the wrapper's unset
+    value) and otherwise raises the row path's TypeError (struct get /
+    int()). A NaN fails the same way, except in a wrapper, where the
+    row path keeps NaN as the value and so decides the batch. Only the
+    ``pd.isna`` hits are looked at one by one."""
+    import numpy as np
+    import pandas as pd
+
+    items = _objects(items)
+    for x in items[pd.isna(items)]:
+        if x is None:
+            if not empty_ok:
+                raise TypeError(what)
+        elif isinstance(x, float) and x != x:
+            if empty_ok:
+                raise Unvectorizable(f"NaN wrapper item: {what}")
             raise TypeError(what)
-    elif isinstance(x, float) and x != x:
-        if empty_ok:
-            raise Unvectorizable(f"NaN wrapper item: {what}")
-        raise TypeError(what)
+    return items
 
 
 def _prepare_repeated_msg(field, cells, n, config, sub_encode, kind, bad):
     """Precompute one repeated MESSAGE field (plain nested, WKT, or
-    recursive items): flatten items row-major, batch-encode the bodies,
-    frame one tag + len + payload per item (messages never pack),
-    reusing the expanded rep_len layout. A null item (see
-    :func:`_check_item`) or a contract-violating item fails its whole
-    ROW (the row path's per-row try/except wraps the full
-    ``[dec(x) for x in v]`` list comprehension) — EXCEPT recursive
-    items, whose row converter ignores the cell (even None encodes as
-    an empty body)."""
+    recursive items): one flatten of the column (:func:`_flatten`)
+    gives the items row-major, checked in one pass
+    (:func:`_check_items`), one recursive batch encode gives their
+    bodies, and each item frames tag + len + payload (messages never
+    pack), reusing the expanded rep_len layout. A null item or a
+    contract-violating item fails its whole ROW (the row path's
+    per-row try/except wraps the full ``[dec(x) for x in v]`` list
+    comprehension), attributed cell by cell only when the check raises
+    (:func:`_convert_rows`) — EXCEPT recursive items, whose row
+    converter ignores the cell (even None encodes as an empty body)."""
     import numpy as np
 
-    perm = bad is not None
     empty_ok = _null_is_empty(field.message)
-    null = _null_mask_cells(cells, n)
-    counts = np.zeros(n, dtype=np.int64)
-    flat: list = []
-    for i, c in enumerate(cells):
-        if null[i]:
-            continue
-        items = list(c)
-        if kind != "rec":
-            try:
-                for x in items:
-                    _check_item(x, empty_ok, f"None item in repeated {field.name}")
-            except TypeError:
-                if not perm:
-                    raise
-                bad[i] = True
-                null[i] = True
-                continue
-        flat.extend(items)
-        counts[i] = len(items)
+    what = f"None item in repeated {field.name}"
+
+    def convert(valid):
+        lens, items = _flatten(valid)
+        if kind == "rec":
+            return lens, _objects(items)
+        return lens, _check_items(items, empty_ok, what)
+
+    null = _null_mask_cells(cells)
+    counts, items = _convert_rows(convert, cells, null, bad)
     values, offsets, item_bad = _item_payloads(
-        field.message, flat, len(flat), config, sub_encode, kind
+        field.message, items, len(items), config, sub_encode, kind
     )
     if item_bad.any():  # permissive only: strict sub-encodes raise
         bad[np.repeat(np.arange(n), counts)[item_bad]] = True
@@ -1139,7 +1135,14 @@ def compile_batch_to_wire(
     ``permissive=True`` mirrors ``on_error="null"``: rows whose values
     violate the contract (range checks) come back as None instead of
     raising — the vectorized twin of the row loop\'s per-row
-    try/except, without re-encoding the whole batch row-wise."""
+    try/except, without re-encoding the whole batch row-wise.
+
+    Columns are Series or arrays of cells. Each list, map and message
+    column is flattened once and converted in one call per kind; a
+    column whose one conversion raises is converted again cell by cell
+    only to find the failing rows (strict mode raises the first row's
+    error, permissive mode nulls those rows), so valid batches run no
+    Python step per cell."""
     import numpy as np
 
     encode_frame = _compile_frame_encoder(mtype, config, permissive, _trace)
@@ -1229,9 +1232,10 @@ def _compile_frame_encoder(
         # in tests/test_vectorized_encode.py::test_oneof_encode
         if field.repeated:
             # repeated scalars vectorize via the reference's offsets
-            # technique (proto_to_arrow.py:456-491 — offsets +
-            # flattened values): numeric kinds pack (the row path's
-            # proto3 default), string/bytes expand per occurrence.
+            # technique (proto_to_arrow.py:469-491 — offsets +
+            # flattened values, one flatten per column): numeric kinds
+            # pack (the row path's proto3 default), string/bytes
+            # expand per occurrence.
             # Repeated MESSAGES (r10): items flatten row-major, bodies
             # batch-encode recursively (plain) or via the WKT splitter,
             # framed one tag + len + payload per item (the reference's
@@ -1308,10 +1312,17 @@ def _compile_frame_encoder(
         total_len = np.zeros(n, dtype=np.int64)
         fields_rt: list[dict] = []
         for klass, field, idx in plan:
-            col = cols[idx]
-            s = col if isinstance(col, pd.Series) else pd.Series(col)
+            # a column is a Series, or an ndarray a parent encoder
+            # built (sub-columns are never wrapped in a Series)
+            s = cols[idx]
+            if not isinstance(s, (pd.Series, np.ndarray)):
+                s = pd.Series(s)
             if klass in ("repeated", "map", "rep_msg", "rec_empty", "nested"):
-                cells = s.to_numpy(dtype=object)
+                cells = (
+                    s.to_numpy(dtype=object)
+                    if isinstance(s, pd.Series)
+                    else s.astype(object, copy=False)
+                )
             if klass == "repeated":
                 rt, flen = _prepare_repeated(field, cells, n, config, bad)
             elif klass == "map":
@@ -1327,7 +1338,7 @@ def _compile_frame_encoder(
                 sub, _ = item_encoders[idx]
                 rt, flen = _prepare_wkt(field, s, n, config, sub, bad)
             elif klass == "rec_empty":
-                null = _null_mask_cells(cells, n)
+                null = _null_mask_cells(cells)
                 rt, flen = _frame_sub_bodies(field, _empty_frame(n), null, bad)
             elif klass == "nested":
                 rt, flen = _prepare_nested(
@@ -1394,20 +1405,23 @@ def _compile_frame_encoder(
 
 
 def _prepare_scalar(klass, field, s, n, config, bad):
-    """Precompute one singular scalar or Timestamp field of the Series
-    ``s``: skip mask, wire form and per-row field length."""
+    """Precompute one singular scalar or Timestamp field of the column
+    ``s`` (a Series, or an ndarray a parent encoder built): skip mask,
+    wire form and per-row field length."""
     import numpy as np
     import pandas as pd
 
     rt: dict[str, Any] = {"field": field, "klass": klass}
     kind = field.kind
-    null = pd.isna(s)
-    if null.values.ndim != 1:  # array-typed cell slipped through
+    vals = s.to_numpy() if isinstance(s, pd.Series) else s
+    if vals.ndim != 1:  # array-typed cell slipped through
         raise Unvectorizable("non-scalar cell")
-    null = null.to_numpy(dtype=bool)
+    null = pd.isna(vals)
 
     if klass == "timestamp":
-        sec, nano = _ts_sec_nano(s, null, config)
+        sec, nano = _ts_sec_nano(
+            s if isinstance(s, pd.Series) else pd.Series(s), null, config
+        )
         sec_u = sec.view(np.uint64)
         nano_u = nano.view(np.uint64)
         sec_nb = _varint_nbytes(sec_u)
@@ -1432,22 +1446,13 @@ def _prepare_scalar(klass, field, s, n, config, bad):
             null, 0, len(tag) + blen_nb + body_len
         )
     elif klass == "u64_decimal":
-        vals = s.to_numpy(dtype=object)
-        u = np.zeros(n, dtype=np.uint64)
-        hi = (1 << 64) - 1
+        # decimal-mode uint64: Decimal cells, full 0..2^64-1 range
+        ints = np.zeros(n, dtype=object)
         try:
-            for i in np.flatnonzero(~null):
-                x = int(vals[i])
-                if not 0 <= x <= hi:
-                    if bad is None:
-                        raise ValueError(
-                            f"{kind.name} value {x} out of range [0, {hi}]"
-                        )
-                    bad[i] = True
-                    continue
-                u[i] = x
+            ints[~null] = _objects(map(int, vals[~null]))
         except TypeError as exc:
             raise Unvectorizable(str(exc)) from exc
+        u = _wire_u64(kind, config, ints, None, bad)
         skip = null if field.has_presence else (null | (u == 0))
         if kind is Kind.UINT64:
             nb = _varint_nbytes(u)
@@ -1459,9 +1464,10 @@ def _prepare_scalar(klass, field, s, n, config, bad):
             rt.update(tag=tag, skip=skip, u=u, width=8, klass="fixed")
             flen = np.where(skip, 0, len(tag) + 8)
     elif klass == "enum_name":
-        by_name = field.enum.by_name
-        v = s.map(lambda x: by_name.get(x, 0)).where(~null, 0).to_numpy(dtype=np.int64)
-        _range_check(Kind.ENUM, v, ~null, bad)
+        get = field.enum.by_name.get  # unknown names fall back to 0
+        v = np.fromiter(map(get, vals, repeat(0)), dtype=np.int64, count=n)
+        v[null] = 0
+        _range_check(Kind.ENUM, v, bad)
         u = v.view(np.uint64)
         nb = _varint_nbytes(u)
         skip = null if field.has_presence else (null | (v == 0))
@@ -1470,14 +1476,14 @@ def _prepare_scalar(klass, field, s, n, config, bad):
         flen = np.where(skip, 0, len(tag) + nb)
     elif kind in (Kind.STRING, Kind.BYTES):
         rt.update(_len_parts(
-            field.number, *_payload_buffer(s.to_numpy(dtype=object), kind, null)
+            field.number, *_payload_buffer(vals.astype(object, copy=False), kind, null)
         ))
         skip = null if field.has_presence else (null | (rt["plen"] == 0))
         rt["skip"] = skip
         flen = np.where(skip, 0, rt["contrib"])
     elif kind is Kind.BOOL:
         try:
-            v = s.where(s.notna(), False).to_numpy(dtype=bool)
+            v = _filled(vals, null, False).astype(bool)
         except (TypeError, ValueError) as exc:
             raise Unvectorizable(str(exc)) from exc
         u = v.astype(np.uint64)
@@ -1488,7 +1494,7 @@ def _prepare_scalar(klass, field, s, n, config, bad):
         flen = np.where(skip, 0, len(tag) + 1)
     elif kind in (Kind.DOUBLE, Kind.FLOAT):
         try:
-            f = s.to_numpy(dtype=np.float64, na_value=0.0)
+            f = _filled(vals, null, 0.0).astype(np.float64)
         except (TypeError, ValueError) as exc:
             raise Unvectorizable(str(exc)) from exc
         if kind is Kind.DOUBLE:
@@ -1501,38 +1507,28 @@ def _prepare_scalar(klass, field, s, n, config, bad):
         tag = _tag_bytes(field.number, wt)
         rt.update(tag=tag, skip=skip, u=u, width=width, klass="fixed")
         flen = np.where(skip, 0, len(tag) + width)
-    elif kind in (Kind.FIXED64, Kind.SFIXED64, Kind.FIXED32, Kind.SFIXED32):
+    else:
         try:
-            v = s.where(s.notna(), 0).to_numpy(dtype=np.int64)
+            v = _filled(vals, null, 0).astype(np.int64, copy=False)
         except (TypeError, ValueError) as exc:
             raise Unvectorizable(str(exc)) from exc
-        if kind in (Kind.FIXED32, Kind.SFIXED32):
-            # Row path packs '<I'/'<i' which raises struct.error
-            # out of range; masking to the low 32 bits here would
-            # silently write a DIFFERENT number to the wire.
-            _range_check(kind, v, ~null, bad)
-            width, wt = 4, _WT_I32
-            u = (v.view(np.uint64) & np.uint64(0xFFFFFFFF))
-        else:
-            width, wt = 8, _WT_I64
-            u = v.view(np.uint64)
-        skip = null if field.has_presence else (null | (v == 0))
-        tag = _tag_bytes(field.number, wt)
-        rt.update(tag=tag, skip=skip, u=u, width=width, klass="fixed")
-        flen = np.where(skip, 0, len(tag) + width)
-    else:  # varint family: int32/64, uint32/64, sint32/64, enum(int)
-        try:
-            v = s.where(s.notna(), 0).to_numpy(dtype=np.int64)
-        except (TypeError, ValueError) as exc:
-            raise Unvectorizable(str(exc)) from exc
-        _range_check(kind, v, ~null, bad)
+        # Row path packs '<I'/'<i' for FIXED32/SFIXED32, which raises
+        # struct.error out of range; masking to the low 32 bits would
+        # silently write a DIFFERENT number to the wire.
+        _range_check(kind, v, bad)
+        wt = _KINDS[kind][0]
         if kind in _ZIGZAG:
             u = ((v << 1) ^ (v >> 63)).view(np.uint64)
         else:
             u = v.view(np.uint64)
-        nb = _varint_nbytes(u)
         skip = null if field.has_presence else (null | (v == 0))
-        tag = _tag_bytes(field.number, _WT_VARINT)
-        rt.update(tag=tag, skip=skip, u=u, nb=nb, klass="varint")
-        flen = np.where(skip, 0, len(tag) + nb)
+        tag = _tag_bytes(field.number, wt)
+        if wt == _WT_VARINT:  # int32/64, uint32/64, sint32/64, enum(int)
+            nb = _varint_nbytes(u)
+            rt.update(tag=tag, skip=skip, u=u, nb=nb, klass="varint")
+            flen = np.where(skip, 0, len(tag) + nb)
+        else:  # fixed-width: FIXED32/64, SFIXED32/64
+            width = 8 if wt == _WT_I64 else 4
+            rt.update(tag=tag, skip=skip, u=u, width=width, klass="fixed")
+            flen = np.where(skip, 0, len(tag) + width)
     return rt, flen

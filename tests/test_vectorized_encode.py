@@ -1195,3 +1195,85 @@ def test_nested_message_without_fields():
         {"m": [(), None, ()], "rm": [[(), ()], None, []]}, dtype=object
     )
     _assert_identical(mt, df)
+
+
+@pytest.mark.parametrize("permissive", [False, True], ids=["strict", "permissive"])
+@pytest.mark.parametrize("kind", [Kind.DOUBLE, Kind.FLOAT, Kind.INT32, Kind.INT64])
+def test_repeated_nested_list_cell_fails_its_row(kind, permissive):
+    """A nested list inside a repeated numeric cell: the row path's
+    item decoder (float() / int()) raises TypeError, so strict mode
+    raises it and permissive mode nulls exactly that row."""
+    import struct as _struct
+
+    mt = MessageType("vec.NL", (Field("xs", 1, kind, repeated=True),))
+    col = pd.Series([[1, 2], [[1.0, 2.0]], [3], None], dtype=object)
+    be = compile_batch_to_wire(mt, CFG, permissive=permissive)
+    re_ = compile_row_to_wire(mt, CFG)
+    if not permissive:
+        with pytest.raises(TypeError):
+            re_((col[1],))
+        with pytest.raises(TypeError):
+            be([col])
+        return
+    slow = []
+    for rec in zip(col):
+        try:
+            slow.append(re_(rec))
+        except (ValueError, TypeError, OverflowError, _struct.error):
+            slow.append(None)
+    assert be([col]) == slow
+    assert slow[1] is None and slow[0] is not None and slow[2] is not None
+
+
+def test_encode_per_cell_counters_do_not_grow_with_rows(monkeypatch):
+    """Pins the one flatten per list, map and message column with
+    counters instead of timings: an EXAMPLE encode makes as many
+    np.asarray, np.fromiter, _struct_get and Series.iloc calls at 10x
+    the rows, and reads no struct cell by cell."""
+    import protarrow_spark.conversion.decode as decode
+
+    mt, small, big = _counter_batches("example")
+    be = compile_batch_to_wire(mt, CFG)
+    calls: dict = {}
+
+    def counting(name, fn):
+        def wrapper(*args, **kwargs):
+            calls[name] = calls.get(name, 0) + 1
+            return fn(*args, **kwargs)
+
+        return wrapper
+
+    monkeypatch.setattr(np, "asarray", counting("asarray", np.asarray))
+    monkeypatch.setattr(np, "fromiter", counting("fromiter", np.fromiter))
+    monkeypatch.setattr(decode, "_struct_get", counting("_struct_get", decode._struct_get))
+    monkeypatch.setattr(pd.Series, "iloc", property(counting("iloc", pd.Series.iloc.fget)))
+    seen, outs = [], []
+    for df in (small, big):
+        cols = [df[f.name] for f in mt.fields]
+        calls.clear()
+        outs.append(be(cols))
+        seen.append(dict(calls))
+    assert outs[1] == outs[0] * (len(big) // len(small))
+    assert seen[0] == seen[1], seen
+    assert "_struct_get" not in seen[0] and "iloc" not in seen[0], seen
+
+
+def test_null_mask_matches_row_path_is_null():
+    """The batch null mask (one pd.isna, its hits re-checked) gives
+    decode._is_null's verdict on every cell, including the cells
+    pd.isna flags and the row path keeps as values."""
+    import decimal
+
+    from protarrow_spark.conversion.decode import _is_null
+    from protarrow_spark.conversion.vectorized import _null_mask_cells
+
+    cells = [
+        None, float("nan"), np.float64("nan"), pd.NaT, pd.NA,
+        np.datetime64("NaT"), decimal.Decimal("NaN"),
+        [], (), "", 0, 1.5, b"", {}, np.array([1.0, np.nan]),
+    ]
+    arr = np.empty(len(cells), dtype=object)
+    arr[:] = cells
+    got = _null_mask_cells(arr)
+    assert got.tolist() == [_is_null(c) for c in cells]
+    assert got[:5].all() and not got[5:].any()

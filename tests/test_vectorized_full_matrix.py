@@ -77,6 +77,37 @@ def test_full_matrix_compiles_and_encodes_identically(shape, cfg):
 
 @pytest.mark.parametrize("cfg", CONFIGS, ids=["default", "str-long", "nanos-maplist"])
 @pytest.mark.parametrize("shape", ["EXAMPLE", "NESTED_EXAMPLE"])
+def test_full_matrix_spark_shaped_cells_encode_identically(shape, cfg):
+    """The same rows in the cell forms a Spark worker hands the
+    encoder: one Arrow batch of the rows, read back as
+    ``distributed._pandas_columns`` reads it (ndarray list cells,
+    ``(k, v)`` tuple maps or key/value dict entries, dict structs)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from protarrow_spark.conversion.distributed import _pandas_columns
+    from protarrow_spark.schema import message_type_to_schema
+    from tests.random_messages import random_messages
+
+    mtype = getattr(fixtures, shape)
+    rows = messages_to_rows(random_messages(mtype, 40, seed=7), mtype, cfg)
+    arrow_schema = to_arrow_schema(message_type_to_schema(mtype, cfg))
+    batch = pa.RecordBatch.from_struct_array(
+        pa.array(rows, type=pa.struct(list(arrow_schema)))
+    )
+    cols = _pandas_columns(batch, [f.name for f in mtype.fields])
+    assert any(
+        isinstance(c, np.ndarray) for col in cols for c in col
+    ), "list cells must arrive as ndarrays"
+    fast = compile_batch_to_wire(mtype, cfg)(cols)
+    re_ = compile_row_to_wire(mtype, cfg)
+    slow = [re_(r) for r in rows]
+    bad = [i for i, (a, b) in enumerate(zip(fast, slow)) if a != b]
+    assert not bad, f"{len(bad)} byte mismatches, first row {bad[0]}"
+
+
+@pytest.mark.parametrize("cfg", CONFIGS, ids=["default", "str-long", "nanos-maplist"])
+@pytest.mark.parametrize("shape", ["EXAMPLE", "NESTED_EXAMPLE"])
 def test_full_matrix_decodes_identically(shape, cfg):
     from tests.random_messages import random_messages
 
