@@ -66,7 +66,7 @@ from __future__ import annotations
 import datetime
 from functools import partial
 from itertools import chain, repeat
-from operator import attrgetter, itemgetter
+from operator import itemgetter
 from typing import Any, Callable
 
 import struct as _struct
@@ -328,12 +328,10 @@ _ROW_ERRORS = (TypeError, ValueError, OverflowError, _struct.error)
 
 
 def _objects(items):
-    """Items (an ndarray, or any iterable) as a 1-D array; an iterable
-    becomes an object array whose nested sequences stay single cells."""
+    """Any iterable of items as a 1-D object array whose nested
+    sequences stay single cells."""
     import numpy as np
 
-    if isinstance(items, np.ndarray):
-        return items
     return np.fromiter(items, dtype=object)
 
 
@@ -400,34 +398,18 @@ def _convert_rows(convert, cells, null, bad):
 
 def _flatten(valid):
     """List cells -> (items per cell, all items row-major): one
-    ``np.concatenate`` when the cells are 1-D ndarrays of one dtype
-    (Spark's ``to_pandas`` form), else one ``chain`` over the cells."""
+    ``map(len, …)`` and one ``chain`` over the cells."""
     import numpy as np
 
     lens = np.fromiter(map(len, valid), dtype=np.int64, count=len(valid))
-    if (
-        len(valid)
-        and set(map(type, valid)) == {np.ndarray}
-        and len(set(map(attrgetter("dtype"), valid))) == 1
-    ):
-        try:
-            items = np.concatenate(list(valid))
-        except ValueError:  # cells of mixed rank: the items decide
-            items = None
-        if items is not None and items.ndim == 1:
-            return lens, items
     return lens, list(chain.from_iterable(valid))
 
 
-def _typed(py, dtype, exact: str, items):
+def _typed(py, dtype, items):
     """Convert every item with ``py`` (the row path's decoder: ``int``,
-    ``float`` or ``bool``) into one array of ``dtype``. An ndarray whose
-    dtype kind is in ``exact`` is cast instead: the cast gives the
-    values ``py`` would."""
+    ``float`` or ``bool``) into one array of ``dtype``."""
     import numpy as np
 
-    if isinstance(items, np.ndarray) and items.dtype.kind in exact:
-        return items.astype(dtype)
     try:
         return np.fromiter(map(py, items), dtype=dtype)
     except OverflowError as exc:
@@ -443,9 +425,12 @@ def _converter(field: Field, config) -> Callable:
     applied to all items of a column in one call, raising what the
     decoder raises on a bad item (TypeError, ValueError) or
     OverflowError for an integer past int64. STRING items stay as
-    they are, UINT64/FIXED64 items become Python ints (range-checked
-    in :func:`_wire_u64`)."""
+    they are, UINT64/FIXED64 items become Python ints, a negative long
+    wrapped once as the row path wraps it (range-checked in
+    :func:`_wire_u64`), so map keys dedup on the wire value."""
     import numpy as np
+
+    from protarrow_spark.conversion.decode import _uint64_decoder
 
     kind = field.kind
     if kind is Kind.STRING:
@@ -453,18 +438,19 @@ def _converter(field: Field, config) -> Callable:
     if kind is Kind.BYTES:
         return lambda items: _objects(map(bytes, items))
     if kind is Kind.BOOL:
-        return partial(_typed, bool, np.bool_, "b")
+        return partial(_typed, bool, np.bool_)
     if kind in (Kind.DOUBLE, Kind.FLOAT):
-        return partial(_typed, float, np.float64, "biuf")
+        return partial(_typed, float, np.float64)
     if kind is Kind.ENUM and config.enum_type != "int":
         get = field.enum.by_name.get  # unknown names fall back to 0
         return lambda items: np.fromiter(map(get, items, repeat(0)), dtype=np.int64)
     if kind in (Kind.UINT64, Kind.FIXED64):
-        return lambda items: _objects(map(int, items))
-    return partial(_typed, int, np.int64, "bi")
+        dec = _uint64_decoder(config)
+        return lambda items: _objects(map(dec, items))
+    return partial(_typed, int, np.int64)
 
 
-def _wire_u64(kind: Kind, config, vals, rows, bad):
+def _wire_u64(kind: Kind, vals, rows, bad):
     """Converted values (:func:`_converter`) -> the uint64 words the
     wire writers emit, range-checked like the row path's writer (see
     :func:`_range_check`; ``rows[k]`` is value k's row)."""
@@ -477,11 +463,9 @@ def _wire_u64(kind: Kind, config, vals, rows, bad):
     if kind is Kind.FLOAT:
         return vals.astype(np.float32).view(np.uint32).astype(np.uint64)
     if kind in (Kind.UINT64, Kind.FIXED64):
-        # Python ints: the full uint64 range, and in the non-decimal
-        # modes a negative long wraps once (decode.py _uint64_decoder)
-        lo = 0 if config.uint64_type == "decimal" else -(1 << 64)
-        viol = _range_check(kind, vals, bad, rows, lo, (1 << 64) - 1)
-        return (np.where(viol, 0, vals) % (1 << 64)).astype(np.uint64)
+        # Python ints, already wrapped: the full uint64 range
+        viol = _range_check(kind, vals, bad, rows, 0, (1 << 64) - 1)
+        return np.where(viol, 0, vals).astype(np.uint64)
     _range_check(kind, vals, bad, rows)
     if kind in _ZIGZAG:
         return ((vals << 1) ^ (vals >> 63)).view(np.uint64)
@@ -502,14 +486,10 @@ def _map_entries(valid):
         keys = list(chain.from_iterable(valid))
         return lens, keys, list(chain.from_iterable(map(dict.values, valid)))
     entries = list(chain.from_iterable(valid))
-    etypes = set(map(type, entries))
-    if dict not in types and etypes == {dict}:  # key/value structs
-        key, value = itemgetter("key"), itemgetter("value")
-    else:
-        if dict in types or not etypes <= {tuple, list}:  # mixed, Rows
-            entries = list(chain.from_iterable(map(_as_mapping_items, valid)))
-        key, value = itemgetter(0), itemgetter(1)
-    return lens, list(map(key, entries)), list(map(value, entries))
+    if dict in types or not set(map(type, entries)) <= {tuple, list}:
+        # mixed cells, key/value structs, Rows
+        entries = list(chain.from_iterable(map(_as_mapping_items, valid)))
+    return lens, list(map(itemgetter(0), entries)), list(map(itemgetter(1), entries))
 
 
 def _last_wins(lens, keys):
@@ -527,11 +507,10 @@ def _last_wins(lens, keys):
 
 
 def _struct_columns(mtype: MessageType, structs):
-    """Struct cells -> one object array per field of ``mtype``,
-    transposed once and read as ``decode._struct_get`` reads a struct:
-    plain tuples and lists by position, dicts (Spark's ``to_pandas``
-    form) by name; any other form (a pyspark Row) through
-    ``_struct_get``, cell by cell."""
+    """Struct cells -> one object array per field of ``mtype``, read
+    as ``decode._struct_get`` reads a struct: plain tuples and lists
+    transposed once by position; any other form (a dict, a pyspark
+    Row) through ``_struct_get``, cell by cell."""
     import numpy as np
 
     names = [f.name for f in mtype.fields]
@@ -541,9 +520,6 @@ def _struct_columns(mtype: MessageType, structs):
         cols: list = [()] * nf
     elif types <= {tuple, list} and min(map(len, structs)) >= nf:
         cols = list(zip(*structs))[:nf]
-    elif types == {dict}:
-        get = itemgetter(*names)
-        cols = list(zip(*map(get, structs))) if nf > 1 else [list(map(get, structs))]
     else:
         from protarrow_spark.conversion.decode import _struct_get
 
@@ -570,7 +546,7 @@ def _spread(frame, keep):
     return values, full, sub_bad
 
 
-def _side_parts(fld, config, vals, row_of, bad):
+def _side_parts(fld, vals, row_of, bad):
     """One side (key or value) of flattened, CONVERTED map entries ->
     wire parts with the row path's ``emit_default=False`` skip masks.
     Range violations raise in strict mode (``bad`` is None) and mark
@@ -582,7 +558,7 @@ def _side_parts(fld, config, vals, row_of, bad):
         parts = _len_parts(fld.number, *_payload_buffer(vals, kind))
         skip = parts["plen"] == 0  # == default b"" / ""
         return dict(parts, skip=skip, contrib=np.where(skip, 0, parts["contrib"]))
-    u = _wire_u64(kind, config, vals, row_of, bad)
+    u = _wire_u64(kind, vals, row_of, bad)
     skip = u == 0  # converted default for every numeric kind;
     # -0.0 doubles have nonzero bits and correctly emit
     wt = _KINDS[kind][0]
@@ -691,9 +667,9 @@ def _prepare_map(field, cells, n, config, bad, msg_val=None):
     ends = np.cumsum(counts)
     starts = ends - counts
     row_of = np.repeat(np.arange(n), counts)
-    kparts = _side_parts(key_f, config, keys, row_of, bad)
+    kparts = _side_parts(key_f, keys, row_of, bad)
     if msg_val is None:
-        vparts = _side_parts(val_f, config, vals, row_of, bad)
+        vparts = _side_parts(val_f, vals, row_of, bad)
     else:
         sub_encode, ikind = msg_val
         vparts = _msg_value_side_parts(
@@ -793,7 +769,7 @@ def _prepare_repeated(field, cells, n, config, bad):
     ends = np.cumsum(counts)
     starts = ends - counts
     row_of = np.repeat(np.arange(n), counts)
-    flat_u = _wire_u64(kind, config, flat, row_of, bad)
+    flat_u = _wire_u64(kind, flat, row_of, bad)
     skip = null | (counts == 0)
     tag = _tag_bytes(field.number, _WT_LEN)
     rt: dict[str, Any] = {"field": field}
@@ -1142,7 +1118,9 @@ def compile_batch_to_wire(
     column whose one conversion raises is converted again cell by cell
     only to find the failing rows (strict mode raises the first row's
     error, permissive mode nulls those rows), so valid batches run no
-    Python step per cell."""
+    Python step per cell. Struct cells other than tuples and lists
+    (dicts, Rows) and map entries other than pairs (key/value structs)
+    are read through decode.py's per-cell accessors."""
     import numpy as np
 
     encode_frame = _compile_frame_encoder(mtype, config, permissive, _trace)
@@ -1411,12 +1389,17 @@ def _prepare_scalar(klass, field, s, n, config, bad):
     import numpy as np
     import pandas as pd
 
+    from protarrow_spark.conversion.decode import _is_null
+
     rt: dict[str, Any] = {"field": field, "klass": klass}
     kind = field.kind
     vals = s.to_numpy() if isinstance(s, pd.Series) else s
     if vals.ndim != 1:  # array-typed cell slipped through
         raise Unvectorizable("non-scalar cell")
     null = pd.isna(vals)
+    if vals.dtype == object and not all(map(_is_null, vals[null])):
+        # np.datetime64('NaT'), Decimal('NaN'): values to the row path
+        raise Unvectorizable("a null-like cell the row path keeps as a value")
 
     if klass == "timestamp":
         sec, nano = _ts_sec_nano(
@@ -1450,9 +1433,9 @@ def _prepare_scalar(klass, field, s, n, config, bad):
         ints = np.zeros(n, dtype=object)
         try:
             ints[~null] = _objects(map(int, vals[~null]))
-        except TypeError as exc:
+        except (TypeError, ValueError) as exc:
             raise Unvectorizable(str(exc)) from exc
-        u = _wire_u64(kind, config, ints, None, bad)
+        u = _wire_u64(kind, ints, None, bad)
         skip = null if field.has_presence else (null | (u == 0))
         if kind is Kind.UINT64:
             nb = _varint_nbytes(u)

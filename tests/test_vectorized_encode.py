@@ -867,6 +867,20 @@ def test_map_encode_permissive_and_strict_range():
         compile_batch_to_wire(mt, CFG)([cells[:2]])
 
 
+@pytest.mark.parametrize("key", [Kind.UINT64, Kind.FIXED64])
+def test_map_uint64_keys_dedup_on_wrapped_value(key):
+    """In long mode a negative key wraps once to its uint64 value, so
+    -1 and 2**64 - 1 are the same key: the row path's dict keeps one
+    entry, and so must the batch encoder."""
+    cfg = ProtarrowSparkConfig(uint64_type="long")
+    mt = MessageType("vec.MU", (map_field("m", 1, key, Kind.STRING),))
+    df = pd.DataFrame({"m": pd.Series(
+        [{-1: "a", 2**64 - 1: "b"}, {2**64 - 1: "c", -1: "d", 5: "e"}, {-2: "f"}],
+        dtype=object,
+    )})
+    _assert_identical(mt, df, cfg)
+
+
 def test_map_message_values_encode_vectorized():
     # r10: message-valued maps — values dedup raw by key, bodies
     # batch-encode, each entry's value side always emits (even empty)
@@ -1277,3 +1291,24 @@ def test_null_mask_matches_row_path_is_null():
     got = _null_mask_cells(arr)
     assert got.tolist() == [_is_null(c) for c in cells]
     assert got[:5].all() and not got[5:].any()
+
+
+@pytest.mark.parametrize("kind", [Kind.INT64, Kind.DOUBLE, Kind.BOOL, Kind.UINT64])
+@pytest.mark.parametrize("permissive", [False, True], ids=["strict", "permissive"])
+def test_scalar_null_like_values_are_left_to_the_row_path(kind, permissive):
+    """np.datetime64('NaT') and Decimal('NaN') are null to pd.isna but
+    values to the row path's _is_null, which then encodes or fails the
+    row by the value: a singular column holding one is left to the row
+    path instead of encoding it as unset."""
+    import decimal
+
+    from protarrow_spark.conversion.vectorized import Unvectorizable
+
+    mt = MessageType("vec.NV", (Field("x", 1, kind, optional=True),))
+    for cell in (decimal.Decimal("NaN"), np.datetime64("NaT")):
+        col = pd.Series([1, cell, None], dtype=object)
+        with pytest.raises(Unvectorizable):
+            compile_batch_to_wire(mt, CFG, permissive=permissive)([col])
+        assert compile_batch_to_wire(mt, CFG, permissive=permissive)(
+            [col[[0, 2]]]
+        ) == [compile_row_to_wire(mt, CFG)((v,)) for v in (1, None)]
