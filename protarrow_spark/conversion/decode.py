@@ -36,6 +36,7 @@ from itertools import repeat
 from operator import getitem
 from typing import Any, Callable, Iterable, Iterator
 
+import numpy as np
 from pyspark.sql import DataFrame
 
 from protarrow_spark.config import ProtarrowSparkConfig
@@ -107,6 +108,8 @@ def _timestamp_us(v: Any) -> int:
             # collect() yields naive datetimes in the session tz (pinned UTC)
             v = v.replace(tzinfo=datetime.timezone.utc)
         return (v - _EPOCH) // datetime.timedelta(microseconds=1)
+    if isinstance(v, np.datetime64):  # a Spark worker's repeated cell item
+        return int(v.astype("datetime64[us]").astype(np.int64))
     return int(v)
 
 
@@ -145,6 +148,8 @@ def _duration_decoder(config: ProtarrowSparkConfig) -> ValueConverter:
     def from_interval(v: Any) -> Message:
         if isinstance(v, datetime.timedelta):
             micros = (v.days * 86_400 + v.seconds) * 1_000_000 + v.microseconds
+        elif isinstance(v, np.timedelta64):  # a Spark worker's repeated cell item
+            micros = int(v.astype("timedelta64[us]").astype(np.int64))
         else:  # pd.Timedelta
             micros = v.value // 1_000
         seconds, rem = divmod(micros, 1_000_000)

@@ -11,7 +11,8 @@ training-data pipeline needs:
   (the video keyframe-sampling shape). Pure JVM built-ins: sequence +
   explode + substring arithmetic; scales as a narrow map + explode.
 * :func:`decode_image_features` / :func:`audio_window_features` —
-  per-blob feature extraction via Arrow-batched ``mapInPandas`` UDFs.
+  per-blob feature extraction through :func:`map_blobs`, the one
+  Arrow boundary of every media stage.
   Three REAL dependency-free image/audio codecs are built in (all
   public formats, parsed with ``struct``/numpy only): uncompressed
   24-bit BMP (:func:`decode_bmp_gray`), RIFF/WAVE mono PCM16
@@ -32,23 +33,28 @@ feature byte-exactly in SQL.
 
 Scale notes: all three operators are shuffle-free narrow maps; frame
 sampling explodes at most ``len/frame_bytes`` rows per blob; the
-Pandas UDF path is Arrow-batched with numpy vectorization inside.
+Python stages are Arrow-batched with numpy vectorization inside.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+import struct
 
+import numpy as np
+import pyarrow as pa
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from protarrow_spark.operators.jpeg import JPEG_MAGIC as _JPEG_MAGIC
+from protarrow_spark.operators.jpeg import decode_jpeg, encode_jpeg_color, encode_jpeg_gray
 from protarrow_spark.operators.jpeg import decode_jpeg_gray as _decode_jpeg
 from protarrow_spark.operators.gif import GIF_MAGICS as _GIF_MAGICS
 from protarrow_spark.operators.gif import decode_gif_gray as _decode_gif
 from protarrow_spark.operators.png import PNG_MAGIC as _PNG_MAGIC
 from protarrow_spark.operators.png import decode_png_gray as _decode_png
+from protarrow_spark.operators.similarity import _batch
 
 FAKE_IMAGE_MAGIC = b"FIMG"
 FAKE_IMAGE_MAGIC_HEX = "46494D47"
@@ -58,6 +64,52 @@ FRAME_BYTES = 32
 
 def is_fake_image(blob: Column) -> Column:
     return F.hex(blob).startswith(FAKE_IMAGE_MAGIC_HEX)
+
+
+#: The (doc_id, blob) rows a blob fixture builds.
+BLOB_SCHEMA = T.StructType(
+    [T.StructField("doc_id", T.LongType()), T.StructField("blob", T.BinaryType())]
+)
+
+
+def map_blobs(
+    df: DataFrame,
+    id_col: str,
+    payload_col: str,
+    schema: T.StructType,
+    row_fn,
+    fan_out: bool = False,
+) -> DataFrame:
+    """The one Arrow boundary of every media stage: one ``mapInArrow``
+    over the ``(id_col, payload_col)`` rows of ``df``.
+
+    ``row_fn(doc_id, payload)`` gets the payload as ``bytes`` (``str``
+    for a string column) and returns the values of ``schema`` after
+    ``doc_id``: one tuple, or with ``fan_out`` a list of tuples, or
+    None for the null path. A null payload takes the null path without
+    reaching ``row_fn``. The null path of a 1:1 stage is the all-null
+    row, which keeps its ``doc_id``; a fan-out stage emits nothing for
+    it. ``doc_id`` leaves as Spark's own Arrow array."""
+    arrow_schema = to_arrow_schema(schema)
+    null_row = (None,) * (len(schema) - 1)
+
+    def kernel(batches):
+        for b in batches:
+            ids = b.column(0)
+            rows = [
+                None if payload is None else row_fn(doc_id, payload)
+                for doc_id, payload in zip(ids.to_pylist(), b.column(1).to_pylist())
+            ]
+            if fan_out:
+                take = [i for i, r in enumerate(rows) for _ in r or ()]
+                ids = ids.take(pa.array(take, pa.int64()))
+                rows = [t for r in rows if r for t in r]
+            else:
+                rows = [null_row if r is None else r for r in rows]
+            yield _batch(arrow_schema, ids, *(list(zip(*rows)) or [()] * len(null_row)))
+
+    src = df.select(F.col(id_col).alias("doc_id"), F.col(payload_col))
+    return src.mapInArrow(kernel, schema)
 
 
 def blob_metadata(df: DataFrame, id_col: str, blob_col: str) -> DataFrame:
@@ -137,10 +189,6 @@ def encode_bmp_gray(pixels) -> bytes:
     bytes, B=G=R=pixel). Pure ``struct`` — the public file format, no
     codec library. Used to build real encoded fixtures that
     :func:`decode_bmp_gray` must actually parse."""
-    import struct as _struct
-
-    import numpy as np
-
     px = np.asarray(pixels, dtype=np.uint8)
     h, w = px.shape
     stride = (w * 3 + 3) // 4 * 4
@@ -149,9 +197,9 @@ def encode_bmp_gray(pixels) -> bytes:
         bgr = np.repeat(row, 3).tobytes()  # B=G=R=gray
         body += bgr + b"\x00" * (stride - len(bgr))
     size = BMP_HEADER_BYTES + len(body)
-    header = _struct.pack(
+    header = struct.pack(
         "<2sIHHI", BMP_MAGIC, size, 0, 0, BMP_HEADER_BYTES
-    ) + _struct.pack(
+    ) + struct.pack(
         "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0
     )
     return bytes(header) + bytes(body)
@@ -166,8 +214,6 @@ def decode_bmp_gray(data: bytes):
     not a BMP; raises ``NotImplementedError`` for BMP variants beyond
     24-bit BI_RGB (palette/RLE/V4+ alpha) — the honest boundary of
     the dependency-free codec."""
-    import numpy as np
-
     if len(data) < BMP_HEADER_BYTES or data[:2] != BMP_MAGIC:
         return None
     off = int.from_bytes(data[10:14], "little")
@@ -202,8 +248,6 @@ def encode_pgm_gray(pixels) -> bytes:
     """Grayscale (h, w) uint8 grid -> a GENUINE binary PGM (netpbm
     'P5', maxval 255): ASCII header + raw raster, the public format,
     no codec library. Canonical single-newline header form."""
-    import numpy as np
-
     px = np.asarray(pixels, dtype=np.uint8)
     h, w = px.shape
     return f"P5\n{w} {h}\n255\n".encode("ascii") + px.tobytes()
@@ -217,8 +261,6 @@ def decode_pgm_gray(data: bytes):
     raster. Returns ``(width, height, gray)`` with ``gray`` row-major
     uint8 (h, w); None when the blob is not a PGM; raises
     ``NotImplementedError`` for maxval > 255 (16-bit rasters)."""
-    import numpy as np
-
     if len(data) < 2 or data[:2] != PGM_MAGIC:
         return None
     pos, tokens = 2, []
@@ -252,25 +294,31 @@ def decode_pgm_gray(data: bytes):
     return w, h, gray
 
 
+#: Magic prefix -> grayscale decoder returning ``(width, height, gray)``,
+#: or None for a prefixed blob that is not a valid file.
+_GRAY_DECODERS = (
+    (BMP_MAGIC, decode_bmp_gray),
+    (PGM_MAGIC, decode_pgm_gray),
+    (_PNG_MAGIC, _decode_png),
+    (_GIF_MAGICS, _decode_gif),
+    (_JPEG_MAGIC, _decode_jpeg),
+)
+
+
+def _gray_decoder(data: bytes):
+    """The decoder of :data:`_GRAY_DECODERS` whose magic prefixes
+    ``data``, or None."""
+    return next((dec for magic, dec in _GRAY_DECODERS if data.startswith(magic)), None)
+
+
 def decode_real_image(blob: bytes) -> dict:
     """Real-codec dispatch: uncompressed BMP, binary PGM, PNG
     (gray/truecolor, stdlib zlib inflate + all five filters), and
     baseline JPEG (full dependency-free T.81 sequential decoder:
     Huffman entropy decode, dequant, IDCT) decode natively; WebP/GIF
     remain stubs."""
-    from protarrow_spark.operators.gif import decode_gif_gray
-    from protarrow_spark.operators.jpeg import decode_jpeg_gray
-    from protarrow_spark.operators.png import decode_png_gray
-
-    decoded = decode_bmp_gray(blob)
-    if decoded is None:
-        decoded = decode_pgm_gray(blob)
-    if decoded is None:
-        decoded = decode_png_gray(blob)
-    if decoded is None:
-        decoded = decode_gif_gray(blob)
-    if decoded is None:
-        decoded = decode_jpeg_gray(blob)
+    decode = _gray_decoder(blob)
+    decoded = decode(blob) if decode else None
     if decoded is not None:
         w, h, gray = decoded
         return {"width": w, "height": h, "gray": gray}
@@ -287,9 +335,8 @@ def decode_image_features(
     blob_col: str,
     width: int = FAKE_IMAGE_WIDTH,
 ) -> DataFrame:
-    """Grayscale feature extraction over image blobs via an
-    Arrow-batched ``mapInPandas`` UDF. Four codecs dispatch by magic
-    bytes: GENUINE uncompressed 24-bit BMP ('BM', parsed by
+    """Grayscale feature extraction over image blobs. Four codecs
+    dispatch by magic bytes: GENUINE uncompressed 24-bit BMP ('BM', parsed by
     :func:`decode_bmp_gray` — real header/stride/bottom-up handling,
     integer luma), GENUINE binary PGM ('P5',
     :func:`decode_pgm_gray` — spec header with comments), GENUINE
@@ -306,77 +353,29 @@ def decode_image_features(
     Scale: partition-local, Arrow-batched, numpy-vectorized per blob;
     output is one row per input row (no explosion).
     """
-    import numpy as np
-    import pandas as pd
 
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(blob_col).alias("blob"))
+    def features(_doc_id, data: bytes):
+        if data.startswith(FAKE_IMAGE_MAGIC):
+            px = np.frombuffer(data, dtype=np.uint8, offset=len(FAKE_IMAGE_MAGIC))
+            w, h, n = width, -(-len(px) // width), len(px)
+        else:
+            decode = _gray_decoder(data)
+            # The decoders return None for magic-prefixed blobs that
+            # are not valid files (short header, non-numeric tokens,
+            # truncated raster), and a corrupt JPEG scan raises
+            # ValueError: both take the null path like any non-image,
+            # so one bad blob cannot abort the whole stage.
+            try:
+                decoded = decode(data) if decode else None
+            except ValueError:
+                return None
+            if decoded is None:
+                return None
+            w, h, px = decoded
+            n = w * h
+        return w, h, n, int(px.sum()) if px.size else 0, int(px.max()) if px.size else 0
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {
-                "doc_id": batch["doc_id"],
-                "width": [],
-                "height": [],
-                "n_pixels": [],
-                "pixel_sum": [],
-                "pixel_max": [],
-            }
-
-            def emit(w, h, n, px):
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(n)
-                out["pixel_sum"].append(int(px.sum()) if px.size else 0)
-                out["pixel_max"].append(int(px.max()) if px.size else 0)
-
-            for raw in batch["blob"]:
-                data = bytes(raw)
-                if data.startswith(FAKE_IMAGE_MAGIC):
-                    px = np.frombuffer(
-                        data, dtype=np.uint8, offset=len(FAKE_IMAGE_MAGIC)
-                    )
-                    emit(width, -(-len(px) // width), len(px), px)
-                elif (
-                    data.startswith(BMP_MAGIC)
-                    or data.startswith(PGM_MAGIC)
-                    or data.startswith(_JPEG_MAGIC)
-                    or data.startswith(_PNG_MAGIC)
-                    or data.startswith(_GIF_MAGICS)
-                ):
-                    # The decoders return None for magic-prefixed
-                    # blobs that are not actually valid files (short
-                    # header, non-numeric tokens, truncated raster) —
-                    # those take the null path like any non-image, so
-                    # one bad blob cannot abort the whole stage. A
-                    # corrupt JPEG scan raises ValueError — treat it
-                    # the same (null row, stage survives).
-                    try:
-                        if data.startswith(BMP_MAGIC):
-                            decoded = decode_bmp_gray(data)
-                        elif data.startswith(PGM_MAGIC):
-                            decoded = decode_pgm_gray(data)
-                        elif data.startswith(_PNG_MAGIC):
-                            decoded = _decode_png(data)
-                        elif data.startswith(_GIF_MAGICS):
-                            decoded = _decode_gif(data)
-                        else:
-                            decoded = _decode_jpeg(data)
-                    except ValueError:
-                        decoded = None
-                    if decoded is None:
-                        for k in (
-                            "width", "height", "n_pixels", "pixel_sum", "pixel_max",
-                        ):
-                            out[k].append(None)
-                    else:
-                        w, h, gray = decoded
-                        emit(w, h, w * h, gray)
-                else:
-                    for k in ("width", "height", "n_pixels", "pixel_sum", "pixel_max"):
-                        out[k].append(None)
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(extract, IMAGE_FEATURES_SCHEMA)
+    return map_blobs(df, id_col, blob_col, IMAGE_FEATURES_SCHEMA, features)
 
 
 YCBCR_FEATURES_SCHEMA = T.StructType(
@@ -404,28 +403,10 @@ def decode_image_features_ycbcr(
     the stage).
 
     Scale: identical shape to :func:`decode_image_features` —
-    Arrow-batched ``mapInPandas``, partition-local, one output row per
-    input row."""
-    import pandas as pd
-
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(blob_col).alias("blob"))
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            cols = ("width", "height", "n_pixels", "y_sum", "cb_sum", "cr_sum")
-            out = {"doc_id": batch["doc_id"], **{k: [] for k in cols}}
-            for raw in batch["blob"]:
-                data = bytes(raw) if raw is not None else b""
-                decoded = _try_decode_jpeg(data)
-                if decoded is None:
-                    for k in cols:
-                        out[k].append(None)
-                    continue
-                for k, v in zip(cols, _ycbcr_sums(decoded)):
-                    out[k].append(v)
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(extract, YCBCR_FEATURES_SCHEMA)
+    Arrow-batched, partition-local, one output row per input row."""
+    return map_blobs(
+        df, id_col, blob_col, YCBCR_FEATURES_SCHEMA, lambda _, data: _ycbcr_features(data)
+    )
 
 
 THUMBNAIL_SCHEMA = T.StructType(
@@ -440,8 +421,6 @@ def _try_decode_jpeg(data: bytes):
     """Total per-blob decode: (w, h, planes) for a decodable baseline
     JPEG, None for non-JPEG / corrupt bytes — the shared null-path rule
     of every JPEG feature/transform operator."""
-    from protarrow_spark.operators.jpeg import decode_jpeg
-
     if not data.startswith(_JPEG_MAGIC):
         return None
     try:
@@ -453,8 +432,6 @@ def _try_decode_jpeg(data: bytes):
 def _shrink_plane(plane, factor: int):
     """Box-filter downsample one plane by ``factor`` (mean over
     factor x factor cells, edge-replicated to a full grid)."""
-    import numpy as np
-
     h, w = plane.shape
     hh, ww = -(-h // factor) * factor, -(-w // factor) * factor
     pad = np.empty((hh, ww), dtype=np.float64)
@@ -465,21 +442,26 @@ def _shrink_plane(plane, factor: int):
     return np.clip(np.rint(m), 0, 255).astype(np.uint8)
 
 
-def _thumb_bytes(decoded, factor: int, quant, quant_chroma):
-    """Re-encode a decoded JPEG's downsampled planes (grayscale in ->
-    grayscale out; color in -> 4:4:4 color out)."""
-    from protarrow_spark.operators.jpeg import encode_jpeg_color, encode_jpeg_gray
-
-    _w, _h, planes = decoded
-    small = [_shrink_plane(p, factor) for p in planes]
+def _thumb_bytes(data: bytes, factor: int, quant, quant_chroma):
+    """Re-encode a JPEG blob's downsampled planes (grayscale in ->
+    grayscale out; color in -> 4:4:4 color out); None for a non-JPEG
+    or corrupt blob."""
+    decoded = _try_decode_jpeg(data)
+    if decoded is None:
+        return None
+    small = [_shrink_plane(p, factor) for p in decoded[2]]
     if len(small) == 1:
         return encode_jpeg_gray(small[0], quant=quant)
     return encode_jpeg_color(small[0], small[1], small[2], quant, quant_chroma)
 
 
-def _ycbcr_sums(decoded):
-    """(width, height, n_pixels, y_sum, cb_sum, cr_sum) of a decoded
-    JPEG; chroma sums null for grayscale."""
+def _ycbcr_features(data: bytes):
+    """(width, height, n_pixels, y_sum, cb_sum, cr_sum) of a JPEG blob,
+    chroma sums null for grayscale; None for a non-JPEG or corrupt
+    blob."""
+    decoded = _try_decode_jpeg(data)
+    if decoded is None:
+        return None
     w, h, planes = decoded
     return (
         w,
@@ -515,26 +497,15 @@ def thumbnail_jpeg(
     the downsample and — with unity quant — re-encodes and re-decodes
     EXACTLY (the mm_thumbnail_jpeg oracle relies on this).
 
-    Scale: Arrow-batched ``mapInPandas``, partition-local, one row per
-    blob; both codec passes are numpy-vectorized per image."""
-    import pandas as pd
-
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(blob_col).alias("blob"))
-
-    def transform(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            thumbs = []
-            for raw in batch["blob"]:
-                data = bytes(raw) if raw is not None else b""
-                decoded = _try_decode_jpeg(data)
-                thumbs.append(
-                    None
-                    if decoded is None
-                    else _thumb_bytes(decoded, factor, quant, quant_chroma)
-                )
-            yield pd.DataFrame({"doc_id": batch["doc_id"], "thumb": thumbs})
-
-    return src.mapInPandas(transform, THUMBNAIL_SCHEMA)
+    Scale: Arrow-batched, partition-local, one row per blob; both
+    codec passes are numpy-vectorized per image."""
+    return map_blobs(
+        df,
+        id_col,
+        blob_col,
+        THUMBNAIL_SCHEMA,
+        lambda _, data: (_thumb_bytes(data, factor, quant, quant_chroma),),
+    )
 
 
 RESIZE_SCHEMA = T.StructType(
@@ -557,39 +528,25 @@ def resize_image(
     """Nearest-neighbor column downsampling of fake-format images:
     keep every ``factor``-th pixel column (ragged trailing row
     dropped — documented truncation), emitting the resized payload as
-    a new binary column. Same Arrow-batched ``mapInPandas`` plumbing
-    as :func:`decode_image_features`; a real codec slots into the
-    same inner function.
+    a new binary column. Same Arrow-batched plumbing as
+    :func:`decode_image_features`; a real codec slots into the same
+    inner function.
 
     Non-image blobs pass through as nulls (total operator).
 
     Scale: partition-local narrow map, one strided numpy view per
     blob — no shuffle, output strictly smaller than input.
     """
-    import numpy as np
-    import pandas as pd
 
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(blob_col).alias("blob"))
+    def resize(_doc_id, data: bytes):
+        if not data.startswith(FAKE_IMAGE_MAGIC):
+            return None
+        px = np.frombuffer(data, dtype=np.uint8, offset=len(FAKE_IMAGE_MAGIC))
+        height = len(px) // width
+        grid = px[: height * width].reshape(height, width)[:, ::factor]
+        return -(-width // factor), height, grid.tobytes()
 
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = {"doc_id": batch["doc_id"], "new_width": [], "new_height": [], "resized": []}
-            for raw in batch["blob"]:
-                data = bytes(raw)
-                if not data.startswith(FAKE_IMAGE_MAGIC):
-                    out["new_width"].append(None)
-                    out["new_height"].append(None)
-                    out["resized"].append(None)
-                    continue
-                px = np.frombuffer(data, dtype=np.uint8, offset=len(FAKE_IMAGE_MAGIC))
-                height = len(px) // width
-                grid = px[: height * width].reshape(height, width)[:, ::factor]
-                out["new_width"].append(-(-width // factor))
-                out["new_height"].append(height)
-                out["resized"].append(grid.tobytes())
-            yield pd.DataFrame(out)
-
-    return src.mapInPandas(resize, RESIZE_SCHEMA)
+    return map_blobs(df, id_col, blob_col, RESIZE_SCHEMA, resize)
 
 
 FAKE_AUDIO_MAGIC = b"FAUD"
@@ -615,18 +572,14 @@ def encode_wav_pcm16(samples, sample_rate: int = 8000) -> bytes:
     mono, 16-bit little-endian; 'fmt ' + 'data' chunks). Pure
     ``struct`` — the public container format, used to build real
     encoded fixtures that :func:`decode_wav_pcm16` must parse."""
-    import struct as _struct
-
-    import numpy as np
-
     pcm = np.asarray(samples, dtype="<i2").tobytes()
-    fmt = _struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16)
+    fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16)
     chunks = (
         b"WAVE"
-        + b"fmt " + _struct.pack("<I", len(fmt)) + fmt
-        + b"data" + _struct.pack("<I", len(pcm)) + pcm
+        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + b"data" + struct.pack("<I", len(pcm)) + pcm
     )
-    return b"RIFF" + _struct.pack("<I", len(chunks)) + chunks
+    return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
 
 
 #: WAVE format tags (public RIFF registry): linear PCM, A-law, µ-law.
@@ -640,8 +593,6 @@ def _g711_ulaw_table():
     the byte, split sign/exponent/mantissa, magnitude =
     (((mant << 3) + 0x84) << exp) - 0x84 (the classic 16-bit-scaled
     form, max 32124)."""
-    import numpy as np
-
     out = np.empty(256, dtype=np.int16)
     for b in range(256):
         u = ~b & 0xFF
@@ -654,8 +605,6 @@ def _g711_alaw_table():
     """A-law codeword -> int16 linear, ITU-T G.711: XOR 0x55, segment
     0 is linear, higher segments shift; scaled <<3 to 16-bit range
     (max 32256)."""
-    import numpy as np
-
     out = np.empty(256, dtype=np.int16)
     for b in range(256):
         a = b ^ 0x55
@@ -676,18 +625,14 @@ def encode_wav_g711(codewords, law: int = WAV_FMT_ULAW, sample_rate: int = 8000)
     format tag 6 (A-law) or 7 (µ-law), mono 8-bit — the telephony
     container. The fixture path: the data chunk stores the codewords
     verbatim, so the decoder's expansion table is what gets tested."""
-    import struct as _struct
-
-    import numpy as np
-
     raw = np.asarray(codewords, dtype=np.uint8).tobytes()
-    fmt = _struct.pack("<HHIIHH", law, 1, sample_rate, sample_rate, 1, 8)
+    fmt = struct.pack("<HHIIHH", law, 1, sample_rate, sample_rate, 1, 8)
     chunks = (
         b"WAVE"
-        + b"fmt " + _struct.pack("<I", len(fmt)) + fmt
-        + b"data" + _struct.pack("<I", len(raw)) + raw
+        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+        + b"data" + struct.pack("<I", len(raw)) + raw
     )
-    return b"RIFF" + _struct.pack("<I", len(chunks)) + chunks
+    return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
 
 
 def decode_wav_pcm16(data: bytes):
@@ -700,8 +645,6 @@ def decode_wav_pcm16(data: bytes):
     RIFF/WAVE; raises ``NotImplementedError`` for other encodings
     (float, ADPCM, multi-channel) — the honest boundary of the
     dependency-free codec."""
-    import numpy as np
-
     if len(data) < 12 or data[:4] != WAV_MAGIC or data[8:12] != b"WAVE":
         return None
     pos = 12
@@ -762,8 +705,7 @@ def audio_window_features(
     blob_col: str,
     window: int = AUDIO_WINDOW,
 ) -> DataFrame:
-    """Windowed audio features over audio blobs via an Arrow-batched
-    ``mapInPandas`` UDF — the audio analogue of
+    """Windowed audio features over audio blobs — the audio analogue of
     :func:`decode_image_features`. Two codecs dispatch by magic
     bytes: GENUINE RIFF/WAVE mono PCM16 (parsed by
     :func:`decode_wav_pcm16` — real chunk walking), and the FAUD fake
@@ -781,48 +723,25 @@ def audio_window_features(
     Scale: partition-local narrow map; output fans out by
     ``ceil(samples/window)`` rows per blob — bounded and small.
     """
-    import numpy as np
-    import pandas as pd
 
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(blob_col).alias("blob"))
+    def windows(_doc_id, data: bytes):
+        if data.startswith(FAKE_AUDIO_MAGIC):
+            raw = np.frombuffer(data, dtype=np.uint8, offset=len(FAKE_AUDIO_MAGIC))
+            dev = raw.astype(np.int64) - 128
+        elif data.startswith(WAV_MAGIC):
+            samples = decode_wav_pcm16(data)
+            if samples is None:
+                return None
+            dev = samples.astype(np.int64)
+        else:
+            return None
+        segs = (dev[i : i + window] for i in range(0, len(dev), window))
+        return [
+            (w, len(s), int((s * s).sum()), int(((s[1:] >= 0) != (s[:-1] >= 0)).sum()))
+            for w, s in enumerate(segs)
+        ]
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            ids, wins, ns, es, zs = [], [], [], [], []
-            for doc_id, raw in zip(batch["doc_id"], batch["blob"]):
-                data = bytes(raw)
-                if data.startswith(FAKE_AUDIO_MAGIC):
-                    dev = (
-                        np.frombuffer(
-                            data, dtype=np.uint8, offset=len(FAKE_AUDIO_MAGIC)
-                        ).astype(np.int64)
-                        - 128
-                    )
-                elif data.startswith(WAV_MAGIC):
-                    samples = decode_wav_pcm16(data)
-                    if samples is None:
-                        continue
-                    dev = samples.astype(np.int64)
-                else:
-                    continue
-                for w in range(-(-len(dev) // window) if len(dev) else 0):
-                    seg = dev[w * window : (w + 1) * window]
-                    ids.append(doc_id)
-                    wins.append(w)
-                    ns.append(len(seg))
-                    es.append(int((seg * seg).sum()))
-                    zs.append(int(((seg[1:] >= 0) != (seg[:-1] >= 0)).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "win_idx": wins,
-                    "n_samples": ns,
-                    "energy_sum": es,
-                    "zero_crossings": zs,
-                }
-            )
-
-    return src.mapInPandas(extract, AUDIO_WINDOW_SCHEMA)
+    return map_blobs(df, id_col, blob_col, AUDIO_WINDOW_SCHEMA, windows, fan_out=True)
 
 
 #: Scene-cut threshold on the per-frame signature byte (0..255).
@@ -903,8 +822,8 @@ def image_phash(
     ``cells`` grid values at the (floor) mean, emit the bit string.
     Near-duplicate images — re-encodes, minor edits — land on the
     same or near-identical hash; identical hashes group without any
-    pairwise comparison. Same Arrow-batched ``mapInPandas`` plumbing
-    as the other stub-codec operators (a real decoder producing an
+    pairwise comparison. Same Arrow-batched plumbing as the other
+    stub-codec operators (a real decoder producing an
     8x8 luma grid slots into the inner function); the hash is a
     64-char '0'/'1' string, sidestepping signed-64-bit overflow and
     portable to any engine.
@@ -915,28 +834,18 @@ def image_phash(
     hash-groupBy on a uniformly distributed key — exactly the exact-
     dedup shape, never all-pairs.
     """
-    import numpy as np
-    import pandas as pd
 
-    src = df.select(F.col(id_col).alias("doc_id"), F.col(blob_col).alias("blob"))
+    def ahash(_doc_id, data: bytes):
+        if not data.startswith(FAKE_IMAGE_MAGIC):
+            return None
+        px = np.frombuffer(data, dtype=np.uint8, offset=len(FAKE_IMAGE_MAGIC))
+        v = np.zeros(cells, dtype=np.int64)
+        n = min(cells, len(px))
+        v[:n] = px[:n]
+        mean_floor = int(v.sum()) // cells
+        return ("".join("1" if x > mean_floor else "0" for x in v),)
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            hashes = []
-            for raw in batch["blob"]:
-                data = bytes(raw)
-                if not data.startswith(FAKE_IMAGE_MAGIC):
-                    hashes.append(None)
-                    continue
-                px = np.frombuffer(data, dtype=np.uint8, offset=len(FAKE_IMAGE_MAGIC))
-                v = np.zeros(cells, dtype=np.int64)
-                n = min(cells, len(px))
-                v[:n] = px[:n]
-                mean_floor = int(v.sum()) // cells
-                hashes.append("".join("1" if x > mean_floor else "0" for x in v))
-            yield pd.DataFrame({"doc_id": batch["doc_id"], "ahash": hashes})
-
-    return src.mapInPandas(extract, PHASH_SCHEMA)
+    return map_blobs(df, id_col, blob_col, PHASH_SCHEMA, ahash)
 
 
 def phash_duplicate_groups(

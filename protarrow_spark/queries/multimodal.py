@@ -3,15 +3,16 @@
 Blobs are synthesized deterministically from ``documents.text`` (even
 doc_ids get the FIMG fake-image header, odd stay raw bytes), so both
 engines construct byte-identical inputs and every operator — including
-the Pandas-UDF feature extractor — has a full value oracle.
+the Python feature extractors — has a full value oracle.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from protarrow_spark.operators import multimodal
+from protarrow_spark.operators import gif, jpeg, multimodal, png
 from protarrow_spark.queries.registry import query
 from protarrow_spark.sources.tables import table
 
@@ -24,8 +25,6 @@ def _fixture_version_token() -> bytes:
     into the _blob_cache key so encoder/builder edits invalidate
     cached parquet instead of silently reusing stale blobs."""
     import hashlib
-
-    from protarrow_spark.operators import gif, jpeg, png
 
     h = hashlib.md5()
     for mod in (multimodal, jpeg, png, gif):
@@ -169,9 +168,9 @@ FROM payloads
 """,
 )
 def mm_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pandas-UDF (stubbed-codec) grayscale feature extraction — the
+    """Python (stubbed-codec) grayscale feature extraction — the
     oracle recomputes every feature byte-exactly from the hex
-    rendering, so even the UDF path is value-gated."""
+    rendering, so even the Python path is value-gated."""
     return multimodal.decode_image_features(_blobs(spark, sf_dir), "doc_id", "blob")
 
 
@@ -188,32 +187,50 @@ def mm_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BMP_W = 16
 
 
+def _documents(spark: SparkSession, sf_dir: str, spread: bool = False) -> DataFrame:
+    """documents -> (doc_id, text). ``spread`` repartitions over every
+    core: documents is a single small parquet file (1-2 scan
+    partitions), and the CPU-bound pure-Python encoders need them all."""
+    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    return docs.repartition(spark.sparkContext.defaultParallelism) if spread else docs
+
+
+def _fixture(docs: DataFrame, encode, modulus: int = 2, residue: int = 0) -> DataFrame:
+    """(doc_id, text) -> (doc_id, blob): the utf-8 text of each row with
+    ``doc_id % modulus == residue`` becomes ``encode(data, doc_id)``;
+    the other rows stay raw text bytes (the operator's null or skip
+    path)."""
+
+    def row(doc_id: int, text: str):
+        data = text.encode("utf-8")
+        return (encode(data, doc_id) if doc_id % modulus == residue else data,)
+
+    return multimodal.map_blobs(docs, "doc_id", "text", multimodal.BLOB_SCHEMA, row)
+
+
+def _raster(data: bytes, width: int = _BMP_W):
+    """``data`` as a row-major (h, width) uint8 raster, zero-padded to
+    whole rows, at least one row."""
+    h = max(1, -(-len(data) // width))
+    px = np.zeros(h * width, dtype=np.uint8)
+    px[: len(data)] = np.frombuffer(data, np.uint8)
+    return px.reshape(h, width)
+
+
+def _blocks(grid, block: int):
+    """Each cell of ``grid`` as a constant ``block`` x ``block`` tile."""
+    return np.kron(grid, np.ones((block, block), dtype=np.uint8))
+
+
+def _bmp(data: bytes, _doc_id: int) -> bytes:
+    return multimodal.encode_bmp_gray(_raster(data))
+
+
 def _bmp_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> (doc_id, blob): even ids become GENUINE 24-bit
     BMPs (gray pixels = utf-8 bytes of text, 16 wide, zero-padded to
     whole rows, min height 1); odd ids stay raw text bytes."""
-    import numpy as np
-    import pandas as pd
-
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
-
-    def build(batches):
-        for b in batches:
-            blobs = []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                data = str(text).encode("utf-8")
-                if doc_id % 2 == 0:
-                    h = max(1, -(-len(data) // _BMP_W))
-                    px = np.zeros(h * _BMP_W, dtype=np.uint8)
-                    px[: len(data)] = np.frombuffer(data, np.uint8)
-                    blobs.append(
-                        multimodal.encode_bmp_gray(px.reshape(h, _BMP_W))
-                    )
-                else:
-                    blobs.append(data)
-            yield pd.DataFrame({"doc_id": b["doc_id"], "blob": blobs})
-
-    return docs.mapInPandas(build, "doc_id long, blob binary")
+    return _fixture(_documents(spark, sf_dir), _bmp)
 
 
 @query(
@@ -257,30 +274,14 @@ def _pgm_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     PGMs (pixels = utf-8 bytes of text, 16 wide, zero-padded, with a
     header comment line to exercise spec parsing); odd ids stay raw
     text bytes."""
-    import numpy as np
-    import pandas as pd
 
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    def pgm(data: bytes, _doc_id: int) -> bytes:
+        # splice a comment into the header: spec parsing, not just our
+        # own canonical form
+        canonical = multimodal.encode_pgm_gray(_raster(data))
+        return canonical.replace(b"P5\n", b"P5\n# fixture\n", 1)
 
-    def build(batches):
-        for b in batches:
-            blobs = []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                data = str(text).encode("utf-8")
-                if doc_id % 2 == 0:
-                    h = max(1, -(-len(data) // _BMP_W))
-                    px = np.zeros(h * _BMP_W, dtype=np.uint8)
-                    px[: len(data)] = np.frombuffer(data, np.uint8)
-                    pgm = multimodal.encode_pgm_gray(px.reshape(h, _BMP_W))
-                    # splice a comment into the header: spec parsing,
-                    # not just our own canonical form
-                    pgm = pgm.replace(b"P5\n", b"P5\n# fixture\n", 1)
-                    blobs.append(pgm)
-                else:
-                    blobs.append(data)
-            yield pd.DataFrame({"doc_id": b["doc_id"], "blob": blobs})
-
-    return docs.mapInPandas(build, "doc_id long, blob binary")
+    return _fixture(_documents(spark, sf_dir), pgm)
 
 
 @query(
@@ -333,40 +334,12 @@ def _jpeg_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     quant, IDCT of DC is constant — operators/jpeg.py module doc), so
     the oracle can pin every decoded pixel from the text. Odd ids stay
     raw text bytes (null path)."""
-    import numpy as np
-    import pandas as pd
 
-    from protarrow_spark.operators import jpeg
+    def encode(data: bytes, _doc_id: int) -> bytes:
+        px = _blocks(_raster(data, _JPG_BW), 8)
+        return jpeg.encode_jpeg_gray(px, quant=jpeg.QUANT_UNITY)
 
-    # documents is a single small parquet file; spread the CPU-bound
-    # entropy coding across all cores instead of 1-2 scan partitions.
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def build(batches):
-        for b in batches:
-            blobs = []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                data = str(text).encode("utf-8")
-                if doc_id % 2 == 0:
-                    bh = max(1, -(-len(data) // _JPG_BW))
-                    grid = np.zeros(bh * _JPG_BW, dtype=np.uint8)
-                    grid[: len(data)] = np.frombuffer(data, np.uint8)
-                    px = np.kron(
-                        grid.reshape(bh, _JPG_BW),
-                        np.ones((8, 8), dtype=np.uint8),
-                    )
-                    blobs.append(
-                        jpeg.encode_jpeg_gray(px, quant=jpeg.QUANT_UNITY)
-                    )
-                else:
-                    blobs.append(data)
-            yield pd.DataFrame({"doc_id": b["doc_id"], "blob": blobs})
-
-    return docs.mapInPandas(build, "doc_id long, blob binary")
+    return _fixture(_documents(spark, sf_dir, spread=True), encode)
 
 
 def _png_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -378,40 +351,14 @@ def _png_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     channels is the identity, so BOTH variants reproduce the text
     bytes exactly (PNG is lossless). Odd ids stay raw text (null
     path)."""
-    import numpy as np
-    import pandas as pd
 
-    from protarrow_spark.operators import png
+    def encode(data: bytes, doc_id: int) -> bytes:
+        px = _raster(data)
+        if doc_id % 4 == 0:
+            return png.encode_png(px)
+        return png.encode_png(np.repeat(px[..., None], 3, axis=2), color=True)
 
-    # spread the CPU-bound filter+deflate work across all cores (the
-    # documents table is a single small parquet file -> 1-2 scan
-    # partitions otherwise)
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def build(batches):
-        for b in batches:
-            blobs = []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                data = str(text).encode("utf-8")
-                if doc_id % 2 == 0:
-                    h = max(1, -(-len(data) // _BMP_W))
-                    px = np.zeros(h * _BMP_W, dtype=np.uint8)
-                    px[: len(data)] = np.frombuffer(data, np.uint8)
-                    px = px.reshape(h, _BMP_W)
-                    if doc_id % 4 == 0:
-                        blobs.append(png.encode_png(px))
-                    else:
-                        rgb = np.repeat(px[..., None], 3, axis=2)
-                        blobs.append(png.encode_png(rgb, color=True))
-                else:
-                    blobs.append(data)
-            yield pd.DataFrame({"doc_id": b["doc_id"], "blob": blobs})
-
-    return docs.mapInPandas(build, "doc_id long, blob binary")
+    return _fixture(_documents(spark, sf_dir, spread=True), encode)
 
 
 @query(
@@ -448,7 +395,7 @@ def mm_image_features_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins every pixel from the source text with no construction tricks.
     Odd ids exercise the null path.
 
-    Scale: same Arrow-batched ``mapInPandas`` shape as the other
+    Scale: same Arrow-batched shape as the other
     codecs — partition-local, no shuffle, one output row per blob;
     inflate + vectorized unfiltering are numpy/zlib-C throughout
     except the Average/Paeth rows."""
@@ -464,46 +411,20 @@ def _png_adam7_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     interlaced, ≡ 4 gray+alpha (type 4) sequential, ≡ 6 grayscale
     interlaced; all four reproduce the text bytes exactly (lossless +
     identity luma). Odd ids stay raw text (null path)."""
-    import numpy as np
-    import pandas as pd
 
-    from protarrow_spark.operators import png
+    def encode(data: bytes, doc_id: int) -> bytes:
+        px = _raster(data)
+        m = doc_id % 8
+        if m == 0:
+            return png.encode_png(px, color_type=3, interlace=True)
+        if m == 2:
+            rgb = np.repeat(px[..., None], 3, axis=2)
+            return png.encode_png(rgb, color_type=6, interlace=True)
+        if m == 4:
+            return png.encode_png(px, color_type=4)
+        return png.encode_png(px, interlace=True)
 
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def build(batches):
-        for b in batches:
-            blobs = []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                data = str(text).encode("utf-8")
-                if doc_id % 2 == 0:
-                    h = max(1, -(-len(data) // _BMP_W))
-                    px = np.zeros(h * _BMP_W, dtype=np.uint8)
-                    px[: len(data)] = np.frombuffer(data, np.uint8)
-                    px = px.reshape(h, _BMP_W)
-                    m = doc_id % 8
-                    if m == 0:
-                        blobs.append(
-                            png.encode_png(px, color_type=3, interlace=True)
-                        )
-                    elif m == 2:
-                        rgb = np.repeat(px[..., None], 3, axis=2)
-                        blobs.append(
-                            png.encode_png(rgb, color_type=6, interlace=True)
-                        )
-                    elif m == 4:
-                        blobs.append(png.encode_png(px, color_type=4))
-                    else:
-                        blobs.append(png.encode_png(px, interlace=True))
-                else:
-                    blobs.append(data)
-            yield pd.DataFrame({"doc_id": b["doc_id"], "blob": blobs})
-
-    return docs.mapInPandas(build, "doc_id long, blob binary")
+    return _fixture(_documents(spark, sf_dir, spread=True), encode)
 
 
 @query(
@@ -540,7 +461,7 @@ def mm_image_features_png_adam7(spark: SparkSession, sf_dir: str) -> DataFrame:
     extensions (pass scattering, PLTE, alpha channels), on top of
     their round-trip matrices in tests/test_png.py.
 
-    Scale: identical Arrow-batched ``mapInPandas`` topology to
+    Scale: identical Arrow-batched topology to
     mm_image_features_png — partition-local, no shuffle."""
     return multimodal.decode_image_features(
         _png_adam7_blobs(spark, sf_dir), "doc_id", "blob"
@@ -552,32 +473,10 @@ def _gif_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     files through the real LZW compressor (gray palette, index ==
     intensity, so decode is exactly the source bytes — GIF is
     lossless); odd ids stay raw text (null path)."""
-    import numpy as np
-    import pandas as pd
-
-    from protarrow_spark.operators import gif
-
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
+    return _fixture(
+        _documents(spark, sf_dir, spread=True),
+        lambda data, _doc_id: gif.encode_gif_gray(_raster(data)),
     )
-
-    def build(batches):
-        for b in batches:
-            blobs = []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                data = str(text).encode("utf-8")
-                if doc_id % 2 == 0:
-                    h = max(1, -(-len(data) // _BMP_W))
-                    px = np.zeros(h * _BMP_W, dtype=np.uint8)
-                    px[: len(data)] = np.frombuffer(data, np.uint8)
-                    blobs.append(gif.encode_gif_gray(px.reshape(h, _BMP_W)))
-                else:
-                    blobs.append(data)
-            yield pd.DataFrame({"doc_id": b["doc_id"], "blob": blobs})
-
-    return docs.mapInPandas(build, "doc_id long, blob binary")
 
 
 @query(
@@ -613,7 +512,7 @@ def mm_image_features_gif(spark: SparkSession, sf_dir: str) -> DataFrame:
     pixel from the source text; a broken LZW table or sub-block walk
     hash-fails. Odd ids exercise the null path.
 
-    Scale: same Arrow-batched ``mapInPandas`` shape as the other
+    Scale: same Arrow-batched shape as the other
     codecs; LZW here is pure Python — fine for metadata extraction,
     swap in a native decoder for GIF-heavy corpora (plumbing
     unchanged)."""
@@ -657,7 +556,7 @@ def mm_image_features_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the entropy decoder or IDCT hash-fails. Non-JPEG rows (odd ids)
     exercise the null path.
 
-    Scale: same Arrow-batched ``mapInPandas`` shape as the other
+    Scale: same Arrow-batched shape as the other
     codecs — partition-local, no shuffle, one output row per blob;
     the per-blob Huffman decode is pure Python (swap in a native
     decoder for JPEG-heavy corpora; the plumbing stays identical)."""
@@ -677,43 +576,17 @@ def _jpeg_progressive_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pure-Python progressive encode is fixture construction, not
     the operator under test, and inlining it dominated the measured
     wall (the r8 decade row's 5.9x slope was encode-bound)."""
-    import numpy as np
-    import pandas as pd
 
-    from protarrow_spark.operators import jpeg
+    def encode(data: bytes, _doc_id: int) -> bytes:
+        px = _blocks(_raster(data, _JPG_BW), 8)
+        return jpeg.encode_jpeg_progressive_gray(px, quant=jpeg.QUANT_UNITY)
 
-    def build() -> DataFrame:
-        docs = (
-            table(spark, sf_dir, "documents")
-            .select("doc_id", "text")
-            .repartition(spark.sparkContext.defaultParallelism)
-        )
-
-        def enc(batches):
-            for b in batches:
-                blobs = []
-                for doc_id, text in zip(b["doc_id"], b["text"]):
-                    data = str(text).encode("utf-8")
-                    if doc_id % 2 == 0:
-                        bh = max(1, -(-len(data) // _JPG_BW))
-                        grid = np.zeros(bh * _JPG_BW, dtype=np.uint8)
-                        grid[: len(data)] = np.frombuffer(data, np.uint8)
-                        px = np.kron(
-                            grid.reshape(bh, _JPG_BW),
-                            np.ones((8, 8), dtype=np.uint8),
-                        )
-                        blobs.append(
-                            jpeg.encode_jpeg_progressive_gray(
-                                px, quant=jpeg.QUANT_UNITY
-                            )
-                        )
-                    else:
-                        blobs.append(data)
-                yield pd.DataFrame({"doc_id": b["doc_id"], "blob": blobs})
-
-        return docs.mapInPandas(enc, "doc_id long, blob binary")
-
-    return _blob_cache(spark, sf_dir, "jpeg_progressive", build)
+    return _blob_cache(
+        spark,
+        sf_dir,
+        "jpeg_progressive",
+        lambda: _fixture(_documents(spark, sf_dir, spread=True), encode),
+    )
 
 
 @query(
@@ -751,7 +624,7 @@ def mm_image_features_jpeg_progressive(spark: SparkSession, sf_dir: str) -> Data
     the correction-bit protocol, or coefficient accumulation
     hash-fails. Odd ids exercise the null path.
 
-    Scale: identical Arrow-batched ``mapInPandas`` topology to the
+    Scale: identical Arrow-batched topology to the
     baseline-JPEG query — partition-local, no shuffle."""
     return multimodal.decode_image_features(
         _jpeg_progressive_blobs(spark, sf_dir), "doc_id", "blob"
@@ -762,26 +635,12 @@ def _wav_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> (doc_id, blob): ids ≡ 1 (mod 4) become GENUINE
     RIFF/WAVE mono PCM16 files (sample_i = (byte_i - 128) * 256);
     the rest stay raw text bytes (the operator must skip them)."""
-    import numpy as np
-    import pandas as pd
 
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    def encode(data: bytes, _doc_id: int) -> bytes:
+        samples = (np.frombuffer(data, np.uint8).astype(np.int64) - 128) * 256
+        return multimodal.encode_wav_pcm16(samples)
 
-    def build(batches):
-        for b in batches:
-            blobs = []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                data = str(text).encode("utf-8")
-                if doc_id % 4 == 1:
-                    samples = (
-                        np.frombuffer(data, np.uint8).astype(np.int64) - 128
-                    ) * 256
-                    blobs.append(multimodal.encode_wav_pcm16(samples))
-                else:
-                    blobs.append(data)
-            yield pd.DataFrame({"doc_id": b["doc_id"], "blob": blobs})
-
-    return docs.mapInPandas(build, "doc_id long, blob binary")
+    return _fixture(_documents(spark, sf_dir), encode, modulus=4, residue=1)
 
 
 @query(
@@ -830,33 +689,14 @@ def _ulaw_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk stores the utf-8 text bytes verbatim as codewords — the
     decoder's ITU-T expansion table is exactly what the oracle then
     recomputes; the rest stay raw text bytes (skip path)."""
-    import numpy as np
-    import pandas as pd
 
-    docs = table(spark, sf_dir, "documents").select("doc_id", "text")
+    def encode(data: bytes, _doc_id: int) -> bytes:
+        codewords = np.frombuffer(data, np.uint8)
+        return multimodal.encode_wav_g711(codewords, law=multimodal.WAV_FMT_ULAW)
 
-    def build(batches):
-        for b in batches:
-            blobs = []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                data = str(text).encode("utf-8")
-                if doc_id % 4 == 3:
-                    blobs.append(
-                        multimodal.encode_wav_g711(
-                            np.frombuffer(data, np.uint8),
-                            law=multimodal.WAV_FMT_ULAW,
-                        )
-                    )
-                else:
-                    blobs.append(data)
-            yield pd.DataFrame({"doc_id": b["doc_id"], "blob": blobs})
-
-    return docs.mapInPandas(build, "doc_id long, blob binary")
+    return _fixture(_documents(spark, sf_dir), encode, modulus=4, residue=3)
 
 
-#: µ-law expansion in SQL: u = inverted codeword; magnitude =
-#: ((mant*8 + 132) << exp) - 132; sign bit of u negates. Mirrors
-#: multimodal._g711_ulaw_table (Sun g711.c convention) bit-for-bit.
 def _ulaw_sql(byte_expr: str) -> str:
     u = f"(255 - ({byte_expr}))"
     mag = f"((({u} % 16) * 8 + 132) * (1 << (({u} // 16) % 8)) - 132)"
@@ -901,7 +741,7 @@ def mm_audio_windows_ulaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment shift) hash-fails. Non-WAV rows exercise the skip path.
 
     Scale: identical shape to mm_audio_windows_wav — Arrow-batched
-    ``mapInPandas`` decode, windowed integer aggregation, no extra
+    decode, windowed integer aggregation, no extra
     shuffle."""
     return multimodal.audio_window_features(
         _ulaw_blobs(spark, sf_dir), "doc_id", "blob"
@@ -929,7 +769,7 @@ FROM payloads
 """,
 )
 def mm_resize_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nearest-neighbor downsample (Pandas-UDF strided numpy view);
+    """Nearest-neighbor downsample (Python strided numpy view);
     the oracle reselects the identical pixel columns from the hex
     rendering, so the resized payload is value-gated byte-for-byte."""
     out = multimodal.resize_image(_blobs(spark, sf_dir), "doc_id", "blob", _RS_W, _RS_F)
@@ -993,7 +833,7 @@ GROUP BY doc_id, win_idx
 """,
 )
 def mm_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pandas-UDF (stubbed-codec) windowed audio features — integer-
+    """Python (stubbed-codec) windowed audio features — integer-
     exact energy and zero-crossing counts, recomputed byte-for-byte by
     the oracle from the hex rendering."""
     return multimodal.audio_window_features(_audio_blobs(spark, sf_dir), "doc_id", "blob")
@@ -1070,7 +910,7 @@ FROM hashed GROUP BY ahash
 """,
 )
 def mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Perceptual-hash (aHash) image dedup: stub-codec Pandas-UDF
+    """Perceptual-hash (aHash) image dedup: stub-codec Python
     hashing (threshold-at-mean bit string over the leading pixel
     grid), then one hash-groupBy — image near-dup collapse with the
     exact-dedup plan shape, never pairwise; the oracle recomputes
@@ -1238,53 +1078,29 @@ def mm_audio_fingerprint_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _jpeg_color(data: bytes, width: int, block: int) -> bytes:
+    """A GENUINE baseline YCbCr 4:4:4 JPEG (unity quantization) whose
+    planes hold one constant ``block`` x ``block`` cell per byte b of
+    ``data``, ``width`` cells per row: Y = b, Cb = 255 - b,
+    Cr = (2b) % 256 (zero-padded cells follow the same formulas)."""
+    grid = _raster(data, width)
+    planes = (grid, 255 - grid, (grid.astype(np.int64) * 2 % 256).astype(np.uint8))
+    y, cb, cr = (_blocks(p, block) for p in planes)
+    return jpeg.encode_jpeg_color(y, cb, cr, jpeg.QUANT_UNITY, jpeg.QUANT_UNITY)
+
+
 def _jpeg_color_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> (doc_id, blob): even ids become GENUINE baseline
-    YCbCr 4:4:4 JPEGs through the real color entropy encoder. Each
-    utf-8 byte b of the text fills one constant 8x8 block in each
-    plane — Y = b, Cb = 255 - b, Cr = (2b) % 256 (zero-padded cells
-    follow the same formulas) — so with unity quantization every
+    YCbCr 4:4:4 JPEGs through the real color entropy encoder, one
+    constant 8x8 block per utf-8 byte of the text in each plane
+    (:func:`_jpeg_color`) — so with unity quantization every
     decoded pixel of every plane is pinned by the source text (see the
     block-constant exactness argument in operators/jpeg.py). Odd ids
     stay raw text bytes (null path)."""
-    import numpy as np
-    import pandas as pd
-
-    from protarrow_spark.operators import jpeg
-
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
+    return _fixture(
+        _documents(spark, sf_dir, spread=True),
+        lambda data, _doc_id: _jpeg_color(data, _JPG_BW, 8),
     )
-
-    def build(batches):
-        for b in batches:
-            blobs = []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                data = str(text).encode("utf-8")
-                if doc_id % 2 == 0:
-                    bh = max(1, -(-len(data) // _JPG_BW))
-                    grid = np.zeros(bh * _JPG_BW, dtype=np.uint8)
-                    grid[: len(data)] = np.frombuffer(data, np.uint8)
-                    grid = grid.reshape(bh, _JPG_BW)
-                    ones = np.ones((8, 8), dtype=np.uint8)
-                    y = np.kron(grid, ones)
-                    cb = np.kron((255 - grid).astype(np.uint8), ones)
-                    cr = np.kron(
-                        ((grid.astype(np.int64) * 2) % 256).astype(np.uint8),
-                        ones,
-                    )
-                    blobs.append(
-                        jpeg.encode_jpeg_color(
-                            y, cb, cr, jpeg.QUANT_UNITY, jpeg.QUANT_UNITY
-                        )
-                    )
-                else:
-                    blobs.append(data)
-            yield pd.DataFrame({"doc_id": b["doc_id"], "blob": blobs})
-
-    return docs.mapInPandas(build, "doc_id long, blob binary")
 
 
 @query(
@@ -1328,7 +1144,7 @@ def mm_image_features_jpeg_color(spark: SparkSession, sf_dir: str) -> DataFrame:
     selection, MCU interleave order, per-component DC predictors,
     upsampling) hash-fails. Odd ids exercise the null path.
 
-    Scale: same Arrow-batched ``mapInPandas`` shape as the grayscale
+    Scale: same Arrow-batched shape as the grayscale
     JPEG query — partition-local, no shuffle, one row per blob."""
     return multimodal.decode_image_features_ycbcr(
         _jpeg_color_blobs(spark, sf_dir), "doc_id", "blob"
@@ -1350,51 +1166,6 @@ _THUMB_BW = 2
 #: thumbnails the first 64 bytes — plenty to pin both codec
 #: directions without quadrupling the bench's slowest row.
 _THUMB_MAXB = 64
-
-
-def _thumb_source_blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents -> (doc_id, blob): even ids become GENUINE color
-    4:4:4 JPEGs whose planes are constant per 16x16 block (Y = b,
-    Cb = 255 - b, Cr = (2b) % 256 per text byte); odd ids stay raw
-    text (null path)."""
-    import numpy as np
-    import pandas as pd
-
-    from protarrow_spark.operators import jpeg
-
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-
-    def build(batches):
-        for b in batches:
-            blobs = []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                data = str(text).encode("utf-8")[:_THUMB_MAXB]
-                if doc_id % 2 == 0:
-                    bh = max(1, -(-len(data) // _THUMB_BW))
-                    grid = np.zeros(bh * _THUMB_BW, dtype=np.uint8)
-                    grid[: len(data)] = np.frombuffer(data, np.uint8)
-                    grid = grid.reshape(bh, _THUMB_BW)
-                    ones = np.ones((16, 16), dtype=np.uint8)
-                    y = np.kron(grid, ones)
-                    cb = np.kron((255 - grid).astype(np.uint8), ones)
-                    cr = np.kron(
-                        ((grid.astype(np.int64) * 2) % 256).astype(np.uint8),
-                        ones,
-                    )
-                    blobs.append(
-                        jpeg.encode_jpeg_color(
-                            y, cb, cr, jpeg.QUANT_UNITY, jpeg.QUANT_UNITY
-                        )
-                    )
-                else:
-                    blobs.append(data)
-            yield pd.DataFrame({"doc_id": b["doc_id"], "blob": blobs})
-
-    return docs.mapInPandas(build, "doc_id long, blob binary")
 
 
 @query(
@@ -1441,70 +1212,28 @@ def mm_thumbnail_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     text — any defect in either codec direction or the pooling
     hash-fails. Odd ids exercise the null path end-to-end.
 
-    Scale: ONE Arrow-batched ``mapInPandas`` stage, partition-local,
-    no shuffle beyond the parallelizing repartition, one row per blob.
+    Scale: ONE Arrow-batched Python stage, partition-local, no
+    shuffle beyond the parallelizing repartition, one row per blob.
     The fixture build, both codec directions, and the feature readout
-    compose per blob inside a single batch function (r13 opt, guide
-    §4.1: the former three chained mapInPandas stages serialized every
+    compose per blob inside a single row function (r13 opt, guide
+    §4.1: the former three chained Python stages serialized every
     source blob and every thumbnail across the JVM/Python boundary
     twice each for transforms that are 1:1 and partition-local; the
-    fused stage reuses the operators' own per-blob helpers —
-    ``_try_decode_jpeg`` / ``_thumb_bytes`` / ``_ycbcr_sums`` — so the
-    per-blob composition, and hence every output value, is
+    fused stage reuses the fixture's and the operators' own per-blob
+    helpers — ``_jpeg_color`` / ``_thumb_bytes`` / ``_ycbcr_features``
+    — so the per-blob composition, and hence every output value, is
     unchanged)."""
-    import numpy as np
-    import pandas as pd
 
-    from protarrow_spark.operators import jpeg
-    from protarrow_spark.operators.multimodal import (
-        YCBCR_FEATURES_SCHEMA,
-        _thumb_bytes,
-        _try_decode_jpeg,
-        _ycbcr_sums,
+    def thumb_features(doc_id: int, text: str):
+        data = text.encode("utf-8")[:_THUMB_MAXB]
+        blob = _jpeg_color(data, _THUMB_BW, 16) if doc_id % 2 == 0 else data
+        thumb = multimodal._thumb_bytes(blob, 2, jpeg.QUANT_UNITY, jpeg.QUANT_UNITY)
+        return None if thumb is None else multimodal._ycbcr_features(thumb)
+
+    return multimodal.map_blobs(
+        _documents(spark, sf_dir, spread=True),
+        "doc_id",
+        "text",
+        multimodal.YCBCR_FEATURES_SCHEMA,
+        thumb_features,
     )
-
-    docs = (
-        table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    cols = ("width", "height", "n_pixels", "y_sum", "cb_sum", "cr_sum")
-
-    def fused(batches):
-        for b in batches:
-            out = {"doc_id": b["doc_id"], **{k: [] for k in cols}}
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                data = str(text).encode("utf-8")[:_THUMB_MAXB]
-                if doc_id % 2 == 0:
-                    bh = max(1, -(-len(data) // _THUMB_BW))
-                    grid = np.zeros(bh * _THUMB_BW, dtype=np.uint8)
-                    grid[: len(data)] = np.frombuffer(data, np.uint8)
-                    grid = grid.reshape(bh, _THUMB_BW)
-                    ones = np.ones((16, 16), dtype=np.uint8)
-                    y = np.kron(grid, ones)
-                    cb = np.kron((255 - grid).astype(np.uint8), ones)
-                    cr = np.kron(
-                        ((grid.astype(np.int64) * 2) % 256).astype(np.uint8),
-                        ones,
-                    )
-                    blob = jpeg.encode_jpeg_color(
-                        y, cb, cr, jpeg.QUANT_UNITY, jpeg.QUANT_UNITY
-                    )
-                else:
-                    blob = data
-                decoded = _try_decode_jpeg(bytes(blob))
-                thumb = (
-                    None
-                    if decoded is None
-                    else _thumb_bytes(decoded, 2, jpeg.QUANT_UNITY, jpeg.QUANT_UNITY)
-                )
-                d2 = _try_decode_jpeg(bytes(thumb)) if thumb is not None else None
-                if d2 is None:
-                    for k in cols:
-                        out[k].append(None)
-                else:
-                    for k, v in zip(cols, _ycbcr_sums(d2)):
-                        out[k].append(v)
-            yield pd.DataFrame(out)
-
-    return docs.mapInPandas(fused, YCBCR_FEATURES_SCHEMA)

@@ -896,7 +896,7 @@ GROUP BY 1
 def stream_multimodal_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming multimodal ingest: a file-source document stream is
     blob-ified (even ids -> GENUINE 24-bit BMPs via the real encoder),
-    decoded through the same Arrow-batched ``mapInPandas`` feature
+    decoded through the same Arrow-batched feature
     extractor the batch queries use — stateless Python transforms
     compose with Structured Streaming unchanged — and rolled up into
     per-bucket image counts and exact pixel sums (complete-mode
@@ -906,31 +906,14 @@ def stream_multimodal_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the source text.
 
     Scale: the decode stage holds NO streaming state (stateless
-    mapInPandas); only the 2-row rollup is stateful. Swap the file
+    Python map); only the 2-row rollup is stateful. Swap the file
     source for Kafka and the BMP fixture for real blob fetch — the
     plan shape is identical."""
-    import numpy as np
-    import pandas as pd
-
     from protarrow_spark.operators import multimodal
+    from protarrow_spark.queries.multimodal import _bmp, _fixture
 
     docs = _stream_documents(spark, sf_dir).select("doc_id", "text")
-
-    def build(batches):
-        for b in batches:
-            blobs = []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                data = str(text).encode("utf-8")
-                if doc_id % 2 == 0:
-                    h = max(1, -(-len(data) // 16))
-                    px = np.zeros(h * 16, dtype=np.uint8)
-                    px[: len(data)] = np.frombuffer(data, np.uint8)
-                    blobs.append(multimodal.encode_bmp_gray(px.reshape(h, 16)))
-                else:
-                    blobs.append(data)
-            yield pd.DataFrame({"doc_id": b["doc_id"], "blob": blobs})
-
-    blobs = docs.mapInPandas(build, "doc_id long, blob binary")
+    blobs = _fixture(docs, _bmp)
     feats = multimodal.decode_image_features(blobs, "doc_id", "blob")
     agg = feats.groupBy((F.col("doc_id") % 2).alias("bucket")).agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),

@@ -63,6 +63,29 @@ def test_image_features_values_and_nulls(spark) -> None:
     assert out[2]["width"] is None and out[2]["pixel_sum"] is None
 
 
+@pytest.mark.parametrize(
+    "op",
+    [
+        "decode_image_features",
+        "decode_image_features_ycbcr",
+        "thumbnail_jpeg",
+        "resize_image",
+        "image_phash",
+        "audio_window_features",
+    ],
+)
+def test_null_blob_takes_the_null_path(spark, op) -> None:
+    """A null blob is a non-image: the 1:1 operators emit the all-null
+    row and keep its doc_id, the windowing operator emits no rows."""
+    df = _blob_df(spark, [(1, None), (2, b"xx")])
+    rows = getattr(multimodal, op)(df, "doc_id", "blob").collect()
+    if op == "audio_window_features":
+        assert rows == []
+        return
+    assert sorted(r["doc_id"] for r in rows) == [1, 2]
+    assert all(v is None for r in rows for k, v in r.asDict().items() if k != "doc_id")
+
+
 def test_real_codec_is_explicit_stub() -> None:
     # PNG/GIF/JPEG are real decoders now; WebP remains the documented
     # boundary of the dependency-free dispatch.
@@ -214,7 +237,7 @@ def test_pgm_encode_decode_inverse_and_unsupported() -> None:
 def test_magic_prefixed_garbage_takes_null_path() -> None:
     """Blobs that merely START with a codec magic must decode to None
     (the operator's null path), never raise — one bad blob must not
-    abort a whole mapInPandas stage."""
+    abort a whole Python stage."""
     # 'P5'-prefixed text, non-numeric header token
     assert multimodal.decode_pgm_gray(b"P5 is a codename, not a file") is None
     # truncated raster (header promises 16 pixels, 2 present)

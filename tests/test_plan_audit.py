@@ -62,3 +62,47 @@ def test_audit_one_counts_arrow_python_stages() -> None:
         ]
     )
     assert plan_audit.audit_one(plan)["python_eval"] == 4
+
+
+#: Python stages (``audit_one``'s ``python_eval``) in the executed plan
+#: of every ``mm_*`` batch query at sf0.001, measured while the media
+#: stages still ran ``mapInPandas``: the Arrow boundary replaces each
+#: stage one for one. AQE's plan string lists the final and the initial
+#: plan, so most stages count twice.
+MM_PYTHON_STAGES = {
+    "mm_audio_fingerprint_match": 5,
+    "mm_audio_windows": 1,
+    "mm_audio_windows_ulaw": 2,
+    "mm_audio_windows_wav": 2,
+    "mm_blob_metadata": 0,
+    "mm_frame_dedup": 0,
+    "mm_frame_sample": 0,
+    "mm_image_features": 1,
+    "mm_image_features_bmp": 2,
+    "mm_image_features_gif": 4,
+    "mm_image_features_jpeg": 4,
+    "mm_image_features_jpeg_color": 4,
+    "mm_image_features_jpeg_progressive": 1,
+    "mm_image_features_pgm": 2,
+    "mm_image_features_png": 4,
+    "mm_image_features_png_adam7": 4,
+    "mm_phash_dedup": 2,
+    "mm_resize_nearest": 1,
+    "mm_scene_cuts": 0,
+    "mm_thumbnail_jpeg": 2,
+}
+
+
+def test_media_queries_plan_no_pandas_stage(spark, sf_dir) -> None:
+    from protarrow_spark.queries import all_queries
+
+    stages = {}
+    for name, fn in sorted(all_queries().items()):
+        if not name.startswith("mm_"):
+            continue
+        df = fn(spark, sf_dir)
+        df.collect()  # finalize AQE in place, as plan_audit.main does
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" not in plan, name
+        stages[name] = plan_audit.audit_one(plan)["python_eval"]
+    assert stages == MM_PYTHON_STAGES

@@ -108,6 +108,45 @@ def test_full_matrix_spark_shaped_cells_encode_identically(shape, cfg):
 
 @pytest.mark.parametrize("cfg", CONFIGS, ids=["default", "str-long", "nanos-maplist"])
 @pytest.mark.parametrize("shape", ["EXAMPLE", "NESTED_EXAMPLE"])
+def test_full_matrix_spark_shaped_cells_row_encode_identically(shape, cfg):
+    """The row-path twin of the test above: the row encoder is the
+    fallback for a batch the kernel refuses, so it must read the same
+    worker cells (``datetime64``/``timedelta64`` items of repeated
+    Timestamp and Duration ndarrays included) to the batch bytes."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from protarrow_spark.conversion.distributed import _pandas_columns
+    from protarrow_spark.schema import message_type_to_schema
+    from tests.random_messages import random_messages
+
+    mtype = getattr(fixtures, shape)
+    rows = messages_to_rows(random_messages(mtype, 40, seed=7), mtype, cfg)
+    arrow_schema = to_arrow_schema(message_type_to_schema(mtype, cfg))
+    batch = pa.RecordBatch.from_struct_array(
+        pa.array(rows, type=pa.struct(list(arrow_schema)))
+    )
+    cols = _pandas_columns(batch, [f.name for f in mtype.fields])
+    fast = compile_batch_to_wire(mtype, cfg)(cols)
+    re_ = compile_row_to_wire(mtype, cfg)
+    slow = [re_(r) for r in zip(*cols)]
+    bad = [i for i, (a, b) in enumerate(zip(fast, slow)) if a != b]
+    assert not bad, f"{len(bad)} byte mismatches, first row {bad[0]}"
+
+
+def test_row_codec_reads_numpy_temporal_items_in_microseconds():
+    from protarrow_spark.conversion.decode import _duration_decoder, _timestamp_us
+
+    us = np.datetime64("2020-01-01T00:00:00.000001", "us")
+    assert _timestamp_us(us) == 1_577_836_800_000_001
+    assert _timestamp_us(us.astype("datetime64[ns]")) == 1_577_836_800_000_001
+    duration = _duration_decoder(ProtarrowSparkConfig())
+    for v in (np.timedelta64(3_000_001, "us"), np.timedelta64(3_000_001_000, "ns")):
+        assert duration(v)._values == {"seconds": 3, "nanos": 1_000}
+
+
+@pytest.mark.parametrize("cfg", CONFIGS, ids=["default", "str-long", "nanos-maplist"])
+@pytest.mark.parametrize("shape", ["EXAMPLE", "NESTED_EXAMPLE"])
 def test_full_matrix_decodes_identically(shape, cfg):
     from tests.random_messages import random_messages
 
