@@ -33,7 +33,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from protarrow_spark.functions.text import text_ngrams, tokens
-from protarrow_spark.sources.tables import spread
+from protarrow_spark.sources.tables import materialize, spread
 
 #: Shared constants — the DuckDB oracle SQL is generated from the same
 #: values (queries/dedup.py), so Spark and oracle always agree.
@@ -190,7 +190,7 @@ def _shingle_pairs(
         # stream (vocab probe, doc count, the matmul job); materialize
         # it once so the scan+explode+distinct pipeline isn't re-run
         # per action (r13 opt: 3 full shingle pipelines -> 1).
-        grams = grams.localCheckpoint(eager=True)
+        grams = materialize(grams)
     vocab = grams.groupBy("g").agg(F.count(F.lit(1)).alias("df_g"))
     if dense_vocab_cap:
         # Probe by collecting up to cap+1 vocab rows: if the vocab fits,
@@ -524,12 +524,11 @@ def minhash_lsh_pairs(
     """
     rows_per_band = k // bands
     # The signature frame feeds banding AND both sides of the agreement
-    # join — eagerly localCheckpoint it so the shingle->minhash pipeline
-    # runs once, not three times, and the blocks are released when the
-    # DataFrame is garbage-collected (a bare persist() leaks cached
-    # blocks for the session lifetime; at real scale you'd materialize
-    # signatures to a table).
-    sig = minhash_signatures(df, id_col, text_col, k, n).localCheckpoint(eager=True)
+    # join — materialize it eagerly so the shingle->minhash pipeline
+    # runs once, not three times (a bare persist() leaks cached blocks
+    # for the session lifetime; at real scale you'd write signatures
+    # to a table).
+    sig = materialize(minhash_signatures(df, id_col, text_col, k, n))
     banded = sig.select(
         F.col(id_col),
         F.posexplode(F.array(*[band_key(b, rows_per_band) for b in range(bands)])).alias(
@@ -699,10 +698,9 @@ def simhash_hamming_pairs(
     width = bits // chunks
     sigs = simhash(df, id_col, text_col, bits)
     # Feeds banding + both expansion joins: materialize once.
-    groups = (
+    groups = materialize(
         sigs.groupBy("simhash")
         .agg(F.collect_list(F.col(id_col)).alias("members"))
-        .localCheckpoint(eager=True)
     )
 
     # Hamming-0: docs sharing one signature; positional i < j gives each

@@ -12,14 +12,16 @@ small-star MapReduce scheme). Every step is a plain equi-join +
 groupBy min — shuffles on uniformly-hashed node ids, no broadcast of
 anything graph-sized, so the plan survives graphs with billions of
 edges as long as each round's join does. Rounds are driver-iterated
-(this IS an iterative algorithm); each round localCheckpoints the
-label frame to cut lineage growth.
+(this IS an iterative algorithm); each round materializes the label
+frame to cut lineage growth.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from protarrow_spark.sources.tables import materialize
 
 
 def connected_components(
@@ -36,17 +38,16 @@ def connected_components(
     Converges when a full round changes no label; pointer jumping
     (path compression) keeps rounds O(log n) even on long chains.
     """
-    und = (
+    und = materialize(
         edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
         .union(edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
+    # No barrier here: round 1 materializes ``jumped`` anyway.
     labels = (
         und.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(max_iter):
         # 1) neighbor minimum: l(x) <- min(l(x), min over neighbors l(y))
@@ -70,14 +71,13 @@ def connected_components(
         # 2) pointer jumping: l(x) <- l(l(x))
         parent = prop.select(F.col("node").alias("label"), F.col("label").alias("label2"))
         new_label = F.coalesce("label2", "label")
-        jumped = (
+        jumped = materialize(
             prop.join(parent, "label", "left")
             .select(
                 "node",
                 new_label.alias("label"),
                 (new_label != F.col("old")).alias("chg"),
             )
-            .localCheckpoint(eager=True)
         )
         changed = jumped.filter("chg").limit(1).count()
         labels = jumped.select("node", "label")
@@ -141,14 +141,13 @@ def triangle_counts(
     # without the barrier each reference re-plans the upstream edge
     # generation — the plan audit showed 252 exchanges for the
     # co-purchase query before these two checkpoints, 10 after.
-    e = (
+    e = materialize(
         edges.select(
             F.least(F.col(src_col), F.col(dst_col)).alias("u"),
             F.greatest(F.col(src_col), F.col(dst_col)).alias("v"),
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     deg = (
         e.select(F.col("u").alias("node"))
@@ -163,11 +162,13 @@ def triangle_counts(
     u_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    o = with_deg.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("a"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
-        F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("db"),
-    ).localCheckpoint(eager=True)
+    o = materialize(
+        with_deg.select(
+            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("a"),
+            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("b"),
+            F.when(u_first, F.col("dv")).otherwise(F.col("du")).alias("db"),
+        )
+    )
     ab, ac = o.alias("ab"), o.alias("ac")
     wedge = ab.join(
         ac,
@@ -265,9 +266,9 @@ def pagerank(
     rank table (both hash-partitioned on node id — co-partitioned
     across iterations, so AQE reuses the exchange) plus one groupBy
     with map-side partial sums. Nothing graph-sized is broadcast or
-    collected; rounds are unrolled into ONE Catalyst plan for small
-    fixed iteration counts (driver-iterate + localCheckpoint past
-    ~10 rounds to cut lineage, as connected_components does).
+    collected; the rounds are unrolled lazily into ONE Catalyst plan
+    with no barrier per round (the two barriers below materialize the
+    round-invariant edge and node frames only).
 
     Output: node, rank (bigint, fixed-point 1e-12).
     """
@@ -283,17 +284,15 @@ def pagerank(
     # happens inside this job, and `nodes` derives from the result).
     from pyspark.sql import Window as _W
 
-    ed = (
+    ed = materialize(
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
         .distinct()
         .withColumn("out_deg", F.count(F.lit(1)).over(_W.partitionBy("src")))
-        .localCheckpoint(eager=True)
     )
-    nodes = (
+    nodes = materialize(
         ed.select(F.col("src").alias("node"))
         .union(ed.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     base_num = PAGERANK_DAMP_DEN - PAGERANK_DAMP_NUM  # (1 - d) * DEN = 15
     ranks = nodes.select("node", F.lit(PAGERANK_SCALE).cast("long").alias("rank"))
@@ -369,6 +368,36 @@ CN_MAX_DEGREE = 1024
 CN_TOP_K = 50
 
 
+def _wedges(
+    edges: DataFrame, src: str, dst: str, max_degree: int
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Shared front of the link-prediction operators: returns the
+    materialized edge list, each node's true degree (w, d), and the
+    shared-neighbor count (node_a, node_b, cn) of every node pair
+    with a common neighbor of degree <= ``max_degree``.
+
+    The edge barrier pays for itself: the degree filter, both
+    wedge-join sides and the callers' edge/degree consumers otherwise
+    each replay the upstream edge builder (82 Exchange refs in the
+    co-purchase common-neighbors plan without it).
+    """
+    edges = materialize(edges)
+    und = edges.select(F.col(src).alias("w"), F.col(dst).alias("n")).unionByName(
+        edges.select(F.col(dst).alias("w"), F.col(src).alias("n"))
+    )
+    deg = und.groupBy("w").agg(F.count(F.lit(1)).alias("d"))
+    centers = deg.filter(F.col("d") <= max_degree).select("w")
+    u = und.join(centers, "w")
+    wed = (
+        u.alias("a")
+        .join(u.alias("b"), "w")
+        .filter(F.col("a.n") < F.col("b.n"))
+        .groupBy(F.col("a.n").alias("node_a"), F.col("b.n").alias("node_b"))
+        .agg(F.count(F.lit(1)).alias("cn"))
+    )
+    return edges, deg, wed
+
+
 def common_neighbor_candidates(
     edges: DataFrame,
     src: str = "src",
@@ -393,25 +422,7 @@ def common_neighbor_candidates(
 
     Output: (node_a, node_b, cn) — top-k predicted links.
     """
-    # Materialize the edge list ONCE (the pagerank/triangle barrier,
-    # r13 opt): the degree filter, both wedge-join sides, and the
-    # downstream edge/degree consumers otherwise each replay the
-    # upstream edge builder — the co-purchase common-neighbors plan
-    # carried 82 Exchange refs before this barrier.
-    edges = edges.localCheckpoint(eager=True)
-    und = edges.select(F.col(src).alias("w"), F.col(dst).alias("n")).unionByName(
-        edges.select(F.col(dst).alias("w"), F.col(src).alias("n"))
-    )
-    deg = und.groupBy("w").agg(F.count(F.lit(1)).alias("d"))
-    centers = deg.filter(F.col("d") <= max_degree).select("w")
-    u = und.join(centers, "w")
-    wed = (
-        u.alias("a")
-        .join(u.alias("b"), "w")
-        .filter(F.col("a.n") < F.col("b.n"))
-        .groupBy(F.col("a.n").alias("node_a"), F.col("b.n").alias("node_b"))
-        .agg(F.count(F.lit(1)).alias("cn"))
-    )
+    edges, _, wed = _wedges(edges, src, dst, max_degree)
     existing = edges.select(
         F.col(src).alias("node_a"), F.col(dst).alias("node_b")
     )
@@ -456,14 +467,15 @@ def bfs_hops(
     und = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).unionByName(
         edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
     )
-    und = und.distinct().localCheckpoint(eager=True)
+    und = materialize(und.distinct())
     seeds = (
         und.select(F.col("u").alias("node"))
         .distinct()
         .orderBy("node")
         .limit(n_seeds)
     )
-    dist = seeds.withColumn("hop", F.lit(0)).localCheckpoint(eager=True)
+    # No barrier on hop 0: the first level's union materializes it.
+    dist = seeds.withColumn("hop", F.lit(0))
     frontier = dist.select("node")
     for i in range(1, max_hops + 1):
         nxt = (
@@ -474,7 +486,7 @@ def bfs_hops(
             .join(dist, "node", "left_anti")
             .withColumn("hop", F.lit(i))
         )
-        dist = dist.unionByName(nxt).localCheckpoint(eager=True)
+        dist = materialize(dist.unionByName(nxt))
         frontier = dist.filter(F.col("hop") == i).select("node")
     return dist.select("node", F.col("hop").cast("long").alias("hop"))
 
@@ -525,25 +537,7 @@ def neighborhood_jaccard(
 
     Output: (node_a, node_b, cn, union_deg, jaccard).
     """
-    # Materialize the edge list ONCE (the pagerank/triangle barrier,
-    # r13 opt): the degree filter, both wedge-join sides, and the
-    # downstream edge/degree consumers otherwise each replay the
-    # upstream edge builder — the co-purchase common-neighbors plan
-    # carried 82 Exchange refs before this barrier.
-    edges = edges.localCheckpoint(eager=True)
-    und = edges.select(F.col(src).alias("w"), F.col(dst).alias("n")).unionByName(
-        edges.select(F.col(dst).alias("w"), F.col(src).alias("n"))
-    )
-    deg = und.groupBy("w").agg(F.count(F.lit(1)).alias("d"))
-    centers = deg.filter(F.col("d") <= max_degree).select("w")
-    u = und.join(centers, "w")
-    wed = (
-        u.alias("a")
-        .join(u.alias("b"), "w")
-        .filter(F.col("a.n") < F.col("b.n"))
-        .groupBy(F.col("a.n").alias("node_a"), F.col("b.n").alias("node_b"))
-        .agg(F.count(F.lit(1)).alias("cn"))
-    )
+    _, deg, wed = _wedges(edges, src, dst, max_degree)
     node_deg = deg.select(F.col("w").alias("node"), F.col("d"))
     scored = (
         wed.join(
@@ -629,12 +623,12 @@ def kcore_peel(
     does). Deeper cores need more rounds: the flag says when you have
     peeled enough.
     """
-    sym = (
+    # Cut the edge-builder lineage once.
+    sym = materialize(
         edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("d"))
         .union(
             edges.select(F.col(dst_col).alias("s"), F.col(src_col).alias("d"))
         )
-        .localCheckpoint(eager=True)  # cut the edge-builder lineage once
     )
     # Peel by SUBTRACTION (r13 opt): each round checkpoints the
     # SURVIVING edge set and drops edges touching only this round's
@@ -674,10 +668,9 @@ def kcore_peel(
         if tallies[-1][0] == 0:
             break  # fixed point: anti-join would rebuild e unchanged
         removed = deg.filter(F.col("deg") < k).select(F.col("s").alias("node"))
-        e = (
+        e = materialize(
             e.join(removed.select(F.col("node").alias("s")), "s", "left_anti")
             .join(removed.select(F.col("node").alias("d")), "d", "left_anti")
-            .localCheckpoint(eager=True)  # this round's peeled graph
         )
     n_last = tallies[-1][1]
     if len(tallies) < rounds:

@@ -362,12 +362,14 @@ def decode_image_features(
             decode = _gray_decoder(data)
             # The decoders return None for magic-prefixed blobs that
             # are not valid files (short header, non-numeric tokens,
-            # truncated raster), and a corrupt JPEG scan raises
-            # ValueError: both take the null path like any non-image,
-            # so one bad blob cannot abort the whole stage.
+            # truncated raster), a corrupt JPEG scan raises ValueError,
+            # and an unsupported BMP/PGM variant (or text that merely
+            # starts with 'BM'/'P5') raises NotImplementedError: all
+            # take the null path like any non-image, so one bad blob
+            # cannot abort the whole stage.
             try:
                 decoded = decode(data) if decode else None
-            except ValueError:
+            except (ValueError, NotImplementedError):
                 return None
             if decoded is None:
                 return None

@@ -38,6 +38,7 @@ from protarrow_spark.functions.vector import (
     vector_column,
     vectors,
 )
+from protarrow_spark.sources.tables import materialize
 
 SIGN_BUCKET_COMPONENTS = 3
 
@@ -1027,7 +1028,7 @@ def kmeans_int8_exact(
     # (array lambdas get no codegen): _np_quantize_int8 is the
     # documented bit-identical op sequence, so the checkpointed (id, q)
     # table — and hence every assignment and centroid — is unchanged.
-    qz = _quantized(corpus, id_col, vec_col).localCheckpoint(eager=True)
+    qz = materialize(_quantized(corpus, id_col, vec_col))
 
     # One driver action seeds the loop AND reveals the dimensionality
     # (r13 opt: the former separate `.first()` probe was a whole extra
@@ -1288,11 +1289,10 @@ def mmr_select_int8(
                 (Q @ qvec).astype(np.float64),
             )
 
-    cand = (
+    cand = materialize(
         sp.filter(F.col(id_col).isNotNull() & (F.col(id_col) != query_id))
         .select(id_col, vec_col)
         .mapInArrow(_build, cand_ddl)
-        .localCheckpoint(eager=True)
     )
     # Right-size partitioning for the k sequential scoring passes:
     # each step launches an Arrow-UDF stage over cand, so on a small
@@ -1958,7 +1958,7 @@ def kcenter_greedy(
     del sample
 
     # Quantize once, scan k times; the id keeps its source type.
-    qdf = _quantized(raw, id_col, vec_col).localCheckpoint(eager=True)
+    qdf = materialize(_quantized(raw, id_col, vec_col))
     # Partition sizing for the distributed rounds: each round pays one
     # Python-worker round trip PER TASK, while the matmul kernel is
     # happy with ~64k rows per batch — a billion-row corpus fans out

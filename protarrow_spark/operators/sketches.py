@@ -26,6 +26,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
 
+from protarrow_spark.sources.tables import materialize
+
 #: KMV: estimate = (k-1) / normalized k-th minimum hash.
 KMV_K = 64
 #: 60-bit hash space (15 hex digits — fits a signed 64-bit integer).
@@ -152,10 +154,9 @@ def cms_heavy_hitters(
     from protarrow_spark.sources.tables import spread
 
     keys = spread(df.select(F.col(key_col).alias("key")))
-    counts = (
+    counts = materialize(
         keys.groupBy("key")
         .agg(F.count(F.lit(1)).alias("true_count"))
-        .localCheckpoint(eager=True)
     )
     entries = counts.select(
         F.explode(

@@ -427,8 +427,9 @@ def bpe_train_merges(
     that single rule into the fold rewrite, and a re-aggregation of
     the vocabulary (words collapsing to the same symbol string merge
     their counts). Steps are driver-unrolled into one Catalyst plan
-    (localCheckpoint the vocabulary past ~10 steps, as
-    connected_components does).
+    with no per-step barrier (see the note in the loop); a caller
+    that reuses the trained map materializes it once, as
+    text_bpe_encode does.
 
     Output: step (int), pair ('x y'), merged ('xy'), pair_count.
     With ``with_vocab_map=True``, ALSO carries the distinct-word ->
@@ -488,10 +489,11 @@ def bpe_train_merges(
         # NOTE measured, not assumed: the next step references `words`
         # twice, so the chain replays ~2^steps times per action — but
         # the replayed state is the VOCABULARY (tiny), and eager
-        # per-step localCheckpoints (the mmr_select_int8 barrier) were
+        # per-step barriers (the mmr_select_int8 barrier) were
         # tried and made the query ~2x SLOWER at sf0.1: the per-step
         # job overhead exceeds the replay cost. Past ~10 steps the
-        # balance flips — checkpoint there, as the docstring says.
+        # replay should outgrow the job overhead; no registered query
+        # trains that many steps.
         words = (
             _greedy_rewrite(words, top, ["cnt"])
             .groupBy("sym")

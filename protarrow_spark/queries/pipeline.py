@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from protarrow_spark.operators import dedup, similarity, text
 from protarrow_spark.queries.registry import query
-from protarrow_spark.sources.tables import spread, table
+from protarrow_spark.sources.tables import materialize, spread, table
 
 # ---------------------------------------------------------------------------
 # Shared oracle SQL fragments (DuckDB dialect), generated from operator
@@ -312,7 +312,7 @@ def lsh_recall_report(
     # barrier the full inverted-index truth pipeline and the LSH band
     # join are each planned and executed twice per action. The pair
     # lists are the audit's bounded output, safe to pin at any scale.
-    truth = (
+    truth = materialize(
         dedup.ngram_jaccard_pairs(
             docs,
             "doc_id",
@@ -330,12 +330,10 @@ def lsh_recall_report(
             dense_vocab_cap=4096,
         )
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
     )
-    cand = (
+    cand = materialize(
         dedup.minhash_lsh_pairs(docs, "doc_id", "text")
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
     )
     hit = truth.join(cand, ["doc_a", "doc_b"])
     nt = truth.agg(F.count(F.lit(1)).alias("n_truth"))
@@ -1525,7 +1523,7 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed so the shingle->signature pipeline runs once.
     """
     docs = table(spark, sf_dir, "documents")
-    bk = dedup.minhash_band_keys(docs, "doc_id", "text").localCheckpoint(eager=True)
+    bk = materialize(dedup.minhash_band_keys(docs, "doc_id", "text"))
     new_pred = F.col("doc_id") % INCR_MOD >= INCR_NEW_FROM
     idx = bk.filter(~new_pred).select("band", "bkey").distinct()
     hits = (
@@ -2522,9 +2520,7 @@ def pipeline_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the anti-join's left side — materialize the window-dedup +
     # quality stage once (r13 opt; at 100 TB this is the standard
     # write-the-survivors-between-stages barrier).
-    train = surv.filter(F.col("doc_id") % DECON_EVAL_MOD != 0).localCheckpoint(
-        eager=True
-    )
+    train = materialize(surv.filter(F.col("doc_id") % DECON_EVAL_MOD != 0))
     contaminated = (
         dedup.doc_shingles(train, "doc_id", "text", DECON_N)
         .join(F.broadcast(eval_g), "g")
@@ -2854,12 +2850,11 @@ def mine_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Rules are directed, but supports are symmetric: count each
     # unordered pair once (HALF the former shuffle rows), threshold,
     # then mirror — identical (a, b, n_ab) triples.
-    baskets = (
+    baskets = materialize(
         table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .groupBy("l_orderkey")
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-        .localCheckpoint(eager=True)
     )
     n = baskets.agg(F.count(F.lit(1)).alias("n_orders"))
     item = (
@@ -3344,17 +3339,16 @@ def pipeline_ccnet(spark: SparkSession, sf_dir: str) -> DataFrame:
     boiler = text.boilerplate_ngrams(docs, "doc_id", "text", "source").select(
         "doc_id", "clean_ppm"
     )
-    clean = (
+    # The survivor set feeds the LM fit (which itself reads its
+    # input ~3x: bigram counts, unigram totals, scoring join) AND
+    # the final ranked join — materialize the boilerplate stage
+    # once (r13 opt) instead of re-running its two shuffles per
+    # consumer. At 100 TB this is the standard "write the cleaned
+    # corpus between stages" barrier.
+    clean = materialize(
         docs.join(boiler, "doc_id")
         .filter(F.col("clean_ppm") >= CCNET_CLEAN_PPM_MIN)
         .select("doc_id", "lang", "source", "text", "clean_ppm")
-        # The survivor set feeds the LM fit (which itself reads its
-        # input ~3x: bigram counts, unigram totals, scoring join) AND
-        # the final ranked join — materialize the boilerplate stage
-        # once (r13 opt) instead of re-running its two shuffles per
-        # consumer. At 100 TB this is the standard "write the cleaned
-        # corpus between stages" barrier.
-        .localCheckpoint(eager=True)
     )
     sc = _bigram_surprisal_frame(clean.select("doc_id", "text")).select(
         "doc_id", "avg_millibits"
@@ -3421,22 +3415,21 @@ def lm_bigram_generate(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row frame against it plus a 1-row TakeOrdered. Output:
     pos (0..steps), tok, cnt (the count that won the argmax)."""
     docs = table(spark, sf_dir, "documents")
-    cb = (
+    cb = materialize(
         _bigram_stream(docs)
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c"))
-        .localCheckpoint(eager=True)
     )
     uni = cb.groupBy(F.col("w1").alias("tok")).agg(F.sum("c").alias("c"))
-    cur = (
+    cur = materialize(
         uni.orderBy(F.desc("c"), F.asc("tok"))
         .limit(1)
         .select(F.lit(0).alias("pos"), "tok", F.col("c").cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)
     )
     out = cur
     for k in range(1, LM_GEN_STEPS + 1):
-        cur = (
+        # 1 row; the barrier truncates the chain.
+        cur = materialize(
             cb.join(F.broadcast(cur.select(F.col("tok").alias("w1"))), "w1")
             .orderBy(F.desc("c"), F.asc("w2"))
             .limit(1)
@@ -3445,7 +3438,6 @@ def lm_bigram_generate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("w2").alias("tok"),
                 F.col("c").cast("long").alias("cnt"),
             )
-            .localCheckpoint(eager=True)  # 1 row; truncates the chain
         )
         out = out.unionByName(cur)
     return out
@@ -3634,7 +3626,7 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # training chain ~2^steps times (86 Exchange refs -> 6). The map
     # is vocabulary-sized state — exactly what a real pipeline ships
     # to its encode stage as a file.
-    vmap = vmap.localCheckpoint(eager=True)
+    vmap = materialize(vmap)
     dtoks = docs.select("doc_id", F.explode(ws_tokens(F.col("text"))).alias("w"))
     return (
         dtoks.join(vmap, "w")
@@ -4459,18 +4451,15 @@ def _lsh_verified_pairs(docs: DataFrame) -> DataFrame:
     Spark twin of :func:`_lsh_verified_ctes`, shared by the verified
     dedup query and the split-leakage audit so the two can never
     disagree on what a verified pair is."""
-    cand = (
+    cand = materialize(
         dedup.minhash_lsh_pairs(docs, "doc_id", "text")
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
     )
     # The shingle stream feeds THREE consumers (both sides of the
     # intersection join + the set sizes) — materialize it once
     # (r13 opt; the sparse verify join shuffles it anyway, so the
     # barrier adds no new data movement class at scale).
-    grams = dedup.doc_shingles(docs, "doc_id", "text", dedup.NGRAM_N).localCheckpoint(
-        eager=True
-    )
+    grams = materialize(dedup.doc_shingles(docs, "doc_id", "text", dedup.NGRAM_N))
     sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
     ga = grams.select(F.col("doc_id").alias("doc_a"), "g")
     gb = grams.select(F.col("doc_id").alias("doc_b"), "g")
@@ -5946,9 +5935,7 @@ def report_contamination_direction(spark: SparkSession, sf_dir: str) -> DataFram
     # train-hit branches, train sizes, the eval-side rollup) —
     # materialize it once (r13 opt): uncheckpointed, every action
     # replays the scan+explode+distinct per consumer.
-    grams = dedup.doc_shingles(docs, "doc_id", "text", DECON_N).localCheckpoint(
-        eager=True
-    )
+    grams = materialize(dedup.doc_shingles(docs, "doc_id", "text", DECON_N))
     is_eval = F.col("doc_id") % DECON_EVAL_MOD == 0
     ev = grams.filter(is_eval)
     tr = grams.filter(~is_eval)
@@ -6485,10 +6472,9 @@ def ann_pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branches join against it, so without a barrier the brute-force
     # scan + per-query ranking executes twice per action. Bounded:
     # n_queries x k rows.
-    truth = (
+    truth = materialize(
         similarity.cosine_topk_bruteforce(emb, qs, k=PQ_AUDIT_K)
         .select("query_id", "neighbor_id")
-        .localCheckpoint(eager=True)
     )
     reports = []
     for cfg, m_, k_ in (
@@ -6888,7 +6874,10 @@ def report_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     sp = docs.select("doc_id", _split_col().alias("split"))
     pa = sp.select(F.col("doc_id").alias("doc_a"), F.col("split").alias("sa"))
     pb = sp.select(F.col("doc_id").alias("doc_b"), F.col("split").alias("sb"))
-    lab = (
+    # Feeds the pair rollup AND the distinct-doc rollup: without
+    # this barrier the whole verified-pair pipeline executes twice
+    # per action (r13 opt). Bounded: one row per verified pair.
+    lab = materialize(
         pairs.join(pa, "doc_a")
         .join(pb, "doc_b")
         .select(
@@ -6897,10 +6886,6 @@ def report_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_a",
             "doc_b",
         )
-        # Feeds the pair rollup AND the distinct-doc rollup: without
-        # this barrier the whole verified-pair pipeline executes twice
-        # per action (r13 opt). Bounded: one row per verified pair.
-        .localCheckpoint(eager=True)
     )
     p = lab.groupBy("split_a", "split_b").agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs")

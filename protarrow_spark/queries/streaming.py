@@ -22,6 +22,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from protarrow_spark.queries.registry import query
+from protarrow_spark.sources.tables import materialize
 
 #: Test hook: when set to an int N, every registered streaming query's
 #: file source reads at most N files per micro-batch, forcing the
@@ -645,9 +646,9 @@ def stream_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
         .select(F.col("win.start").alias("win_start"), "j", "bucket", "c")
     )
-    # Materialize the completed counter table once — the readout
-    # probes it depth times (cms_heavy_hitters pattern).
-    sketch = _run_to_memory(entries, "mem_stream_cms_topk").localCheckpoint(eager=True)
+    # The memory sink already holds the completed counter table, so
+    # the readout's depth probes need no barrier of their own.
+    sketch = _run_to_memory(entries, "mem_stream_cms_topk")
 
     cand = (
         table(spark, sf_dir, "events")
@@ -761,13 +762,12 @@ def stream_drift_l1(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
         .select(F.col("win.start").alias("win_start"), "event_type", "c")
     )
-    state = _run_to_memory(w, "mem_stream_drift_l1").localCheckpoint(eager=True)
+    state = materialize(_run_to_memory(w, "mem_stream_drift_l1"))
 
-    g = (
+    g = materialize(
         table(spark, sf_dir, "events")
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("gc"))
-        .localCheckpoint(eager=True)
     )
     tg = g.agg(F.sum("gc").alias("t_g"))
     tw = state.groupBy("win_start").agg(F.sum("c").alias("t_w"))
@@ -832,9 +832,7 @@ def stream_freshness_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(epoch_micros("ts")).alias("last_us"),
         F.count(F.lit(1)).alias("n_events"),
     )
-    state = _run_to_memory(per, "mem_stream_freshness_lag").localCheckpoint(
-        eager=True
-    )
+    state = _run_to_memory(per, "mem_stream_freshness_lag")
     hw = state.agg(F.max("last_us").alias("hwm"))
     return state.crossJoin(F.broadcast(hw)).select(
         "event_type",

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from protarrow_spark.queries.registry import query
 from protarrow_spark.queries.relational import DEC4, DEC6, _dsum
-from protarrow_spark.sources.tables import spread, table
+from protarrow_spark.sources.tables import materialize, spread, table
 
 
 @query(
@@ -199,7 +199,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape: aggregate CTE + scalar-subquery max filter.
 
     Scale: the revenue aggregate shuffles once on l_suppkey and is
-    materialized once (localCheckpoint — exchange reuse does not fire
+    materialized once (``materialize`` — exchange reuse does not fire
     across the max-broadcast join under AQE, so without it lineitem
     would be scanned and aggregated twice). The max comparison happens
     on the exact decimal, never the rounded double.
@@ -208,14 +208,13 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_shipdate") >= "1996-01-01") & (F.col("l_shipdate") < "1996-04-01")
     )
     supp = table(spark, sf_dir, "supplier")
-    rev = (
+    rev = materialize(
         li.groupBy("l_suppkey")
         .agg(
             F.sum(
                 (F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))).cast(DEC6)
             ).alias("total_rev")
         )
-        .localCheckpoint(eager=True)
     )
     top = rev.agg(F.max("total_rev").alias("max_rev"))
     return (
@@ -525,7 +524,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     a scalar subquery over itself.
 
     Scale: the per-part aggregate shuffles once on l_partkey and is
-    materialized once (localCheckpoint — plan-identical exchange
+    materialized once (``materialize`` — plan-identical exchange
     reuse does NOT fire across the crossJoin under AQE, so without it
     lineitem would be scanned and aggregated twice); the grand total
     is then a 1-row broadcast crossed back. Threshold compares exact
@@ -534,11 +533,10 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem")
     supp = table(spark, sf_dir, "supplier").filter(F.col("s_nationkey") == 5).select("s_suppkey")
     rev = (F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount"))).cast(DEC6)
-    val = (
+    val = materialize(
         li.join(supp, li.l_suppkey == supp.s_suppkey)
         .groupBy("l_partkey")
         .agg(F.sum(rev).alias("v"))
-        .localCheckpoint(eager=True)
     )
     total = val.agg((F.sum("v").cast("double") * F.lit(0.001)).alias("cutoff"))
     return (

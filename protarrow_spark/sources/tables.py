@@ -112,6 +112,22 @@ def spread(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
     return out
 
 
+def materialize(df: DataFrame) -> DataFrame:
+    """Eager lineage barrier: compute ``df`` now and return a frame
+    whose plan starts at the stored result. Every barrier in the
+    package goes through here.
+
+    With a checkpoint dir on the SparkContext (a deployment path set
+    by ``setCheckpointDir`` or ``spark.checkpoint.dir``) the result is
+    written there and survives a lost executor. Without one it stays
+    in executor storage (``localCheckpoint``): cheaper, and safe on
+    local[N], but a block lost with its executor fails the job.
+    """
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)
+
+
 def load_tables(
     spark: SparkSession, sf_dir: str, names: list[str] | None = None
 ) -> dict[str, DataFrame]:

@@ -251,6 +251,23 @@ def test_magic_prefixed_garbage_takes_null_path() -> None:
     assert multimodal.decode_bmp_gray(blob[: len(blob) - 10]) is None
 
 
+def test_image_features_unsupported_variant_takes_null_path(spark) -> None:
+    """Text that starts with 'BM' or 'P5' parses as an unsupported
+    BMP/PGM variant (the decoders raise NotImplementedError): the
+    operator emits the all-null row for it rather than failing the
+    task."""
+    df = _blob_df(
+        spark,
+        [
+            (1, b"BMW drivers often say the ride is smooth; reviewers agree on this point too."),
+            (2, b"P5 1 1 300 x"),
+        ],
+    )
+    rows = multimodal.decode_image_features(df, "doc_id", "blob").collect()
+    assert sorted(r["doc_id"] for r in rows) == [1, 2]
+    assert all(v is None for r in rows for k, v in r.asDict().items() if k != "doc_id")
+
+
 # minimal RIFF/WAVE, mono PCM16, 3 samples [1000, -2, 32767]
 _GOLDEN_WAV = (
     b"RIFF" + (4 + 24 + 8 + 6 + 1).to_bytes(4, "little") + b"WAVE"

@@ -1,8 +1,12 @@
 """Unit pins for tools/plan_audit.py summarization logic (ADVICE r9:
-same-named state operators must not collapse to one entry)."""
+same-named state operators must not collapse to one entry), and pins
+on the plan shape the queries build: Python stages per media query and
+eager barriers (``materialize``) per query."""
 
 from __future__ import annotations
 
+import inspect
+import re
 import sys
 from pathlib import Path
 
@@ -106,3 +110,108 @@ def test_media_queries_plan_no_pandas_stage(spark, sf_dir) -> None:
         assert "MapInPandas" not in plan, name
         stages[name] = plan_audit.audit_one(plan)["python_eval"]
     assert stages == MM_PYTHON_STAGES
+
+
+PACKAGE = Path(__file__).resolve().parent.parent / "protarrow_spark"
+
+
+def test_no_checkpoint_call_outside_materialize() -> None:
+    from protarrow_spark.sources import tables
+
+    lines, start = inspect.getsourcelines(tables.materialize)
+    allowed = {(Path(tables.__file__).resolve(), n) for n in range(start, start + len(lines))}
+    stray = [
+        f"{path.relative_to(PACKAGE)}:{n}"
+        for path in sorted(PACKAGE.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if re.search(r"\.(localCheckpoint|checkpoint)\(", line)
+        and (path.resolve(), n) not in allowed
+    ]
+    assert stray == []
+
+
+#: Eager barriers (``materialize`` calls) each query runs while its
+#: DataFrame is built at sf0.001, for every query that reached one
+#: before the barrier audit. Adding or dropping a barrier must update
+#: this table.
+QUERY_BARRIERS = {
+    "ann_mmr_select": 1,
+    "ann_pq_recall_report": 1,
+    "cluster_kmeans_assign_counts": 1,
+    "cluster_kmeans_int8_exact": 1,
+    "dedup_cluster_assign": 4,
+    "dedup_incremental_lsh": 1,
+    "dedup_lsh_recall_report": 4,
+    "dedup_lsh_recall_sampled": 4,
+    "dedup_lsh_verified": 3,
+    "dedup_minhash_lsh": 1,
+    "dedup_ngram_containment": 1,
+    "dedup_ngram_jaccard": 1,
+    "dedup_semdedup": 1,
+    "dedup_semdedup_bounded": 1,
+    "dedup_simhash_hamming": 1,
+    "dedup_threshold_sweep": 1,
+    "dedup_threshold_sweep_sampled": 1,
+    "graph_bfs_hops": 4,
+    "graph_common_neighbors": 1,
+    "graph_jaccard_similarity": 1,
+    "graph_kcore": 1,
+    "graph_pagerank": 2,
+    "graph_triangle_count": 2,
+    "lm_bigram_generate": 7,
+    "mine_association_rules": 1,
+    "pipeline_ccnet": 1,
+    "pipeline_training_corpus": 1,
+    "q11_important_parts": 1,
+    "q15_top_supplier": 1,
+    "report_contamination_direction": 1,
+    "report_split_leakage": 4,
+    "sample_downweight_cluster_sizes": 4,
+    "sample_downweight_duplicates": 4,
+    "sketch_cms_heavy_hitters": 1,
+    "stream_cms_topk": 0,
+    "stream_drift_l1": 2,
+    "stream_freshness_lag": 0,
+    "text_bpe_encode": 1,
+}
+
+
+def test_barriers_per_query(spark, sf_dir, monkeypatch) -> None:
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    from protarrow_spark.queries import all_queries
+
+    assert spark.sparkContext.getCheckpointDir() is None
+    calls = []
+    local_checkpoint = ClassicDataFrame.localCheckpoint
+
+    def counted(self, *args, **kwargs):
+        calls.append(1)
+        return local_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", counted)
+    queries = all_queries()
+    counts = {}
+    for name in QUERY_BARRIERS:
+        calls.clear()
+        queries[name](spark, sf_dir)  # built, not executed
+        counts[name] = len(calls)
+    assert counts == QUERY_BARRIERS
+
+
+def test_materialize_checkpoints_reliably_under_a_checkpoint_dir(spark, sf_dir, tmp_path) -> None:
+    from protarrow_spark.queries import all_queries
+    from tests.oracle_utils import canonical_rows
+
+    sc = spark.sparkContext
+    query = all_queries()["dedup_cluster_assign"]
+    local = canonical_rows(query(spark, sf_dir).toPandas())
+    sc.setCheckpointDir(str(tmp_path))
+    try:
+        reliable = canonical_rows(query(spark, sf_dir).toPandas())
+        assert any(p.is_file() for p in tmp_path.rglob("*"))
+    finally:
+        # Later tests keep the local path: PySpark has no public unset.
+        getattr(sc._jsc.sc(), "checkpointDir_$eq")(sc._jvm.scala.Option.empty())
+    assert sc.getCheckpointDir() is None
+    assert reliable == local
